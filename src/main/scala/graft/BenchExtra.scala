@@ -78,7 +78,7 @@ object BenchExtra {
         EntityResolution.mergeRepair(spark, runDir, runId = "extra-merge")
       }
       // scoped pass #1 re-judges the full merge's own relabel delta (its
-      // watermark is stamped pre-commit, see mergeWatermarkPath scaladoc)
+      // watermark is stamped pre-commit, see EntityResolution.MergeWatermark)
       var scoped1Clusters = -1L
       val tMergeScoped = timed {
         scoped1Clusters = EntityResolution.mergeRepair(spark, runDir,

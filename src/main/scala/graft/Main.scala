@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   *              [--run-dir DIR] [--resume] [--threads T] [--no-eval]
   *              [--threshold T]
   *              [--snapshot-id K] [--sweep]
-  *              [--add-entities N] [--add-seed S] [--exact] [--compact]
+  *              [--add-entities N] [--add-seed S] [--compact]
   *              [--remove-entities N] [--replace-entities N] [--expire-keep K]
   *              [--ingest WATCH_DIR] [--compact-every K] [--audit-every K] [--repair]
   *              [--audit] [--audit-repair] [--audit-incremental]
@@ -39,8 +39,8 @@ import org.apache.spark.sql.SparkSession
   * [[EntityResolution.addDocuments]], committing a new snapshot of every
   * stage. The base corpus flags must repeat the base run's values —
   * eval regenerates the base gold from them and unions the increment's.
-  * Default mode is the O(delta) INSERT increment (delta snapshots);
-  * `--exact` switches to the batch-identical audit mode.
+  * The increment is O(delta) with delta snapshots; a result identical to
+  * batch comes from [[EntityResolution.run]] over the union of the corpora.
   *
   * `--remove-entities N` (with --run-dir): RETRACTION — removes every doc
   * of the first N entities (entity_id order) of the base corpus from the
@@ -107,14 +107,14 @@ object Main {
     * JSON metrics line.
     */
   def incrementRun(spark: SparkSession, dir: String, baseCfg: GenConfig,
-                   addCfg: GenConfig, doEval: Boolean, exact: Boolean = false,
+                   addCfg: GenConfig, doEval: Boolean,
                    pipe: EntityResolution.PipelineConfig = EntityResolution.PipelineConfig()): String = {
     import spark.implicits._
     val t0 = System.nanoTime()
     val newDocs = DocGen.docs(spark, addCfg).map(d => d.copy(doc_id = "n" + d.doc_id))
       .toDF().cache()
     val nNew = newDocs.count()
-    val res = EntityResolution.addDocuments(spark, newDocs, dir, pipe, exact = exact)
+    val res = EntityResolution.addDocuments(spark, newDocs, dir, pipe)
     val nClusters = res.assignments.select("cluster_id").distinct().count()
     val secs = (System.nanoTime() - t0) / 1e9
     val evalJson = if (doEval) {
@@ -493,7 +493,7 @@ object Main {
         sys.error("--add-entities requires --run-dir (the committed base run to extend)"))
       val addCfg = cfg.copy(numEntities = addOpt.get.toInt,
         seed = opts.getOrElse("--add-seed", (cfg.seed + 1000).toString).toLong)
-      println(incrementRun(spark, dir, cfg, addCfg, doEval, exact = flags.contains("--exact"), pipe = pipeCfg))
+      println(incrementRun(spark, dir, cfg, addCfg, doEval, pipe = pipeCfg))
       spark.stop()
       return
     }

@@ -73,9 +73,9 @@ object Blocking {
 
   /** True iff a block key belongs to a RAW key family (Sn/Mh/Md/Tk) rather
     * than a derived Refined/Chain recovery key — the filter that recovers
-    * exact raw small-key membership back out of a committed blocking
-    * snapshot (the incremental path unions it with the block_hot snapshot
-    * to reconstruct the full keyedDocs relation of committed docs).
+    * raw small-key membership back out of a committed blocking snapshot
+    * (the increment reads it to find the committed members of a key one
+    * arrival batch floods past the cap).
     */
   def isRawKey(key: Column): Column =
     shiftrightunsigned(key, 60) < lit(Family.Refined)
@@ -273,10 +273,11 @@ object Blocking {
 
   /** Derive the two refinement sub-keys from the raw hot relation
     * (block_key, doc_id, refine0, refine1) — the single definition shared
-    * by the batch route and incremental recomputation (sub-key drift
-    * between the two would silently break hot-key recall on increments).
+    * by the batch route and the increment's [[hotInsertRows]] (sub-key
+    * drift between the two would silently break hot-key recall on
+    * increments).
     */
-  private[graft] def hotKeyed(hotBase: DataFrame): DataFrame =
+  private def hotKeyed(hotBase: DataFrame): DataFrame =
     hotBase.select(col("block_key"), col("doc_id"),
       famTag(Family.Refined, xxhash64(col("block_key"), col("refine0"), lit(0))).as("r0key"),
       famTag(Family.Refined, xxhash64(col("block_key"), col("refine1"), lit(1))).as("r1key"))
@@ -285,10 +286,9 @@ object Blocking {
     * relation (block_key, doc_id, r0key, r1key). Returns the recovery rows
     * (refined sub-blocks ∪ chain rows) and the persisted sub-block-size
     * relation (for the refined_subblocks_kept counter — caller unpersists).
-    * Pure function of the hot MEMBERSHIP, which is what makes incremental
-    * recomputation over merged membership batch-identical.
+    * Pure function of the hot MEMBERSHIP.
     */
-  private[graft] def hotRecovery(hot: DataFrame, maxBlockSize: Int): (DataFrame, DataFrame) = {
+  private def hotRecovery(hot: DataFrame, maxBlockSize: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     // path 1: refined sub-blocks from BOTH families (OR-recall)
     val refined = hot.select(explode(array(col("r0key"), col("r1key"))).as("block_key"), col("doc_id"))
@@ -326,10 +326,9 @@ object Blocking {
   /** The size-routing half of blocking over an ALREADY-KEYED relation
     * (doc_id, refine0, refine1, block_key): key-frequency census → cap →
     * small rows pass through, hot keys go through the two recovery paths.
-    * Factored from blockTokenizedFull so the incremental path can re-route
-    * the MERGED (committed ∪ new) raw key table through the exact batch
-    * code — the output is bit-identical to a batch run whose keyedDocs
-    * produced the same relation. Persists its input for the duration.
+    * Factored from blockTokenizedFull so the increment routes its new
+    * docs' keys that are not committed-hot through the same batch code.
+    * Persists its input for the duration.
     */
   private[graft] def routeKeyed(keyedIn: DataFrame, maxBlockSize: Int,
                                 withHotRows: Boolean): BlockingOutput = {
@@ -374,7 +373,7 @@ object Blocking {
       "refined_subblocks_kept" -> rKept), hotRows)
   }
 
-  /** INSERT-mode recovery rows for new docs landing in COMMITTED-hot keys
+  /** Increment recovery rows for new docs landing in COMMITTED-hot keys
     * (the frozen-structure increment, EntityResolution.addDocuments): the
     * committed refinement/chain rows stay untouched; each new doc emits
     *
@@ -395,8 +394,8 @@ object Blocking {
     *     doc's sub-block was dropped or unkept committed-side.
     *
     * Pure function of the NEW rows + per-key committed representative —
-    * this is what makes the insert increment O(delta) where exact hot-key
-    * maintenance is O(committed hot membership).
+    * this is what makes the increment O(delta) where re-deriving the
+    * batch hot-key structure would be O(committed hot membership).
     */
   private[graft] def hotInsertRows(newHot: DataFrame, committedReps: DataFrame,
                                    chainSalt: Long, maxBlockSize: Int): DataFrame = {
@@ -417,18 +416,6 @@ object Blocking {
         famTag(Family.Chain, xxhash64(col("block_key"), lit(chainSalt), col("rn"))).as("block_key"),
         explode(array(col("prev"), col("doc_id"))).as("doc_id"))
     refinedKept.unionByName(splice)
-  }
-
-  /** Per-block unordered pairs WITHOUT the global per-pair dedup of
-    * [[candidatePairs]]: one row per (pair, justifying block). The
-    * incremental path diffs these against a replaced block set to maintain
-    * the candidate-pair universe exactly (canonical block = min key, so
-    * the global dedup is recoverable from per-block contributions).
-    */
-  private[graft] def blockPairs(rows: DataFrame): DataFrame = {
-    val a = rows.select(col("block_key"), col("doc_id").as("doc_id_a"))
-    val b = rows.select(col("block_key"), col("doc_id").as("doc_id_b"))
-    a.join(b, "block_key").where(col("doc_id_a") < col("doc_id_b"))
   }
 
   /** Candidate pairs: self equi-join of the blocking output on block_key

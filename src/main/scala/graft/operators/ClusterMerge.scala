@@ -418,9 +418,10 @@ object ClusterMerge {
     // batch semantics over the promoted edge set.
     //
     // The graph is DIMENSION-sized by construction (each pair needed a
-    // corroborated evidence bundle), so up to the standard 4M driver-side
-    // bound — known for FREE from the census counters — it is solved by a
-    // driver union-find: one collect replaces the distributed star loop's
+    // corroborated evidence bundle), so within DriverBound — known for
+    // FREE from the census counters — it is solved by a driver union-find
+    // (ConnectedComponents.unionFindMin, code-point order like the
+    // distributed min): one collect replaces the distributed star loop's
     // ~15 fixed jobs per invocation, which dominated the verb's wall at
     // every sandbox scale (round-6 VerbJobsProbe: the merge leg was
     // job-count-bound, not data-bound). Beyond the bound (a pathological
@@ -430,24 +431,11 @@ object ClusterMerge {
     // multi-pair transitive components through the union-find path).
     val nQual = censusCounters("merge_cluster_pairs_qualified")
     val (mergeMap0, ccCkpts) =
-      if (nQual <= 4000000L) {
-        val pairRows = qual.select(col("cluster_a"), col("cluster_b")).collect()
-        val parent = scala.collection.mutable.Map.empty[String, String]
-        def find(x: String): String = {
-          var r = parent.getOrElse(x, x)
-          while (r != parent.getOrElse(r, r)) r = parent.getOrElse(r, r)
-          // path-compress the walked chain
-          var c = x
-          while (c != r) { val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt }
-          r
-        }
-        pairRows.foreach { row =>
-          val ra = find(row.getString(0)); val rb = find(row.getString(1))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val nodes = pairRows.flatMap(r => Seq(r.getString(0), r.getString(1))).distinct
-        // roots are ordered by the union rule (smaller absorbs), so the
-        // root IS the component min
+      if (nQual <= DriverBound.MaxRows) {
+        val pairs = qual.select(col("cluster_a"), col("cluster_b")).collect()
+          .map(r => (r.getString(0), r.getString(1)))
+        val find = ConnectedComponents.unionFindMin(pairs)
+        val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
         import spark.implicits._
         (nodes.toSeq.map(n => (n, find(n))).toDF("cluster_id", "cluster_id_new"),
           Set.empty[Int])
@@ -465,19 +453,17 @@ object ClusterMerge {
     // merged components are few under any sane config, but a loose one (or
     // a large drift state) can qualify arbitrarily many cluster pairs —
     // gate the driver-collecting broadcasts on the already-known counts
-    // (the same 4M bound as the incremental context and the CC decode
-    // dictionary) instead of OOMing the driver
-    def gatedBc(df: DataFrame, known: Long): DataFrame =
-      if (known <= 4000000L) broadcast(df) else df
-
-    val changed = assignments.join(gatedBc(mergeMap, nMergedClusters), Seq("cluster_id"))
+    // (DriverBound, as everywhere) instead of OOMing the driver
+    val changed = assignments
+      .join(DriverBound.broadcastWithin(mergeMap, nMergedClusters), Seq("cluster_id"))
       .select(col("doc_id"), col("cluster_id_new").as("cluster_id"),
         col("cluster_id").as("cluster_id_old"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nRelabeled = changed.where(col("cluster_id") =!= col("cluster_id_old")).count()
     val changedRows = changed.select(col("doc_id"), col("cluster_id"))
     val changedClusters = changed.select(col("cluster_id_old").as("cluster_id")).distinct()
-    val merged = assignments.join(gatedBc(mergeMap.select("cluster_id"), nMergedClusters),
+    val merged = assignments
+      .join(DriverBound.broadcastWithin(mergeMap.select("cluster_id"), nMergedClusters),
         Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
       .unionByName(changedRows)
@@ -491,7 +477,7 @@ object ClusterMerge {
     val evBand = ev
       .where(col("score") >= cfg.mergeFloor && col("score") < cfg.threshold &&
         !col("vetoed_ev"))
-      .join(gatedBc(bandQual, censusCounters("merge_cluster_pairs_qualified")),
+      .join(DriverBound.broadcastWithin(bandQual, censusCounters("merge_cluster_pairs_qualified")),
         Seq("cluster_a", "cluster_b"), "left_semi")
     val evClean = tombstones match {
       case Some(ts) => evBand.join(ts.select("doc_id_a", "doc_id_b"),

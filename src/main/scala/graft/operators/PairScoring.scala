@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.TextSim
 import graft.model.ScoredPair
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,7 @@ import org.apache.spark.sql.functions._
   * vocabulary is far too large for any driver-side dictionary, so the
   * only driver artifact is the scalar corpus size. (The reference instead
   * collects whole dimension tables to the driver, AMPI.scala:20-66 — the
-  * anti-pattern this engine exists to remove. A broadcast dictionary
-  * variant is still available for genuinely small vocabularies.)
+  * anti-pattern this engine exists to remove.)
   */
 object PairScoring {
 
@@ -81,23 +79,6 @@ object PairScoring {
         * assert one and the sets are disjoint, the pair scores 0. Empty
         * string disables. */
       exclusivePrefix: String = "xid:")
-
-  /** Inverse-document-frequency weights for media_ref tokens as a
-    * DRIVER-side map — only for genuinely small vocabularies (tests,
-    * per-block dictionaries). weight(t) = ln(1 + N/df(t)).
-    */
-  def mediaIdf(docs: DataFrame, minDf: Long = 1): (Map[String, Double], Long) = {
-    graft.GraftExtensions.register(docs.sparkSession)
-    val n = docs.count()
-    val dfMap = docs
-      .select(explode(Blocking.mediaTokens(col("spans"))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("df"))
-      .where(col("df") >= minDf)
-      .collect()
-      .map(r => r.getString(0) -> math.log1p(n.toDouble / r.getLong(1)))
-      .toMap
-    (dfMap, n)
-  }
 
   /** Feature relation plus the persisted media-token cache backing it
     * (None when built without a cache): the CALLER owns the cache
@@ -487,15 +468,6 @@ object PairScoring {
     (simText, simMedia, simAlign, score, mediaUsable, vetoed)
   }
 
-  /** Pure per-pair kernel (dictionary form — small-vocabulary path). */
-  def scorePair(
-      textA: Seq[String], mediaA: Seq[String],
-      textB: Seq[String], mediaB: Seq[String],
-      idf: String => Double, cfg: ScoreConfig): (Double, Double, Double, Double) = {
-    val (sa, sb) = (mediaA.map(idf), mediaB.map(idf))
-    scorePairArrays(textA, mediaA, sa, textB, mediaB, sb, cfg)
-  }
-
   /** The joined + columnar-prescreened candidate-with-features relation
     * shared by the native and typed scoring paths.
     */
@@ -592,39 +564,4 @@ object PairScoring {
       nDocs: Long,
       cfg: ScoreConfig = ScoreConfig()): Dataset[ScoredPair] =
     scoreFeatures(spark, features(docs, nDocs, cfg, persistMedia = false).feats, candidates, cfg)
-
-  /** Broadcast-dictionary scoring variant (small vocabularies / per-block
-    * dictionaries): same kernel, weights looked up in a broadcast map.
-    */
-  def scoreWithDictionary(
-      spark: SparkSession,
-      docs: DataFrame,
-      candidates: DataFrame,
-      idfBc: Broadcast[Map[String, Double]],
-      defaultIdf: Double,
-      cfg: ScoreConfig = ScoreConfig()): Dataset[ScoredPair] = {
-    import spark.implicits._
-    graft.GraftExtensions.register(spark)
-    val feats = docs.select(
-      col("doc_id"),
-      Blocking.textTokens(col("spans")).as("toks"),
-      Blocking.mediaTokens(col("spans")).as("media"))
-    val fa = feats.select(col("doc_id").as("doc_id_a"), col("toks").as("toks_a"), col("media").as("media_a"))
-    val fb = feats.select(col("doc_id").as("doc_id_b"), col("toks").as("toks_b"), col("media").as("media_b"))
-    val joined = candidates
-      .join(fa, "doc_id_a")
-      .join(fb, "doc_id_b")
-      .select("doc_id_a", "doc_id_b", "block_key", "toks_a", "media_a", "toks_b", "media_b")
-      .as[(String, String, Long, Seq[String], Seq[String], Seq[String], Seq[String])]
-    joined.mapPartitions { it =>
-      val idf = idfBc.value
-      val w: String => Double = t => idf.getOrElse(t, defaultIdf)
-      it.map { case (a, b, bk, ta, ma, tb, mb) =>
-        val (st, sm, sa, sc) = scorePair(ta, ma, tb, mb, w, cfg)
-        val mu = math.min(ma.size, mb.size) >= cfg.minMediaEvidence
-        ScoredPair(a, b, bk, st, sm, sa, sc, mu,
-          exclusiveConflict(ma, mb, cfg.exclusivePrefix))
-      }
-    }
-  }
 }

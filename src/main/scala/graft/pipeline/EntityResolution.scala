@@ -2,7 +2,8 @@ package graft.pipeline
 
 import graft.ckpt.Snapshots
 import graft.eval.Eval
-import graft.operators.{Blocking, ClusterAudit, ClusterMerge, ConnectedComponents, PairScoring}
+import graft.operators.{Blocking, ClusterAudit, ClusterMerge, ConnectedComponents, DriverBound,
+  PairScoring}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -289,131 +290,69 @@ object EntityResolution {
     * pipeline per data drop (AMPI.main, SURVEY §3.1) — this is the
     * snapshot-based replacement.
     *
-    * Two modes (LSM-style minor/major distinction; the batch run is always
-    * the major compaction):
+    * The committed blocking structure is FROZEN — no committed row moves,
+    * no committed pair is re-derived; new docs route into the existing
+    * structure (committed hot keys via their deterministic refinement
+    * sub-keys + a salted splice chain to the key's committed
+    * representative), every stage commits an O(|new|)-sized DELTA snapshot
+    * (merge-on-read), and ALL compute/shuffle/write is O(|new| + |their
+    * blocks| + |fresh pairs| + |active components|). Recall for new docs is
+    * within a hair of batch (sub-block membership is deterministic per doc;
+    * connectivity floors are spliced), and precision divergence is
+    * bounded: a committed-small key that crosses the cap only via merged
+    * growth stays uncapped until compaction.
     *
-    *  - `exact = false` (DEFAULT, "insert"): the committed blocking
-    *    structure is FROZEN — no committed row moves, no committed pair is
-    *    re-derived; new docs route into the existing structure (committed
-    *    hot keys via their deterministic refinement sub-keys + a salted
-    *    splice chain to the key's committed representative), every stage
-    *    commits an O(|new|)-sized DELTA snapshot (merge-on-read), and ALL
-    *    compute/shuffle/write is O(|new| + |their blocks| + |fresh pairs| +
-    *    |active components|). Recall for new docs is within a hair of
-    *    batch (sub-block membership is deterministic per doc; connectivity
-    *    floors are spliced), and precision divergence is bounded: a
-    *    committed-small key that crosses the cap only via merged growth
-    *    stays uncapped until compaction. This is the mode a standing
-    *    deployment runs per arrival batch.
-    *  - `exact = true`: bit-identical to a batch run over (committed ∪
-    *    new) for blocking rows, candidate pairs, and canonical keys (the
-    *    audit/verification mode; IncrementalSpec asserts the equality,
-    *    including over chained increments). Exactness REQUIRES re-deriving
-    *    every touched hot key's recovery rows over its full merged
-    *    membership — common-token hot keys are touched by any realistic
-    *    increment, so this costs O(hot corpus) per increment regardless of
-    *    increment size, and at +10% it measures SLOWER than the batch
-    *    re-run. Use it to audit the insert path or when increments must be
-    *    indistinguishable from batch; exact mode expects an exact-history
-    *    base (a batch run or exact increments), since insert-mode deltas
-    *    deliberately do not maintain the batch hot-key structure.
-    */
-  def addDocuments(spark: SparkSession, newDocs: DataFrame, runDir: String,
-                   cfg: PipelineConfig = PipelineConfig(), runId: String = "incr",
-                   exact: Boolean = false): Result = {
-    val fjPrev = beginFastJoins(spark)
-    try {
-      if (exact) addDocumentsExact(spark, newDocs, runDir, cfg, runId)
-      else addDocumentsInsert(spark, newDocs, runDir, cfg, runId)
-    } finally endFastJoins(spark, fjPrev)
-  }
-
-  /** The `exact = true` increment (see [[addDocuments]]).
-    *
-    * What is EXACT vs a batch run over (committed ∪ new):
-    *  - blocking rows and candidate pairs are bit-identical: the merged raw
-    *    key table (small-key membership recovered from the blocking
-    *    snapshot via [[Blocking.isRawKey]], hot membership from block_hot,
-    *    refinement hashes from doc_features) is re-routed through the same
-    *    [[Blocking.routeKeyed]] the batch path uses, so over-cap
-    *    refinement/chain recovery — including keys crossing the cap only
-    *    BECAUSE of the increment — is recomputed over merged membership;
-    *  - newly-created pairs (any pair not in the committed scored set —
-    *    new↔new, new↔old, and old↔old pairs created by re-routing) are
-    *    scored with idf weights from the MERGED document frequencies
-    *    (media_df + the new docs'), i.e. exactly the weights a batch run
-    *    over the union would compute — their scores are bit-equal to that
-    *    batch run (IncrementalSpec asserts this).
-    *
-    * What is deliberately NOT recomputed (the incremental contract):
-    *  - committed pairs keep their committed channel scores — their idf
-    *    weights reflect the corpus size at THEIR scoring time (drift per
+    * Against a batch run over (committed ∪ new):
+    *  - fresh pairs are scored with idf weights from the MERGED document
+    *    frequencies (media_df + the new docs'), i.e. exactly the weights
+    *    the batch run computes — a fresh pair the batch run also derives
+    *    scores bit-equal to it (IncrementalSpec asserts this);
+    *  - committed pairs keep their committed channel scores (idf drift per
     *    token is ln((1+N'/df')/(1+N/df)), second-order for any token worth
-    *    weight); and
-    *  - clustering is MERGE-MONOTONE: committed components enter the CC
-    *    loop as star edges (doc_id → cluster_id, one row per non-singleton
-    *    doc), so committed merges are never revisited even where
-    *    re-routing dropped the pair that once justified them. A periodic
-    *    batch run is the compaction that re-derives everything from
-    *    current weights.
-    *
-    * Scale shape: ALL shuffle/compute is O(|new| + |touched blocks| +
-    * |affected pairs| + |active components|) —
-    *  - only block keys the new docs emit are re-routed (merged membership
-    *    through the batch [[Blocking.routeKeyed]]); every other committed
-    *    blocking row, including derived recovery rows of untouched hot
-    *    parents, carries forward behind a broadcast anti-join;
-    *  - the candidate-pair universe is maintained exactly from the
-    *    replaced blocks' per-block pair contributions (canonical block =
-    *    min key): doubtful pairs (canonical replaced) probe the untouched
-    *    keys of only their own docs for the surviving minimum;
-    *  - idf weight re-attachment and scoring run only over docs/pairs new
-    *    to the universe;
-    *  - CC runs only over components adjacent to a fresh ≥-threshold edge
-    *    (a component with no fresh edge is its own fixpoint and keeps its
-    *    committed assignment).
-    * The remaining O(committed) cost is sequential parquet scan + rewrite
-    * of carried-forward rows into the new snapshots (no shuffle); a
-    * file-reuse/delta snapshot format is the storage-level upgrade path
-    * if that write matters at the target scale.
+    *    weight), and clustering is MERGE-MONOTONE: committed components
+    *    enter the CC loop as star edges, so committed merges are never
+    *    revisited.
+    * The batch [[run]] over the union is the exact counterpart and the
+    * semantic compaction: it re-derives blocking, pairs, weights and
+    * clusters from the current corpus. Run it when a history must be
+    * indistinguishable from batch — an increment that re-derives every
+    * touched hot key to match it costs O(hot corpus) and measured slower
+    * than the re-run (BENCH/BASELINE.md, round 5).
     *
     * Requires the base run to have been committed by a checkpointed run()
     * of this build (which writes block_hot/doc_features/media_df); fails
     * loud otherwise. `newDocs` doc_ids must be disjoint from the committed
     * corpus (checked).
     */
-  /** Plan-hygiene shared by the three incremental verbs: fail-loud
-    * committed-stage loads; explicit broadcast gating where AQE cannot see
-    * post-aggregation sizes (4M-row bound, same as the CC decode
-    * dictionary — caller must have persisted/pinned `df` first since
-    * gating counts it); eager localCheckpoint pinning of derived hubs
-    * (increments derive MANY small relations from each other — left as
-    * plain plans their logical trees nest multiplicatively and per-action
-    * plan stringification alone becomes heap-exhausting; pinning truncates
-    * the plan to the materialized rows, ids tracked and freed via
-    * [[releasePins]] before the verb returns — same LogicalRDD-id tracking
-    * as the CC loop); and coarse per-phase stderr ticks.
-    */
+  def addDocuments(spark: SparkSession, newDocs: DataFrame, runDir: String,
+                   cfg: PipelineConfig = PipelineConfig(), runId: String = "incr"): Result = {
+    val fjPrev = beginFastJoins(spark)
+    try addDocumentsInsert(spark, newDocs, runDir, cfg, runId)
+    finally endFastJoins(spark, fjPrev)
+  }
+
   /** The six core stages move in LOCKSTEP: every completed verb — the batch
-    * run, both increments, removal, upsert halves, and the audits (via
-    * their no-op deltas) — commits each exactly once, so unequal
-    * last-committed ids mean some verb crashed mid-commit-sequence. The
+    * run, the increment, removal, upsert halves, and the audits (via their
+    * no-op deltas) — commits each exactly once, so unequal last-committed
+    * ids mean some verb crashed mid-commit-sequence. The
     * non-self-recovering verbs refuse such a history loudly instead of
     * silently operating on drift: a crashed mergeRepair, for example,
     * leaves accepted cross-cluster pairs (scored_pairs ahead of
     * cluster_assignments) that would otherwise relabel a removal's
-    * survivors into a cluster id whose own doc was never moved, and a
-    * crashed mergeRepair with a committed scored_pairs delta but no
-    * promotions ledger would slip past exact mode's promotion guard.
+    * survivors into a cluster id whose own doc was never moved.
     * Recovery: re-run the interrupted audit verb (auditRepair/mergeRepair
     * converge to their end state via dedup-append + the drift rule) or
     * [[graft.streaming.StreamingIngest.repair]] to trim an interrupted
     * increment back to the common floor.
     */
+  private val LockstepStages = Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures,
+    "scored_pairs", "cluster_assignments")
+
+  private def lockstepIds(runDir: String): Seq[(String, Long)] =
+    LockstepStages.flatMap(s => Snapshots.lastCommitted(runDir, s).map(s -> _))
+
   private def requireStagesLockstep(runDir: String, verb: String): Unit = {
-    val stages = Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures,
-      "scored_pairs", "cluster_assignments")
-    val ids = stages.flatMap(s => Snapshots.lastCommitted(runDir, s).map(s -> _))
+    val ids = lockstepIds(runDir)
     require(ids.map(_._2).distinct.size <= 1,
       s"$verb: stages are at unequal snapshot ids " +
         s"(${ids.map { case (s, id) => s"$s=$id" }.mkString(", ")}) — a verb was " +
@@ -424,15 +363,26 @@ object EntityResolution {
   }
 
   /** Broadcast a standing-ledger stage's relation only while its committed
-    * row count stays dimension-sized — the same 4M bound as every
-    * count-gated broadcast, read FREE from the stage's manifest instead of
-    * paying a count() job (the ledgers grow monotonically over a
-    * deployment's lifetime; an unconditional broadcast would eventually
-    * OOM the driver on a pathological history).
+    * row count stays within [[DriverBound.MaxRows]], read FREE from the
+    * stage's manifest instead of paying a count() job (the ledgers grow
+    * monotonically over a deployment's lifetime; an unconditional
+    * broadcast would eventually OOM the driver on a pathological history).
     */
   private def gatedLedger(runDir: String, stage: String, df: DataFrame): DataFrame =
-    if (Snapshots.lastRows(runDir, stage).getOrElse(0L) <= 4000000L) broadcast(df) else df
+    DriverBound.broadcastWithin(df, Snapshots.lastRows(runDir, stage).getOrElse(0L))
 
+  /** Plan-hygiene shared by the incremental verbs: fail-loud
+    * committed-stage loads; explicit broadcast gating where AQE cannot see
+    * post-aggregation sizes ([[DriverBound.MaxRows]] — caller must have
+    * persisted/pinned `df` first since gating counts it); eager
+    * localCheckpoint pinning of derived hubs (increments derive MANY small
+    * relations from each other — left as plain plans their logical trees
+    * nest multiplicatively and per-action plan stringification alone
+    * becomes heap-exhausting; pinning truncates the plan to the
+    * materialized rows, ids tracked and freed via [[releasePins]] before
+    * the verb returns — same LogicalRDD-id tracking as the CC loop); and
+    * coarse per-phase stderr ticks.
+    */
   private final class IncrContext(spark: SparkSession, runDir: String, verb: String) {
     def requireLockstep(): Unit = requireStagesLockstep(runDir, verb)
     def loadStage(stage: String): DataFrame =
@@ -440,8 +390,7 @@ object EntityResolution {
         s"$verb: no committed '$stage' snapshot under $runDir — the base must be a " +
           "checkpointed batch run of this build (run() with runDir commits the incremental " +
           s"base stages $StageBlockHot/$StageDocFeatures/$StageMediaDf alongside the main three)"))
-    def gated(df: DataFrame): DataFrame =
-      if (df.count() <= 4000000L) broadcast(df) else df
+    def gated(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, df.count())
     private val pinnedIds = scala.collection.mutable.Set.empty[Int]
     def pin(df: DataFrame): DataFrame = {
       val ck = df.localCheckpoint(true)
@@ -459,257 +408,8 @@ object EntityResolution {
       spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
   }
 
-  private def addDocumentsExact(spark: SparkSession, newDocs: DataFrame, runDir: String,
-                                cfg: PipelineConfig, runId: String): Result = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ctx = new IncrContext(spark, runDir, "addDocuments")
-    import ctx.{loadStage, gated, pin, tick}
-    ctx.requireLockstep()
-    // exact mode requires an exact-history base: insert-mode increments
-    // deliberately do not maintain the batch hot-key recovery structure
-    // (frozen committed rows + splice chains instead), so extending such a
-    // history "exactly" would diverge SILENTLY from the batch twin. Insert
-    // increments leave their insert_hot_rows counter in the blocking
-    // manifest (carried forward by compaction) — fail loud on it.
-    require(!Snapshots.lastCounters(runDir, "blocking").contains("insert_hot_rows"),
-      s"addDocuments(exact = true): the run at $runDir contains insert-mode increments, whose " +
-        "deltas do not maintain the batch hot-key structure exact mode extends — an \"exact\" " +
-        "result would silently differ from the batch twin. Either continue with insert mode " +
-        "(the default) or re-run the batch pipeline over the full corpus to reset the history")
-    // removals leave holes in the derived hot-key recovery rows (a removed
-    // doc's refinement/chain rows vanish but the survivors' committed rows
-    // were derived over the PRE-removal membership), so a batch run over
-    // the surviving corpus would derive different recovery rows — exact
-    // mode cannot extend such a history either
-    require(!Snapshots.lastCounters(runDir, "blocking").contains("removed_docs"),
-      s"addDocuments(exact = true): the run at $runDir contains removal increments — the " +
-        "committed hot-key recovery rows were derived over pre-removal membership, so an " +
-        "\"exact\" extension would silently differ from a batch run over the surviving corpus. " +
-        "Either continue with insert mode (the default) or re-run the batch pipeline")
-    // an audit repair retracts pairs a batch run would re-derive and
-    // re-accept — "exact" extension of an audited history cannot be
-    // batch-equal either (the tombstones are deliberate divergence)
-    require(Snapshots.lastCommitted(runDir, StageAuditTombstones).isEmpty,
-      s"addDocuments(exact = true): the run at $runDir carries audit-repair pair tombstones " +
-        "(auditRepair cut false-merge bridges a batch run over the corpus would re-derive), " +
-        "so an \"exact\" extension cannot be batch-equal. Either continue with insert mode " +
-        "(the default, which honors the tombstones) or re-run the batch pipeline and re-audit")
-    // merge promotions are the same deliberate divergence recall-side: a
-    // batch run re-scores the promoted pairs below threshold and re-splits
-    require(Snapshots.lastCommitted(runDir, StageMergePromotions).isEmpty,
-      s"addDocuments(exact = true): the run at $runDir carries merge-audit promotions " +
-        "(mergeRepair promoted corroborated near-miss pairs above threshold — a batch run " +
-        "would re-score them below it and re-split), so an \"exact\" extension cannot be " +
-        "batch-equal. Either continue with insert mode (the default, which honors the " +
-        "promoted scores) or re-run the batch pipeline and re-merge")
-    val oldBlocking = loadStage("blocking")
-    val oldScored = loadStage("scored_pairs")
-    val oldAssign = loadStage("cluster_assignments")
-    val oldFeatures = loadStage(StageDocFeatures)
-    val oldHot = loadStage(StageBlockHot)
-    val oldDf = loadStage(StageMediaDf)
-    val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
-      sys.error(s"addDocuments: $StageMediaDf manifest lacks the n_docs counter"))
-
-    val toked = Blocking.tokenized(newDocs).persist(MEMORY_AND_DISK)
-    val nNew = toked.count()
-    val dups = toked.select("doc_id").join(oldFeatures.select("doc_id"), "doc_id").count()
-    require(dups == 0,
-      s"addDocuments: $dups new doc_ids already exist in the committed corpus (increments must be disjoint)")
-    tick("tokenize+dup")
-
-    // ---- blocking: only keys the new docs EMIT can change membership, so
-    // only those are re-routed (merged committed membership + new rows
-    // through the batch routeKeyed); every other committed row — including
-    // every derived recovery row of an UNTOUCHED hot parent — carries
-    // forward behind a broadcast anti-join, no O(committed) shuffle. The
-    // rows the touched blocks contributed to the committed table are
-    // recomputed bit-exactly (derived rows are a pure function of the
-    // block_hot membership) so the anti-join removes exactly them.
-    val refineRel = oldFeatures.select(col("doc_id"), col("refine0"), col("refine1"))
-    val newKeyed = pin(Blocking.keyedDocs(toked, cfg.numBands, cfg.rowsPerBand, cfg.tokenBands))
-    val touched = pin(newKeyed.select("block_key").distinct())
-    val touchedB = gated(touched)
-    val oldSmallTouched = oldBlocking.where(Blocking.isRawKey(col("block_key")))
-      .select(col("block_key"), col("doc_id")).join(touchedB, "block_key")
-    val oldHotTouched = pin(oldHot.select(col("block_key"), col("doc_id"))
-      .join(touchedB, "block_key"))
-    val oldTouched = oldSmallTouched.unionByName(oldHotTouched)
-      .join(refineRel, "doc_id")
-      .select(col("doc_id"), col("refine0"), col("refine1"), col("block_key"))
-    val route = Blocking.routeKeyed(oldTouched.unionByName(newKeyed), cfg.maxBlockSize,
-      withHotRows = true)
-    val routeRows = pin(route.rows)
-    route.rows.unpersist()
-    val routeHot = pin(route.hotRows.get)
-    route.hotRows.get.unpersist()
-
-    val (oldDerived0, oldRsizes) = Blocking.hotRecovery(
-      Blocking.hotKeyed(oldHotTouched.join(refineRel, "doc_id")
-        .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1"))),
-      cfg.maxBlockSize)
-    val oldDerivedTouched = pin(oldDerived0)
-    oldDerived0.unpersist() // hotRecovery persists its rsizes, not this; drop any cache anyway
-    val oldKeptTouched = oldRsizes
-      .agg(coalesce(sum(when(col("rsize") <= cfg.maxBlockSize && col("rsize") >= 2, 1L)
-        .otherwise(0L)), lit(0L))).collect()(0).getLong(0)
-    val cappedTouchedOldKeys = oldHotTouched.select("block_key").distinct().count()
-    val cappedTouchedOldRows = oldHotTouched.count()
-    oldRsizes.unpersist()
-
-    // exact multiset of committed rows the re-route replaces
-    val removedRows = pin(oldSmallTouched.select(col("block_key"), col("doc_id"))
-      .unionByName(oldDerivedTouched))
-    val removedRowsB = gated(removedRows)
-    val keptOld = oldBlocking.join(removedRowsB, Seq("block_key", "doc_id"), "left_anti")
-    val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
-    def baseC(k: String): Long = baseBlockC.getOrElse(k, sys.error(
-      s"addDocuments: committed blocking manifest lacks counter '$k'"))
-    val blockCounters = Map(
-      "blocking_rows" -> (baseC("blocking_rows") - removedRows.count()
-        + route.counters("blocking_rows")),
-      "capped_block_keys" -> (baseC("capped_block_keys") - cappedTouchedOldKeys
-        + route.counters("capped_block_keys")),
-      "capped_doc_rows" -> (baseC("capped_doc_rows") - cappedTouchedOldRows
-        + route.counters("capped_doc_rows")),
-      "refined_subblocks_kept" -> (baseC("refined_subblocks_kept") - oldKeptTouched
-        + route.counters("refined_subblocks_kept")))
-    val cBlock = Snapshots.commit(spark, keptOld.unionByName(routeRows), runDir, "blocking",
-      runId, blockCounters)
-    // block_hot stays the FULL raw hot membership (the next increment's
-    // base): untouched hot keys carry forward, touched keys' hot status is
-    // whatever the merged re-route decided
-    val newHotRows = oldHot.select(col("block_key"), col("doc_id"))
-      .join(touchedB, Seq("block_key"), "left_anti")
-      .unionByName(routeHot.select(col("block_key"), col("doc_id")))
-    val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
-    Snapshots.commit(spark, newHotRows, runDir, StageBlockHot, runId,
-      Map("hot_rows" -> (baseHotRows - cappedTouchedOldRows + routeHot.count())))
-    val blocking = spark.read.parquet(cBlock.path)
-    tick("blocking")
-
-    // ---- candidate-pair universe, maintained EXACTLY from the replaced
-    // blocks' per-block pair contributions (canonical block = min key):
-    //  - pairs in no replaced block carry forward untouched;
-    //  - a pair whose canonical block survives re-derives its canonical as
-    //    least(committed, min over re-routed blocks) — untouched blocks
-    //    cannot beat a surviving committed minimum;
-    //  - a pair whose canonical block was replaced ("doubtful") probes the
-    //    untouched keys of ONLY its two docs for the surviving minimum and
-    //    drops out of the universe when nothing justifies it anymore.
-    val minAfter = pin(Blocking.blockPairs(routeRows)
-      .groupBy("doc_id_a", "doc_id_b").agg(min(col("block_key")).as("min_after")))
-    val affected = pin(Blocking.blockPairs(removedRows).select("doc_id_a", "doc_id_b")
-      .unionByName(minAfter.select("doc_id_a", "doc_id_b")).distinct())
-    val affectedB = gated(affected)
-    val unaffectedOld = oldScored.join(affectedB, Seq("doc_id_a", "doc_id_b"), "left_anti")
-    val affectedOld = pin(oldScored.join(affectedB, Seq("doc_id_a", "doc_id_b")))
-    val removalKeys = pin(touched.select("block_key")
-      .unionByName(oldDerivedTouched.select("block_key")).distinct())
-    val flagged = affectedOld.join(
-      gated(removalKeys).withColumn("stale", lit(true)), Seq("block_key"), "left")
-    val okOld = flagged.where(col("stale").isNull).drop("stale")
-      .join(minAfter, Seq("doc_id_a", "doc_id_b"), "left")
-      .withColumn("block_key", least(col("block_key"), col("min_after")))
-      .drop("min_after")
-    val doubtful = pin(flagged.where(col("stale")).drop("stale"))
-    val dDocs = pin(doubtful.select(col("doc_id_a").as("doc_id"))
-      .unionByName(doubtful.select(col("doc_id_b").as("doc_id"))).distinct())
-    val rowsD = pin(keptOld.join(gated(dDocs), "doc_id"))
-    val untMin = doubtful.select("doc_id_a", "doc_id_b")
-      .join(rowsD.select(col("doc_id").as("doc_id_a"), col("block_key")), "doc_id_a")
-      .join(rowsD.select(col("doc_id").as("doc_id_b"), col("block_key")),
-        Seq("doc_id_b", "block_key"))
-      .groupBy("doc_id_a", "doc_id_b").agg(min(col("block_key")).as("unt_min"))
-    val doubtfulRes = doubtful.drop("block_key")
-      .join(minAfter, Seq("doc_id_a", "doc_id_b"), "left")
-      .join(untMin, Seq("doc_id_a", "doc_id_b"), "left")
-      .withColumn("block_key", least(col("min_after"), col("unt_min")))
-      .where(col("block_key").isNotNull)
-      .drop("min_after", "unt_min")
-    val fresh = pin(minAfter
-      .join(oldScored.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"), "left_anti")
-      .withColumnRenamed("min_after", "block_key"))
-    tick("pairs")
-
-    // ---- features: merged document frequencies give EXACT batch idf
-    // weights; weight re-attachment runs ONLY over docs in fresh pairs
-    val nTotal = nOld + nNew
-    val mtokNew = PairScoring.mediaTokenRows(toked, cfg.scoring.exclusivePrefix)
-      .persist(MEMORY_AND_DISK)
-    val dfNew = mtokNew.groupBy("mid").agg(count(lit(1)).as("df"))
-    val dfMerged = oldDf.select(col("mid"), col("df").as("df_old"))
-      .join(dfNew.select(col("mid"), col("df").as("df_new")), Seq("mid"), "full_outer")
-      .select(col("mid"),
-        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
-    val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
-      Map("n_docs" -> nTotal))
-    val w = spark.read.parquet(cDf.path)
-      .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
-    val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
-      .join(Blocking.docRefine(toked), "doc_id")
-      .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
-    val cFeat = Snapshots.commit(spark, oldFeatures.unionByName(newStored), runDir,
-      StageDocFeatures, runId, Map("n_docs" -> nTotal))
-    val docsNeeded = pin(fresh.select(col("doc_id_a").as("doc_id"))
-      .unionByName(fresh.select(col("doc_id_b").as("doc_id"))).distinct())
-    val featsNeeded = pin(PairScoring.featuresFromStored(
-      spark.read.parquet(cFeat.path).join(gated(docsNeeded), "doc_id"), w))
-    tick("features")
-
-    // ---- scoring: committed pairs keep their committed channels; only
-    // pairs NEW to the universe are scored
-    val scoredFresh = pin(PairScoring.scoreFeatures(spark, featsNeeded, fresh, cfg.scoring)
-      .toDF())
-    val nFresh = scoredFresh.count()
-    val reused = unaffectedOld.unionByName(okOld).unionByName(doubtfulRes)
-    val cScore = Snapshots.commit(spark, reused.unionByName(scoredFresh), runDir,
-      "scored_pairs", runId, Map("docs_scored_against" -> nTotal, "pairs_fresh" -> nFresh))
-    val scored = spark.read.parquet(cScore.path)
-    tick("scoring")
-
-    // ---- clustering: only components ADJACENT to a fresh >= threshold
-    // edge (plus all new docs) enter the CC loop — their committed merges
-    // ride in as star edges (merge-monotone); every other doc keeps its
-    // committed assignment behind a broadcast anti-join. Identical to
-    // running CC over (all stars + fresh edges): a component with no fresh
-    // edge reproduces itself (its star IS its fixpoint, cluster_id = min
-    // doc_id), so excluding it changes nothing.
-    val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
-    val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
-      .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
-    val activeCl = pin(oldAssign.join(gated(endpoints), "doc_id")
-      .select("cluster_id").distinct())
-    val activeClB = gated(activeCl)
-    val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
-    val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
-    val inactive = oldAssign.join(activeClB, Seq("cluster_id"), "left_anti")
-      .select("doc_id", "cluster_id")
-    val ccNodes = activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id")))
-    val cc = ConnectedComponents.assignAllTracked(spark, ccNodes,
-      freshEdges.unionByName(starActive), cfg.maxCcIter, pairsPreDeduped = false)
-    val cAssign = Snapshots.commit(spark, inactive.unionByName(cc.assignments), runDir,
-      "cluster_assignments", runId, Map("cc_iterations" -> cc.iterations.toLong))
-    cc.releaseCheckpoints(spark)
-    val assignments = spark.read.parquet(cAssign.path)
-    tick("clustering")
-
-    // every cache this increment materialized is released — the returned
-    // relations all read committed parquet
-    val pairsAffected = affected.count()
-    toked.unpersist(); mtokNew.unpersist()
-    ctx.releasePins()
-
-    Result(assignments, scored, blocking, cc.iterations,
-      blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
-        "pairs_fresh" -> nFresh, "pairs_affected" -> pairsAffected,
-        "cc_iterations" -> cc.iterations.toLong))
-  }
-
-  /** The `exact = false` increment (see [[addDocuments]]): frozen committed
-    * structure, O(delta) end-to-end.
+  /** The increment's mechanism (see [[addDocuments]] for its contract):
+    * frozen committed structure, O(delta) end-to-end.
     *
     *  - blocking: new docs' keys split on committed hot membership. Keys
     *    NOT committed-hot route through the batch cap logic over the NEW
@@ -732,12 +432,13 @@ object EntityResolution {
     *    an unchanged block) are anti-joined away. Fresh pairs are scored
     *    with idf weights from the MERGED document frequencies and appended
     *    as a delta — committed pairs and their channels never move.
-    *  - clustering: identical active-component contract to exact mode;
-    *    the delta removes active cluster ids and adds their re-labeled
-    *    assignments plus the new docs.
+    *  - clustering: only components ADJACENT to a fresh ≥-threshold edge
+    *    (plus all new docs) enter the CC loop, their committed merges riding
+    *    in as star edges; the delta removes active cluster ids and adds
+    *    their re-labeled assignments plus the new docs.
     *
-    * media_df stays a FULL commit (O(vocab) — the one merged relation both
-    * modes share; tiny next to any doc-sized table).
+    * media_df stays a FULL commit (O(vocab) — tiny next to any doc-sized
+    * table).
     */
   private def addDocumentsInsert(spark: SparkSession, newDocs: DataFrame, runDir: String,
                                  cfg: PipelineConfig, runId: String): Result = {
@@ -765,15 +466,13 @@ object EntityResolution {
     // Broadcast gates in this verb reuse counts the verb already holds
     // (manifest rows, delta counts) instead of paying one count() job per
     // gate — the round-6 VerbJobsProbe showed the increment wall is
-    // job-count-bound, not data-bound (same 4M bound everywhere).
+    // job-count-bound, not data-bound (DriverBound everywhere).
     val newKeyed = pin(Blocking.keyedDocs(toked, cfg.numBands, cfg.rowsPerBand, cfg.tokenBands))
     val hotKeys = pin(oldHot.select("block_key").distinct())
     // distinct hot keys ≤ committed block_hot rows, known free from the
     // manifest
-    val hotKeysB =
-      if (Snapshots.lastRows(runDir, StageBlockHot).getOrElse(Long.MaxValue) <= 4000000L)
-        broadcast(hotKeys)
-      else hotKeys
+    val hotKeysB = DriverBound.broadcastWithin(hotKeys,
+      Snapshots.lastRows(runDir, StageBlockHot).getOrElse(Long.MaxValue))
     val inHot = pin(newKeyed.join(hotKeysB, "block_key")
       .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
     val nInHot = inHot.count()
@@ -803,7 +502,7 @@ object EntityResolution {
     val committedAtFlood =
       if (!hasFloods) oldBlocking.select(col("block_key"), col("doc_id")).limit(0)
       else pin(oldBlocking.where(Blocking.isRawKey(col("block_key")))
-        .join(if (nFloodKeysNew <= 4000000L) broadcast(floodKeys) else floodKeys, "block_key")
+        .join(DriverBound.broadcastWithin(floodKeys, nFloodKeysNew), "block_key")
         .select(col("block_key"), col("doc_id")))
     val spliceKeysB =
       if (!hasFloods) committedAtFlood.select("block_key").limit(0)
@@ -823,7 +522,7 @@ object EntityResolution {
     route.hotRows.get.unpersist()
     val touchedHot = pin(inHot.select("block_key").distinct())
     // distinct touched hot keys ≤ the already-counted inHot rows
-    val touchedHotB = if (nInHot <= 4000000L) broadcast(touchedHot) else touchedHot
+    val touchedHotB = DriverBound.broadcastWithin(touchedHot, nInHot)
     val reps = oldHot.join(touchedHotB, "block_key")
       .groupBy("block_key").agg(min(col("doc_id")).as("rep"))
       .unionByName(committedAtFlood.groupBy("block_key").agg(min(col("doc_id")).as("rep")))
@@ -850,8 +549,8 @@ object EntityResolution {
       "refined_subblocks_kept" ->
         (baseC("refined_subblocks_kept") + route.counters("refined_subblocks_kept")),
       "insert_hot_rows" -> (nInHot + nSmallFlood)) ++
-      // history markers survive across modes: a removal anywhere in the
-      // history must keep refusing exact increments even after inserts
+      // history marker: the manifest keeps recording that this run has had
+      // removals, across later inserts
       baseBlockC.get("removed_docs").map("removed_docs" -> _)
     val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
     Snapshots.commitDelta(spark, deltaRows, None, runDir, "blocking", runId,
@@ -873,8 +572,7 @@ object EntityResolution {
 
     // ---- fresh candidate pairs from the delta's touched blocks only
     val deltaKeys = pin(deltaRows.select("block_key").distinct())
-    val oldAtKeys = oldBlocking.join(
-      if (deltaCount <= 4000000L) broadcast(deltaKeys) else deltaKeys, "block_key")
+    val oldAtKeys = oldBlocking.join(DriverBound.broadcastWithin(deltaKeys, deltaCount), "block_key")
       .select(col("block_key"), col("doc_id"))
     val cand = Blocking.candidatePairs(
       deltaRows.select(col("block_key"), col("doc_id")).unionByName(oldAtKeys))
@@ -922,15 +620,19 @@ object EntityResolution {
     val scored = loadStage("scored_pairs")
     tick("scoring")
 
-    // ---- clustering: active-component contract identical to exact mode;
-    // the delta removes active cluster ids, adds their re-labeled
-    // assignments plus the new docs
+    // ---- clustering: only components ADJACENT to a fresh >= threshold
+    // edge (plus all new docs) enter the CC loop — their committed merges
+    // ride in as star edges (merge-monotone). Identical to running CC over
+    // (all stars + fresh edges): a component with no fresh edge reproduces
+    // itself (its star IS its fixpoint, cluster_id = min doc_id), so
+    // excluding it changes nothing. The delta removes active cluster ids,
+    // adds their re-labeled assignments plus the new docs
     val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
     // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
     // by the fresh-pair count the scoring phase already took
     def freshGate(df: DataFrame): DataFrame =
-      if (nFresh <= 2000000L) broadcast(df) else df
+      if (nFresh <= DriverBound.MaxRows / 2) broadcast(df) else df
     val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
       .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
     val activeCl = pin(oldAssign.join(freshGate(endpoints), "doc_id")
@@ -1008,10 +710,8 @@ object EntityResolution {
     *
     * All compute/shuffle is O(|removed| + |their pairs| + |active
     * components| + |heal candidates|). Fails loud when a requested doc_id
-    * is not in the committed corpus. After a removal, `exact = true`
-    * increments are refused (the committed recovery rows no longer match
-    * any batch derivation — see the guard in [[addDocuments]]); insert
-    * increments continue fine.
+    * is not in the committed corpus. Increments continue fine after a
+    * removal.
     */
   def removeDocuments(spark: SparkSession, docIds: DataFrame, runDir: String,
                       cfg: PipelineConfig = PipelineConfig(),
@@ -1044,8 +744,7 @@ object EntityResolution {
     // verb was job-count-bound; gated() pays one count job per call)
     val removed = pin(docIds.select(col("doc_id")).distinct())
     val nRemoved = removed.count()
-    def rmGate(df: DataFrame): DataFrame =
-      if (nRemoved <= 4000000L) broadcast(df) else df
+    def rmGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, nRemoved)
     val removedB = rmGate(removed)
     require(nRemoved > 0, "removeDocuments: empty doc_id set")
     val unknown = removed.join(oldFeatures.select("doc_id"), Seq("doc_id"), "left_anti").count()
@@ -1066,7 +765,7 @@ object EntityResolution {
       "capped_doc_rows" -> math.max(0L, baseC("capped_doc_rows") - removedHotRows),
       "refined_subblocks_kept" -> baseC("refined_subblocks_kept"),
       "removed_docs" -> (baseC("removed_docs") + nRemoved)) ++
-      // and an insert anywhere in the history stays marked across removals
+      // and the insert history marker survives removals
       baseBlockC.get("insert_hot_rows").map("insert_hot_rows" -> _)
     val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
     // empty-adds deltas repartition(1) so the data dir always holds ONE
@@ -1119,12 +818,11 @@ object EntityResolution {
     val rmEdges = strong.join(rmA, "doc_id_a").join(rmB2, "doc_id_b")
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     // the removed subgraph is DELTA-sized by contract and both its bounds
-    // are already counted (nRemoved; rmEdges ⊆ rmPairs): under the
-    // standard 4M driver bound the grouping runs as a driver union-find
-    // (identical labels, ~15 fewer fixed jobs); beyond it, the
-    // distributed loop
+    // are already counted (nRemoved; rmEdges ⊆ rmPairs): within
+    // DriverBound the grouping runs as a driver union-find (identical
+    // labels, ~15 fewer fixed jobs); beyond it, the distributed loop
     val rmGroupsAssign =
-      if (nRemoved <= 4000000L && nRmPairs <= 4000000L)
+      if (nRemoved <= DriverBound.MaxRows && nRmPairs <= DriverBound.MaxRows)
         ConnectedComponents.assignAllDriver(spark, removed.select("doc_id"), rmEdges)
       else {
         val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"),
@@ -1233,8 +931,8 @@ object EntityResolution {
     *  - [[StageAuditTombstones]] records them durably, so later insert/
     *    heal increments cannot innocently re-derive and re-accept a cut
     *    pair when an arrival touches its block (LSM delete-tombstone
-    *    semantics; `exact = true` increments refuse audited histories —
-    *    tombstones are deliberate divergence from the batch twin);
+    *    semantics — tombstones are deliberate divergence from a batch run
+    *    over the corpus, which would re-derive the cut pairs);
     *  - cluster_assignments: every cut cluster's docs are re-labeled to
     *    min doc_id of their side (a delta snapshot; untouched clusters
     *    never move).
@@ -1288,7 +986,7 @@ object EntityResolution {
     // next audit's scope (idempotent re-audit), never narrows it
     def stampWatermark(): Unit =
       Snapshots.lastCommitted(runDir, "cluster_assignments")
-        .foreach(writeAuditWatermark(runDir, _))
+        .foreach(AuditWatermark.write(runDir, _))
     if (r.counters("audit_clusters_cut") == 0L) {
       r.release()
       oldAssign.unpersist()
@@ -1420,9 +1118,9 @@ object EntityResolution {
     val oldAssign = loadStage("cluster_assignments")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tombstones = Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-    // pre-commit watermark stamp target (see mergeWatermarkPath scaladoc)
+    // pre-commit watermark stamp target (see MergeWatermark)
     val entryAssignId = Snapshots.lastCommitted(runDir, "cluster_assignments")
-    def stampMergeWatermark(): Unit = entryAssignId.foreach(writeMergeWatermark(runDir, _))
+    def stampMergeWatermark(): Unit = entryAssignId.foreach(MergeWatermark.write(runDir, _))
     // ---- incremental scoping: restrict the census to cluster pairs with
     // at least one endpoint touched since the last merge watermark. The
     // scan is O(delta adds); the evidence passed to the census is the
@@ -1437,24 +1135,22 @@ object EntityResolution {
     // LOUDLY to full (merge_scope_full_fallback) on: no watermark, a
     // non-compaction full snapshot in range, a drift-state history (a
     // crashed mergeRepair's clusters never reached the commit log — only
-    // the full pass's drift rule sees them), or a scope too large for the
-    // standard 4M broadcast bound.
+    // the full pass's drift rule sees them), or a scope too large for
+    // DriverBound (touched clusters, their docs, the 2-hop clusters or
+    // their docs).
     val (scoredForMerge, scopeOpt, scopeCounters): (DataFrame, Option[DataFrame], Map[String, Long]) =
       if (!incremental) (oldScored, None, Map.empty[String, Long])
       else {
-        val stages = Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures,
-          "scored_pairs", "cluster_assignments")
-        val ids = stages.flatMap(s => Snapshots.lastCommitted(runDir, s))
-        val inLockstep = ids.distinct.size <= 1
         val fullFb = (oldScored, None,
           Map("merge_incremental" -> 1L, "merge_scope_full_fallback" -> 1L))
+        val inLockstep = lockstepIds(runDir).map(_._2).distinct.size <= 1
         if (!inLockstep) fullFb
-        else mergeScope(spark, runDir) match {
-          case (None, c) => (oldScored, None, Map("merge_incremental" -> 1L) ++ c)
-          case (Some(touched0), c) =>
+        else MergeWatermark.touchedSince(spark, runDir) match {
+          case None => fullFb
+          case Some(touched0) =>
             val touched = pin(touched0)
             val nTouched = touched.count()
-            if (nTouched > 4000000L) fullFb
+            if (nTouched > DriverBound.MaxRows) fullFb
             else if (nTouched == 0L) {
               // idle cadence point: nothing changed since the last merge
               // audit — commit nothing, stamp, one log scan total
@@ -1464,42 +1160,47 @@ object EntityResolution {
               return Result(oldAssign, oldScored, loadStage("blocking"), 0,
                 Map("merge_incremental" -> 1L, "merge_scope_clusters" -> 0L,
                   "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L,
-                  "merge_committed" -> 0L) ++ c)
+                  "merge_committed" -> 0L))
             } else {
               val vetoCol =
                 if (oldScored.columns.contains("vetoed")) col("vetoed") else lit(false)
               val evFloor = oldScored.where(col("score") >= merge.mergeFloor || vetoCol)
+              // docs per touched cluster are unbounded: count the pinned
+              // docs before broadcasting them
               val touchedDocs = pin(oldAssign.join(broadcast(touched), "cluster_id")
                 .select("doc_id"))
-              val tdA = broadcast(touchedDocs.select(col("doc_id").as("doc_id_a"))
-                .withColumn("fa", lit(true)))
-              val tdB = broadcast(touchedDocs.select(col("doc_id").as("doc_id_b"))
-                .withColumn("fb", lit(true)))
-              val ev1 = evFloor.join(tdA, Seq("doc_id_a"), "left")
-                .join(tdB, Seq("doc_id_b"), "left")
-                .where(col("fa").isNotNull || col("fb").isNotNull).drop("fa", "fb")
-              val aSide = oldAssign.select(col("doc_id").as("doc_id_a"), col("cluster_id").as("ca"))
-              val bSide = oldAssign.select(col("doc_id").as("doc_id_b"), col("cluster_id").as("cb"))
-              val c2 = pin(ev1.join(aSide, "doc_id_a").join(bSide, "doc_id_b")
-                .select(explode(array(col("ca"), col("cb"))).as("cluster_id"))
-                .unionByName(touched).distinct())
-              if (c2.count() > 4000000L) fullFb
+              if (touchedDocs.count() > DriverBound.MaxRows) fullFb
               else {
-                val c2docs = pin(oldAssign.join(broadcast(c2), "cluster_id").select("doc_id"))
-                if (c2docs.count() > 4000000L) fullFb
+                val tdA = broadcast(touchedDocs.select(col("doc_id").as("doc_id_a"))
+                  .withColumn("fa", lit(true)))
+                val tdB = broadcast(touchedDocs.select(col("doc_id").as("doc_id_b"))
+                  .withColumn("fb", lit(true)))
+                val ev1 = evFloor.join(tdA, Seq("doc_id_a"), "left")
+                  .join(tdB, Seq("doc_id_b"), "left")
+                  .where(col("fa").isNotNull || col("fb").isNotNull).drop("fa", "fb")
+                val aSide = oldAssign.select(col("doc_id").as("doc_id_a"), col("cluster_id").as("ca"))
+                val bSide = oldAssign.select(col("doc_id").as("doc_id_b"), col("cluster_id").as("cb"))
+                val c2 = pin(ev1.join(aSide, "doc_id_a").join(bSide, "doc_id_b")
+                  .select(explode(array(col("ca"), col("cb"))).as("cluster_id"))
+                  .unionByName(touched).distinct())
+                if (c2.count() > DriverBound.MaxRows) fullFb
                 else {
-                  val cdA = broadcast(c2docs.select(col("doc_id").as("doc_id_a"))
-                    .withColumn("ga", lit(true)))
-                  val cdB = broadcast(c2docs.select(col("doc_id").as("doc_id_b"))
-                    .withColumn("gb", lit(true)))
-                  // floor-filtered is sufficient: the merge reads its input
-                  // only through crossEvidence (floor ∪ vetoed) and the
-                  // promotion-ledger semi-join (band rows ⊂ floor)
-                  val scoped = pin(evFloor.join(cdA, Seq("doc_id_a"), "left")
-                    .join(cdB, Seq("doc_id_b"), "left")
-                    .where(col("ga").isNotNull || col("gb").isNotNull).drop("ga", "gb"))
-                  (scoped, Some(touched),
-                    Map("merge_incremental" -> 1L, "merge_scope_clusters" -> nTouched) ++ c)
+                  val c2docs = pin(oldAssign.join(broadcast(c2), "cluster_id").select("doc_id"))
+                  if (c2docs.count() > DriverBound.MaxRows) fullFb
+                  else {
+                    val cdA = broadcast(c2docs.select(col("doc_id").as("doc_id_a"))
+                      .withColumn("ga", lit(true)))
+                    val cdB = broadcast(c2docs.select(col("doc_id").as("doc_id_b"))
+                      .withColumn("gb", lit(true)))
+                    // floor-filtered is sufficient: the merge reads its input
+                    // only through crossEvidence (floor ∪ vetoed) and the
+                    // promotion-ledger semi-join (band rows ⊂ floor)
+                    val scoped = pin(evFloor.join(cdA, Seq("doc_id_a"), "left")
+                      .join(cdB, Seq("doc_id_b"), "left")
+                      .where(col("ga").isNotNull || col("gb").isNotNull).drop("ga", "gb"))
+                    (scoped, Some(touched),
+                      Map("merge_incremental" -> 1L, "merge_scope_clusters" -> nTouched))
+                  }
                 }
               }
             }
@@ -1570,84 +1271,89 @@ object EntityResolution {
   }
 
   /** Scope of an `incremental = true` [[auditRepair]]: the assignments rows
-    * of clusters TOUCHED since the last audit's watermark, derived by
-    * scanning the cluster_assignments commit log — each unaudited DELTA's
-    * raw adds carry the full membership of every cluster that commit
-    * changed (all four verbs re-commit a cluster whenever its accepted-edge
-    * set gains or loses an edge: inserts/removals re-label every ACTIVE
-    * cluster, the audit re-labels every CUT cluster), and the previous
-    * audit left every other cluster at its per-cluster cut fixpoint
+    * of clusters TOUCHED since the last audit's watermark
+    * ([[Watermark.touchedSince]]). Each unaudited delta's raw adds carry
+    * the full membership of every cluster that commit changed (all four
+    * verbs re-commit a cluster whenever its accepted-edge set gains or
+    * loses an edge: inserts/removals re-label every ACTIVE cluster, the
+    * audit re-labels every CUT cluster), and the previous audit left every
+    * other cluster at its per-cluster cut fixpoint
     * ([[graft.functions.GraphKernels.weakCutRepair]] iterates until no
     * bundle qualifies), so unscoped clusters cannot hold a qualifying cut.
-    * The scan is O(delta adds); the audit's join+cogroup then shuffles only
-    * the scoped clusters' members and edges — the cadence audit's cost
-    * follows the ARRIVAL rate, not the corpus size.
-    *
-    * Falls back LOUDLY to the full corpus (`audit_scope_full_fallback`)
-    * when no watermark exists (first audit, or a repair cleared it) or when
-    * an unaudited FULL snapshot is not a storage-level compaction
-    * (`compacted_from` manifest counter) — a batch re-run re-derives
-    * everything, so "touched" is undefined for it.
+    * The audit's join+cogroup then shuffles only the scoped clusters'
+    * members and edges — the cadence audit's cost follows the ARRIVAL
+    * rate, not the corpus size. Falls back LOUDLY to the full corpus
+    * (`audit_scope_full_fallback`) wherever the watermark gives no scope.
     */
   private def auditScope(spark: SparkSession, runDir: String,
-                         oldAssign: DataFrame): (DataFrame, Map[String, Long]) = {
-    val stage = "cluster_assignments"
-    val latest = Snapshots.lastCommitted(runDir, stage).getOrElse(-1L)
-    val fullFallback = (oldAssign, Map("audit_scope_full_fallback" -> 1L))
-    readAuditWatermark(runDir).filter(_ <= latest) match {
-      case None => fullFallback
-      case Some(w) =>
-        val range = Snapshots.snapshots(runDir, stage).filter(_ > w)
-        val rerunIds = range.filter(id => !Snapshots.isDelta(runDir, stage, id) &&
-          !Snapshots.counters(runDir, stage, id).contains("compacted_from"))
-        if (rerunIds.nonEmpty) fullFallback
-        else {
-          val deltaIds = range.filter(Snapshots.isDelta(runDir, stage, _))
-          val touched =
-            if (deltaIds.isEmpty) oldAssign.select(col("cluster_id")).limit(0)
-            else deltaIds.map(id => Snapshots.snapshotAdds(spark, runDir, stage, id)
-              .select(col("cluster_id"))).reduce(_ unionByName _).distinct()
-          val nTouched = touched.count()
-          // same dimension-size broadcast bound as the other incremental
-          // verbs (IncrContext.gated)
-          val tJ = if (nTouched <= 4000000L) broadcast(touched) else touched
-          (oldAssign.join(tJ, Seq("cluster_id"), "left_semi"),
-            Map("audit_incremental" -> 1L, "audit_scope_clusters" -> nTouched))
-        }
+                         oldAssign: DataFrame): (DataFrame, Map[String, Long]) =
+    AuditWatermark.touchedSince(spark, runDir) match {
+      case None => (oldAssign, Map("audit_scope_full_fallback" -> 1L))
+      case Some(touched) =>
+        val nTouched = touched.count()
+        (oldAssign.join(DriverBound.broadcastWithin(touched, nTouched), Seq("cluster_id"),
+          "left_semi"),
+          Map("audit_incremental" -> 1L, "audit_scope_clusters" -> nTouched))
+    }
+
+  /** A scoped audit verb's watermark: the cluster_assignments snapshot id
+    * through which the verb last examined the clustering, kept in `file`
+    * under the run dir as `{"<key>":id}`. Lives OUTSIDE the snapshot log —
+    * losing or clearing it is always safe (the next incremental pass just
+    * falls back to a full one).
+    */
+  private[graft] final class Watermark(file: String, key: String) {
+    private def path(runDir: String) = java.nio.file.Paths.get(runDir, file)
+
+    def read(runDir: String): Option[Long] = {
+      val p = path(runDir)
+      if (!java.nio.file.Files.exists(p)) None
+      else ("\"" + key + "\"\\s*:\\s*(\\d+)").r
+        .findFirstMatchIn(java.nio.file.Files.readString(p)).map(_.group(1).toLong)
+    }
+
+    def write(runDir: String, id: Long): Unit = {
+      val tmp = java.nio.file.Paths.get(runDir, s"$file.tmp${ProcessHandle.current().pid()}")
+      java.nio.file.Files.writeString(tmp, s"""{"$key":$id}""")
+      java.nio.file.Files.move(tmp, path(runDir),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+
+    /** Drop the watermark (the next incremental pass runs full).
+      * [[graft.streaming.StreamingIngest.repair]] calls this after trimming
+      * snapshots: a watermark pointing into trimmed history could otherwise
+      * hide a replayed increment's clusters from the scoped pass forever.
+      */
+    def clear(runDir: String): Unit = java.nio.file.Files.deleteIfExists(path(runDir))
+
+    /** The distinct cluster ids touched since the watermark: the raw adds
+      * of every later cluster_assignments delta, an O(delta adds) scan of
+      * the commit log. None = run full — no watermark, or a FULL snapshot
+      * in range that is not a storage-level compaction (`compacted_from`
+      * manifest counter): a batch re-run re-derives everything, so
+      * "touched" is undefined across it.
+      */
+    def touchedSince(spark: SparkSession, runDir: String): Option[DataFrame] = {
+      val stage = "cluster_assignments"
+      val latest = Snapshots.lastCommitted(runDir, stage).getOrElse(-1L)
+      read(runDir).filter(_ <= latest).flatMap { w =>
+        val (deltaIds, fullIds) = Snapshots.snapshots(runDir, stage).filter(_ > w)
+          .partition(Snapshots.isDelta(runDir, stage, _))
+        if (fullIds.exists(!Snapshots.counters(runDir, stage, _).contains("compacted_from"))) None
+        else if (deltaIds.isEmpty) {
+          import spark.implicits._
+          Some(Seq.empty[String].toDF("cluster_id"))
+        } else Some(deltaIds.map(id => Snapshots.snapshotAdds(spark, runDir, stage, id)
+          .select(col("cluster_id"))).reduce(_ unionByName _).distinct())
+      }
     }
   }
 
-  /** Watermark of the last completed audit: the cluster_assignments
-    * snapshot id through which [[auditRepair]] examined the clustering
-    * (written full or incremental, cuts or not). Lives OUTSIDE the
-    * snapshot log — losing or trimming it is always safe (the next
-    * incremental audit just falls back to a full pass).
+  /** Watermark of the last completed cut audit: stamped by [[auditRepair]]
+    * AFTER its commits (written full or incremental, cuts or not).
     */
-  private def auditWatermarkPath(runDir: String) =
-    java.nio.file.Paths.get(runDir, "_audit_watermark")
-
-  private[graft] def readAuditWatermark(runDir: String): Option[Long] = {
-    val p = auditWatermarkPath(runDir)
-    if (!java.nio.file.Files.exists(p)) None
-    else "\"audited_through\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(java.nio.file.Files.readString(p)).map(_.group(1).toLong)
-  }
-
-  private def writeAuditWatermark(runDir: String, id: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(runDir, s"_audit_watermark.tmp${ProcessHandle.current().pid()}")
-    java.nio.file.Files.writeString(tmp, s"""{"audited_through":$id}""")
-    java.nio.file.Files.move(tmp, auditWatermarkPath(runDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Drop the audit watermark (the next incremental audit runs full).
-    * [[graft.streaming.StreamingIngest.repair]] calls this after trimming
-    * snapshots: a watermark pointing into trimmed history could otherwise
-    * hide a replayed increment's clusters from the scoped audit forever.
-    */
-  private[graft] def clearAuditWatermark(runDir: String): Unit =
-    java.nio.file.Files.deleteIfExists(auditWatermarkPath(runDir))
+  private[graft] val AuditWatermark = new Watermark("_audit_watermark", "audited_through")
 
   /** Watermark of the last completed MERGE audit — the cluster_assignments
     * snapshot id as of that audit's ENTRY (deliberately pre-commit, unlike
@@ -1655,61 +1361,9 @@ object EntityResolution {
     * memberships, and the combined cluster's evidence toward third
     * parties was never judged as a unit — stamping pre-commit keeps the
     * audit's own relabel delta above the watermark so the next scoped
-    * cadence point re-judges exactly those clusters). Same lifecycle as
-    * `_audit_watermark`: losing it only widens the next scoped audit to a
-    * full pass.
+    * cadence point re-judges exactly those clusters).
     */
-  private def mergeWatermarkPath(runDir: String) =
-    java.nio.file.Paths.get(runDir, "_merge_watermark")
-
-  private[graft] def readMergeWatermark(runDir: String): Option[Long] = {
-    val p = mergeWatermarkPath(runDir)
-    if (!java.nio.file.Files.exists(p)) None
-    else "\"merged_through\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(java.nio.file.Files.readString(p)).map(_.group(1).toLong)
-  }
-
-  private def writeMergeWatermark(runDir: String, id: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(runDir,
-      s"_merge_watermark.tmp${ProcessHandle.current().pid()}")
-    java.nio.file.Files.writeString(tmp, s"""{"merged_through":$id}""")
-    java.nio.file.Files.move(tmp, mergeWatermarkPath(runDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private[graft] def clearMergeWatermark(runDir: String): Unit =
-    java.nio.file.Files.deleteIfExists(mergeWatermarkPath(runDir))
-
-  /** Scope of an `incremental = true` [[mergeRepair]]: the distinct
-    * cluster ids touched since the last merge watermark, from the same
-    * O(delta-adds) commit-log scan as [[auditScope]]. `(None, counters)`
-    * = run full (no watermark, or an unaudited non-compaction full
-    * snapshot in range — "touched" is undefined across a batch re-run).
-    */
-  private def mergeScope(spark: SparkSession, runDir: String): (Option[DataFrame], Map[String, Long]) = {
-    val stage = "cluster_assignments"
-    val latest = Snapshots.lastCommitted(runDir, stage).getOrElse(-1L)
-    val fullFallback = (None, Map("merge_scope_full_fallback" -> 1L))
-    readMergeWatermark(runDir).filter(_ <= latest) match {
-      case None => fullFallback
-      case Some(w) =>
-        val range = Snapshots.snapshots(runDir, stage).filter(_ > w)
-        val rerunIds = range.filter(id => !Snapshots.isDelta(runDir, stage, id) &&
-          !Snapshots.counters(runDir, stage, id).contains("compacted_from"))
-        if (rerunIds.nonEmpty) fullFallback
-        else {
-          val deltaIds = range.filter(Snapshots.isDelta(runDir, stage, _))
-          val touched =
-            if (deltaIds.isEmpty)
-              Snapshots.loadCommitted(spark, runDir, stage).get
-                .select(col("cluster_id")).limit(0)
-            else deltaIds.map(id => Snapshots.snapshotAdds(spark, runDir, stage, id)
-              .select(col("cluster_id"))).reduce(_ unionByName _).distinct()
-          (Some(touched), Map("merge_incremental" -> 1L))
-        }
-    }
-  }
+  private[graft] val MergeWatermark = new Watermark("_merge_watermark", "merged_through")
 
   /** UPSERT: replace committed documents with new versions (and insert any
     * genuinely new doc_ids in the same call) — the third incremental verb a

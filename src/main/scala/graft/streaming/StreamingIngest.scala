@@ -262,8 +262,8 @@ object StreamingIngest {
     // increment's clusters from the scoped cadence audit forever (the
     // replay re-commits the trimmed ids with different content); dropping
     // it just makes the next incremental audit run full
-    EntityResolution.clearAuditWatermark(runDir)
-    EntityResolution.clearMergeWatermark(runDir)
+    EntityResolution.AuditWatermark.clear(runDir)
+    EntityResolution.MergeWatermark.clear(runDir)
     floor
   }
 }

@@ -190,7 +190,7 @@ class ClusterAuditSpec extends SparkSpec {
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
-  test("auditRepair verb: commits deltas + tombstones, idempotent, refuses exact increments") {
+  test("auditRepair verb: commits deltas + tombstones, idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("graft-audit-verb").toString
     val (a, p) = mergedCase
     // a committed fake base run: the verb reads scored_pairs +
@@ -239,15 +239,6 @@ class ClusterAuditSpec extends SparkSpec {
     assert(ts3.count() == 1L, "re-tombstoning the same pair must not duplicate it")
     assert(Snapshots.lastCounters(dir, EntityResolution.StageAuditTombstones)
       .get("tombstoned_pairs").contains(1L))
-
-    // exact increments refuse audited histories (tombstones are deliberate
-    // divergence from the batch twin)
-    val ex = intercept[IllegalArgumentException] {
-      EntityResolution.addDocuments(spark,
-        Seq(("z1", Seq.empty[graft.model.Span])).toDF("doc_id", "spans"),
-        dir, exact = true)
-    }
-    assert(ex.getMessage.contains("tombstones"))
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 }

@@ -140,6 +140,23 @@ class ConnectedComponentsSpec extends SparkSpec {
       assert(got == want, s"trial $trial: driver and distributed assignAll diverge")
       dist.releaseCheckpoints(spark)
     }
+    // ids mixing supplementary characters (UTF-16 surrogate pairs) with
+    // U+E000..U+FFFF: UTF-16 code-unit order and Spark's UTF-8 byte
+    // (code-point) order disagree on them; the labels follow Spark's
+    val emoji = "\uD83D\uDE00" // U+1F600
+    val ids = Seq(s"${emoji}a", "\uE000b", "\uFFFDc", s"x$emoji", "x\uE000", "y\uFFFF",
+      s"y${emoji}z", "plain")
+    val mixedEdges = Seq((ids(0), ids(1)), (ids(1), ids(2)), (ids(3), ids(4)), (ids(6), ids(5)))
+      .toDF("src", "dst")
+    val mixedAll = ids.toDF("doc_id")
+    val dist = ConnectedComponents.assignAllTracked(spark, mixedAll, mixedEdges)
+    val want = dist.assignments.as[(String, String)].collect().toMap
+    assert(want(ids(0)) == "\uE000b" && want(ids(3)) == "x\uE000" && want(ids(6)) == "y\uFFFF",
+      s"distributed labels are not code-point mins: $want")
+    val got = ConnectedComponents.assignAllDriver(spark, mixedAll, mixedEdges)
+      .as[(String, String)].collect().toMap
+    assert(got == want, s"code-point ids: driver $got != distributed $want")
+    dist.releaseCheckpoints(spark)
   }
 
   test("pairsPreDeduped path produces identical assignments") {

@@ -43,8 +43,8 @@ class IncrementalAuditSpec extends SparkSpec {
     val a0 = EntityResolution.auditRepair(spark, tmp, acfg, runId = "a0", incremental = true)
     assert(a0.counters("audit_scope_full_fallback") == 1L, s"first audit must run full: ${a0.counters}")
     assert(a0.counters("audit_committed") == 0L, "clean base must need no cuts")
-    assert(EntityResolution.readAuditWatermark(tmp).contains(0L),
-      s"watermark must stamp even without cuts: ${EntityResolution.readAuditWatermark(tmp)}")
+    assert(EntityResolution.AuditWatermark.read(tmp).contains(0L),
+      s"watermark must stamp even without cuts: ${EntityResolution.AuditWatermark.read(tmp)}")
 
     // the false merge ARRIVES via ingest (batch 0); an unrelated batch follows
     assert(StreamingIngest.ingestBatch(spark, plantedMerge.toDF(), tmp, batchId = 0L, cfg)
@@ -94,7 +94,7 @@ class IncrementalAuditSpec extends SparkSpec {
     // must run full (a watermark into trimmed history would hide replayed
     // clusters forever)
     StreamingIngest.repair(tmp)
-    assert(EntityResolution.readAuditWatermark(tmp).isEmpty, "repair must clear the watermark")
+    assert(EntityResolution.AuditWatermark.read(tmp).isEmpty, "repair must clear the watermark")
     val a5 = EntityResolution.auditRepair(spark, tmp, acfg, runId = "a5", incremental = true)
     assert(a5.counters("audit_scope_full_fallback") == 1L,
       s"post-repair incremental audit must fall back to full: ${a5.counters}")

@@ -100,13 +100,6 @@ class MergeRepairSpec extends SparkSpec {
     val addCfg = GenConfig(numEntities = 40, docsPerEntity = 3, seed = 4242)
     val newDocs = DocGen.docs(spark, addCfg)
       .map(d => d.copy(doc_id = "n" + d.doc_id)).toDF()
-    // exact mode refuses the promoted history loudly (checked before the
-    // insert increment leaves its own, earlier refusal marker)
-    val ex = intercept[IllegalArgumentException] {
-      EntityResolution.addDocuments(spark, newDocs, tmp, tightPipe,
-        runId = "x", exact = true)
-    }
-    assert(ex.getMessage.contains("merge-audit promotions"))
     val inc = EntityResolution.addDocuments(spark, newDocs, tmp, tightPipe, runId = "incr")
     val afterAssign = inc.assignments.as[(String, String)].collect().toMap
     inc.release()

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   *    cluster's min doc relabels it to the new min, removing the only
   *    bridge doc SPLITS the cluster (no star-edge leakage), and splice
   *    healing re-connects hot-key survivors the scorer still vouches for;
-  *  - removals compose with insert increments and compaction; exact-mode
-  *    increments are refused afterwards.
+  *  - removals compose with insert increments and compaction.
   */
 class RemovalSpec extends SparkSpec {
 
@@ -177,7 +176,7 @@ class RemovalSpec extends SparkSpec {
     bg.unpersist(); planted.unpersist(); removed.unpersist()
   }
 
-  test("removal composes with insert increments and compaction; exact mode refused afterwards") {
+  test("removal composes with insert increments and compaction") {
     import spark.implicits._
     val cfgA = GenConfig(numEntities = 60, docsPerEntity = 3, seed = 21L)
     val cfgB = GenConfig(numEntities = 20, docsPerEntity = 3, seed = 2121L)
@@ -193,11 +192,6 @@ class RemovalSpec extends SparkSpec {
     val removed = goldA.select("entity_id").distinct().orderBy("entity_id").limit(5)
       .join(goldA, "entity_id").select("doc_id").cache()
     EntityResolution.removeDocuments(spark, removed, tmp, runId = "rm")
-    // exact mode is refused immediately after the removal (the removal
-    // marker), and the marker must survive a subsequent insert increment
-    val e = intercept[IllegalArgumentException](
-      EntityResolution.addDocuments(spark, docsB.limit(0), tmp, runId = "ex", exact = true))
-    assert(e.getMessage.contains("removal increments"))
 
     val inc = EntityResolution.addDocuments(spark, docsB, tmp, runId = "ins")
     val goldLeft = goldA.join(removed, Seq("doc_id"), "left_anti").unionByName(goldB)
@@ -211,11 +205,6 @@ class RemovalSpec extends SparkSpec {
     val preAssign = asg(inc.assignments)
     assert(asg(Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get) == preAssign,
       "compaction changed post-removal assignments")
-    // post-insert the history carries BOTH markers; either refusal is
-    // correct — the specific message tracks whichever guard fires first
-    val e2 = intercept[IllegalArgumentException](
-      EntityResolution.addDocuments(spark, docsB.limit(0), tmp, runId = "ex2", exact = true))
-    assert(e2.getMessage.contains("increments"))
     removed.unpersist()
   }
 
