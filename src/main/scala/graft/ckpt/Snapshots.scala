@@ -1,8 +1,11 @@
 package graft.ckpt
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot/lineage layer over Parquet.
   *
@@ -13,8 +16,15 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * drops in behind the same calls when available (SURVEY.md §7.4).
   *
   * Layout: <runDir>/<stage>/snapshot=<id>/data/      (parquet files)
+  *         <runDir>/<stage>/snapshot=<id>/removes/   (delta snapshots only)
   *         <runDir>/<stage>/snapshot=<id>/lineage/   (parquet files)
+  *         <runDir>/<stage>/snapshot=<id>/_manifest.json
   *         <runDir>/<stage>/snapshot=<id>/_COMMITTED (atomic marker)
+  *
+  * Like an Iceberg table's snapshot metadata, the manifest records the
+  * read schema of `data/` and `removes/`, so no read of a committed
+  * snapshot pays a schema-inference job; manifests written before the
+  * schema was recorded fall back to inference.
   *
   * Reference analogue of lineage counters: LongAccumulator side channels
   * printed at job end (APCompletion.scala:210-258) — upgraded to durable
@@ -30,12 +40,17 @@ object Snapshots {
     * = lineage `read_partition_id`, 9-column ScoredPair; v3 (round 5+) =
     * DELTA snapshot (manifest carries `delta_base` + `remove_keys`; data/
     * holds only the added rows) — resolved on read against its base chain.
-    * A reader accepts v2 (full) and v3 (delta) snapshots.
+    * A reader accepts v2 (full) and v3 (delta) snapshots. The recorded
+    * read schemas (`data_schema`, `removes_schema`) are an additive field
+    * of both versions: a manifest without them reads by inference.
     */
   val FormatVersion = 2
   val DeltaFormatVersion = 3
 
-  final case class Committed(stage: String, snapshotId: Long, path: String, rows: Long)
+  /** A just-committed snapshot: `path` is its `data/` dir, `schema` the
+    * read schema recorded for it ([[read]] reads it back without a job). */
+  final case class Committed(stage: String, snapshotId: Long, path: String, rows: Long,
+                             schema: StructType)
 
   final class IncompatibleSnapshotException(msg: String) extends RuntimeException(msg)
 
@@ -231,46 +246,8 @@ object Snapshots {
     */
   private[ckpt] def commitAt(spark: SparkSession, df: DataFrame, runDir: String, stage: String,
                              runId: String, counters: Map[String, Long],
-                             snapId: Long): Committed = {
-    val snapPath = s"${stageDir(runDir, stage)}/snapshot=$snapId"
-    val attempt = stageAttempt(stageDir(runDir, stage))
-    val dataPath = s"$attempt/data"
-    df.write.mode(SaveMode.Overwrite).parquet(dataPath)
-
-    // ONE job re-reads the written parquet for per-partition lineage; the
-    // snapshot row count is the sum of the collected per-partition counts
-    // (round 2 ran a separate count() — a third job per commit). The
-    // partition ids are the POST-READ partitioning of the committed files
-    // (hence `read_partition_id`), not the writer tasks — what a resumed
-    // consumer of the snapshot will actually see.
-    val written = spark.read.parquet(dataPath)
-    val parts = written
-      .groupBy(spark_partition_id().as("read_partition_id"))
-      .agg(count(lit(1)).as("rows_out"))
-      .collect()
-    val rows = parts.map(_.getLong(1)).sum
-    import spark.implicits._
-    val lineage = parts.toSeq
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .toDF("read_partition_id", "rows_out")
-      .withColumn("run_id", lit(runId))
-      .withColumn("stage", lit(stage))
-      .withColumn("snapshot_id", lit(snapId))
-      .withColumn("counters",
-        map(counters.toSeq.sortBy(_._1).flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*))
-      .withColumn("committed_at", current_timestamp())
-    // local-relation write: no cluster job re-scans the data for lineage
-    lineage.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$attempt/lineage")
-    val manifest =
-      s"""{"format_version":$FormatVersion,"run_id":"$runId","stage":"$stage","snapshot_id":$snapId,"rows":$rows,
-         |"counters":{${counters.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}""".stripMargin
-    Files.writeString(Paths.get(s"$attempt/_manifest.json"), manifest)
-    // marker rides INSIDE the attempt: the publish rename makes the
-    // directory appear fully committed in one atomic step
-    Files.writeString(Paths.get(s"$attempt/_COMMITTED"), "ok")
-    publish(attempt, snapPath, runDir, stage, snapId)
-    Committed(stage, snapId, s"$snapPath/data", rows)
-  }
+                             snapId: Long): Committed =
+    stageAndPublish(spark, df, None, runDir, stage, runId, counters, snapId, delta = None)
 
   /** Atomically commit a DELTA snapshot: `adds` rows plus an optional
     * keyed-remove relation against the PREVIOUS committed snapshot —
@@ -292,46 +269,151 @@ object Snapshots {
                   counters: Map[String, Long], resolvedRows: Long): Committed = {
     val baseId = lastCommitted(runDir, stage).getOrElse(
       sys.error(s"commitDelta: no committed base snapshot for $stage under $runDir"))
-    val snapId = baseId + 1L
+    // the CAS in publish also guards the delta-base arithmetic: a concurrent
+    // writer that committed since our lastCommitted read claimed baseId + 1
+    // first, and publishing OUR delta (computed against the now-stale base)
+    // on top of it would be wrong — failing the race is the correct outcome
+    stageAndPublish(spark, adds, removes, runDir, stage, runId, counters, baseId + 1L,
+      delta = Some((baseId, resolvedRows)))
+  }
+
+  /** The one commit path: write `data` (plus a delta's deduplicated keyed
+    * `removes`), the lineage rows, the manifest and the `_COMMITTED` marker
+    * into a private attempt dir, then [[publish]] it as `snapshot=<snapId>`.
+    * `delta` = (base id, resolved rows) for a delta snapshot; a full
+    * snapshot's row count is the sum of its lineage counts.
+    *
+    * Jobs per commit: the data write (plus the removes write of a delta),
+    * the lineage count and the lineage write. The read schemas go into the
+    * manifest straight from the written relations' schemas, so neither the
+    * lineage count nor any later read infers them.
+    */
+  private def stageAndPublish(spark: SparkSession, data: DataFrame,
+                              removes: Option[(DataFrame, Seq[String])],
+                              runDir: String, stage: String, runId: String,
+                              counters: Map[String, Long], snapId: Long,
+                              delta: Option[(Long, Long)]): Committed = {
     val snapPath = s"${stageDir(runDir, stage)}/snapshot=$snapId"
     val attempt = stageAttempt(stageDir(runDir, stage))
     val dataPath = s"$attempt/data"
-    adds.write.mode(SaveMode.Overwrite).parquet(dataPath)
-    removes.foreach { case (rm, keys) =>
-      rm.selectExpr(keys: _*).dropDuplicates(keys)
-        .write.mode(SaveMode.Overwrite).parquet(s"$attempt/removes")
+    val dataSchema = readSchema(data.schema)
+    data.write.mode(SaveMode.Overwrite).parquet(dataPath)
+    val removesSchema = removes.map { case (rm, keys) =>
+      val keyed = rm.selectExpr(keys: _*).dropDuplicates(keys)
+      keyed.write.mode(SaveMode.Overwrite).parquet(s"$attempt/removes")
+      readSchema(keyed.schema)
     }
-    // lineage describes what THIS commit wrote (the delta adds)
-    val written = spark.read.parquet(dataPath)
-    val parts = written
-      .groupBy(spark_partition_id().as("read_partition_id"))
-      .agg(count(lit(1)).as("rows_out"))
-      .collect()
+
+    // lineage describes what THIS commit wrote (a delta's adds). The
+    // partition ids are the POST-READ partitioning of the committed files
+    // (hence `read_partition_id`), not the writer tasks — what a resumed
+    // consumer of the snapshot will actually see.
+    val parts = readPartitionCounts(spark, dataPath, dataSchema)
     import spark.implicits._
-    val lineage = parts.toSeq
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .toDF("read_partition_id", "rows_out")
+    val sortedCounters = counters.toSeq.sortBy(_._1)
+    parts.toSeq.toDF("read_partition_id", "rows_out")
       .withColumn("run_id", lit(runId))
       .withColumn("stage", lit(stage))
       .withColumn("snapshot_id", lit(snapId))
       .withColumn("counters",
-        map(counters.toSeq.sortBy(_._1).flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*))
+        map(sortedCounters.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*))
       .withColumn("committed_at", current_timestamp())
-    lineage.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$attempt/lineage")
-    val removeKeysJson = removes.map(_._2).getOrElse(Seq.empty)
-      .map(k => s""""$k"""").mkString("[", ",", "]")
-    val manifest =
-      s"""{"format_version":$DeltaFormatVersion,"run_id":"$runId","stage":"$stage","snapshot_id":$snapId,"rows":$resolvedRows,
-         |"delta_base":$baseId,"remove_keys":$removeKeysJson,
-         |"counters":{${counters.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}""".stripMargin
-    Files.writeString(Paths.get(s"$attempt/_manifest.json"), manifest)
+      // local-relation write: no cluster job re-scans the data for lineage
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$attempt/lineage")
+
+    val rows = delta.fold(parts.map(_._2).sum)(_._2)
+    val m = Json.createObjectNode()
+      .put("format_version", if (delta.isDefined) DeltaFormatVersion else FormatVersion)
+      .put("run_id", runId).put("stage", stage).put("snapshot_id", snapId).put("rows", rows)
+    delta.foreach { case (baseId, _) =>
+      m.put("delta_base", baseId)
+      val keys = m.putArray("remove_keys")
+      removes.toSeq.flatMap(_._2).foreach(k => keys.add(k))
+    }
+    val c = m.putObject("counters")
+    sortedCounters.foreach { case (k, v) => c.put(k, v) }
+    m.set[JsonNode]("data_schema", Json.readTree(dataSchema.json))
+    removesSchema.foreach(s => m.set[JsonNode]("removes_schema", Json.readTree(s.json)))
+    Files.writeString(Paths.get(s"$attempt/_manifest.json"), Json.writeValueAsString(m))
+    // marker rides INSIDE the attempt: the publish rename makes the
+    // directory appear fully committed in one atomic step
     Files.writeString(Paths.get(s"$attempt/_COMMITTED"), "ok")
-    // the CAS here also guards the delta-base arithmetic: a concurrent
-    // writer that committed since our lastCommitted read claimed snapId
-    // first, and publishing OUR delta (computed against the now-stale base)
-    // on top of it would be wrong — failing the race is the correct outcome
     publish(attempt, snapPath, runDir, stage, snapId)
-    Committed(stage, snapId, s"$snapPath/data", resolvedRows)
+    Committed(stage, snapId, s"$snapPath/data", rows, dataSchema)
+  }
+
+  /** Rows per READ partition of a committed data dir, empty partitions
+    * skipped: one shuffle-free job (each scan task counts its rows) over
+    * the schema-known scan of no columns. The (partition, rows) pairs
+    * equal what a `groupBy(spark_partition_id())` over the re-read gives,
+    * without that plan's inference job and exchange.
+    */
+  private def readPartitionCounts(spark: SparkSession, path: String,
+                                  schema: StructType): Seq[(Int, Long)] =
+    readParquet(spark, path, Some(schema)).select().queryExecution.toRdd
+      .mapPartitionsWithIndex { (i, it) =>
+        var n = 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        if (n == 0L) Iterator.empty else Iterator.single(i -> n)
+      }
+      .collect().toSeq
+
+  /** The schema a parquet read of data written from `schema` reports:
+    * file sources read every field, element and map value as nullable.
+    */
+  private def readSchema(schema: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    nullable(schema).asInstanceOf[StructType]
+  }
+
+  /** The one reader of committed parquet: with a recorded schema the scan
+    * starts no job until an action; without one Spark infers it (one job).
+    */
+  private def readParquet(spark: SparkSession, path: String,
+                          schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+
+  /** Read back the data of a snapshot this process just committed. */
+  def read(spark: SparkSession, committed: Committed): DataFrame =
+    readParquet(spark, committed.path, Some(committed.schema))
+
+  /** One part (`data` or `removes`) of a committed snapshot, read with the
+    * schema its manifest records (inferred for manifests without one).
+    */
+  private[ckpt] def readPart(spark: SparkSession, runDir: String, stage: String, id: Long,
+                             part: String): DataFrame =
+    readParquet(spark, s"${stageDir(runDir, stage)}/snapshot=$id/$part",
+      manifest(runDir, stage, id).flatMap(_.schema(part)))
+
+  private val Json = new ObjectMapper()
+
+  /** The fields of a committed snapshot's `_manifest.json`. */
+  private final class Manifest(node: JsonNode) {
+    private def get(k: String): Option[JsonNode] = Option(node.get(k))
+    /** absent field reads as v1 (pre-versioning layouts) */
+    def formatVersion: Int = get("format_version").fold(1)(_.asInt)
+    def runId: Option[String] = get("run_id").map(_.asText)
+    def rows: Option[Long] = get("rows").map(_.asLong)
+    def counters: Map[String, Long] = get("counters").fold(Map.empty[String, Long])(
+      _.properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
+    /** (base snapshot id, remove-key columns); None for a full snapshot */
+    def delta: Option[(Long, Seq[String])] = get("delta_base").map(b =>
+      (b.asLong, get("remove_keys").fold(Seq.empty[String])(_.asScala.map(_.asText).toSeq)))
+    /** recorded read schema of `part` (`data` or `removes`) */
+    def schema(part: String): Option[StructType] = get(s"${part}_schema")
+      .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+  }
+
+  /** A snapshot's parsed manifest; None when absent (pre-manifest layouts). */
+  private def manifest(runDir: String, stage: String, id: Long): Option[Manifest] = {
+    val m = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$id/_manifest.json")
+    if (Files.exists(m)) Some(new Manifest(Json.readTree(Files.readString(m)))) else None
   }
 
   /** Counters recorded in a committed snapshot's manifest (the durable
@@ -339,15 +421,8 @@ object Snapshots {
     * the corpus size behind the committed idf weights). Empty map when the
     * manifest is absent.
     */
-  def counters(runDir: String, stage: String, snapshotId: Long): Map[String, Long] = {
-    val m = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$snapshotId/_manifest.json")
-    if (!Files.exists(m)) return Map.empty
-    "\"counters\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(Files.readString(m))
-      .map(_.group(1)).map { body =>
-        "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?\\d+)".r.findAllMatchIn(body)
-          .map(mm => mm.group(1) -> mm.group(2).toLong).toMap
-      }.getOrElse(Map.empty)
-  }
+  def counters(runDir: String, stage: String, snapshotId: Long): Map[String, Long] =
+    manifest(runDir, stage, snapshotId).fold(Map.empty[String, Long])(_.counters)
 
   /** Counters of the LATEST committed snapshot of a stage. */
   def lastCounters(runDir: String, stage: String): Map[String, Long] =
@@ -358,11 +433,8 @@ object Snapshots {
     * the RESOLVED relation, so increments can maintain the next count
     * without an O(committed) recount.
     */
-  def committedRows(runDir: String, stage: String, snapshotId: Long): Option[Long] = {
-    val m = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$snapshotId/_manifest.json")
-    if (!Files.exists(m)) return None
-    "\"rows\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(Files.readString(m)).map(_.group(1).toLong)
-  }
+  def committedRows(runDir: String, stage: String, snapshotId: Long): Option[Long] =
+    manifest(runDir, stage, snapshotId).flatMap(_.rows)
 
   /** Row count of the LATEST committed snapshot of a stage. */
   def lastRows(runDir: String, stage: String): Option[Long] =
@@ -373,11 +445,8 @@ object Snapshots {
     * (a replayed micro-batch whose increment already fully committed is
     * recognizable by the LAST stage's run_id).
     */
-  def runIdOf(runDir: String, stage: String, snapshotId: Long): Option[String] = {
-    val m = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$snapshotId/_manifest.json")
-    if (!Files.exists(m)) return None
-    "\"run_id\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(Files.readString(m)).map(_.group(1))
-  }
+  def runIdOf(runDir: String, stage: String, snapshotId: Long): Option[String] =
+    manifest(runDir, stage, snapshotId).flatMap(_.runId)
 
   /** Number of DELTA hops from the latest committed snapshot down to its
     * full base (0 = latest is a full snapshot; also 0 when the stage has
@@ -442,18 +511,12 @@ object Snapshots {
     dropped
   }
 
-  /** Manifest format version of a committed snapshot: absent field (or
-    * absent manifest — pre-manifest layouts) reads as v1.
+  /** Fails loud on a manifest format this build cannot read (an absent
+    * manifest — pre-manifest layouts — reads as v1).
     */
-  private def formatVersionOf(runDir: String, stage: String, id: Long): Int = {
-    val m = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$id/_manifest.json")
-    if (!Files.exists(m)) return 1
-    "\"format_version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(Files.readString(m))
-      .map(_.group(1).toInt).getOrElse(1)
-  }
-
-  private def checkVersion(runDir: String, stage: String, id: Long): Unit = {
-    val v = formatVersionOf(runDir, stage, id)
+  private def checkVersion(runDir: String, stage: String, id: Long,
+                           m: Option[Manifest]): Unit = {
+    val v = m.fold(1)(_.formatVersion)
     if (v != FormatVersion && v != DeltaFormatVersion) throw new IncompatibleSnapshotException(
       s"snapshot $stage/snapshot=$id in $runDir has format_version $v, this build reads " +
         s"$FormatVersion/$DeltaFormatVersion — re-run the producing stage (resume from an " +
@@ -472,34 +535,28 @@ object Snapshots {
     */
   def snapshotAdds(spark: SparkSession, runDir: String, stage: String,
                    snapshotId: Long): DataFrame =
-    spark.read.parquet(s"${stageDir(runDir, stage)}/snapshot=$snapshotId/data")
+    readPart(spark, runDir, stage, snapshotId, "data")
 
   /** Delta metadata of a committed snapshot: (base snapshot id, remove-key
     * columns), or None for a full snapshot.
     */
-  private def deltaMeta(runDir: String, stage: String, id: Long): Option[(Long, Seq[String])] = {
-    val m = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$id/_manifest.json")
-    if (!Files.exists(m)) return None
-    val body = Files.readString(m)
-    "\"delta_base\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map { bm =>
-      val keys = "\"remove_keys\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(body)
-        .map(_.group(1)).getOrElse("")
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-      (bm.group(1).toLong, keys)
-    }
-  }
+  private def deltaMeta(runDir: String, stage: String, id: Long): Option[(Long, Seq[String])] =
+    manifest(runDir, stage, id).flatMap(_.delta)
 
   /** Resolve a snapshot to its logical relation: full snapshots read their
     * data dir directly; delta snapshots recursively resolve their base,
     * apply the keyed remove (anti-join — the remove relation is small and
-    * Spark broadcasts it by file-size estimate), and union the adds.
+    * Spark broadcasts it by file-size estimate), and union the adds. Every
+    * snapshot in the chain is version-checked, and every dir is read with
+    * its recorded schema, so building the relation starts no job.
     */
   private def resolve(spark: SparkSession, runDir: String, stage: String, id: Long): DataFrame = {
-    val adds = spark.read.parquet(s"${stageDir(runDir, stage)}/snapshot=$id/data")
-    deltaMeta(runDir, stage, id) match {
+    val m = manifest(runDir, stage, id)
+    checkVersion(runDir, stage, id, m)
+    val adds = readPart(spark, runDir, stage, id, "data")
+    m.flatMap(_.delta) match {
       case None => adds
       case Some((baseId, keys)) =>
-        checkVersion(runDir, stage, baseId)
         val base = resolve(spark, runDir, stage, baseId)
         val rmPath = Paths.get(s"${stageDir(runDir, stage)}/snapshot=$id/removes")
         val kept =
@@ -508,7 +565,7 @@ object Snapshots {
             // of the output schema — restore the base's column order so a
             // resolved delta is schema-identical to its base snapshot
             // (positional consumers like exceptAll depend on it)
-            base.join(spark.read.parquet(rmPath.toString), keys, "left_anti")
+            base.join(readPart(spark, runDir, stage, id, "removes"), keys, "left_anti")
               .select(base.columns.map(col).toIndexedSeq: _*)
           else base
         kept.unionByName(adds)
@@ -529,7 +586,6 @@ object Snapshots {
     require(snapshots(runDir, stage).contains(snapshotId),
       s"no committed snapshot $stage/snapshot=$snapshotId under $runDir " +
         s"(committed: ${snapshots(runDir, stage).mkString(",")})")
-    checkVersion(runDir, stage, snapshotId)
     resolve(spark, runDir, stage, snapshotId)
   }
 

@@ -249,6 +249,13 @@ object ClusterMerge {
     * relation — [[merge]] derives the census AND the promotion candidates
     * from ONE evidence pass instead of running the two endpoint joins over
     * the floor-filtered scored set twice per invocation.
+    *
+    * Skew bound: the hub-degree (`zdeg`) window partitions the band
+    * adjacency by cluster, so all of one cluster's adjacency rows land in
+    * a single task — that task's size is the cluster's band degree BEFORE
+    * the `maxWitnessDegree` cap (the cap filters the window's output). One
+    * promiscuous hub therefore runs as one straggler task; it is never
+    * split across tasks.
     */
   private def censusFromEvidence(ev: DataFrame, assignments: DataFrame,
                                  tombstones: Option[DataFrame],
@@ -352,7 +359,8 @@ object ClusterMerge {
     val ev = crossEvidence(assignments, scoredPairs, cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val cenAll = censusFromEvidence(ev, assignments, tombstones, cfg)
-    val cen = (scope match {
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val cen = scope match {
       case Some(sc) =>
         val scA = broadcast(sc.select(col("cluster_id").as("cluster_a"))
           .withColumn("in_a", lit(true)))
@@ -361,8 +369,9 @@ object ClusterMerge {
         cenAll.join(scA, Seq("cluster_a"), "left").join(scB, Seq("cluster_b"), "left")
           .where(col("in_a").isNotNull || col("in_b").isNotNull)
           .drop("in_a", "in_b")
+          .persist(StorageLevel.MEMORY_AND_DISK)
       case None => cenAll
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    }
     val qual = cen.where(col("qualifies"))
 
     // census counters in one aggregation pass
@@ -384,8 +393,11 @@ object ClusterMerge {
     ).collect()(0)
     // loud hub-cap visibility: clusters whose band degree tripped the
     // witness exclusion (recomputed from the persisted census — one tiny
-    // aggregation over cluster-pair rows)
-    val nHubsCapped = cen
+    // aggregation over cluster-pair rows). Counted on the PRE-scope census,
+    // the adjacency the exclusion itself ran on: the scope filter drops
+    // rows that still count toward a hub's degree. A scoped pass therefore
+    // counts every hub its 2-hop evidence reaches.
+    val nHubsCapped = cenAll
       .where(col("n_band_edges") >= 1L && !col("conflict_veto") && !col("tombstone_veto"))
       .select(explode(array(col("cluster_a"), col("cluster_b"))).as("z"))
       .groupBy("z").agg(count(lit(1)).as("zdeg"))
@@ -409,7 +421,7 @@ object ClusterMerge {
         censusCounters ++ Map("merge_clusters_merged" -> 0L, "merge_components" -> 0L,
           "merge_docs_relabeled" -> 0L, "merge_pairs_promoted" -> 0L,
           "merge_band_edges_not_promoted" -> 0L),
-        Seq(cen, ev))
+        Seq(cen, cenAll, ev))
     }
 
     // ---- merge graph: transitive components over qualifying cluster pairs.
@@ -507,6 +519,6 @@ object ClusterMerge {
       "merge_pairs_promoted" -> nPromoted,
       "merge_band_edges_not_promoted" -> nNotPromoted)
     MergeResult(merged, changedRows, changedClusters, promoted, ledger, counters,
-      Seq(cen, ev, mergeMap, changed, ranked, ledger), ccCkpts)
+      Seq(cen, cenAll, ev, mergeMap, changed, ranked, ledger), ccCkpts)
   }
 }

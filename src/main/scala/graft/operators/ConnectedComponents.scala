@@ -174,6 +174,12 @@ object ConnectedComponents {
     * occurs at most once in `edges0` (true for the pipeline's scored
     * candidate pairs, which are pair-deduplicated by construction) and
     * skips the initial edge-dedup shuffle entirely.
+    *
+    * Skew bound: the hashed path's decode is one window partitioned by the
+    * component key, so every node of one component lands in a single task
+    * — that task's size is the largest component's node count, whatever
+    * the partition count. A giant component (a hot entity, or a false
+    * merge chaining many entities) runs as one straggler task.
     */
   def runTracked(spark: SparkSession, edges0: DataFrame, maxIter: Int = 50,
                  pairsPreDeduped: Boolean = false): CcResult = {

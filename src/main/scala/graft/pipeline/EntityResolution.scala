@@ -159,7 +159,7 @@ object EntityResolution {
               val c = counters
               val committed = Snapshots.commit(spark, df, dir, stage, runId, c)
               df.unpersist() // stage is durable now; drop any cache the compute left
-              (spark.read.parquet(committed.path), c)
+              (Snapshots.read(spark, committed), c)
           }
         case None => (compute, counters)
       }
@@ -597,7 +597,7 @@ object EntityResolution {
         (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
     val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
       Map("n_docs" -> nTotal))
-    val w = spark.read.parquet(cDf.path)
+    val w = Snapshots.read(spark, cDf)
       .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
     val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
       .join(Blocking.docRefine(toked), "doc_id")
@@ -859,7 +859,7 @@ object EntityResolution {
           Seq("doc_id_a", "doc_id_b"), "left_anti")))
       .withColumn("block_key",
         Blocking.famTag(Blocking.Family.Heal, xxhash64(col("doc_id_a"), col("doc_id_b")))))
-    val w = spark.read.parquet(cDf.path)
+    val w = Snapshots.read(spark, cDf)
       .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
     val healDocs = pin(healCand.select(col("doc_id_a").as("doc_id"))
       .unionByName(healCand.select(col("doc_id_b").as("doc_id"))).distinct())
@@ -1138,6 +1138,22 @@ object EntityResolution {
     // the full pass's drift rule sees them), or a scope too large for
     // DriverBound (touched clusters, their docs, the 2-hop clusters or
     // their docs).
+    //
+    // Touched = the clusters of every assignments delta since the
+    // watermark PLUS the clusters of the endpoints of every scored_pairs
+    // delta's evidence adds: an insert can commit band evidence between
+    // two old clusters without re-labeling either, and without the second
+    // half that pair would leave the scope for good once the watermark
+    // passes it.
+    def evidence(pairs: DataFrame): DataFrame = pairs.where(col("score") >= merge.mergeFloor ||
+      (if (pairs.columns.contains("vetoed")) col("vetoed") else lit(false)))
+    def touchedByEvidence(clusters: DataFrame, pairAdds: Seq[DataFrame]): DataFrame =
+      pairAdds.map(p => evidence(p)
+          .select(explode(array(col("doc_id_a"), col("doc_id_b"))).as("doc_id")))
+        .reduceOption(_ unionByName _)
+        .fold(clusters)(ends => clusters
+          .unionByName(oldAssign.join(ends, Seq("doc_id"), "left_semi").select("cluster_id"))
+          .distinct())
     val (scoredForMerge, scopeOpt, scopeCounters): (DataFrame, Option[DataFrame], Map[String, Long]) =
       if (!incremental) (oldScored, None, Map.empty[String, Long])
       else {
@@ -1145,7 +1161,9 @@ object EntityResolution {
           Map("merge_incremental" -> 1L, "merge_scope_full_fallback" -> 1L))
         val inLockstep = lockstepIds(runDir).map(_._2).distinct.size <= 1
         if (!inLockstep) fullFb
-        else MergeWatermark.touchedSince(spark, runDir) match {
+        else MergeWatermark.touchedSince(spark, runDir)
+          .flatMap(cl => MergeWatermark.addsSince(spark, runDir, "scored_pairs")
+            .map(touchedByEvidence(cl, _))) match {
           case None => fullFb
           case Some(touched0) =>
             val touched = pin(touched0)
@@ -1162,9 +1180,7 @@ object EntityResolution {
                   "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L,
                   "merge_committed" -> 0L))
             } else {
-              val vetoCol =
-                if (oldScored.columns.contains("vetoed")) col("vetoed") else lit(false)
-              val evFloor = oldScored.where(col("score") >= merge.mergeFloor || vetoCol)
+              val evFloor = evidence(oldScored)
               // docs per touched cluster are unbounded: count the pinned
               // docs before broadcasting them
               val touchedDocs = pin(oldAssign.join(broadcast(touched), "cluster_id")
@@ -1327,27 +1343,32 @@ object EntityResolution {
       */
     def clear(runDir: String): Unit = java.nio.file.Files.deleteIfExists(path(runDir))
 
-    /** The distinct cluster ids touched since the watermark: the raw adds
-      * of every later cluster_assignments delta, an O(delta adds) scan of
-      * the commit log. None = run full — no watermark, or a FULL snapshot
-      * in range that is not a storage-level compaction (`compacted_from`
-      * manifest counter): a batch re-run re-derives everything, so
-      * "touched" is undefined across it.
+    /** The raw adds of every `stage` delta committed after the watermark,
+      * an O(delta adds) scan of the commit log (snapshot ids above the
+      * watermark: the lockstep stages share ids). None = run full — no
+      * watermark, or a FULL snapshot in range that is not a storage-level
+      * compaction (`compacted_from` manifest counter): a batch re-run
+      * re-derives everything, so "touched" is undefined across it.
       */
-    def touchedSince(spark: SparkSession, runDir: String): Option[DataFrame] = {
-      val stage = "cluster_assignments"
+    def addsSince(spark: SparkSession, runDir: String, stage: String): Option[Seq[DataFrame]] = {
       val latest = Snapshots.lastCommitted(runDir, stage).getOrElse(-1L)
       read(runDir).filter(_ <= latest).flatMap { w =>
         val (deltaIds, fullIds) = Snapshots.snapshots(runDir, stage).filter(_ > w)
           .partition(Snapshots.isDelta(runDir, stage, _))
         if (fullIds.exists(!Snapshots.counters(runDir, stage, _).contains("compacted_from"))) None
-        else if (deltaIds.isEmpty) {
-          import spark.implicits._
-          Some(Seq.empty[String].toDF("cluster_id"))
-        } else Some(deltaIds.map(id => Snapshots.snapshotAdds(spark, runDir, stage, id)
-          .select(col("cluster_id"))).reduce(_ unionByName _).distinct())
+        else Some(deltaIds.map(Snapshots.snapshotAdds(spark, runDir, stage, _)))
       }
     }
+
+    /** The distinct cluster ids touched since the watermark: those of
+      * every later cluster_assignments delta's adds ([[addsSince]]).
+      */
+    def touchedSince(spark: SparkSession, runDir: String): Option[DataFrame] =
+      addsSince(spark, runDir, "cluster_assignments").map { adds =>
+        import spark.implicits._
+        adds.map(_.select(col("cluster_id"))).reduceOption(_ unionByName _)
+          .fold(Seq.empty[String].toDF("cluster_id"))(_.distinct())
+      }
   }
 
   /** Watermark of the last completed cut audit: stamped by [[auditRepair]]

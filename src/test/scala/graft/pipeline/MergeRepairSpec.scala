@@ -5,6 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.ckpt.Snapshots
 import graft.eval.Eval
+import graft.model.ScoredPair
 import graft.operators.ClusterMerge
 import graft.synth.{DocGen, GenConfig}
 import org.apache.spark.sql.functions._
@@ -176,6 +177,8 @@ class MergeRepairSpec extends SparkSpec {
       "twin corpus produced no splits — the comparison would be vacuous")
     assert(scoped.counters("merge_cluster_pairs_qualified") ==
       full.counters("merge_cluster_pairs_qualified"))
+    assert(scoped.counters("merge_witness_hubs_capped") ==
+      full.counters("merge_witness_hubs_capped"))
     assert(scoped.counters("merge_committed") == full.counters("merge_committed"))
     val a = Snapshots.loadCommitted(spark, tmpA, "cluster_assignments").get
       .as[(String, String)].collect().toMap
@@ -234,5 +237,65 @@ class MergeRepairSpec extends SparkSpec {
       graft.operators.ClusterAudit.AuditConfig(threshold = 0.75, strongScore = 0.75))
     assert(audit.counters("audit_clusters_cut") == 0L)
     assert(Snapshots.lastCommitted(tmp, "cluster_assignments").get == idBefore)
+  }
+
+  test("scoped mergeRepair == full when a delta commits band-only evidence between old clusters") {
+    // witness cap 1: the clusters the band rows below connect to two or
+    // more neighbors are hubs, so the hub counter is compared non-vacuously
+    val mcfg = ClusterMerge.MergeConfig(maxWitnessDegree = 1)
+    val tmpA = Files.createTempDirectory("graft-merge-band").toString
+    val base = EntityResolution.run(spark, docs, runDir = Some(tmpA), runId = "base")
+    base.release(keepAssignments = true)
+    val Seq(x, y, z, w1, w2) = Snapshots.loadCommitted(spark, tmpA, "cluster_assignments").get
+      .as[(String, String)].collect().groupBy(_._2).values.map(_.map(_._1).toSeq.sorted)
+      .filter(_.size == 3).toSeq.sortBy(_.head).take(5)
+
+    // commit by hand what an insert can: scored rows in the band
+    // [mergeFloor, threshold) between OLD docs, replacing any committed row
+    // of the same pair, with no-op deltas on every other lockstep stage —
+    // cluster_assignments included, so no cluster is re-labeled
+    def commitBand(pairs: Seq[(String, String)], runId: String): Unit = {
+      val keys = Seq("doc_id_a", "doc_id_b")
+      val adds = pairs.map { case (a, b) => if (a < b) (a, b) else (b, a) }
+        .map { case (a, b) => ScoredPair(a, b, 0L, 0.55, 0.55, 0.55, 0.55, true, false) }
+        .toDS().toDF()
+      val replaced = Snapshots.loadCommitted(spark, tmpA, "scored_pairs").get
+        .join(adds.select(keys.map(col): _*), keys, "left_semi").count()
+      Snapshots.commitDelta(spark, adds, Some((adds, keys)), tmpA, "scored_pairs", runId,
+        Snapshots.lastCounters(tmpA, "scored_pairs"),
+        Snapshots.lastRows(tmpA, "scored_pairs").get - replaced + pairs.size)
+      stages(tmpA).filter(_ != "scored_pairs").foreach { s =>
+        Snapshots.commitDelta(spark,
+          Snapshots.loadCommitted(spark, tmpA, s).get.limit(0).repartition(1), None,
+          tmpA, s, runId, Snapshots.lastCounters(tmpA, s), Snapshots.lastRows(tmpA, s).get)
+      }
+    }
+    // single band edges (coverage 1/9: never qualify) around z, then a
+    // merge audit that stamps the watermark past them
+    commitBand(Seq(z.head -> w1.head, z.head -> w2.head, z.head -> y.head), "bandA")
+    val first = EntityResolution.mergeRepair(spark, tmpA, mcfg, runId = "m1")
+    assert(first.counters("merge_committed") == 0L)
+    // after the watermark: a full band bundle between x and y, which
+    // qualifies (coverage 9/9) — the scope must find it through the
+    // scored_pairs delta alone
+    commitBand(for (a <- x; b <- y) yield a -> b, "bandB")
+    val tmpB = Files.createTempDirectory("graft-merge-bandB").toString + "/run"
+    copyDir(tmpA, tmpB)
+    val scoped = EntityResolution.mergeRepair(spark, tmpA, mcfg, runId = "m2", incremental = true)
+    val full = EntityResolution.mergeRepair(spark, tmpB, mcfg, runId = "m2full")
+    assert(!scoped.counters.contains("merge_scope_full_fallback"),
+      "scoped pass unexpectedly fell back to full")
+    assert(scoped.counters("merge_scope_clusters") >= 2L)
+    assert(full.counters("merge_committed") == 1L, "the band bundle should merge x and y")
+    for (k <- Seq("merge_committed", "merge_cluster_pairs_qualified", "merge_pairs_promoted",
+        "merge_witness_hubs_capped"))
+      assert(scoped.counters(k) == full.counters(k), s"$k: scoped ${scoped.counters(k)} " +
+        s"!= full ${full.counters(k)}")
+    assert(full.counters("merge_witness_hubs_capped") == 2L, "hubs: y and z")
+    def clustering(dir: String) = Snapshots.loadCommitted(spark, dir, "cluster_assignments").get
+      .as[(String, String)].collect().toMap
+    assert(clustering(tmpA) == clustering(tmpB),
+      "scoped and full merge audits committed different clusterings")
+    assert(clustering(tmpA)(x.head) == clustering(tmpA)(y.head))
   }
 }
