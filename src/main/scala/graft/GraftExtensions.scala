@@ -100,8 +100,8 @@ object GraftExtensions {
     * scalars ride as trailing literals so ONE registered name serves every
     * ScoreConfig; the builder folds them back into a ScoreConfig here.
     * exclusivePrefix reaches the kernel only as a nonEmpty on/off switch
-    * (the x_ids arrays are pre-extracted in PairScoring.features), so a
-    * boolean literal carries it.
+    * (the x_ids arrays are pre-extracted in PairScoring.featuresTokenized),
+    * so a boolean literal carries it.
     */
   val scorePairDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("score_pair"),

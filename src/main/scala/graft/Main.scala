@@ -3,7 +3,7 @@ package graft
 import graft.eval.Eval
 import graft.pipeline.EntityResolution
 import graft.synth.{DocGen, GenConfig}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** spark-submit entry point for the entity-resolution pipeline.
   *
@@ -101,6 +101,29 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
+  /** A verb's counters as one JSON object, keys in sorted order. */
+  private def countersJson(counters: Map[String, Long]): String =
+    counters.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+  /** The before/after fields of a repair verb's JSON: pairwise F1 of the
+    * clustering before and after the repair over the committed blocking's
+    * labeled pairs, plus cluster equality after, against the gold
+    * regenerated from the base corpus flags.
+    */
+  private def repairEvalJson(spark: SparkSession, dir: String, baseCfg: GenConfig,
+                             assignBefore: DataFrame, assignAfter: DataFrame): String = {
+    val gold = DocGen.gold(spark, baseCfg).toDF()
+    val blocking = graft.ckpt.Snapshots.loadCommitted(spark, dir, "blocking").get
+    val labeled = EntityResolution.labeledPairs(blocking, gold).cache()
+    val before = Eval.pairwiseF1(assignBefore, labeled)
+    val after = Eval.pairwiseF1(assignAfter, labeled)
+    labeled.unpersist()
+    s""","f1_before":${before.f1},"precision_before":${before.precision},""" +
+      s""""recall_before":${before.recall},"f1_after":${after.f1},""" +
+      s""""precision_after":${after.precision},"recall_after":${after.recall},""" +
+      s""""cluster_equality_after":${Eval.clusterEquality(assignAfter, gold)}"""
+  }
+
   /** Runnable surface over [[EntityResolution.addDocuments]]: generate
     * the increment corpus, extend the committed run at `dir`, evaluate
     * against the COMBINED gold (base ∪ prefixed increment). Returns the
@@ -130,11 +153,10 @@ object Main {
         s""""gold_pairs_blocked":$gpBlocked,"gold_pairs_missed":$gpMissed"""
     } else ""
     newDocs.unpersist()
-    val counters = res.counters.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     s"""{"docs_added":$nNew,"docs_total":${res.counters("docs_total")},""" +
       s""""clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
-      s""""seconds":$secs,"added_docs_per_sec":${nNew / secs},"counters":$counters$evalJson}"""
+      s""""seconds":$secs,"added_docs_per_sec":${nNew / secs},""" +
+      s""""counters":${countersJson(res.counters)}$evalJson}"""
   }
 
   /** Runnable surface over [[EntityResolution.removeDocuments]]: retract
@@ -164,11 +186,9 @@ object Main {
         s""""cluster_equality":$eq"""
     } else ""
     gold.unpersist(); removedDocs.unpersist()
-    val counters = res.counters.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     s"""{"docs_removed":$nRm,"docs_total":${res.counters("docs_total")},""" +
       s""""clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
-      s""""seconds":$secs,"counters":$counters$evalJson}"""
+      s""""seconds":$secs,"counters":${countersJson(res.counters)}$evalJson}"""
   }
 
   /** Runnable surface over [[EntityResolution.replaceDocuments]]: UPSERT —
@@ -197,11 +217,9 @@ object Main {
         s""""cluster_equality":$eq"""
     } else ""
     revised.unpersist()
-    val counters = res.counters.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     s"""{"docs_replaced":$nRev,"docs_total":${res.counters("docs_total")},""" +
       s""""clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
-      s""""seconds":$secs,"counters":$counters$evalJson}"""
+      s""""seconds":$secs,"counters":${countersJson(res.counters)}$evalJson}"""
   }
 
   /** Runnable surface over [[graft.operators.ClusterAudit]] /
@@ -241,21 +259,9 @@ object Main {
       s""""weak_bundles":${c.getLong(6)},"clusters_with_weak_bundle":${c.getLong(7)}"""
     val repairJson = if (commit) {
       val res = EntityResolution.auditRepair(spark, dir, acfg, incremental = incremental)
-      val counters = res.counters.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val evalJson = if (doEval) {
-        val gold = DocGen.gold(spark, baseCfg).toDF()
-        val blocking = graft.ckpt.Snapshots.loadCommitted(spark, dir, "blocking").get
-        val labeled = EntityResolution.labeledPairs(blocking, gold).cache()
-        val before = Eval.pairwiseF1(assignBefore, labeled)
-        val after = Eval.pairwiseF1(res.assignments, labeled)
-        labeled.unpersist()
-        s""","f1_before":${before.f1},"precision_before":${before.precision},""" +
-          s""""recall_before":${before.recall},"f1_after":${after.f1},""" +
-          s""""precision_after":${after.precision},"recall_after":${after.recall},""" +
-          s""""cluster_equality_after":${Eval.clusterEquality(res.assignments, gold)}"""
-      } else ""
-      s""","repair":$counters$evalJson"""
+      val evalJson =
+        if (doEval) repairEvalJson(spark, dir, baseCfg, assignBefore, res.assignments) else ""
+      s""","repair":${countersJson(res.counters)}$evalJson"""
     } else ""
     s"""{"audit":{$censusJson},"seconds":${(System.nanoTime() - t0) / 1e9}$repairJson}"""
   }
@@ -299,21 +305,9 @@ object Main {
       s""""cluster_pairs_below_coverage":${c.getLong(6)}"""
     val repairJson = if (commit) {
       val res = EntityResolution.mergeRepair(spark, dir, mcfg)
-      val counters = res.counters.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val evalJson = if (doEval) {
-        val gold = DocGen.gold(spark, baseCfg).toDF()
-        val blocking = graft.ckpt.Snapshots.loadCommitted(spark, dir, "blocking").get
-        val labeled = EntityResolution.labeledPairs(blocking, gold).cache()
-        val before = Eval.pairwiseF1(assignBefore, labeled)
-        val after = Eval.pairwiseF1(res.assignments, labeled)
-        labeled.unpersist()
-        s""","f1_before":${before.f1},"precision_before":${before.precision},""" +
-          s""""recall_before":${before.recall},"f1_after":${after.f1},""" +
-          s""""precision_after":${after.precision},"recall_after":${after.recall},""" +
-          s""""cluster_equality_after":${Eval.clusterEquality(res.assignments, gold)}"""
-      } else ""
-      s""","repair":$counters$evalJson"""
+      val evalJson =
+        if (doEval) repairEvalJson(spark, dir, baseCfg, assignBefore, res.assignments) else ""
+      s""","repair":${countersJson(res.counters)}$evalJson"""
     } else ""
     s"""{"merge_audit":{$censusJson},"seconds":${(System.nanoTime() - t0) / 1e9}$repairJson}"""
   }
@@ -546,11 +540,10 @@ object Main {
         s""""gold_pairs_total":$gpTotal,"gold_pairs_blocked":$gpBlocked,""" +
         s""""gold_pairs_missed":$gpMissed$sweepJson"""
     } else ""
-    val counters = res.counters.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     println(
       s"""{"docs":$nDocs,"clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
-      s""""seconds":$secs,"docs_per_sec":${nDocs / secs},"counters":$counters$evalJson}""")
+      s""""seconds":$secs,"docs_per_sec":${nDocs / secs},""" +
+      s""""counters":${countersJson(res.counters)}$evalJson}""")
     spark.stop()
   }
 }

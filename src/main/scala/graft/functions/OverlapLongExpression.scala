@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   *
   * The long-id twin of TokenOverlapExpression: round 3 dictionary-encodes
   * scoring tokens to 64-bit hashes before the pair shuffle (see
-  * PairScoring.features), so the candidate prescreen compares 8-byte
+  * PairScoring.featuresTokenized), so the candidate prescreen compares 8-byte
   * primitives instead of UTF8String bytes — no HashMap, no boxing: both
   * sides are copied to primitive arrays, sorted, and merge-walked
   * (O(n log n) on n ≤ maxTokens=64 beats hashing at this size and touches

@@ -33,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Children (10): txt_a, tok_ids_a, m_ids_a, m_ws_a, x_ids_a, then the
   * same five for side b — the hash-encoded feature encoding of
-  * PairScoring.features. The ScoreConfig scalars arrive as literals via
+  * PairScoring.featuresTokenized. The ScoreConfig scalars arrive as literals via
   * the registry builder (GraftExtensions.scorePairDescriptor), so one
   * registered function serves any config.
   */

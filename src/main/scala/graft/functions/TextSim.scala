@@ -147,7 +147,7 @@ object TextSim {
 
   /** LCS length over 64-bit token ids — the hot-path twin of tokenLcs:
     * round 3 hash-encodes scoring tokens to longs before the pair shuffle
-    * (PairScoring.features), so the O(|a|·|b|) DP compares primitives
+    * (PairScoring.featuresTokenized), so the O(|a|·|b|) DP compares primitives
     * instead of strings. Semantics identical to tokenLcs under the hashing
     * (collision prob ~2^-64 per token pair; property-tested equal in
     * PairScoringSpec).

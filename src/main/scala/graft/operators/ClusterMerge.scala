@@ -104,7 +104,7 @@ object ClusterMerge {
         * cross pair is a same-entity pair scoring just under threshold);
         * junk between two distinct-entity clusters shares a couple of
         * coincidental near-misses out of many possible pairs. Measured on
-        * the 571k-doc skew corpus (tools/MergeCensusProbe): every
+        * the 571k-doc skew corpus (BENCH/BASELINE.md merge census): every
         * healable true split sat at coverage 1.0 (2 of 2 possible),
         * every junk cluster pair at ≤ 0.33 (1–3 of 9+) — without this
         * dial, multiplicity alone qualified 19–20 junk pairs (first
@@ -137,7 +137,11 @@ object ClusterMerge {
         * up at scale. Capped hubs are counted loudly
         * (`merge_witness_hubs_capped`). 64 is far above any degree a
         * genuine threshold-split fragment reaches (measured censuses show
-        * 1–3) while bounding the join at 64² rows per hub. */
+        * 1–3) while bounding the join at 64² rows per hub. A scoped
+        * (`incremental`) merge audit counts only the capped hubs inside
+        * its 2-hop neighborhood, so its `merge_witness_hubs_capped` is a
+        * lower bound on the full pass's count (a hub outside the scope
+        * witnesses no scoped pair, so the verdicts are the same). */
       maxWitnessDegree: Int = 64)
 
   /** Config invariants, factored out so surfaces that DEFER the merge (the
@@ -295,7 +299,7 @@ object ClusterMerge {
     // agg+semi-join: a join would reference the adj subtree a second
     // time, and this whole census subtree is evaluated once per side of
     // the witness self-join — the extra reference measurably multiplied
-    // the evidence-pass work (round-6 VerbJobsProbe)
+    // the evidence-pass work (round-6 verb job census, OPTIMIZATION_r06.md §4)
     val wz = Window.partitionBy(col("z"))
     val adjW = adj.withColumn("zdeg", count(lit(1)).over(wz))
       .where(col("zdeg") <= cfg.maxWitnessDegree).drop("zdeg")
@@ -435,7 +439,7 @@ object ClusterMerge {
     // (ConnectedComponents.unionFindMin, code-point order like the
     // distributed min): one collect replaces the distributed star loop's
     // ~15 fixed jobs per invocation, which dominated the verb's wall at
-    // every sandbox scale (round-6 VerbJobsProbe: the merge leg was
+    // every sandbox scale (OPTIMIZATION_r06.md §3: the merge leg was
     // job-count-bound, not data-bound). Beyond the bound (a pathological
     // drift state can qualify arbitrarily many pairs) the exact same
     // semantics run through the distributed CC loop. Identical labels

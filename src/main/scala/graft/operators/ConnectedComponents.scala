@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * (cluster_id = min doc_id, FIXTURES.md §3). Internally the loop runs
   * over 64-bit LONG node ids: the star loop shuffles the edge set ~6
   * times per iteration, and ~30-byte string pairs were CC's measured
-  * 2.0–2.9× task-CPU inflation at 4 threads (round-4 CcProbe census —
-  * hash/compare/ser-de on small rows, not spill or GC). Two encodings,
+  * 2.0–2.9× task-CPU inflation at 4 threads (round-4 CC census in
+  * BENCH/BASELINE.md — hash/compare/ser-de on small rows, not spill or
+  * GC). Two encodings,
   * chosen by a one-aggregate census over the node dictionary:
   *
   *  - HASHED (default): nid = xxhash64(node) — a pure projection, zero
@@ -356,7 +357,7 @@ object ConnectedComponents {
     * [[DriverBound.MaxRows]], from counts it holds anyway — never a new
     * count job): two collects replace the star loop's ~15
     * fixed driver round-trips, which dominate wall whenever the graph is
-    * small (round-6 VerbJobsProbe: the incremental verbs are
+    * small (OPTIMIZATION_r06.md §3: the incremental verbs are
     * job-count-bound at every sandbox scale). Output is EXACTLY
     * [[assignAll]]'s: one row per allDocIds doc, cluster_id = min node id
     * of its component over the full edge universe (edge endpoints outside

@@ -98,10 +98,11 @@ object PairScoring {
     def release(): Unit = mediaTokenCache.foreach(_.unpersist())
   }
 
-  /** Per-doc scoring features, HASH-ENCODED for the pair shuffle — ONE
-    * tokenization pass over the persisted (toks, md) projection feeds both
-    * the media-idf aggregation and the feature join (round 2 tokenized the
-    * source twice per run):
+  /** Per-doc scoring features, HASH-ENCODED for the pair shuffle, from a
+    * pre-tokenized (possibly persisted) relation — the pipeline shares one
+    * span-extraction pass with blocking. ONE pass over the (toks, md)
+    * projection feeds both the media-idf aggregation and the feature join
+    * (round 2 tokenized the source twice per run):
     *
     *  - txt:      the maxTokens-truncated tokens joined by ' ' — the ONE
     *              string per side the char-level JW/Levenshtein channel
@@ -118,13 +119,7 @@ object PairScoring {
     *
     * Token-hash collisions (~2^-64 per comparison) can only nudge a
     * channel score, never corrupt ids: doc ids stay strings end-to-end.
-    */
-  def features(docs: DataFrame, nDocs: Long, cfg: ScoreConfig = ScoreConfig(),
-               persistMedia: Boolean = true): Features =
-    featuresTokenized(Blocking.tokenized(docs), nDocs, cfg, persistMedia)
-
-  /** features() over a pre-tokenized (possibly persisted) relation — the
-    * pipeline path sharing one span-extraction pass with blocking.
+    *
     * `persistMedia=false` skips the media-token cache (the relation is
     * computed twice inside the one feature plan — ReuseExchange does not
     * dedup diverged projections) for small/one-shot callers that would
@@ -437,7 +432,7 @@ object PairScoring {
     inter.toDouble / math.max(a.length, b.length)
   }
 
-  /** Hot-path per-pair kernel over HASH-ENCODED features (see `features`):
+  /** Hot-path per-pair kernel over HASH-ENCODED features (see `featuresTokenized`):
     * token ids are xxhash64 longs (pre-truncated to cfg.maxTokens), media
     * ids/weights are id-sorted parallel arrays, exclusive claims are
     * pre-extracted sorted id arrays, and the joined text string is
@@ -497,7 +492,7 @@ object PairScoring {
   }
 
   /** Score all candidate pairs against a PRECOMPUTED feature table (see
-    * `features`; callers persist it — the pipeline does — so the idf
+    * `featuresTokenized`; callers persist it — the pipeline does — so the idf
     * aggregation and tokenization run once per pipeline, not once per
     * downstream materialization).
     *
@@ -550,18 +545,4 @@ object PairScoring {
       }
     }
   }
-
-  /** Convenience: features + scoreFeatures in one call, CACHE-FREE
-    * (persistMedia=false — nothing to release, the media-token relation
-    * is recomputed inside the one plan; the pipeline path instead uses
-    * featuresTokenized and owns the cache). `nDocs` feeds the idf
-    * formula; pass the cached docs count so no extra job runs here.
-    */
-  def score(
-      spark: SparkSession,
-      docs: DataFrame,
-      candidates: DataFrame,
-      nDocs: Long,
-      cfg: ScoreConfig = ScoreConfig()): Dataset[ScoredPair] =
-    scoreFeatures(spark, features(docs, nDocs, cfg, persistMedia = false).feats, candidates, cfg)
 }

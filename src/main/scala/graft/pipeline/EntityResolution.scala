@@ -112,26 +112,33 @@ object EntityResolution {
   }
 
 
-  /** Prefer shuffled-hash over sort-merge joins for the duration of one
-    * pipeline verb (optimization guide §3.1/§9: "allow shuffled hash join
-    * when it fits"): the verbs' equi-joins (block census, feature
-    * attach, candidate self-join, evidence joins) are hash-friendly —
-    * both sides' per-partition builds are bounded — and the sort phases
-    * they replace are exactly the memory-bandwidth cost that inflates at
-    * higher thread counts (measured: −7% wall at BOTH 1 and 4 threads,
-    * with the larger absolute cut on the 4-thread side — stage census in
-    * OPTIMIZATION_r06.md). Planner/size-condition gated: joins whose
-    * build side cannot be bounded stay sort-merge, so this is a
-    * preference, never a correctness or OOM bet. Saved/restored like the
-    * CC loop's conf overrides.
+  private val PreferSortMergeJoin = "spark.sql.join.preferSortMergeJoin"
+
+  /** The frame every pipeline verb runs in:
+    *
+    *  - it prefers shuffled-hash over sort-merge joins while the verb runs
+    *    (optimization guide §3.1/§9: "allow shuffled hash join when it
+    *    fits"): the verbs' equi-joins (block census, feature attach,
+    *    candidate self-join, evidence joins) are hash-friendly — both
+    *    sides' per-partition builds are bounded — and the sort phases they
+    *    replace are exactly the memory-bandwidth cost that inflates at
+    *    higher thread counts (measured: −7% wall at BOTH 1 and 4 threads,
+    *    with the larger absolute cut on the 4-thread side — stage census
+    *    in OPTIMIZATION_r06.md). Planner/size-condition gated: joins whose
+    *    build side cannot be bounded stay sort-merge, so this is a
+    *    preference, never a correctness or OOM bet. The caller's setting
+    *    is restored on exit, like the CC loop's conf overrides;
+    *  - for an incremental verb (`ctx` given) it runs the lockstep check
+    *    before the body and releases every pin and verb-owned cache after
+    *    it, on EVERY exit path: a refused or failed verb leaves no
+    *    persisted RDD behind.
     */
-  private def beginFastJoins(spark: SparkSession): String = {
-    val prev = spark.conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    prev
+  private def verb[T](spark: SparkSession, ctx: Option[IncrContext] = None)(body: => T): T = {
+    val prev = spark.conf.get(PreferSortMergeJoin, "true")
+    spark.conf.set(PreferSortMergeJoin, "false")
+    try { ctx.foreach(_.requireLockstep()); body }
+    finally { ctx.foreach(_.release()); spark.conf.set(PreferSortMergeJoin, prev) }
   }
-  private def endFastJoins(spark: SparkSession, prev: String): Unit =
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", prev)
 
   /** Run the full pipeline. When `runDir` is given, each stage is committed
     * as a snapshot and `resume=true` skips already-committed stages
@@ -139,15 +146,7 @@ object EntityResolution {
     */
   def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig = PipelineConfig(),
           runDir: Option[String] = None, runId: String = "run0",
-          resume: Boolean = false): Result = {
-    val fjPrev = beginFastJoins(spark)
-    try runBody(spark, docs, cfg, runDir, runId, resume)
-    finally endFastJoins(spark, fjPrev)
-  }
-
-  private def runBody(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
-          runDir: Option[String], runId: String, resume: Boolean): Result = {
-
+          resume: Boolean = false): Result = verb(spark) {
     def staged(stage: String, counters: => Map[String, Long])(compute: => DataFrame): (DataFrame, Map[String, Long]) =
       runDir match {
         case Some(dir) =>
@@ -201,7 +200,7 @@ object EntityResolution {
     // stage 2: scoring — idf weights computed distributedly and joined in
     // as per-doc hash-encoded arrays (no driver dictionary at any corpus
     // size); tokenization runs once per materialization via the shared
-    // media-token exchange inside PairScoring.features (ReuseExchange)
+    // media-token cache inside PairScoring.featuresTokenized
     var scoreCounters = Map.empty[String, Long]
     var featCacheRef: Option[DataFrame] = None
     var featRef: Option[PairScoring.Features] = None
@@ -279,58 +278,6 @@ object EntityResolution {
     Result(assignments, scored, blocking, ccIters, c1 ++ c2 ++ c3, tokedRef, featCacheRef, ccCkptIds)
   }
 
-  /** INCREMENTAL ER: extend a committed checkpointed run with `newDocs`
-    * WITHOUT re-reading any committed document — the operation a standing
-    * 100 TB deployment actually performs (daily arrivals against a
-    * petabyte-scale committed corpus; a full batch re-run per increment is
-    * the scalability cliff). Commits a NEW snapshot of every stage, so the
-    * run directory becomes a time-travel log: snapshot K-1 is the corpus
-    * before the increment, snapshot K after (Main --snapshot-id reads
-    * either). Reference analogue: the reference re-runs its whole monthly
-    * pipeline per data drop (AMPI.main, SURVEY §3.1) — this is the
-    * snapshot-based replacement.
-    *
-    * The committed blocking structure is FROZEN — no committed row moves,
-    * no committed pair is re-derived; new docs route into the existing
-    * structure (committed hot keys via their deterministic refinement
-    * sub-keys + a salted splice chain to the key's committed
-    * representative), every stage commits an O(|new|)-sized DELTA snapshot
-    * (merge-on-read), and ALL compute/shuffle/write is O(|new| + |their
-    * blocks| + |fresh pairs| + |active components|). Recall for new docs is
-    * within a hair of batch (sub-block membership is deterministic per doc;
-    * connectivity floors are spliced), and precision divergence is
-    * bounded: a committed-small key that crosses the cap only via merged
-    * growth stays uncapped until compaction.
-    *
-    * Against a batch run over (committed ∪ new):
-    *  - fresh pairs are scored with idf weights from the MERGED document
-    *    frequencies (media_df + the new docs'), i.e. exactly the weights
-    *    the batch run computes — a fresh pair the batch run also derives
-    *    scores bit-equal to it (IncrementalSpec asserts this);
-    *  - committed pairs keep their committed channel scores (idf drift per
-    *    token is ln((1+N'/df')/(1+N/df)), second-order for any token worth
-    *    weight), and clustering is MERGE-MONOTONE: committed components
-    *    enter the CC loop as star edges, so committed merges are never
-    *    revisited.
-    * The batch [[run]] over the union is the exact counterpart and the
-    * semantic compaction: it re-derives blocking, pairs, weights and
-    * clusters from the current corpus. Run it when a history must be
-    * indistinguishable from batch — an increment that re-derives every
-    * touched hot key to match it costs O(hot corpus) and measured slower
-    * than the re-run (BENCH/BASELINE.md, round 5).
-    *
-    * Requires the base run to have been committed by a checkpointed run()
-    * of this build (which writes block_hot/doc_features/media_df); fails
-    * loud otherwise. `newDocs` doc_ids must be disjoint from the committed
-    * corpus (checked).
-    */
-  def addDocuments(spark: SparkSession, newDocs: DataFrame, runDir: String,
-                   cfg: PipelineConfig = PipelineConfig(), runId: String = "incr"): Result = {
-    val fjPrev = beginFastJoins(spark)
-    try addDocumentsInsert(spark, newDocs, runDir, cfg, runId)
-    finally endFastJoins(spark, fjPrev)
-  }
-
   /** The six core stages move in LOCKSTEP: every completed verb — the batch
     * run, the increment, removal, upsert halves, and the audits (via their
     * no-op deltas) — commits each exactly once, so unequal last-committed
@@ -379,12 +326,15 @@ object EntityResolution {
     * relations from each other — left as plain plans their logical trees
     * nest multiplicatively and per-action plan stringification alone
     * becomes heap-exhausting; pinning truncates the plan to the
-    * materialized rows, ids tracked and freed via [[releasePins]] before
-    * the verb returns — same LogicalRDD-id tracking as the CC loop); and
-    * coarse per-phase stderr ticks.
+    * materialized rows, ids tracked — same LogicalRDD-id tracking as the
+    * CC loop); relations the verb persists for its own use; and coarse
+    * per-phase stderr ticks. [[verb]] runs the lockstep check (unless
+    * `lockstep = false`) and [[release]]s every pin and persisted relation
+    * on every exit path.
     */
-  private final class IncrContext(spark: SparkSession, runDir: String, verb: String) {
-    def requireLockstep(): Unit = requireStagesLockstep(runDir, verb)
+  private final class IncrContext(spark: SparkSession, runDir: String, verb: String,
+                                  lockstep: Boolean = true) {
+    def requireLockstep(): Unit = if (lockstep) requireStagesLockstep(runDir, verb)
     def loadStage(stage: String): DataFrame =
       Snapshots.loadCommitted(spark, runDir, stage).getOrElse(sys.error(
         s"$verb: no committed '$stage' snapshot under $runDir — the base must be a " +
@@ -398,18 +348,102 @@ object EntityResolution {
         case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
       ck
     }
+    private val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      persisted += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+    def release(): Unit = {
+      pinnedIds.foreach(id =>
+        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      persisted.foreach(_.unpersist())
+    }
     private var tickNs = System.nanoTime()
     def tick(phase: String): Unit = {
       val now = System.nanoTime()
       System.err.println(f"[$verb] $phase%-14s ${(now - tickNs) / 1e9}%.1f s")
       tickNs = now
     }
-    def releasePins(): Unit = pinnedIds.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    /** An empty-adds delta on every committed lockstep stage an audit verb
+      * does not move (see [[auditRepair]] for why); a stage missing from a
+      * partial history is skipped, so such a history stays auditable.
+      */
+    def commitNoOpDeltas(runId: String): Unit =
+      Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures)
+        .filter(s => Snapshots.lastCommitted(runDir, s).nonEmpty)
+        .foreach { s =>
+          Snapshots.commitDelta(spark, loadStage(s).limit(0).repartition(1), None,
+            runDir, s, runId, Snapshots.lastCounters(runDir, s),
+            Snapshots.lastRows(runDir, s).getOrElse(0L))
+        }
+    /** Append `n` pair-keyed `rows` to a standing ledger stage (audit
+      * tombstones, merge promotions) whose `counter` holds its row count.
+      * Rows the ledger already holds are dropped first: after a
+      * crash-mid-audit + streaming repair (which trims increment stages but
+      * not the ledgers), the re-run re-derives pairs already recorded —
+      * re-appending them would leave the resolved relation holding
+      * duplicates and the rows/counter metadata drifted forever (anti-joins
+      * would still be correct, the accounting would not).
+      */
+    def appendToLedger(stage: String, rows: DataFrame, n: Long, counter: String,
+                       runId: String): Unit =
+      Snapshots.loadCommitted(spark, runDir, stage) match {
+        case None => Snapshots.commit(spark, rows, runDir, stage, runId, Map(counter -> n))
+        case Some(standing) =>
+          val fresh = pin(rows.join(standing.select("doc_id_a", "doc_id_b"),
+            Seq("doc_id_a", "doc_id_b"), "left_anti"))
+          val total = Snapshots.lastRows(runDir, stage).getOrElse(0L) + fresh.count()
+          Snapshots.commitDelta(spark, fresh, None, runDir, stage, runId,
+            Map(counter -> total), total)
+      }
   }
 
-  /** The increment's mechanism (see [[addDocuments]] for its contract):
-    * frozen committed structure, O(delta) end-to-end.
+  /** INCREMENTAL ER: extend a committed checkpointed run with `newDocs`
+    * WITHOUT re-reading any committed document — the operation a standing
+    * 100 TB deployment actually performs (daily arrivals against a
+    * petabyte-scale committed corpus; a full batch re-run per increment is
+    * the scalability cliff). Commits a NEW snapshot of every stage, so the
+    * run directory becomes a time-travel log: snapshot K-1 is the corpus
+    * before the increment, snapshot K after (Main --snapshot-id reads
+    * either). Reference analogue: the reference re-runs its whole monthly
+    * pipeline per data drop (AMPI.main, SURVEY §3.1) — this is the
+    * snapshot-based replacement.
+    *
+    * The committed blocking structure is FROZEN — no committed row moves,
+    * no committed pair is re-derived; new docs route into the existing
+    * structure (committed hot keys via their deterministic refinement
+    * sub-keys + a salted splice chain to the key's committed
+    * representative), every stage commits an O(|new|)-sized DELTA snapshot
+    * (merge-on-read), and ALL compute/shuffle/write is O(|new| + |their
+    * blocks| + |fresh pairs| + |active components|). Recall for new docs is
+    * within a hair of batch (sub-block membership is deterministic per doc;
+    * connectivity floors are spliced), and precision divergence is
+    * bounded: a committed-small key that crosses the cap only via merged
+    * growth stays uncapped until compaction.
+    *
+    * Against a batch run over (committed ∪ new):
+    *  - fresh pairs are scored with idf weights from the MERGED document
+    *    frequencies (media_df + the new docs'), i.e. exactly the weights
+    *    the batch run computes — a fresh pair the batch run also derives
+    *    scores bit-equal to it (IncrementalSpec asserts this);
+    *  - committed pairs keep their committed channel scores (idf drift per
+    *    token is ln((1+N'/df')/(1+N/df)), second-order for any token worth
+    *    weight), and clustering is MERGE-MONOTONE: committed components
+    *    enter the CC loop as star edges, so committed merges are never
+    *    revisited.
+    * The batch [[run]] over the union is the exact counterpart and the
+    * semantic compaction: it re-derives blocking, pairs, weights and
+    * clusters from the current corpus. Run it when a history must be
+    * indistinguishable from batch — an increment that re-derives every
+    * touched hot key to match it costs O(hot corpus) and measured slower
+    * than the re-run (BENCH/BASELINE.md, round 5).
+    *
+    * Requires the base run to have been committed by a checkpointed run()
+    * of this build (which writes block_hot/doc_features/media_df); fails
+    * loud otherwise. `newDocs` doc_ids must be disjoint from the committed
+    * corpus (checked).
+    *
+    * Mechanism: frozen committed structure, O(delta) end-to-end.
     *
     *  - blocking: new docs' keys split on committed hot membership. Keys
     *    NOT committed-hot route through the batch cap logic over the NEW
@@ -440,224 +474,223 @@ object EntityResolution {
     * media_df stays a FULL commit (O(vocab) — tiny next to any doc-sized
     * table).
     */
-  private def addDocumentsInsert(spark: SparkSession, newDocs: DataFrame, runDir: String,
-                                 cfg: PipelineConfig, runId: String): Result = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  def addDocuments(spark: SparkSession, newDocs: DataFrame, runDir: String,
+                   cfg: PipelineConfig = PipelineConfig(), runId: String = "incr"): Result = {
     val ctx = new IncrContext(spark, runDir, "addDocuments/ins")
-    import ctx.{loadStage, gated, pin, tick}
-    ctx.requireLockstep()
-    val oldBlocking = loadStage("blocking")
-    val oldScored = loadStage("scored_pairs")
-    val oldAssign = loadStage("cluster_assignments")
-    val oldFeatures = loadStage(StageDocFeatures)
-    val oldHot = loadStage(StageBlockHot)
-    val oldDf = loadStage(StageMediaDf)
-    val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
-      sys.error(s"addDocuments: $StageMediaDf manifest lacks the n_docs counter"))
+    import ctx.{gated, loadStage, persist, pin, tick}
+    verb(spark, Some(ctx)) {
+      val oldBlocking = loadStage("blocking")
+      val oldScored = loadStage("scored_pairs")
+      val oldAssign = loadStage("cluster_assignments")
+      val oldFeatures = loadStage(StageDocFeatures)
+      val oldHot = loadStage(StageBlockHot)
+      val oldDf = loadStage(StageMediaDf)
+      val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
+        sys.error(s"addDocuments: $StageMediaDf manifest lacks the n_docs counter"))
 
-    val toked = Blocking.tokenized(newDocs).persist(MEMORY_AND_DISK)
-    val nNew = toked.count()
-    val dups = toked.select("doc_id").join(oldFeatures.select("doc_id"), "doc_id").count()
-    require(dups == 0,
-      s"addDocuments: $dups new doc_ids already exist in the committed corpus (increments must be disjoint)")
-    tick("tokenize+dup")
+      val toked = persist(Blocking.tokenized(newDocs))
+      val nNew = toked.count()
+      val dups = toked.select("doc_id").join(oldFeatures.select("doc_id"), "doc_id").count()
+      require(dups == 0,
+        s"addDocuments: $dups new doc_ids already exist in the committed corpus " +
+          "(increments must be disjoint)")
+      tick("tokenize+dup")
 
-    // ---- blocking: frozen committed structure, append-only delta.
-    // Broadcast gates in this verb reuse counts the verb already holds
-    // (manifest rows, delta counts) instead of paying one count() job per
-    // gate — the round-6 VerbJobsProbe showed the increment wall is
-    // job-count-bound, not data-bound (DriverBound everywhere).
-    val newKeyed = pin(Blocking.keyedDocs(toked, cfg.numBands, cfg.rowsPerBand, cfg.tokenBands))
-    val hotKeys = pin(oldHot.select("block_key").distinct())
-    // distinct hot keys ≤ committed block_hot rows, known free from the
-    // manifest
-    val hotKeysB = DriverBound.broadcastWithin(hotKeys,
-      Snapshots.lastRows(runDir, StageBlockHot).getOrElse(Long.MaxValue))
-    val inHot = pin(newKeyed.join(hotKeysB, "block_key")
-      .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
-    val nInHot = inHot.count()
-    val notHot = pin(newKeyed.join(hotKeysB, Seq("block_key"), "left_anti"))
-    // COMMITTED-SMALL keys this one batch floods past the cap (arrival
-    // bursts of one entity): routeKeyed over the new rows alone would cap
-    // them into refinement/chain keys that never meet the committed members
-    // — the committed rows at the key are RAW, not refined, so no candidate
-    // pair between an arrival and a committed member would ever derive, and
-    // the new-docs-only membership written to block_hot would make every
-    // LATER increment splice to a flood-doc representative, permanently
-    // disconnecting the original members. Treat them exactly like
-    // committed-hot keys: splice-chain to the key's committed representative
-    // (min committed doc_id) — the key IS hot now; its members just predate
-    // that. The committed membership probe is one pruned raw-key scan
-    // gated on floodKeys being non-empty, so the common flood-free
-    // increment pays only the tiny per-key count below.
-    val floodKeys = pin(notHot.groupBy("block_key")
-      .agg(count(lit(1)).as("n_new"))
-      .where(col("n_new") > cfg.maxBlockSize).select("block_key"))
-    val nFloodKeysNew = floodKeys.count()
-    val hasFloods = nFloodKeysNew > 0
-    // the common flood-free increment provably has EMPTY flood relations —
-    // derive them as lazy limit(0)s and skip their pins/counts/joins
-    // entirely (bit-identical: no flood key ⇒ no committed member at one ⇒
-    // no splice rows), instead of running ~5 jobs over empty inputs
-    val committedAtFlood =
-      if (!hasFloods) oldBlocking.select(col("block_key"), col("doc_id")).limit(0)
-      else pin(oldBlocking.where(Blocking.isRawKey(col("block_key")))
-        .join(DriverBound.broadcastWithin(floodKeys, nFloodKeysNew), "block_key")
-        .select(col("block_key"), col("doc_id")))
-    val spliceKeysB =
-      if (!hasFloods) committedAtFlood.select("block_key").limit(0)
-      else gated(pin(committedAtFlood.select("block_key").distinct()))
-    val inSmallFlood =
-      if (!hasFloods) notHot.limit(0)
-      else pin(notHot.join(spliceKeysB, "block_key")
+      // ---- blocking: frozen committed structure, append-only delta.
+      // Broadcast gates in this verb reuse counts the verb already holds
+      // (manifest rows, delta counts) instead of paying one count() job per
+      // gate — the round-6 per-verb job census showed the increment wall is
+      // job-count-bound, not data-bound (OPTIMIZATION_r06.md §5; DriverBound
+      // everywhere).
+      val newKeyed = pin(Blocking.keyedDocs(toked, cfg.numBands, cfg.rowsPerBand, cfg.tokenBands))
+      val hotKeys = pin(oldHot.select("block_key").distinct())
+      // distinct hot keys ≤ committed block_hot rows, known free from the
+      // manifest
+      val hotKeysB = DriverBound.broadcastWithin(hotKeys,
+        Snapshots.lastRows(runDir, StageBlockHot).getOrElse(Long.MaxValue))
+      val inHot = pin(newKeyed.join(hotKeysB, "block_key")
         .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
-    val nSmallFlood = if (!hasFloods) 0L else inSmallFlood.count()
-    val route = Blocking.routeKeyed(
-      if (!hasFloods) notHot
-      else notHot.join(spliceKeysB, Seq("block_key"), "left_anti"),
-      cfg.maxBlockSize, withHotRows = true)
-    val routeRows = pin(route.rows)
-    route.rows.unpersist()
-    val routeHot = pin(route.hotRows.get)
-    route.hotRows.get.unpersist()
-    val touchedHot = pin(inHot.select("block_key").distinct())
-    // distinct touched hot keys ≤ the already-counted inHot rows
-    val touchedHotB = DriverBound.broadcastWithin(touchedHot, nInHot)
-    val reps = oldHot.join(touchedHotB, "block_key")
-      .groupBy("block_key").agg(min(col("doc_id")).as("rep"))
-      .unionByName(committedAtFlood.groupBy("block_key").agg(min(col("doc_id")).as("rep")))
-    // the chain salt must be UNIQUE per increment: n_docs is non-monotonic
-    // once removals exist (a same-sized upsert reuses it, colliding this
-    // increment's chain keys with a committed increment's); the blocking
-    // stage's next snapshot id strictly increases with every commit
-    val chainSalt = Snapshots.lastCommitted(runDir, "blocking").getOrElse(-1L) + 1L
-    val hotRows = pin(Blocking.hotInsertRows(inHot.unionByName(inSmallFlood), reps, chainSalt,
-      cfg.maxBlockSize))
-    val deltaRows = pin(routeRows.unionByName(hotRows))
-    val deltaCount = deltaRows.count()
-    val nFloodKeys =
-      if (!hasFloods) 0L else committedAtFlood.select("block_key").distinct().count()
-    val nFloodCommittedRows = if (!hasFloods) 0L else committedAtFlood.count()
-    val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
-    def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
-    val blockCounters = Map(
-      "blocking_rows" -> (baseC("blocking_rows") + deltaCount),
-      "capped_block_keys" ->
-        (baseC("capped_block_keys") + route.counters("capped_block_keys") + nFloodKeys),
-      "capped_doc_rows" -> (baseC("capped_doc_rows") + route.counters("capped_doc_rows")
-        + nInHot + nSmallFlood + nFloodCommittedRows),
-      "refined_subblocks_kept" ->
-        (baseC("refined_subblocks_kept") + route.counters("refined_subblocks_kept")),
-      "insert_hot_rows" -> (nInHot + nSmallFlood)) ++
-      // history marker: the manifest keeps recording that this run has had
-      // removals, across later inserts
-      baseBlockC.get("removed_docs").map("removed_docs" -> _)
-    val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
-    Snapshots.commitDelta(spark, deltaRows, None, runDir, "blocking", runId,
-      blockCounters, baseBlockRows + deltaCount)
-    // block_hot stays the full raw membership of every hot key: a
-    // newly-flooded committed-small key contributes BOTH its new rows and
-    // its committed raw members, so the next increment's representative
-    // (min doc_id over block_hot) can be a committed doc
-    val hotAdds = routeHot.select(col("block_key"), col("doc_id"))
-      .unionByName(inHot.select(col("block_key"), col("doc_id")))
-      .unionByName(inSmallFlood.select(col("block_key"), col("doc_id")))
-      .unionByName(committedAtFlood.select(col("block_key"), col("doc_id")))
-    val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
-    val hotAddsN = route.counters("capped_doc_rows") + nInHot + nSmallFlood + nFloodCommittedRows
-    Snapshots.commitDelta(spark, hotAdds, None, runDir, StageBlockHot, runId,
-      Map("hot_rows" -> (baseHotRows + hotAddsN)), baseHotRows + hotAddsN)
-    val blocking = loadStage("blocking")
-    tick("blocking")
+      val nInHot = inHot.count()
+      val notHot = pin(newKeyed.join(hotKeysB, Seq("block_key"), "left_anti"))
+      // COMMITTED-SMALL keys this one batch floods past the cap (arrival
+      // bursts of one entity): routeKeyed over the new rows alone would cap
+      // them into refinement/chain keys that never meet the committed members
+      // — the committed rows at the key are RAW, not refined, so no candidate
+      // pair between an arrival and a committed member would ever derive, and
+      // the new-docs-only membership written to block_hot would make every
+      // LATER increment splice to a flood-doc representative, permanently
+      // disconnecting the original members. Treat them exactly like
+      // committed-hot keys: splice-chain to the key's committed representative
+      // (min committed doc_id) — the key IS hot now; its members just predate
+      // that. The committed membership probe is one pruned raw-key scan
+      // gated on floodKeys being non-empty, so the common flood-free
+      // increment pays only the tiny per-key count below.
+      val floodKeys = pin(notHot.groupBy("block_key")
+        .agg(count(lit(1)).as("n_new"))
+        .where(col("n_new") > cfg.maxBlockSize).select("block_key"))
+      val nFloodKeysNew = floodKeys.count()
+      val hasFloods = nFloodKeysNew > 0
+      // the common flood-free increment provably has EMPTY flood relations —
+      // derive them as lazy limit(0)s and skip their pins/counts/joins
+      // entirely (bit-identical: no flood key ⇒ no committed member at one ⇒
+      // no splice rows), instead of running ~5 jobs over empty inputs
+      val committedAtFlood =
+        if (!hasFloods) oldBlocking.select(col("block_key"), col("doc_id")).limit(0)
+        else pin(oldBlocking.where(Blocking.isRawKey(col("block_key")))
+          .join(DriverBound.broadcastWithin(floodKeys, nFloodKeysNew), "block_key")
+          .select(col("block_key"), col("doc_id")))
+      val spliceKeysB =
+        if (!hasFloods) committedAtFlood.select("block_key").limit(0)
+        else gated(pin(committedAtFlood.select("block_key").distinct()))
+      val inSmallFlood =
+        if (!hasFloods) notHot.limit(0)
+        else pin(notHot.join(spliceKeysB, "block_key")
+          .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
+      val nSmallFlood = if (!hasFloods) 0L else inSmallFlood.count()
+      val route = Blocking.routeKeyed(
+        if (!hasFloods) notHot
+        else notHot.join(spliceKeysB, Seq("block_key"), "left_anti"),
+        cfg.maxBlockSize, withHotRows = true)
+      val routeRows = pin(route.rows)
+      route.rows.unpersist()
+      val routeHot = pin(route.hotRows.get)
+      route.hotRows.get.unpersist()
+      val touchedHot = pin(inHot.select("block_key").distinct())
+      // distinct touched hot keys ≤ the already-counted inHot rows
+      val touchedHotB = DriverBound.broadcastWithin(touchedHot, nInHot)
+      val reps = oldHot.join(touchedHotB, "block_key")
+        .groupBy("block_key").agg(min(col("doc_id")).as("rep"))
+        .unionByName(committedAtFlood.groupBy("block_key").agg(min(col("doc_id")).as("rep")))
+      // the chain salt must be UNIQUE per increment: n_docs is non-monotonic
+      // once removals exist (a same-sized upsert reuses it, colliding this
+      // increment's chain keys with a committed increment's); the blocking
+      // stage's next snapshot id strictly increases with every commit
+      val chainSalt = Snapshots.lastCommitted(runDir, "blocking").getOrElse(-1L) + 1L
+      val hotRows = pin(Blocking.hotInsertRows(inHot.unionByName(inSmallFlood), reps, chainSalt,
+        cfg.maxBlockSize))
+      val deltaRows = pin(routeRows.unionByName(hotRows))
+      val deltaCount = deltaRows.count()
+      val nFloodKeys =
+        if (!hasFloods) 0L else committedAtFlood.select("block_key").distinct().count()
+      val nFloodCommittedRows = if (!hasFloods) 0L else committedAtFlood.count()
+      val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
+      def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
+      val blockCounters = Map(
+        "blocking_rows" -> (baseC("blocking_rows") + deltaCount),
+        "capped_block_keys" ->
+          (baseC("capped_block_keys") + route.counters("capped_block_keys") + nFloodKeys),
+        "capped_doc_rows" -> (baseC("capped_doc_rows") + route.counters("capped_doc_rows")
+          + nInHot + nSmallFlood + nFloodCommittedRows),
+        "refined_subblocks_kept" ->
+          (baseC("refined_subblocks_kept") + route.counters("refined_subblocks_kept")),
+        "insert_hot_rows" -> (nInHot + nSmallFlood)) ++
+        // history marker: the manifest keeps recording that this run has had
+        // removals, across later inserts
+        baseBlockC.get("removed_docs").map("removed_docs" -> _)
+      val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
+      Snapshots.commitDelta(spark, deltaRows, None, runDir, "blocking", runId,
+        blockCounters, baseBlockRows + deltaCount)
+      // block_hot stays the full raw membership of every hot key: a
+      // newly-flooded committed-small key contributes BOTH its new rows and
+      // its committed raw members, so the next increment's representative
+      // (min doc_id over block_hot) can be a committed doc
+      val hotAdds = routeHot.select(col("block_key"), col("doc_id"))
+        .unionByName(inHot.select(col("block_key"), col("doc_id")))
+        .unionByName(inSmallFlood.select(col("block_key"), col("doc_id")))
+        .unionByName(committedAtFlood.select(col("block_key"), col("doc_id")))
+      val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
+      val hotAddsN = route.counters("capped_doc_rows") + nInHot + nSmallFlood + nFloodCommittedRows
+      Snapshots.commitDelta(spark, hotAdds, None, runDir, StageBlockHot, runId,
+        Map("hot_rows" -> (baseHotRows + hotAddsN)), baseHotRows + hotAddsN)
+      val blocking = loadStage("blocking")
+      tick("blocking")
 
-    // ---- fresh candidate pairs from the delta's touched blocks only
-    val deltaKeys = pin(deltaRows.select("block_key").distinct())
-    val oldAtKeys = oldBlocking.join(DriverBound.broadcastWithin(deltaKeys, deltaCount), "block_key")
-      .select(col("block_key"), col("doc_id"))
-    val cand = Blocking.candidatePairs(
-      deltaRows.select(col("block_key"), col("doc_id")).unionByName(oldAtKeys))
-    val fresh0 = cand.join(oldScored.select("doc_id_a", "doc_id_b"),
-      Seq("doc_id_a", "doc_id_b"), "left_anti")
-    // audit tombstones: a pair auditRepair cut must not be re-derived as
-    // "fresh" just because this increment touched its block
-    val fresh = pin(Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-      .fold(fresh0)(ts => fresh0.join(gatedLedger(runDir, StageAuditTombstones, ts),
-        Seq("doc_id_a", "doc_id_b"), "left_anti")))
-    tick("pairs")
+      // ---- fresh candidate pairs from the delta's touched blocks only
+      val deltaKeys = pin(deltaRows.select("block_key").distinct())
+      val oldAtKeys = oldBlocking
+        .join(DriverBound.broadcastWithin(deltaKeys, deltaCount), "block_key")
+        .select(col("block_key"), col("doc_id"))
+      val cand = Blocking.candidatePairs(
+        deltaRows.select(col("block_key"), col("doc_id")).unionByName(oldAtKeys))
+      val fresh0 = cand.join(oldScored.select("doc_id_a", "doc_id_b"),
+        Seq("doc_id_a", "doc_id_b"), "left_anti")
+      // audit tombstones: a pair auditRepair cut must not be re-derived as
+      // "fresh" just because this increment touched its block
+      val fresh = pin(Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
+        .fold(fresh0)(ts => fresh0.join(gatedLedger(runDir, StageAuditTombstones, ts),
+          Seq("doc_id_a", "doc_id_b"), "left_anti")))
+      tick("pairs")
 
-    // ---- features: merged document frequencies give EXACT batch idf
-    // weights; weight re-attachment runs only over docs in fresh pairs
-    val nTotal = nOld + nNew
-    val mtokNew = PairScoring.mediaTokenRows(toked, cfg.scoring.exclusivePrefix)
-      .persist(MEMORY_AND_DISK)
-    val dfNew = mtokNew.groupBy("mid").agg(count(lit(1)).as("df"))
-    val dfMerged = oldDf.select(col("mid"), col("df").as("df_old"))
-      .join(dfNew.select(col("mid"), col("df").as("df_new")), Seq("mid"), "full_outer")
-      .select(col("mid"),
-        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
-    val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
-      Map("n_docs" -> nTotal))
-    val w = Snapshots.read(spark, cDf)
-      .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
-    val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
-      .join(Blocking.docRefine(toked), "doc_id")
-      .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
-    Snapshots.commitDelta(spark, newStored, None, runDir, StageDocFeatures, runId,
-      Map("n_docs" -> nTotal), nTotal)
-    val docsNeeded = pin(fresh.select(col("doc_id_a").as("doc_id"))
-      .unionByName(fresh.select(col("doc_id_b").as("doc_id"))).distinct())
-    val featsNeeded = pin(PairScoring.featuresFromStored(
-      loadStage(StageDocFeatures).join(gated(docsNeeded), "doc_id"), w))
-    tick("features")
+      // ---- features: merged document frequencies give EXACT batch idf
+      // weights; weight re-attachment runs only over docs in fresh pairs
+      val nTotal = nOld + nNew
+      val mtokNew = persist(PairScoring.mediaTokenRows(toked, cfg.scoring.exclusivePrefix))
+      val dfNew = mtokNew.groupBy("mid").agg(count(lit(1)).as("df"))
+      val dfMerged = oldDf.select(col("mid"), col("df").as("df_old"))
+        .join(dfNew.select(col("mid"), col("df").as("df_new")), Seq("mid"), "full_outer")
+        .select(col("mid"),
+          (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
+      val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
+        Map("n_docs" -> nTotal))
+      val w = Snapshots.read(spark, cDf)
+        .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
+      val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
+        .join(Blocking.docRefine(toked), "doc_id")
+        .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
+      Snapshots.commitDelta(spark, newStored, None, runDir, StageDocFeatures, runId,
+        Map("n_docs" -> nTotal), nTotal)
+      val docsNeeded = pin(fresh.select(col("doc_id_a").as("doc_id"))
+        .unionByName(fresh.select(col("doc_id_b").as("doc_id"))).distinct())
+      val featsNeeded = pin(PairScoring.featuresFromStored(
+        loadStage(StageDocFeatures).join(gated(docsNeeded), "doc_id"), w))
+      tick("features")
 
-    // ---- scoring: fresh pairs only, appended as a delta
-    val scoredFresh = pin(PairScoring.scoreFeatures(spark, featsNeeded, fresh, cfg.scoring)
-      .toDF())
-    val nFresh = scoredFresh.count()
-    val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-    Snapshots.commitDelta(spark, scoredFresh, None, runDir, "scored_pairs", runId,
-      Map("docs_scored_against" -> nTotal, "pairs_fresh" -> nFresh), basePairRows + nFresh)
-    val scored = loadStage("scored_pairs")
-    tick("scoring")
+      // ---- scoring: fresh pairs only, appended as a delta
+      val scoredFresh = pin(PairScoring.scoreFeatures(spark, featsNeeded, fresh, cfg.scoring)
+        .toDF())
+      val nFresh = scoredFresh.count()
+      val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
+      Snapshots.commitDelta(spark, scoredFresh, None, runDir, "scored_pairs", runId,
+        Map("docs_scored_against" -> nTotal, "pairs_fresh" -> nFresh), basePairRows + nFresh)
+      val scored = loadStage("scored_pairs")
+      tick("scoring")
 
-    // ---- clustering: only components ADJACENT to a fresh >= threshold
-    // edge (plus all new docs) enter the CC loop — their committed merges
-    // ride in as star edges (merge-monotone). Identical to running CC over
-    // (all stars + fresh edges): a component with no fresh edge reproduces
-    // itself (its star IS its fixpoint, cluster_id = min doc_id), so
-    // excluding it changes nothing. The delta removes active cluster ids,
-    // adds their re-labeled assignments plus the new docs
-    val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
-    // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
-    // by the fresh-pair count the scoring phase already took
-    def freshGate(df: DataFrame): DataFrame =
-      if (nFresh <= DriverBound.MaxRows / 2) broadcast(df) else df
-    val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
-      .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
-    val activeCl = pin(oldAssign.join(freshGate(endpoints), "doc_id")
-      .select("cluster_id").distinct())
-    val activeClB = freshGate(activeCl)
-    val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
-    val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
-    val ccNodes = activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id")))
-    val cc = ConnectedComponents.assignAllTracked(spark, ccNodes,
-      freshEdges.unionByName(starActive), cfg.maxCcIter, pairsPreDeduped = false)
-    Snapshots.commitDelta(spark, cc.assignments, Some((activeCl, Seq("cluster_id"))),
-      runDir, "cluster_assignments", runId,
-      Map("cc_iterations" -> cc.iterations.toLong), nTotal)
-    cc.releaseCheckpoints(spark)
-    val assignments = loadStage("cluster_assignments")
-    tick("clustering")
+      // ---- clustering: only components ADJACENT to a fresh >= threshold
+      // edge (plus all new docs) enter the CC loop — their committed merges
+      // ride in as star edges (merge-monotone). Identical to running CC over
+      // (all stars + fresh edges): a component with no fresh edge reproduces
+      // itself (its star IS its fixpoint, cluster_id = min doc_id), so
+      // excluding it changes nothing. The delta removes active cluster ids,
+      // adds their re-labeled assignments plus the new docs
+      val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
+        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
+      // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
+      // by the fresh-pair count the scoring phase already took
+      def freshGate(df: DataFrame): DataFrame =
+        if (nFresh <= DriverBound.MaxRows / 2) broadcast(df) else df
+      val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
+        .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
+      val activeCl = pin(oldAssign.join(freshGate(endpoints), "doc_id")
+        .select("cluster_id").distinct())
+      val activeClB = freshGate(activeCl)
+      val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
+      val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
+        .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
+      val ccNodes = activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id")))
+      val cc = ConnectedComponents.assignAllTracked(spark, ccNodes,
+        freshEdges.unionByName(starActive), cfg.maxCcIter, pairsPreDeduped = false)
+      Snapshots.commitDelta(spark, cc.assignments, Some((activeCl, Seq("cluster_id"))),
+        runDir, "cluster_assignments", runId,
+        Map("cc_iterations" -> cc.iterations.toLong), nTotal)
+      cc.releaseCheckpoints(spark)
+      val assignments = loadStage("cluster_assignments")
+      tick("clustering")
 
-    toked.unpersist(); mtokNew.unpersist()
-    ctx.releasePins()
-
-    Result(assignments, scored, blocking, cc.iterations,
-      blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
-        "pairs_fresh" -> nFresh, "cc_iterations" -> cc.iterations.toLong,
-        "insert_mode" -> 1L))
+      Result(assignments, scored, blocking, cc.iterations,
+        blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
+          "pairs_fresh" -> nFresh, "cc_iterations" -> cc.iterations.toLong,
+          "insert_mode" -> 1L))
+    }
   }
 
   /** RETRACTION: remove committed documents from a checkpointed run WITHOUT
@@ -716,203 +749,193 @@ object EntityResolution {
   def removeDocuments(spark: SparkSession, docIds: DataFrame, runDir: String,
                       cfg: PipelineConfig = PipelineConfig(),
                       runId: String = "remove"): Result = {
-    val fjPrev = beginFastJoins(spark)
-    try removeDocumentsBody(spark, docIds, runDir, cfg, runId)
-    finally endFastJoins(spark, fjPrev)
-  }
-
-  private def removeDocumentsBody(spark: SparkSession, docIds: DataFrame, runDir: String,
-                      cfg: PipelineConfig, runId: String): Result = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val ctx = new IncrContext(spark, runDir, "removeDocuments")
-    import ctx.{loadStage, gated, pin, tick}
-    ctx.requireLockstep()
-    val oldBlocking = loadStage("blocking")
-    // scored_pairs is this operation's dominant relation and feeds ~6
-    // actions below (retraction, lost-edge derivation, heal anti-join,
-    // surviving-edge derivation): persist the RESOLVED relation once so a
-    // deep delta chain's merge-on-read is not re-executed per consumer
-    val oldScored = loadStage("scored_pairs").persist(MEMORY_AND_DISK)
-    val oldAssign = loadStage("cluster_assignments")
-    val oldFeatures = loadStage(StageDocFeatures)
-    val oldHot = loadStage(StageBlockHot)
-    val oldDf = loadStage(StageMediaDf)
-    val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
-      sys.error(s"removeDocuments: $StageMediaDf manifest lacks the n_docs counter"))
+    import ctx.{gated, loadStage, persist, pin, tick}
+    verb(spark, Some(ctx)) {
+      val oldBlocking = loadStage("blocking")
+      // scored_pairs is this operation's dominant relation and feeds ~6
+      // actions below (retraction, lost-edge derivation, heal anti-join,
+      // surviving-edge derivation): persist the RESOLVED relation once so a
+      // deep delta chain's merge-on-read is not re-executed per consumer
+      val oldScored = persist(loadStage("scored_pairs"))
+      val oldAssign = loadStage("cluster_assignments")
+      val oldFeatures = loadStage(StageDocFeatures)
+      val oldHot = loadStage(StageBlockHot)
+      val oldDf = loadStage(StageMediaDf)
+      val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
+        sys.error(s"removeDocuments: $StageMediaDf manifest lacks the n_docs counter"))
 
-    // count once, gate every derived broadcast on that one number (the
-    // verb was job-count-bound; gated() pays one count job per call)
-    val removed = pin(docIds.select(col("doc_id")).distinct())
-    val nRemoved = removed.count()
-    def rmGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, nRemoved)
-    val removedB = rmGate(removed)
-    require(nRemoved > 0, "removeDocuments: empty doc_id set")
-    val unknown = removed.join(oldFeatures.select("doc_id"), Seq("doc_id"), "left_anti").count()
-    require(unknown == 0,
-      s"removeDocuments: $unknown requested doc_ids are not in the committed corpus")
-    val nTotal = nOld - nRemoved
-    tick("resolve+check")
+      // count once, gate every derived broadcast on that one number (the
+      // verb was job-count-bound; gated() pays one count job per call)
+      val removed = pin(docIds.select(col("doc_id")).distinct())
+      val nRemoved = removed.count()
+      def rmGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, nRemoved)
+      val removedB = rmGate(removed)
+      require(nRemoved > 0, "removeDocuments: empty doc_id set")
+      val unknown = removed.join(oldFeatures.select("doc_id"), Seq("doc_id"), "left_anti").count()
+      require(unknown == 0,
+        s"removeDocuments: $unknown requested doc_ids are not in the committed corpus")
+      val nTotal = nOld - nRemoved
+      tick("resolve+check")
 
-    // ---- blocking + block_hot: keyed remove of every row of a removed doc
-    // (raw, refined, and chain rows all belong to their doc)
-    val removedBlockRows = oldBlocking.join(removedB, "doc_id").count()
-    val removedHotRows = oldHot.join(removedB, "doc_id").count()
-    val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
-    def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
-    val blockCounters = Map(
-      "blocking_rows" -> (baseC("blocking_rows") - removedBlockRows),
-      "capped_block_keys" -> baseC("capped_block_keys"),
-      "capped_doc_rows" -> math.max(0L, baseC("capped_doc_rows") - removedHotRows),
-      "refined_subblocks_kept" -> baseC("refined_subblocks_kept"),
-      "removed_docs" -> (baseC("removed_docs") + nRemoved)) ++
-      // and the insert history marker survives removals
-      baseBlockC.get("insert_hot_rows").map("insert_hot_rows" -> _)
-    val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
-    // empty-adds deltas repartition(1) so the data dir always holds ONE
-    // schema-bearing parquet file (a 0-partition write would leave the
-    // delta's adds unreadable)
-    Snapshots.commitDelta(spark, oldBlocking.limit(0).repartition(1),
-      Some((removed, Seq("doc_id"))),
-      runDir, "blocking", runId, blockCounters, baseBlockRows - removedBlockRows)
-    val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
-    Snapshots.commitDelta(spark, oldHot.limit(0).repartition(1), Some((removed, Seq("doc_id"))),
-      runDir, StageBlockHot, runId,
-      Map("hot_rows" -> (baseHotRows - removedHotRows)), baseHotRows - removedHotRows)
-    val blocking = loadStage("blocking")
-    tick("blocking")
+      // ---- blocking + block_hot: keyed remove of every row of a removed doc
+      // (raw, refined, and chain rows all belong to their doc)
+      val removedBlockRows = oldBlocking.join(removedB, "doc_id").count()
+      val removedHotRows = oldHot.join(removedB, "doc_id").count()
+      val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
+      def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
+      val blockCounters = Map(
+        "blocking_rows" -> (baseC("blocking_rows") - removedBlockRows),
+        "capped_block_keys" -> baseC("capped_block_keys"),
+        "capped_doc_rows" -> math.max(0L, baseC("capped_doc_rows") - removedHotRows),
+        "refined_subblocks_kept" -> baseC("refined_subblocks_kept"),
+        "removed_docs" -> (baseC("removed_docs") + nRemoved)) ++
+        // and the insert history marker survives removals
+        baseBlockC.get("insert_hot_rows").map("insert_hot_rows" -> _)
+      val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
+      // empty-adds deltas repartition(1) so the data dir always holds ONE
+      // schema-bearing parquet file (a 0-partition write would leave the
+      // delta's adds unreadable)
+      Snapshots.commitDelta(spark, oldBlocking.limit(0).repartition(1),
+        Some((removed, Seq("doc_id"))),
+        runDir, "blocking", runId, blockCounters, baseBlockRows - removedBlockRows)
+      val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
+      Snapshots.commitDelta(spark, oldHot.limit(0).repartition(1), Some((removed, Seq("doc_id"))),
+        runDir, StageBlockHot, runId,
+        Map("hot_rows" -> (baseHotRows - removedHotRows)), baseHotRows - removedHotRows)
+      val blocking = loadStage("blocking")
+      tick("blocking")
 
-    // ---- features: decrement document frequencies by the removed docs'
-    // stored media ids (mediaTokens is distinct per doc, so each m_ids
-    // element is exactly one df count); doc_features keyed-removes the docs
-    val dfRemoved = oldFeatures.join(removedB, "doc_id")
-      .select(explode(col("m_ids")).as("mid"))
-      .groupBy("mid").agg(count(lit(1)).as("df_rm"))
-    val dfMerged = oldDf.join(dfRemoved, Seq("mid"), "left")
-      .select(col("mid"), (col("df") - coalesce(col("df_rm"), lit(0L))).as("df"))
-      .where(col("df") > 0)
-    val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
-      Map("n_docs" -> nTotal))
-    Snapshots.commitDelta(spark, oldFeatures.limit(0).repartition(1),
-      Some((removed, Seq("doc_id"))),
-      runDir, StageDocFeatures, runId, Map("n_docs" -> nTotal), nTotal)
-    val newFeatures = loadStage(StageDocFeatures)
-    tick("features")
+      // ---- features: decrement document frequencies by the removed docs'
+      // stored media ids (mediaTokens is distinct per doc, so each m_ids
+      // element is exactly one df count); doc_features keyed-removes the docs
+      val dfRemoved = oldFeatures.join(removedB, "doc_id")
+        .select(explode(col("m_ids")).as("mid"))
+        .groupBy("mid").agg(count(lit(1)).as("df_rm"))
+      val dfMerged = oldDf.join(dfRemoved, Seq("mid"), "left")
+        .select(col("mid"), (col("df") - coalesce(col("df_rm"), lit(0L))).as("df"))
+        .where(col("df") > 0)
+      val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
+        Map("n_docs" -> nTotal))
+      Snapshots.commitDelta(spark, oldFeatures.limit(0).repartition(1),
+        Some((removed, Seq("doc_id"))),
+        runDir, StageDocFeatures, runId, Map("n_docs" -> nTotal), nTotal)
+      val newFeatures = loadStage(StageDocFeatures)
+      tick("features")
 
-    // ---- scored pairs: retract every pair touching a removed doc; then
-    // splice-heal — chain each removed doc's surviving strong neighbors
-    // consecutively and re-score those candidates (current corpus weights)
-    val rmA = rmGate(removed.select(col("doc_id").as("doc_id_a")))
-    val rmB2 = rmGate(removed.select(col("doc_id").as("doc_id_b")))
-    val rmPairs = pin(oldScored.join(rmA, "doc_id_a").select("doc_id_a", "doc_id_b")
-      .unionByName(oldScored.join(rmB2, "doc_id_b").select("doc_id_a", "doc_id_b"))
-      .dropDuplicates("doc_id_a", "doc_id_b"))
-    val nRmPairs = rmPairs.count()
-    val strong = oldScored.where(col("score") >= cfg.scoreThreshold)
-      .select("doc_id_a", "doc_id_b")
-    // connectivity may run THROUGH a chain of removed docs (k1–r1–r2–k2
-    // with r1 AND r2 removed): group the removed docs over removed↔removed
-    // strong edges and bridge each GROUP's surviving neighborhood — healing
-    // per removed doc alone would never emit the (k1,k2) candidate and the
-    // cluster would silently split where a batch run keeps it whole. The
-    // grouping CC runs over the removed subgraph only: O(removed pairs)
-    val rmEdges = strong.join(rmA, "doc_id_a").join(rmB2, "doc_id_b")
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-    // the removed subgraph is DELTA-sized by contract and both its bounds
-    // are already counted (nRemoved; rmEdges ⊆ rmPairs): within
-    // DriverBound the grouping runs as a driver union-find (identical
-    // labels, ~15 fewer fixed jobs); beyond it, the distributed loop
-    val rmGroupsAssign =
-      if (nRemoved <= DriverBound.MaxRows && nRmPairs <= DriverBound.MaxRows)
-        ConnectedComponents.assignAllDriver(spark, removed.select("doc_id"), rmEdges)
-      else {
-        val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"),
-          rmEdges, cfg.maxCcIter, pairsPreDeduped = true)
-        val a = pin(rmCc.assignments)
-        rmCc.releaseCheckpoints(spark)
-        a
-      }
-    val rmGroups = pin(rmGroupsAssign
-      .select(col("doc_id").as("gone"), col("cluster_id").as("grp")))
-    val lost = pin(
-      strong.join(rmA, "doc_id_a").join(rmB2, Seq("doc_id_b"), "left_anti")
-        .select(col("doc_id_a").as("gone"), col("doc_id_b").as("kept"))
-      .unionByName(
-        strong.join(rmB2, "doc_id_b").join(rmA, Seq("doc_id_a"), "left_anti")
-          .select(col("doc_id_b").as("gone"), col("doc_id_a").as("kept")))
-      // the same survivor can neighbor several docs of one group — dedup or
-      // the window would chain a survivor to itself
-      .join(rmGate(rmGroups), "gone")
-      .select("grp", "kept").dropDuplicates("grp", "kept"))
-    // neighbors sorted lexicographically, so consecutive pairs are already
-    // canonical (a < b); |N|-1 pairs per removed GROUP reconnect exactly
-    // what the group connected, subject to re-scoring
-    val wNext = org.apache.spark.sql.expressions.Window.partitionBy("grp").orderBy("kept")
-    val healCand = pin(lost
-      .select(col("kept"), lead(col("kept"), 1).over(wNext).as("next"))
-      .where(col("next").isNotNull)
-      .select(col("kept").as("doc_id_a"), col("next").as("doc_id_b"))
-      .dropDuplicates("doc_id_a", "doc_id_b")
-      .join(oldScored.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"), "left_anti")
-      // a pair auditRepair tombstoned must not come back as a heal bridge
-      .transform(df => Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-        .fold(df)(ts => df.join(gatedLedger(runDir, StageAuditTombstones, ts),
-          Seq("doc_id_a", "doc_id_b"), "left_anti")))
-      .withColumn("block_key",
-        Blocking.famTag(Blocking.Family.Heal, xxhash64(col("doc_id_a"), col("doc_id_b")))))
-    val w = Snapshots.read(spark, cDf)
-      .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
-    val healDocs = pin(healCand.select(col("doc_id_a").as("doc_id"))
-      .unionByName(healCand.select(col("doc_id_b").as("doc_id"))).distinct())
-    val featsHeal = pin(PairScoring.featuresFromStored(
-      newFeatures.join(gated(healDocs), "doc_id"), w))
-    val scoredHeal = pin(PairScoring.scoreFeatures(spark, featsHeal, healCand, cfg.scoring)
-      .toDF())
-    val nHeal = scoredHeal.count()
-    val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-    Snapshots.commitDelta(spark, scoredHeal, Some((rmPairs, Seq("doc_id_a", "doc_id_b"))),
-      runDir, "scored_pairs", runId,
-      Map("docs_scored_against" -> nTotal, "pairs_removed" -> nRmPairs,
-        "heal_pairs_scored" -> nHeal),
-      basePairRows - nRmPairs + nHeal)
-    val scored = loadStage("scored_pairs")
-    tick("pairs+heal")
+      // ---- scored pairs: retract every pair touching a removed doc; then
+      // splice-heal — chain each removed doc's surviving strong neighbors
+      // consecutively and re-score those candidates (current corpus weights)
+      val rmA = rmGate(removed.select(col("doc_id").as("doc_id_a")))
+      val rmB2 = rmGate(removed.select(col("doc_id").as("doc_id_b")))
+      val rmPairs = pin(oldScored.join(rmA, "doc_id_a").select("doc_id_a", "doc_id_b")
+        .unionByName(oldScored.join(rmB2, "doc_id_b").select("doc_id_a", "doc_id_b"))
+        .dropDuplicates("doc_id_a", "doc_id_b"))
+      val nRmPairs = rmPairs.count()
+      val strong = oldScored.where(col("score") >= cfg.scoreThreshold)
+        .select("doc_id_a", "doc_id_b")
+      // connectivity may run THROUGH a chain of removed docs (k1–r1–r2–k2
+      // with r1 AND r2 removed): group the removed docs over removed↔removed
+      // strong edges and bridge each GROUP's surviving neighborhood — healing
+      // per removed doc alone would never emit the (k1,k2) candidate and the
+      // cluster would silently split where a batch run keeps it whole. The
+      // grouping CC runs over the removed subgraph only: O(removed pairs)
+      val rmEdges = strong.join(rmA, "doc_id_a").join(rmB2, "doc_id_b")
+        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+      // the removed subgraph is DELTA-sized by contract and both its bounds
+      // are already counted (nRemoved; rmEdges ⊆ rmPairs): within
+      // DriverBound the grouping runs as a driver union-find (identical
+      // labels, ~15 fewer fixed jobs); beyond it, the distributed loop
+      val rmGroupsAssign =
+        if (nRemoved <= DriverBound.MaxRows && nRmPairs <= DriverBound.MaxRows)
+          ConnectedComponents.assignAllDriver(spark, removed.select("doc_id"), rmEdges)
+        else {
+          val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"),
+            rmEdges, cfg.maxCcIter, pairsPreDeduped = true)
+          val a = pin(rmCc.assignments)
+          rmCc.releaseCheckpoints(spark)
+          a
+        }
+      val rmGroups = pin(rmGroupsAssign
+        .select(col("doc_id").as("gone"), col("cluster_id").as("grp")))
+      val lost = pin(
+        strong.join(rmA, "doc_id_a").join(rmB2, Seq("doc_id_b"), "left_anti")
+          .select(col("doc_id_a").as("gone"), col("doc_id_b").as("kept"))
+        .unionByName(
+          strong.join(rmB2, "doc_id_b").join(rmA, Seq("doc_id_a"), "left_anti")
+            .select(col("doc_id_b").as("gone"), col("doc_id_a").as("kept")))
+        // the same survivor can neighbor several docs of one group — dedup or
+        // the window would chain a survivor to itself
+        .join(rmGate(rmGroups), "gone")
+        .select("grp", "kept").dropDuplicates("grp", "kept"))
+      // neighbors sorted lexicographically, so consecutive pairs are already
+      // canonical (a < b); |N|-1 pairs per removed GROUP reconnect exactly
+      // what the group connected, subject to re-scoring
+      val wNext = org.apache.spark.sql.expressions.Window.partitionBy("grp").orderBy("kept")
+      val healCand = pin(lost
+        .select(col("kept"), lead(col("kept"), 1).over(wNext).as("next"))
+        .where(col("next").isNotNull)
+        .select(col("kept").as("doc_id_a"), col("next").as("doc_id_b"))
+        .dropDuplicates("doc_id_a", "doc_id_b")
+        .join(oldScored.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"), "left_anti")
+        // a pair auditRepair tombstoned must not come back as a heal bridge
+        .transform(df => Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
+          .fold(df)(ts => df.join(gatedLedger(runDir, StageAuditTombstones, ts),
+            Seq("doc_id_a", "doc_id_b"), "left_anti")))
+        .withColumn("block_key",
+          Blocking.famTag(Blocking.Family.Heal, xxhash64(col("doc_id_a"), col("doc_id_b")))))
+      val w = Snapshots.read(spark, cDf)
+        .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
+      val healDocs = pin(healCand.select(col("doc_id_a").as("doc_id"))
+        .unionByName(healCand.select(col("doc_id_b").as("doc_id"))).distinct())
+      val featsHeal = pin(PairScoring.featuresFromStored(
+        newFeatures.join(gated(healDocs), "doc_id"), w))
+      val scoredHeal = pin(PairScoring.scoreFeatures(spark, featsHeal, healCand, cfg.scoring)
+        .toDF())
+      val nHeal = scoredHeal.count()
+      val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
+      Snapshots.commitDelta(spark, scoredHeal, Some((rmPairs, Seq("doc_id_a", "doc_id_b"))),
+        runDir, "scored_pairs", runId,
+        Map("docs_scored_against" -> nTotal, "pairs_removed" -> nRmPairs,
+          "heal_pairs_scored" -> nHeal),
+        basePairRows - nRmPairs + nHeal)
+      val scored = loadStage("scored_pairs")
+      tick("pairs+heal")
 
-    // ---- clustering: recompute ONLY clusters containing a removed doc,
-    // over their SURVIVING strong edges plus the heal edges (no committed
-    // star edges — they would preserve connectivity through removed docs)
-    val activeCl = pin(oldAssign.join(removedB, "doc_id").select("cluster_id").distinct())
-    val survActive = pin(oldAssign.join(rmGate(activeCl), "cluster_id")
-      .join(removedB, Seq("doc_id"), "left_anti"))
-    val sA = gated(survActive.select(col("doc_id").as("doc_id_a")))
-    // a committed pair's endpoints share a cluster, so "a surviving-active,
-    // b not removed" puts both endpoints in the surviving-active set
-    val edgesCommitted = strong.join(sA, "doc_id_a")
-      .join(rmB2, Seq("doc_id_b"), "left_anti")
-    val healEdges = scoredHeal.where(col("score") >= cfg.scoreThreshold)
-      .select("doc_id_a", "doc_id_b")
-    val edges = edgesCommitted.unionByName(healEdges)
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-    // committed pairs are unique and heal pairs were anti-joined against
-    // them, so the union is pair-unique — CC skips its initial dedup
-    val cc = ConnectedComponents.assignAllTracked(spark, survActive.select("doc_id"), edges,
-      cfg.maxCcIter, pairsPreDeduped = true)
-    val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld)
-    Snapshots.commitDelta(spark, cc.assignments, Some((activeCl, Seq("cluster_id"))),
-      runDir, "cluster_assignments", runId,
-      Map("cc_iterations" -> cc.iterations.toLong), baseAssignRows - nRemoved)
-    cc.releaseCheckpoints(spark)
-    val assignments = loadStage("cluster_assignments")
-    val clustersActive = activeCl.count()
-    tick("clustering")
+      // ---- clustering: recompute ONLY clusters containing a removed doc,
+      // over their SURVIVING strong edges plus the heal edges (no committed
+      // star edges — they would preserve connectivity through removed docs)
+      val activeCl = pin(oldAssign.join(removedB, "doc_id").select("cluster_id").distinct())
+      val survActive = pin(oldAssign.join(rmGate(activeCl), "cluster_id")
+        .join(removedB, Seq("doc_id"), "left_anti"))
+      val sA = gated(survActive.select(col("doc_id").as("doc_id_a")))
+      // a committed pair's endpoints share a cluster, so "a surviving-active,
+      // b not removed" puts both endpoints in the surviving-active set
+      val edgesCommitted = strong.join(sA, "doc_id_a")
+        .join(rmB2, Seq("doc_id_b"), "left_anti")
+      val healEdges = scoredHeal.where(col("score") >= cfg.scoreThreshold)
+        .select("doc_id_a", "doc_id_b")
+      val edges = edgesCommitted.unionByName(healEdges)
+        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+      // committed pairs are unique and heal pairs were anti-joined against
+      // them, so the union is pair-unique — CC skips its initial dedup
+      val cc = ConnectedComponents.assignAllTracked(spark, survActive.select("doc_id"), edges,
+        cfg.maxCcIter, pairsPreDeduped = true)
+      val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld)
+      Snapshots.commitDelta(spark, cc.assignments, Some((activeCl, Seq("cluster_id"))),
+        runDir, "cluster_assignments", runId,
+        Map("cc_iterations" -> cc.iterations.toLong), baseAssignRows - nRemoved)
+      cc.releaseCheckpoints(spark)
+      val assignments = loadStage("cluster_assignments")
+      val clustersActive = activeCl.count()
+      tick("clustering")
 
-    ctx.releasePins()
-    oldScored.unpersist(false)
-
-    Result(assignments, scored, blocking, cc.iterations,
-      blockCounters ++ Map("docs_removed" -> nRemoved, "docs_total" -> nTotal,
-        "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
-        "clusters_recomputed" -> clustersActive,
-        "cc_iterations" -> cc.iterations.toLong))
+      Result(assignments, scored, blocking, cc.iterations,
+        blockCounters ++ Map("docs_removed" -> nRemoved, "docs_total" -> nTotal,
+          "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
+          "clusters_recomputed" -> clustersActive,
+          "cc_iterations" -> cc.iterations.toLong))
+    }
   }
 
   /** AUDIT-REPAIR (the fourth incremental verb): post-clustering
@@ -960,98 +983,66 @@ object EntityResolution {
   def auditRepair(spark: SparkSession, runDir: String,
                   audit: ClusterAudit.AuditConfig = ClusterAudit.AuditConfig(),
                   runId: String = "audit", incremental: Boolean = false): Result = {
-    val fjPrev = beginFastJoins(spark)
-    try auditRepairBody(spark, runDir, audit, runId, incremental)
-    finally endFastJoins(spark, fjPrev)
-  }
-
-  private def auditRepairBody(spark: SparkSession, runDir: String,
-                  audit: ClusterAudit.AuditConfig,
-                  runId: String, incremental: Boolean): Result = {
     val ctx = new IncrContext(spark, runDir, "auditRepair")
-    import ctx.{loadStage, pin, tick}
-    ctx.requireLockstep()
-    val oldScored = loadStage("scored_pairs")
-    // resolved once, scanned three times (census join, member cogroup,
-    // relabel anti-join) — same delta-chain merge-on-read rule as
-    // mergeRepair/removeDocuments
-    val oldAssign = loadStage("cluster_assignments")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (scopedAssign, scopeCounters) =
-      if (incremental) auditScope(spark, runDir, oldAssign) else (oldAssign, Map.empty[String, Long])
-    val r = ClusterAudit.repair(scopedAssign, oldScored, audit)
-    tick("audit")
-    // the watermark is written AFTER all commits (below) — a crash between
-    // commit and watermark leaves a stale watermark, which only WIDENS the
-    // next audit's scope (idempotent re-audit), never narrows it
-    def stampWatermark(): Unit =
-      Snapshots.lastCommitted(runDir, "cluster_assignments")
-        .foreach(AuditWatermark.write(runDir, _))
-    if (r.counters("audit_clusters_cut") == 0L) {
-      r.release()
-      oldAssign.unpersist()
-      stampWatermark()
-      Result(oldAssign, oldScored, loadStage("blocking"), 0,
-        r.counters ++ scopeCounters + ("audit_committed" -> 0L))
-    } else {
-      val cutPairs = pin(r.cutPairs)
-      val changed = pin(r.changedAssignments)
-      val changedCl = pin(r.changedClusters)
-      r.release()
-      val nCut = cutPairs.count()
-      val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-      val scoredCounters = Snapshots.lastCounters(runDir, "scored_pairs")
-      Snapshots.commitDelta(spark, oldScored.limit(0).repartition(1),
-        Some((cutPairs, Seq("doc_id_a", "doc_id_b"))),
-        runDir, "scored_pairs", runId,
-        Map("docs_scored_against" -> scoredCounters.getOrElse("docs_scored_against", 0L),
-          "audit_cut_pairs" -> nCut),
-        basePairRows - nCut)
-      if (Snapshots.lastCommitted(runDir, StageAuditTombstones).isEmpty)
-        Snapshots.commit(spark, cutPairs, runDir, StageAuditTombstones, runId,
-          Map("tombstoned_pairs" -> nCut))
-      else {
-        // dedup against the standing tombstones: after a crash-mid-audit +
-        // streaming repair (which trims increment stages but not this one),
-        // the re-run re-cuts pairs already recorded here — re-appending
-        // them would leave the resolved relation holding duplicates and the
-        // rows/counter metadata drifted forever (anti-joins would still be
-        // correct, the accounting would not)
-        val standing = Snapshots.loadCommitted(spark, runDir, StageAuditTombstones).get
-        val freshTs = pin(cutPairs.join(standing, Seq("doc_id_a", "doc_id_b"), "left_anti"))
-        val nFresh = freshTs.count()
-        val baseTs = Snapshots.lastRows(runDir, StageAuditTombstones).getOrElse(0L)
-        Snapshots.commitDelta(spark, freshTs, None, runDir, StageAuditTombstones, runId,
-          Map("tombstoned_pairs" -> (baseTs + nFresh)), baseTs + nFresh)
+    import ctx.{appendToLedger, commitNoOpDeltas, loadStage, persist, pin, tick}
+    verb(spark, Some(ctx)) {
+      val oldScored = loadStage("scored_pairs")
+      // resolved once, scanned three times (census join, member cogroup,
+      // relabel anti-join) — same delta-chain merge-on-read rule as
+      // mergeRepair/removeDocuments
+      val oldAssign = persist(loadStage("cluster_assignments"))
+      val (scopedAssign, scopeCounters) =
+        if (incremental) auditScope(spark, runDir, oldAssign)
+        else (oldAssign, Map.empty[String, Long])
+      val r = ClusterAudit.repair(scopedAssign, oldScored, audit)
+      tick("audit")
+      // the watermark is written AFTER all commits (below) — a crash between
+      // commit and watermark leaves a stale watermark, which only WIDENS the
+      // next audit's scope (idempotent re-audit), never narrows it
+      def stampWatermark(): Unit =
+        Snapshots.lastCommitted(runDir, "cluster_assignments")
+          .foreach(AuditWatermark.write(runDir, _))
+      if (r.counters("audit_clusters_cut") == 0L) {
+        r.release()
+        stampWatermark()
+        Result(oldAssign, oldScored, loadStage("blocking"), 0,
+          r.counters ++ scopeCounters + ("audit_committed" -> 0L))
+      } else {
+        val cutPairs = pin(r.cutPairs)
+        val changed = pin(r.changedAssignments)
+        val changedCl = pin(r.changedClusters)
+        r.release()
+        val nCut = cutPairs.count()
+        val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
+        val scoredCounters = Snapshots.lastCounters(runDir, "scored_pairs")
+        Snapshots.commitDelta(spark, oldScored.limit(0).repartition(1),
+          Some((cutPairs, Seq("doc_id_a", "doc_id_b"))),
+          runDir, "scored_pairs", runId,
+          Map("docs_scored_against" -> scoredCounters.getOrElse("docs_scored_against", 0L),
+            "audit_cut_pairs" -> nCut),
+          basePairRows - nCut)
+        appendToLedger(StageAuditTombstones, cutPairs, nCut, "tombstoned_pairs", runId)
+        // no-op deltas keep the OTHER increment stages in LOCKSTEP with the
+        // two the audit really moves: StreamingIngest certifies batch
+        // completeness by "all stages at equal snapshot ids", and its repair
+        // verb trims ahead-running stages DESTRUCTIVELY — without these,
+        // auditing a streamed run would make the next micro-batch fail loud
+        // on a phantom "interrupted increment" (and repair would undo the
+        // audit). Empty adds resolve to the unchanged base; compaction
+        // collapses them like any delta. cluster_assignments still commits
+        // LAST (the streaming certificate keys on it).
+        commitNoOpDeltas(runId)
+        val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L)
+        Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
+          runDir, "cluster_assignments", runId,
+          r.counters ++ scopeCounters + ("audit_committed" -> 1L), baseAssignRows)
+        tick("commit")
+        stampWatermark()
+        Result(loadStage("cluster_assignments"), loadStage("scored_pairs"),
+          loadStage("blocking"), 0,
+          r.counters ++ scopeCounters ++
+            Map("audit_cut_pairs_removed" -> nCut, "audit_committed" -> 1L))
       }
-      // no-op deltas keep the OTHER increment stages in LOCKSTEP with the
-      // two the audit really moves: StreamingIngest certifies batch
-      // completeness by "all stages at equal snapshot ids", and its repair
-      // verb trims ahead-running stages DESTRUCTIVELY — without these,
-      // auditing a streamed run would make the next micro-batch fail loud
-      // on a phantom "interrupted increment" (and repair would undo the
-      // audit). Empty adds resolve to the unchanged base; compaction
-      // collapses them like any delta. cluster_assignments still commits
-      // LAST (the streaming certificate keys on it).
-      Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures)
-        .filter(s => Snapshots.lastCommitted(runDir, s).nonEmpty) // partial histories stay auditable
-        .foreach { s =>
-          Snapshots.commitDelta(spark, loadStage(s).limit(0).repartition(1), None,
-            runDir, s, runId, Snapshots.lastCounters(runDir, s),
-            Snapshots.lastRows(runDir, s).getOrElse(0L))
-        }
-      val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L)
-      Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
-        runDir, "cluster_assignments", runId,
-        r.counters ++ scopeCounters + ("audit_committed" -> 1L), baseAssignRows)
-      tick("commit")
-      ctx.releasePins()
-      oldAssign.unpersist()
-      stampWatermark()
-      Result(loadStage("cluster_assignments"), loadStage("scored_pairs"),
-        loadStage("blocking"), 0,
-        r.counters ++ scopeCounters ++
-          Map("audit_cut_pairs_removed" -> nCut, "audit_committed" -> 1L))
     }
   }
 
@@ -1097,192 +1088,169 @@ object EntityResolution {
   def mergeRepair(spark: SparkSession, runDir: String,
                   merge: ClusterMerge.MergeConfig = ClusterMerge.MergeConfig(),
                   runId: String = "merge", incremental: Boolean = false): Result = {
-    val fjPrev = beginFastJoins(spark)
-    try mergeRepairBody(spark, runDir, merge, runId, incremental)
-    finally endFastJoins(spark, fjPrev)
-  }
-
-  private def mergeRepairBody(spark: SparkSession, runDir: String,
-                  merge: ClusterMerge.MergeConfig,
-                  runId: String, incremental: Boolean): Result = {
-    val ctx = new IncrContext(spark, runDir, "mergeRepair")
-    import ctx.{loadStage, pin, tick}
-    // persist the RESOLVED relations once: the census scans assignments
-    // ~6× (two endpoint joins, tombstone joins, sizes, relabel,
-    // anti-join) and scored_pairs twice, and on a delta-chain history
-    // every un-persisted scan re-executes the whole merge-on-read
-    // resolution (anti-join + union per delta) — the same rule
-    // removeDocuments already applies to its dominant relation
-    val oldScored = loadStage("scored_pairs")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val oldAssign = loadStage("cluster_assignments")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tombstones = Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-    // pre-commit watermark stamp target (see MergeWatermark)
-    val entryAssignId = Snapshots.lastCommitted(runDir, "cluster_assignments")
-    def stampMergeWatermark(): Unit = entryAssignId.foreach(MergeWatermark.write(runDir, _))
-    // ---- incremental scoping: restrict the census to cluster pairs with
-    // at least one endpoint touched since the last merge watermark. The
-    // scan is O(delta adds); the evidence passed to the census is the
-    // touched set's 2-HOP neighborhood (every scored row with an endpoint
-    // doc in a cluster adjacent to a touched cluster), which is exactly
-    // enough for the scoped rows' band counts, triangle-closure witnesses
-    // AND hub degrees to equal the full census's (MergeRepairSpec asserts
-    // scoped == full on a touched subset) — out-of-scope pairs sit at
-    // their previous merge fixpoint and are dropped after contributing
-    // adjacency. The recurring cadence cost therefore follows the
-    // ARRIVAL rate, not the committed scored-pair volume. Falls back
-    // LOUDLY to full (merge_scope_full_fallback) on: no watermark, a
-    // non-compaction full snapshot in range, a drift-state history (a
-    // crashed mergeRepair's clusters never reached the commit log — only
-    // the full pass's drift rule sees them), or a scope too large for
-    // DriverBound (touched clusters, their docs, the 2-hop clusters or
-    // their docs).
-    //
-    // Touched = the clusters of every assignments delta since the
-    // watermark PLUS the clusters of the endpoints of every scored_pairs
-    // delta's evidence adds: an insert can commit band evidence between
-    // two old clusters without re-labeling either, and without the second
-    // half that pair would leave the scope for good once the watermark
-    // passes it.
-    def evidence(pairs: DataFrame): DataFrame = pairs.where(col("score") >= merge.mergeFloor ||
-      (if (pairs.columns.contains("vetoed")) col("vetoed") else lit(false)))
-    def touchedByEvidence(clusters: DataFrame, pairAdds: Seq[DataFrame]): DataFrame =
-      pairAdds.map(p => evidence(p)
-          .select(explode(array(col("doc_id_a"), col("doc_id_b"))).as("doc_id")))
-        .reduceOption(_ unionByName _)
-        .fold(clusters)(ends => clusters
-          .unionByName(oldAssign.join(ends, Seq("doc_id"), "left_semi").select("cluster_id"))
-          .distinct())
-    val (scoredForMerge, scopeOpt, scopeCounters): (DataFrame, Option[DataFrame], Map[String, Long]) =
-      if (!incremental) (oldScored, None, Map.empty[String, Long])
-      else {
-        val fullFb = (oldScored, None,
-          Map("merge_incremental" -> 1L, "merge_scope_full_fallback" -> 1L))
-        val inLockstep = lockstepIds(runDir).map(_._2).distinct.size <= 1
-        if (!inLockstep) fullFb
-        else MergeWatermark.touchedSince(spark, runDir)
-          .flatMap(cl => MergeWatermark.addsSince(spark, runDir, "scored_pairs")
-            .map(touchedByEvidence(cl, _))) match {
-          case None => fullFb
-          case Some(touched0) =>
-            val touched = pin(touched0)
-            val nTouched = touched.count()
-            if (nTouched > DriverBound.MaxRows) fullFb
-            else if (nTouched == 0L) {
-              // idle cadence point: nothing changed since the last merge
-              // audit — commit nothing, stamp, one log scan total
-              ctx.releasePins()
-              oldScored.unpersist(); oldAssign.unpersist()
-              stampMergeWatermark()
-              return Result(oldAssign, oldScored, loadStage("blocking"), 0,
-                Map("merge_incremental" -> 1L, "merge_scope_clusters" -> 0L,
-                  "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L,
-                  "merge_committed" -> 0L))
-            } else {
-              val evFloor = evidence(oldScored)
-              // docs per touched cluster are unbounded: count the pinned
-              // docs before broadcasting them
-              val touchedDocs = pin(oldAssign.join(broadcast(touched), "cluster_id")
-                .select("doc_id"))
-              if (touchedDocs.count() > DriverBound.MaxRows) fullFb
+    // no lockstep refusal: the drift rule converges on a crashed
+    // mergeRepair's own state (see above)
+    val ctx = new IncrContext(spark, runDir, "mergeRepair", lockstep = false)
+    import ctx.{appendToLedger, commitNoOpDeltas, loadStage, persist, pin, tick}
+    verb(spark, Some(ctx)) {
+      // persist the RESOLVED relations once: the census scans assignments
+      // ~6× (two endpoint joins, tombstone joins, sizes, relabel,
+      // anti-join) and scored_pairs twice, and on a delta-chain history
+      // every un-persisted scan re-executes the whole merge-on-read
+      // resolution (anti-join + union per delta) — the same rule
+      // removeDocuments already applies to its dominant relation
+      val oldScored = persist(loadStage("scored_pairs"))
+      val oldAssign = persist(loadStage("cluster_assignments"))
+      val tombstones = Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
+      // pre-commit watermark stamp target (see MergeWatermark)
+      val entryAssignId = Snapshots.lastCommitted(runDir, "cluster_assignments")
+      def stampMergeWatermark(): Unit = entryAssignId.foreach(MergeWatermark.write(runDir, _))
+      // ---- incremental scoping: restrict the census to cluster pairs with
+      // at least one endpoint touched since the last merge watermark. The
+      // scan is O(delta adds); the evidence passed to the census is the
+      // touched set's 2-HOP neighborhood (every scored row with an endpoint
+      // doc in a cluster adjacent to a touched cluster), which is exactly
+      // enough for the scoped rows' band counts, triangle-closure witnesses
+      // AND hub degrees to equal the full census's (MergeRepairSpec asserts
+      // scoped == full on a touched subset) — out-of-scope pairs sit at
+      // their previous merge fixpoint and are dropped after contributing
+      // adjacency. The recurring cadence cost therefore follows the
+      // ARRIVAL rate, not the committed scored-pair volume. Falls back
+      // LOUDLY to full (merge_scope_full_fallback) on: no watermark, a
+      // non-compaction full snapshot in range, a drift-state history (a
+      // crashed mergeRepair's clusters never reached the commit log — only
+      // the full pass's drift rule sees them), or a scope too large for
+      // DriverBound (touched clusters, their docs, the 2-hop clusters or
+      // their docs).
+      //
+      // Touched = the clusters of every assignments delta since the
+      // watermark PLUS the clusters of the endpoints of every scored_pairs
+      // delta's evidence adds: an insert can commit band evidence between
+      // two old clusters without re-labeling either, and without the second
+      // half that pair would leave the scope for good once the watermark
+      // passes it.
+      def evidence(pairs: DataFrame): DataFrame = pairs.where(col("score") >= merge.mergeFloor ||
+        (if (pairs.columns.contains("vetoed")) col("vetoed") else lit(false)))
+      def touchedByEvidence(clusters: DataFrame, pairAdds: Seq[DataFrame]): DataFrame =
+        pairAdds.map(p => evidence(p)
+            .select(explode(array(col("doc_id_a"), col("doc_id_b"))).as("doc_id")))
+          .reduceOption(_ unionByName _)
+          .fold(clusters)(ends => clusters
+            .unionByName(oldAssign.join(ends, Seq("doc_id"), "left_semi").select("cluster_id"))
+            .distinct())
+      // (the scored rows the merge reads, its census scope, scope counters);
+      // None = an idle cadence point
+      val scope: Option[(DataFrame, Option[DataFrame], Map[String, Long])] =
+        if (!incremental) Some((oldScored, None, Map.empty[String, Long]))
+        else {
+          val fullFb = Some((oldScored, None,
+            Map("merge_incremental" -> 1L, "merge_scope_full_fallback" -> 1L)))
+          val inLockstep = lockstepIds(runDir).map(_._2).distinct.size <= 1
+          if (!inLockstep) fullFb
+          else MergeWatermark.touchedSince(spark, runDir)
+            .flatMap(cl => MergeWatermark.addsSince(spark, runDir, "scored_pairs")
+              .map(touchedByEvidence(cl, _))) match {
+            case None => fullFb
+            case Some(touched0) =>
+              val touched = pin(touched0)
+              val nTouched = touched.count()
+              if (nTouched > DriverBound.MaxRows) fullFb
+              else if (nTouched == 0L) None
               else {
-                val tdA = broadcast(touchedDocs.select(col("doc_id").as("doc_id_a"))
-                  .withColumn("fa", lit(true)))
-                val tdB = broadcast(touchedDocs.select(col("doc_id").as("doc_id_b"))
-                  .withColumn("fb", lit(true)))
-                val ev1 = evFloor.join(tdA, Seq("doc_id_a"), "left")
-                  .join(tdB, Seq("doc_id_b"), "left")
-                  .where(col("fa").isNotNull || col("fb").isNotNull).drop("fa", "fb")
-                val aSide = oldAssign.select(col("doc_id").as("doc_id_a"), col("cluster_id").as("ca"))
-                val bSide = oldAssign.select(col("doc_id").as("doc_id_b"), col("cluster_id").as("cb"))
-                val c2 = pin(ev1.join(aSide, "doc_id_a").join(bSide, "doc_id_b")
-                  .select(explode(array(col("ca"), col("cb"))).as("cluster_id"))
-                  .unionByName(touched).distinct())
-                if (c2.count() > DriverBound.MaxRows) fullFb
+                val evFloor = evidence(oldScored)
+                // docs per touched cluster are unbounded: count the pinned
+                // docs before broadcasting them
+                val touchedDocs = pin(oldAssign.join(broadcast(touched), "cluster_id")
+                  .select("doc_id"))
+                if (touchedDocs.count() > DriverBound.MaxRows) fullFb
                 else {
-                  val c2docs = pin(oldAssign.join(broadcast(c2), "cluster_id").select("doc_id"))
-                  if (c2docs.count() > DriverBound.MaxRows) fullFb
+                  val tdA = broadcast(touchedDocs.select(col("doc_id").as("doc_id_a"))
+                    .withColumn("fa", lit(true)))
+                  val tdB = broadcast(touchedDocs.select(col("doc_id").as("doc_id_b"))
+                    .withColumn("fb", lit(true)))
+                  val ev1 = evFloor.join(tdA, Seq("doc_id_a"), "left")
+                    .join(tdB, Seq("doc_id_b"), "left")
+                    .where(col("fa").isNotNull || col("fb").isNotNull).drop("fa", "fb")
+                  val aSide = oldAssign.select(col("doc_id").as("doc_id_a"),
+                    col("cluster_id").as("ca"))
+                  val bSide = oldAssign.select(col("doc_id").as("doc_id_b"),
+                    col("cluster_id").as("cb"))
+                  val c2 = pin(ev1.join(aSide, "doc_id_a").join(bSide, "doc_id_b")
+                    .select(explode(array(col("ca"), col("cb"))).as("cluster_id"))
+                    .unionByName(touched).distinct())
+                  if (c2.count() > DriverBound.MaxRows) fullFb
                   else {
-                    val cdA = broadcast(c2docs.select(col("doc_id").as("doc_id_a"))
-                      .withColumn("ga", lit(true)))
-                    val cdB = broadcast(c2docs.select(col("doc_id").as("doc_id_b"))
-                      .withColumn("gb", lit(true)))
-                    // floor-filtered is sufficient: the merge reads its input
-                    // only through crossEvidence (floor ∪ vetoed) and the
-                    // promotion-ledger semi-join (band rows ⊂ floor)
-                    val scoped = pin(evFloor.join(cdA, Seq("doc_id_a"), "left")
-                      .join(cdB, Seq("doc_id_b"), "left")
-                      .where(col("ga").isNotNull || col("gb").isNotNull).drop("ga", "gb"))
-                    (scoped, Some(touched),
-                      Map("merge_incremental" -> 1L, "merge_scope_clusters" -> nTouched))
+                    val c2docs = pin(oldAssign.join(broadcast(c2), "cluster_id").select("doc_id"))
+                    if (c2docs.count() > DriverBound.MaxRows) fullFb
+                    else {
+                      val cdA = broadcast(c2docs.select(col("doc_id").as("doc_id_a"))
+                        .withColumn("ga", lit(true)))
+                      val cdB = broadcast(c2docs.select(col("doc_id").as("doc_id_b"))
+                        .withColumn("gb", lit(true)))
+                      // floor-filtered is sufficient: the merge reads its input
+                      // only through crossEvidence (floor ∪ vetoed) and the
+                      // promotion-ledger semi-join (band rows ⊂ floor)
+                      val scoped = pin(evFloor.join(cdA, Seq("doc_id_a"), "left")
+                        .join(cdB, Seq("doc_id_b"), "left")
+                        .where(col("ga").isNotNull || col("gb").isNotNull).drop("ga", "gb"))
+                      Some((scoped, Some(touched),
+                        Map("merge_incremental" -> 1L, "merge_scope_clusters" -> nTouched)))
+                    }
                   }
                 }
               }
-            }
+          }
         }
+      scope match {
+        case None =>
+          // idle cadence point: nothing changed since the last merge audit —
+          // commit nothing, stamp, one log scan total
+          stampMergeWatermark()
+          Result(oldAssign, oldScored, loadStage("blocking"), 0,
+            Map("merge_incremental" -> 1L, "merge_scope_clusters" -> 0L,
+              "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L,
+              "merge_committed" -> 0L))
+        case Some((scoredForMerge, scopeOpt, scopeCounters)) =>
+          val r = ClusterMerge.merge(oldAssign, scoredForMerge, tombstones, merge,
+            scope = scopeOpt)
+          tick("merge-audit")
+          if (r.counters("merge_cluster_pairs_qualified") == 0L) {
+            r.release()
+            stampMergeWatermark()
+            Result(oldAssign, oldScored, loadStage("blocking"), 0,
+              r.counters ++ scopeCounters + ("merge_committed" -> 0L))
+          } else {
+            val promoted = pin(r.promotedPairs)
+            val ledger = pin(r.promotionLedger)
+            val changed = pin(r.changedAssignments)
+            val changedCl = pin(r.changedClusters)
+            r.release()
+            val nPromoted = promoted.count()
+            val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
+            val scoredCounters = Snapshots.lastCounters(runDir, "scored_pairs")
+            // REPLACE the promoted pairs' rows: removes keyed by the pair, adds =
+            // the promoted twins. Row count is unchanged by construction.
+            Snapshots.commitDelta(spark, promoted,
+              Some((promoted.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"))),
+              runDir, "scored_pairs", runId,
+              Map("docs_scored_against" -> scoredCounters.getOrElse("docs_scored_against", 0L),
+                "merge_promoted_pairs" -> nPromoted),
+              basePairRows)
+            appendToLedger(StageMergePromotions, ledger, nPromoted, "promoted_pairs", runId)
+            // lockstep no-op deltas (see auditRepair for why; assignments LAST)
+            commitNoOpDeltas(runId)
+            val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L)
+            Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
+              runDir, "cluster_assignments", runId,
+              r.counters + ("merge_committed" -> 1L), baseAssignRows)
+            tick("commit")
+            stampMergeWatermark()
+            Result(loadStage("cluster_assignments"), loadStage("scored_pairs"),
+              loadStage("blocking"), 0,
+              r.counters ++ scopeCounters ++
+                Map("merge_committed" -> 1L, "merge_promoted_pairs" -> nPromoted))
+          }
       }
-    val r = ClusterMerge.merge(oldAssign, scoredForMerge, tombstones, merge,
-      scope = scopeOpt)
-    tick("merge-audit")
-    if (r.counters("merge_cluster_pairs_qualified") == 0L) {
-      r.release()
-      ctx.releasePins()
-      oldScored.unpersist(); oldAssign.unpersist()
-      stampMergeWatermark()
-      Result(oldAssign, oldScored, loadStage("blocking"), 0,
-        r.counters ++ scopeCounters + ("merge_committed" -> 0L))
-    } else {
-      val promoted = pin(r.promotedPairs)
-      val ledger = pin(r.promotionLedger)
-      val changed = pin(r.changedAssignments)
-      val changedCl = pin(r.changedClusters)
-      r.release()
-      val nPromoted = promoted.count()
-      val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-      val scoredCounters = Snapshots.lastCounters(runDir, "scored_pairs")
-      // REPLACE the promoted pairs' rows: removes keyed by the pair, adds =
-      // the promoted twins. Row count is unchanged by construction.
-      Snapshots.commitDelta(spark, promoted,
-        Some((promoted.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"))),
-        runDir, "scored_pairs", runId,
-        Map("docs_scored_against" -> scoredCounters.getOrElse("docs_scored_against", 0L),
-          "merge_promoted_pairs" -> nPromoted),
-        basePairRows)
-      if (Snapshots.lastCommitted(runDir, StageMergePromotions).isEmpty)
-        Snapshots.commit(spark, ledger, runDir, StageMergePromotions, runId,
-          Map("promoted_pairs" -> nPromoted))
-      else {
-        // dedup against the standing ledger (crash re-runs; same accounting
-        // argument as the tombstone stage)
-        val standing = Snapshots.loadCommitted(spark, runDir, StageMergePromotions).get
-        val fresh = pin(ledger.join(standing.select("doc_id_a", "doc_id_b"),
-          Seq("doc_id_a", "doc_id_b"), "left_anti"))
-        val nFresh = fresh.count()
-        val baseLed = Snapshots.lastRows(runDir, StageMergePromotions).getOrElse(0L)
-        Snapshots.commitDelta(spark, fresh, None, runDir, StageMergePromotions, runId,
-          Map("promoted_pairs" -> (baseLed + nFresh)), baseLed + nFresh)
-      }
-      // lockstep no-op deltas (see auditRepair for why; assignments LAST)
-      Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures)
-        .filter(s => Snapshots.lastCommitted(runDir, s).nonEmpty)
-        .foreach { s =>
-          Snapshots.commitDelta(spark, loadStage(s).limit(0).repartition(1), None,
-            runDir, s, runId, Snapshots.lastCounters(runDir, s),
-            Snapshots.lastRows(runDir, s).getOrElse(0L))
-        }
-      val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L)
-      Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
-        runDir, "cluster_assignments", runId,
-        r.counters + ("merge_committed" -> 1L), baseAssignRows)
-      tick("commit")
-      ctx.releasePins()
-      oldScored.unpersist(); oldAssign.unpersist()
-      stampMergeWatermark()
-      Result(loadStage("cluster_assignments"), loadStage("scored_pairs"),
-        loadStage("blocking"), 0,
-        r.counters ++ scopeCounters ++
-          Map("merge_committed" -> 1L, "merge_promoted_pairs" -> nPromoted))
     }
   }
 

@@ -188,7 +188,7 @@ class ClusterMergeSpec extends SparkSpec {
     // near-misses: multiplicity (2 >= minEvidence) is met, but 2 of 9
     // possible cross pairs is coverage 0.22 — the exact shape that would
     // have committed 19 false merges on the skew corpus without the
-    // coverage dial (tools/MergeCensusProbe).
+    // coverage dial (BENCH/BASELINE.md merge census).
     val a = assign(("a1", "a1"), ("a2", "a1"), ("a3", "a1"),
       ("b1", "b1"), ("b2", "b1"), ("b3", "b1"))
     val p = pairs(("a1", "a2", 0.9), ("a1", "a3", 0.9), ("b1", "b2", 0.9),

@@ -215,6 +215,31 @@ class PairScoringSpec extends SparkSpec {
         s"native/typed scoring disagree under $c")
       assert(native.count() > 0, "equivalence test scored zero pairs — not a real gate")
     }
+    // engine-plan claims, inspected with AQE off (AdaptiveSparkPlanExec does
+    // not expose its inner plan before execution):
+    //  - both consumers of the exploded media-token relation (the df
+    //    aggregation and the feature join) read its cache, so a run
+    //    tokenizes media once;
+    //  - score_pair's six struct-field extractions share ONE kernel
+    //    evaluation (ProjectExec subexpression elimination): exactly one
+    //    ScorePairExpression.score call, inside one codegen span
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val cached = PairScoring.featuresTokenized(toked, nDocs, cfg, persistMedia = true)
+      val scans = "InMemoryTableScan".r
+        .findAllIn(cached.feats.queryExecution.executedPlan.toString).length
+      cached.release()
+      assert(scans >= 2, s"media-token relation not shared through its cache ($scans scans)")
+      val f = PairScoring.featuresTokenized(toked, nDocs, cfg, persistMedia = false)
+      val calls = PairScoring.scoreFeatures(spark, f.feats, cands, cfg)
+        .queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+            "ScorePairExpression\\.score\\(".r.findAllIn(w.doCodeGen()._2.body).length
+        }
+      assert(calls.sum == 1 && calls.count(_ > 0) == 1,
+        s"score-call counts per codegen span = $calls (duplicated kernel or codegen fallback)")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     blocking.unpersist()
   }
 }

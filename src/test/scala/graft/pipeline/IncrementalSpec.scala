@@ -433,7 +433,10 @@ class IncrementalSpec extends SparkSpec {
     // duplicate doc ids
     val tmp = Files.createTempDirectory("graft-incr-dup").toString
     EntityResolution.run(spark, docs, runDir = Some(tmp)).release()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e2 = intercept[IllegalArgumentException](EntityResolution.addDocuments(spark, docs, tmp))
     assert(e2.getMessage.contains("disjoint"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"refused increment leaked persisted RDDs $leaked")
   }
 }

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * increments, the cut audit, and crash recovery.
   *
   * Threshold choice: on the seed-42 corpus same-entity pairs score in
-  * [0.62, 1.0] and cross-entity pairs ≤ 0.41 (ScoreDistProbe), so a 0.75
-  * threshold rejects the ~5% same-entity tail (splitting some entities,
-  * mostly 2+1) while the [0.60, 0.75) merge band contains ONLY same-entity
-  * evidence — every induced split is recoverable and no false merge is
-  * reachable.
+  * [0.62, 1.0] and cross-entity pairs ≤ 0.41 (the first test asserts the
+  * separation at mergeFloor 0.60), so a 0.75 threshold rejects the ~5%
+  * same-entity tail (splitting some entities, mostly 2+1) while the
+  * [0.60, 0.75) merge band contains ONLY same-entity evidence — every
+  * induced split is recoverable and no false merge is reachable.
   */
 class MergeRepairSpec extends SparkSpec {
   import spark.implicits._
@@ -46,6 +46,16 @@ class MergeRepairSpec extends SparkSpec {
     base.release(keepAssignments = true)
     assert(before.recall < 1.0, "the tight threshold should induce splits")
     assert(before.precision == 1.0)
+    // the band separation these thresholds rest on: every cross-entity
+    // pair scores below mergeFloor, every same-entity pair at or above it
+    val ga = gold.select(col("doc_id").as("doc_id_a"), col("entity_id").as("ea"))
+    val gb = gold.select(col("doc_id").as("doc_id_b"), col("entity_id").as("eb"))
+    val band = base.scoredPairs.join(ga, "doc_id_a").join(gb, "doc_id_b")
+      .groupBy((col("ea") === col("eb")).as("same"))
+      .agg(min("score"), max("score")).as[(Boolean, Double, Double)].collect()
+      .map { case (same, lo, hi) => same -> (lo, hi) }.toMap
+    assert(band(false)._2 < tightMerge.mergeFloor, s"cross-entity max score ${band(false)._2}")
+    assert(band(true)._1 >= tightMerge.mergeFloor, s"same-entity min score ${band(true)._1}")
 
     val res = EntityResolution.mergeRepair(spark, tmp, tightMerge)
     assert(res.counters("merge_committed") == 1L)

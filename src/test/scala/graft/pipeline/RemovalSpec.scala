@@ -318,12 +318,17 @@ class RemovalSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-rm-bad").toString
     EntityResolution.run(spark, DocGen.docs(spark, cfg).toDF(),
       runDir = Some(tmp), runId = "base").release()
+    // a refused call must leave no pin or cache behind
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     val e1 = intercept[IllegalArgumentException](
       EntityResolution.removeDocuments(spark, Seq("nope").toDF("doc_id"), tmp))
     assert(e1.getMessage.contains("not in the committed corpus"))
+    assert(leaked.isEmpty, s"refused removal (unknown id) leaked persisted RDDs $leaked")
     val e2 = intercept[IllegalArgumentException](
       EntityResolution.removeDocuments(spark, Seq.empty[String].toDF("doc_id"), tmp))
     assert(e2.getMessage.contains("empty"))
+    assert(leaked.isEmpty, s"refused removal (empty set) leaked persisted RDDs $leaked")
   }
 
   test("Main --replace-entities surface: revisions keep the gold clustering") {
