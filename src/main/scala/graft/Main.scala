@@ -340,6 +340,14 @@ object Main {
     // audits must read the same evidence CC accepted)
     val scoreThr = opts.getOrElse("--threshold", "0.60").toDouble
     val pipeCfg = EntityResolution.PipelineConfig(scoreThreshold = scoreThr)
+    // the merge band: the streaming cadence's derived default for this
+    // threshold, then the explicit --merge-* flags
+    def mergeCfg: graft.operators.ClusterMerge.MergeConfig = {
+      val d = graft.streaming.StreamingIngest.effectiveMerge(pipeCfg, None)
+      d.copy(mergeFloor = opts.get("--merge-floor").fold(d.mergeFloor)(_.toDouble),
+        minEvidence = opts.get("--merge-min-evidence").fold(d.minEvidence)(_.toInt),
+        promoteScore = opts.get("--merge-promote").fold(d.promoteScore)(_.toDouble))
+    }
     val runDir = opts.get("--run-dir")
     val resume = flags.contains("--resume")
     val doEval = !flags.contains("--no-eval")
@@ -411,12 +419,7 @@ object Main {
           strongScore = opts.getOrElse("--audit-strong", "0.75").toDouble,
           minSideDocs = opts.getOrElse("--audit-min-side", "2").toInt)),
         mergeEvery = opts.getOrElse("--merge-every", "0").toInt,
-        merge = Some(graft.operators.ClusterMerge.MergeConfig(
-          mergeFloor = opts.getOrElse("--merge-floor",
-            math.max(0.0, math.min(0.50, scoreThr - 0.10)).toString).toDouble,
-          minEvidence = opts.getOrElse("--merge-min-evidence", "2").toInt,
-          promoteScore = opts.getOrElse("--merge-promote",
-            math.max(0.75, scoreThr + 0.05).toString).toDouble)))
+        merge = Some(mergeCfg))
       q.awaitTermination() // AvailableNow: drains what has arrived, then stops
       val after = graft.ckpt.Snapshots.lastCommitted(dir, "cluster_assignments").getOrElse(-1L)
       val assign = graft.ckpt.Snapshots.loadCommitted(spark, dir, "cluster_assignments").get
@@ -432,18 +435,7 @@ object Main {
     if (flags.contains("--merge-audit") || flags.contains("--merge-repair")) {
       val dir = runDir.getOrElse(
         sys.error("--merge-audit requires --run-dir (the committed run to audit)"))
-      val mcfg = graft.operators.ClusterMerge.MergeConfig(
-        threshold = scoreThr,
-        // derived default preserves the stock band WIDTH (0.10), not the
-        // stock 0.50 floor: any --threshold below 0.60 slides the whole
-        // band down (see StreamingIngest's mergeFor for the calibration
-        // caveat)
-        mergeFloor = opts.getOrElse("--merge-floor",
-          math.max(0.0, math.min(0.50, scoreThr - 0.10)).toString).toDouble,
-        minEvidence = opts.getOrElse("--merge-min-evidence", "2").toInt,
-        promoteScore = opts.getOrElse("--merge-promote",
-          math.max(0.75, scoreThr + 0.05).toString).toDouble)
-      println(mergeRun(spark, dir, cfg, mcfg,
+      println(mergeRun(spark, dir, cfg, mergeCfg,
         commit = flags.contains("--merge-repair"), doEval))
       spark.stop()
       return

@@ -179,7 +179,7 @@ object Blocking {
     // tokens produce oversized blocks that the block-size cap removes
     val shingled = toked.select(col("doc_id"), col("toks"), col("md"),
       shingles(col("toks"), 2).as("sh"))
-    // refinement sub-keys for HOT blocks (block() below): two independent
+    // refinement sub-keys for HOT blocks (blockTokenizedFull below): two independent
     // content-derived 3-minhash keys (dedicated seed range, never used by
     // band keys) — same-entity docs agree on a family with prob ≈ Jaccard³
     // (≈0.73 at j=0.9; either-of-two ≈0.93, and the representative chain
@@ -211,7 +211,63 @@ object Blocking {
         .as("block_key"))
   }
 
-  /** Blocking stage: docs(doc_id, spans) → (block_key, doc_id).
+  /** Blocking output plus (optionally) the RAW hot-key relation
+    * (block_key, doc_id, refine0, refine1) — the full membership of every
+    * over-cap key BEFORE refinement replaced it. The incremental path
+    * (EntityResolution.addDocuments) snapshots this relation so a later
+    * increment can recompute the refinement + chain rows of an affected hot
+    * key over its MERGED membership exactly as a batch run would — without
+    * re-reading any committed document. `hotRows` is persisted +
+    * materialized when present; the caller owns its lifetime.
+    */
+  final case class BlockingOutput(rows: DataFrame, counters: Map[String, Long],
+                                  hotRows: Option[DataFrame])
+
+  /** Derive the two refinement sub-keys from the raw hot relation
+    * (block_key, doc_id, refine0, refine1) — the single definition shared
+    * by the batch route and the increment's [[hotInsertRows]] (sub-key
+    * drift between the two would silently break hot-key recall on
+    * increments).
+    */
+  private def hotKeyed(hotBase: DataFrame): DataFrame =
+    hotBase.select(col("block_key"), col("doc_id"),
+      famTag(Family.Refined, xxhash64(col("block_key"), col("refine0"), lit(0))).as("r0key"),
+      famTag(Family.Refined, xxhash64(col("block_key"), col("refine1"), lit(1))).as("r1key"))
+
+  /** The two hot-key recovery paths (see blockTokenizedFull scaladoc) over a keyed hot
+    * relation (block_key, doc_id, r0key, r1key). Returns the recovery rows
+    * (refined sub-blocks ∪ chain rows) and the persisted sub-block-size
+    * relation (for the refined_subblocks_kept counter — caller unpersists).
+    * Pure function of the hot MEMBERSHIP.
+    */
+  private def hotRecovery(hot: DataFrame, maxBlockSize: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    // path 1: refined sub-blocks from BOTH families (OR-recall)
+    val refined = hot.select(explode(array(col("r0key"), col("r1key"))).as("block_key"), col("doc_id"))
+    val rsizes = refined.groupBy("block_key").agg(count(lit(1)).as("rsize")).persist()
+    val refinedKept = refined
+      .join(rsizes.where(col("rsize") <= maxBlockSize && col("rsize") >= 2).select("block_key"), "block_key")
+      .select(col("block_key"), col("doc_id"))
+    // path 2: representative chain per hot key (r0-family coverage):
+    // kept r0 sub-blocks contribute their min doc (the sub-block is already
+    // internally all-paired); every other doc participates directly
+    val r0stats = hot.groupBy("r0key")
+      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("rep"))
+    val participants = hot.join(r0stats, "r0key")
+      .where(col("n") < 2 || col("n") > maxBlockSize || col("doc_id") === col("rep"))
+      .select(col("block_key"), col("doc_id"))
+    val w = Window.partitionBy("block_key").orderBy("doc_id")
+    val chainRows = participants
+      .withColumn("rn", row_number().over(w))
+      .withColumn("prev", lag(col("doc_id"), 1).over(w))
+      .where(col("prev").isNotNull)
+      .select(famTag(Family.Chain, xxhash64(col("block_key"), col("rn"))).as("block_key"),
+        explode(array(col("prev"), col("doc_id"))).as("doc_id"))
+    (refinedKept.unionByName(chainRows), rsizes)
+  }
+
+  /** Blocking stage over a pre-tokenized (possibly persisted) relation
+    * ([[tokenized]]): (doc_id, toks, md) → (block_key, doc_id).
     *
     * Hot keys above `maxBlockSize` are NOT dropped (the reference's crude
     * skew guard, MacCompression.scala:25 "filter oversized keys to avoid
@@ -244,78 +300,9 @@ object Blocking {
     * shared by a whole shard) and should be range-chunked upstream.
     * Counters record hot keys/rows and both recovery paths; the returned
     * DataFrame is persisted AND materialized (callers may unpersist).
-    */
-  def block(docs: DataFrame, numBands: Int = 12, rowsPerBand: Int = 4,
-            maxBlockSize: Int = 64, tokenBands: Int = 0): (DataFrame, Map[String, Long]) =
-    blockTokenized(tokenized(docs), numBands, rowsPerBand, maxBlockSize, tokenBands)
-
-  /** block() over a pre-tokenized (possibly persisted) relation — the
-    * pipeline path sharing one span-extraction pass with scoring.
-    */
-  def blockTokenized(toked: DataFrame, numBands: Int = 12, rowsPerBand: Int = 4,
-            maxBlockSize: Int = 64, tokenBands: Int = 0): (DataFrame, Map[String, Long]) = {
-    val o = blockTokenizedFull(toked, numBands, rowsPerBand, maxBlockSize, tokenBands,
-      withHotRows = false)
-    (o.rows, o.counters)
-  }
-
-  /** Blocking output plus (optionally) the RAW hot-key relation
-    * (block_key, doc_id, refine0, refine1) — the full membership of every
-    * over-cap key BEFORE refinement replaced it. The incremental path
-    * (EntityResolution.addDocuments) snapshots this relation so a later
-    * increment can recompute the refinement + chain rows of an affected hot
-    * key over its MERGED membership exactly as a batch run would — without
-    * re-reading any committed document. `hotRows` is persisted +
-    * materialized when present; the caller owns its lifetime.
-    */
-  final case class BlockingOutput(rows: DataFrame, counters: Map[String, Long],
-                                  hotRows: Option[DataFrame])
-
-  /** Derive the two refinement sub-keys from the raw hot relation
-    * (block_key, doc_id, refine0, refine1) — the single definition shared
-    * by the batch route and the increment's [[hotInsertRows]] (sub-key
-    * drift between the two would silently break hot-key recall on
-    * increments).
-    */
-  private def hotKeyed(hotBase: DataFrame): DataFrame =
-    hotBase.select(col("block_key"), col("doc_id"),
-      famTag(Family.Refined, xxhash64(col("block_key"), col("refine0"), lit(0))).as("r0key"),
-      famTag(Family.Refined, xxhash64(col("block_key"), col("refine1"), lit(1))).as("r1key"))
-
-  /** The two hot-key recovery paths (see block() scaladoc) over a keyed hot
-    * relation (block_key, doc_id, r0key, r1key). Returns the recovery rows
-    * (refined sub-blocks ∪ chain rows) and the persisted sub-block-size
-    * relation (for the refined_subblocks_kept counter — caller unpersists).
-    * Pure function of the hot MEMBERSHIP.
-    */
-  private def hotRecovery(hot: DataFrame, maxBlockSize: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // path 1: refined sub-blocks from BOTH families (OR-recall)
-    val refined = hot.select(explode(array(col("r0key"), col("r1key"))).as("block_key"), col("doc_id"))
-    val rsizes = refined.groupBy("block_key").agg(count(lit(1)).as("rsize")).persist()
-    val refinedKept = refined
-      .join(rsizes.where(col("rsize") <= maxBlockSize && col("rsize") >= 2).select("block_key"), "block_key")
-      .select(col("block_key"), col("doc_id"))
-    // path 2: representative chain per hot key (r0-family coverage):
-    // kept r0 sub-blocks contribute their min doc (the sub-block is already
-    // internally all-paired); every other doc participates directly
-    val r0stats = hot.groupBy("r0key")
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("rep"))
-    val participants = hot.join(r0stats, "r0key")
-      .where(col("n") < 2 || col("n") > maxBlockSize || col("doc_id") === col("rep"))
-      .select(col("block_key"), col("doc_id"))
-    val w = Window.partitionBy("block_key").orderBy("doc_id")
-    val chainRows = participants
-      .withColumn("rn", row_number().over(w))
-      .withColumn("prev", lag(col("doc_id"), 1).over(w))
-      .where(col("prev").isNotNull)
-      .select(famTag(Family.Chain, xxhash64(col("block_key"), col("rn"))).as("block_key"),
-        explode(array(col("prev"), col("doc_id"))).as("doc_id"))
-    (refinedKept.unionByName(chainRows), rsizes)
-  }
-
-  /** blockTokenized with the optional raw hot-key relation (see
-    * BlockingOutput). `withHotRows = false` adds zero jobs/caches over the
+    *
+    * `withHotRows` also returns the raw hot-key relation (see
+    * BlockingOutput); `withHotRows = false` adds zero jobs/caches over the
     * round-4 plan.
     */
   def blockTokenizedFull(toked: DataFrame, numBands: Int = 12, rowsPerBand: Int = 4,

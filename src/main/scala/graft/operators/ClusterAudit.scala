@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.GraphKernels
+import graft.operators.ConnectedComponents.CodePointOrder
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -136,9 +137,11 @@ object ClusterAudit {
     }
     if (overCap) return None
     // node universe = members ∪ edge endpoints (defensive: a foreign
-    // endpoint must not crash the audit), indexed in doc_id sort order so
-    // kernel labels are order-isomorphic to min-doc_id cluster ids
-    val names = (nodesB ++ edgesB.flatMap(e => Seq(e._1, e._2))).distinct.sorted.toArray
+    // endpoint must not crash the audit), indexed in Spark's doc_id order
+    // (code points, not UTF-16) so kernel labels are order-isomorphic to
+    // min-doc_id cluster ids
+    val names = (nodesB ++ edgesB.flatMap(e => Seq(e._1, e._2))).distinct
+      .sorted(CodePointOrder).toArray
     val idx = names.zipWithIndex.toMap
     Some((names,
       edgesB.map(e => (idx(e._1), idx(e._2))).toArray,
@@ -225,7 +228,8 @@ object ClusterAudit {
               var i = 0
               while (i < n) {
                 val c = r.labels(i)
-                if (minName(c) == null || names(i) < minName(c)) minName(c) = names(i)
+                if (minName(c) == null || CodePointOrder.lt(names(i), minName(c)))
+                  minName(c) = names(i)
                 i += 1
               }
               val assigns = (0 until n).iterator.map(i =>
@@ -233,7 +237,10 @@ object ClusterAudit {
                   over_cap = false, disconnected = false))
               val cuts = r.cutEdges.iterator.map { e =>
                 val (u, v) = earr(e)
-                val (a, b) = if (names(u) < names(v)) (names(u), names(v))
+                // oriented like candidatePairs (doc_id_a < doc_id_b in
+                // Spark's order), or the keyed scored_pairs retraction and
+                // the tombstone would match nothing
+                val (a, b) = if (CodePointOrder.lt(names(u), names(v))) (names(u), names(v))
                              else (names(v), names(u))
                 RepairOut(cid, null, null, a, b, over_cap = false, disconnected = false)
               }
@@ -276,9 +283,8 @@ object ClusterAudit {
     val changedClusters = changed.select(col("cluster_id_old").as("cluster_id")).distinct()
     // changed clusters are few by construction (each needed a qualifying
     // weak bridge); broadcast the anti-join side while it is genuinely
-    // dimension-sized (~30 B/cluster-id ⇒ ≤ ~30 MB), else let it shuffle
-    val ccJ = if (counters("audit_clusters_cut") <= 1000000L) broadcast(changedClusters)
-              else changedClusters
+    // dimension-sized (within DriverBound), else let it shuffle
+    val ccJ = DriverBound.broadcastWithin(changedClusters, counters("audit_clusters_cut"))
     val changedRows = changed.select(col("doc_id"), col("cluster_id"))
     val repaired = assignments.join(ccJ, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id")) // join keys lead otherwise

@@ -199,10 +199,7 @@ object ClusterMerge {
       * [[graft.pipeline.EntityResolution.Result.release]]). */
     def release(): Unit = {
       cached.foreach(_.unpersist())
-      cached.headOption.foreach { df =>
-        val sc = df.sparkSession.sparkContext
-        ccCheckpointIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
+      cached.headOption.foreach(df => ConnectedComponents.free(df.sparkSession, ccCheckpointIds))
     }
   }
 

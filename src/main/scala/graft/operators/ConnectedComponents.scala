@@ -130,9 +130,7 @@ object ConnectedComponents {
     */
   final case class CcResult(assignments: DataFrame, iterations: Int,
                             checkpointIds: Set[Int]) {
-    def releaseCheckpoints(spark: SparkSession): Unit =
-      checkpointIds.foreach(id =>
-        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    def releaseCheckpoints(spark: SparkSession): Unit = free(spark, checkpointIds)
   }
 
   /** localCheckpoint + the id of the persistent RDD it registered
@@ -152,20 +150,9 @@ object ConnectedComponents {
     (ck, ids)
   }
 
-  private def free(spark: SparkSession, ids: Set[Int]): Unit =
+  /** Unpersist the persistent RDDs `ids` (checkpoints, pins) still registered. */
+  private[graft] def free(spark: SparkSession, ids: Iterable[Int]): Unit =
     ids.foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-
-  /** Convenience entry WITHOUT checkpoint tracking: the final-edge-set and
-    * dictionary localCheckpoints backing the returned assignments stay
-    * persisted for the SESSION LIFETIME (there is no handle to free them
-    * through this signature). Fine for one-shot jobs and probes; a
-    * long-lived session running CC repeatedly must use [[runTracked]] and
-    * call [[CcResult.releaseCheckpoints]] when done.
-    */
-  def run(spark: SparkSession, edges0: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
-    val r = runTracked(spark, edges0, maxIter)
-    (r.assignments, r.iterations)
-  }
 
   /** Run to convergence; returns (node -> component-min) assignments for
     * every node appearing in `edges0`, the iteration count, and the live
@@ -329,19 +316,10 @@ object ConnectedComponents {
   }
 
   /** Full assignment for all docs: nodes with no surviving edge form
-    * singleton clusters (cluster_id = own doc_id). Untracked like [[run]]:
-    * leaks the final + dictionary checkpoints for the session lifetime —
-    * use [[assignAllTracked]] from anything long-lived.
-    */
-  def assignAll(spark: SparkSession, allDocIds: DataFrame, edges: DataFrame,
-                maxIter: Int = 50): (DataFrame, Int) = {
-    val r = assignAllTracked(spark, allDocIds, edges, maxIter)
-    (r.assignments, r.iterations)
-  }
-
-  /** assignAll with the final-checkpoint handle (see CcResult): callers
-    * that materialize the assignments durably (or are done with them)
-    * release the last checkpoint via releaseCheckpoints.
+    * singleton clusters (cluster_id = own doc_id). The result carries the
+    * final-checkpoint handles (see CcResult): callers that materialize the
+    * assignments durably (or are done with them) release them via
+    * releaseCheckpoints.
     */
   def assignAllTracked(spark: SparkSession, allDocIds: DataFrame, edges: DataFrame,
                        maxIter: Int = 50, pairsPreDeduped: Boolean = false): CcResult = {
@@ -352,14 +330,14 @@ object ConnectedComponents {
     CcResult(out, r.iterations, r.checkpointIds)
   }
 
-  /** [[assignAll]] semantics via a DRIVER union-find, for graphs the
+  /** [[assignAllTracked]] semantics via a DRIVER union-find, for graphs the
     * CALLER has already proven dimension-sized (both relations ≤
     * [[DriverBound.MaxRows]], from counts it holds anyway — never a new
     * count job): two collects replace the star loop's ~15
     * fixed driver round-trips, which dominate wall whenever the graph is
     * small (OPTIMIZATION_r06.md §3: the incremental verbs are
     * job-count-bound at every sandbox scale). Output is EXACTLY
-    * [[assignAll]]'s: one row per allDocIds doc, cluster_id = min node id
+    * [[assignAllTracked]]'s: one row per allDocIds doc, cluster_id = min node id
     * of its component over the full edge universe (edge endpoints outside
     * allDocIds participate in components and can supply the min, exactly
     * like the distributed path's left join), singletons self-labeled.
@@ -393,18 +371,25 @@ object ConnectedComponents {
     edges.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
       // smaller root absorbs, so every root IS its component's min
-      if (ra != rb) { if (codePointCompare(ra, rb) < 0) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (CodePointOrder.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     find
   }
 
-  private def codePointCompare(a: String, b: String): Int = {
-    var i = 0
-    while (i < a.length && i < b.length) {
-      val ca = a.codePointAt(i); val cb = b.codePointAt(i)
-      if (ca != cb) return Integer.compare(ca, cb)
-      i += Character.charCount(ca)
+  /** String ids ordered by code point — Spark's UTF-8 byte order, the
+    * order of its min() and of candidate-pair orientation (`doc_id_a <
+    * doc_id_b`). Every driver-side id comparison that must agree with the
+    * distributed path uses it instead of Java's UTF-16 `<`.
+    */
+  private[graft] object CodePointOrder extends Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      var i = 0
+      while (i < a.length && i < b.length) {
+        val ca = a.codePointAt(i); val cb = b.codePointAt(i)
+        if (ca != cb) return Integer.compare(ca, cb)
+        i += Character.charCount(ca)
+      }
+      Integer.compare(a.length, b.length)
     }
-    Integer.compare(a.length, b.length)
   }
 }

@@ -81,10 +81,10 @@ object PairScoring {
       exclusivePrefix: String = "xid:")
 
   /** Feature relation plus the persisted media-token cache backing it
-    * (None when built without a cache): the CALLER owns the cache
-    * lifetime — release() it once every consumer of `feats` is durable,
-    * or one materialized cache leaks per pipeline run in a long-lived
-    * session (sweep loops, services).
+    * (featuresTokenized always sets it; an Option because erbench reads it
+    * as one): the CALLER owns the cache lifetime — release() it once every
+    * consumer of `feats` is durable, or one materialized cache leaks per
+    * pipeline run in a long-lived session (sweep loops, services).
     */
   final case class Features(feats: DataFrame, mediaTokenCache: Option[DataFrame],
                             /** (mid, df) document frequencies backing the idf
@@ -119,14 +119,9 @@ object PairScoring {
     *
     * Token-hash collisions (~2^-64 per comparison) can only nudge a
     * channel score, never corrupt ids: doc ids stay strings end-to-end.
-    *
-    * `persistMedia=false` skips the media-token cache (the relation is
-    * computed twice inside the one feature plan — ReuseExchange does not
-    * dedup diverged projections) for small/one-shot callers that would
-    * rather re-tokenize than own a cache lifetime.
     */
-  def featuresTokenized(toked: DataFrame, nDocs: Long, cfg: ScoreConfig = ScoreConfig(),
-                        persistMedia: Boolean = true): Features = {
+  def featuresTokenized(toked: DataFrame, nDocs: Long,
+                        cfg: ScoreConfig = ScoreConfig()): Features = {
     graft.GraftExtensions.register(toked.sparkSession)
     val base = toked
     // ONE tokenization pass: the exploded media-token relation feeds BOTH
@@ -137,15 +132,13 @@ object PairScoring {
     // text payload) and is RETURNED to the caller (Features.release), so
     // a long-lived session does not accumulate one cache per run; at
     // 10^12 docs this is the relation you'd materialize as a table anyway.
-    val mtok0 = mediaTokenRows(base, cfg.exclusivePrefix)
-    val mtok =
-      if (persistMedia) mtok0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else mtok0
+    val mtok = mediaTokenRows(base, cfg.exclusivePrefix)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // mediaTokens is distinct per doc => count(*) per id == document freq
     val dfRel = mtok.groupBy("mid").agg(count(lit(1)).as("df"))
     val w = dfRel.select(col("mid"), log1p(lit(nDocs.toDouble) / col("df")).as("w"))
     val feats = assembleFeatures(base, mtok, w, cfg)
-    Features(feats, if (persistMedia) Some(mtok) else None, Some(dfRel))
+    Features(feats, Some(mtok), Some(dfRel))
   }
 
   /** Exploded per-doc media-token rows (doc_id, mid, is_x) — the relation

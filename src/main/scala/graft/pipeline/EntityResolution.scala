@@ -104,10 +104,7 @@ object EntityResolution {
       blocking.unpersist()
       toked.foreach(_.unpersist())
       featMediaCache.foreach(_.unpersist())
-      if (!keepAssignments)
-        ccCheckpointIds.foreach(id =>
-          blocking.sparkSession.sparkContext.getPersistentRDDs.get(id)
-            .foreach(_.unpersist(false)))
+      if (!keepAssignments) ConnectedComponents.free(blocking.sparkSession, ccCheckpointIds)
     }
   }
 
@@ -270,8 +267,7 @@ object EntityResolution {
     // in runDir mode the assignments are durable parquet now — the CC
     // loop's final checkpoint has no remaining consumer
     if (runDir.isDefined) {
-      ccCkptIds.foreach(id =>
-        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      ConnectedComponents.free(spark, ccCkptIds)
       ccCkptIds = Set.empty
     }
 
@@ -290,33 +286,26 @@ object EntityResolution {
     * Recovery: re-run the interrupted audit verb (auditRepair/mergeRepair
     * converge to their end state via dedup-append + the drift rule) or
     * [[graft.streaming.StreamingIngest.repair]] to trim an interrupted
-    * increment back to the common floor.
+    * increment back to the common floor. In commit order.
     */
-  private val LockstepStages = Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures,
-    "scored_pairs", "cluster_assignments")
+  val LockstepStages: Seq[String] = Seq("blocking", StageBlockHot, StageMediaDf,
+    StageDocFeatures, "scored_pairs", "cluster_assignments")
+  // the standing ledgers: never trimmed, present only on audited histories
+  private val LedgerStages = Seq(StageAuditTombstones, StageMergePromotions)
 
   private def lockstepIds(runDir: String): Seq[(String, Long)] =
     LockstepStages.flatMap(s => Snapshots.lastCommitted(runDir, s).map(s -> _))
 
-  private def requireStagesLockstep(runDir: String, verb: String): Unit = {
+  private[graft] def requireStagesLockstep(runDir: String, verb: String): Unit = {
     val ids = lockstepIds(runDir)
     require(ids.map(_._2).distinct.size <= 1,
       s"$verb: stages are at unequal snapshot ids " +
         s"(${ids.map { case (s, id) => s"$s=$id" }.mkString(", ")}) — a verb was " +
         "interrupted mid-commit-sequence and this history is in a drift state. Run " +
         "StreamingIngest.repair(runDir) to trim the stages that ran ahead, then re-run the " +
-        "interrupted verb (a crashed mergeRepair may instead be re-run directly — its drift " +
-        "rule converges without the trim)")
+        "interrupted verb or restart the stream (the batch replays cleanly; a crashed " +
+        "mergeRepair may instead be re-run directly — its drift rule converges without the trim)")
   }
-
-  /** Broadcast a standing-ledger stage's relation only while its committed
-    * row count stays within [[DriverBound.MaxRows]], read FREE from the
-    * stage's manifest instead of paying a count() job (the ledgers grow
-    * monotonically over a deployment's lifetime; an unconditional
-    * broadcast would eventually OOM the driver on a pathological history).
-    */
-  private def gatedLedger(runDir: String, stage: String, df: DataFrame): DataFrame =
-    DriverBound.broadcastWithin(df, Snapshots.lastRows(runDir, stage).getOrElse(0L))
 
   /** Plan-hygiene shared by the incremental verbs: fail-loud
     * committed-stage loads; explicit broadcast gating where AQE cannot see
@@ -328,19 +317,26 @@ object EntityResolution {
     * becomes heap-exhausting; pinning truncates the plan to the
     * materialized rows, ids tracked — same LogicalRDD-id tracking as the
     * CC loop); relations the verb persists for its own use; and coarse
-    * per-phase stderr ticks. [[verb]] runs the lockstep check (unless
-    * `lockstep = false`) and [[release]]s every pin and persisted relation
-    * on every exit path.
+    * per-phase stderr ticks. Every step two verbs run has its one
+    * definition here, committing under the verb's `runId`. [[verb]] runs
+    * the lockstep check (unless `lockstep = false`) and [[release]]s every
+    * pin and persisted relation on every exit path.
     */
   private final class IncrContext(spark: SparkSession, runDir: String, verb: String,
-                                  lockstep: Boolean = true) {
+                                  runId: String, lockstep: Boolean = true) {
     def requireLockstep(): Unit = if (lockstep) requireStagesLockstep(runDir, verb)
+    /** Run `body` as this incremental verb, in the [[verb]] frame. */
+    def run[T](body: IncrContext => T): T = EntityResolution.verb(spark, Some(this))(body(this))
     def loadStage(stage: String): DataFrame =
       Snapshots.loadCommitted(spark, runDir, stage).getOrElse(sys.error(
         s"$verb: no committed '$stage' snapshot under $runDir — the base must be a " +
           "checkpointed batch run of this build (run() with runDir commits the incremental " +
           s"base stages $StageBlockHot/$StageDocFeatures/$StageMediaDf alongside the main three)"))
     def gated(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, df.count())
+    /** The verb's Result over the stages as committed now. */
+    def committed(ccIterations: Int, counters: Map[String, Long]): Result =
+      Result(loadStage("cluster_assignments"), loadStage("scored_pairs"), loadStage("blocking"),
+        ccIterations, counters)
     private val pinnedIds = scala.collection.mutable.Set.empty[Int]
     def pin(df: DataFrame): DataFrame = {
       val ck = df.localCheckpoint(true)
@@ -354,8 +350,7 @@ object EntityResolution {
       df
     }
     def release(): Unit = {
-      pinnedIds.foreach(id =>
-        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      ConnectedComponents.free(spark, pinnedIds)
       persisted.foreach(_.unpersist())
     }
     private var tickNs = System.nanoTime()
@@ -364,12 +359,58 @@ object EntityResolution {
       System.err.println(f"[$verb] $phase%-14s ${(now - tickNs) / 1e9}%.1f s")
       tickNs = now
     }
-    /** An empty-adds delta on every committed lockstep stage an audit verb
-      * does not move (see [[auditRepair]] for why); a stage missing from a
-      * partial history is skipped, so such a history stays auditable.
+    /** `pairs` minus the audit tombstones: a pair [[auditRepair]] cut must
+      * not come back as "fresh" (insert) or as a heal bridge (removal) just
+      * because the verb touched its block. The ledger is broadcast only
+      * while its committed row count stays within [[DriverBound.MaxRows]],
+      * read FREE from the stage's manifest instead of paying a count() job
+      * (the ledgers grow monotonically over a deployment's lifetime; an
+      * unconditional broadcast would eventually OOM the driver on a
+      * pathological history).
       */
-    def commitNoOpDeltas(runId: String): Unit =
-      Seq("blocking", StageBlockHot, StageMediaDf, StageDocFeatures)
+    def dropTombstoned(pairs: DataFrame): DataFrame =
+      Snapshots.loadCommitted(spark, runDir, StageAuditTombstones).fold(pairs)(ts =>
+        pairs.join(DriverBound.broadcastWithin(ts,
+          Snapshots.lastRows(runDir, StageAuditTombstones).getOrElse(0L)),
+          Seq("doc_id_a", "doc_id_b"), "left_anti"))
+    /** Score the pinned `pairs` with idf weights from the media_df snapshot
+      * `df` (`nDocs` docs) and committed doc_features; pinned + counted.
+      */
+    def scoreCommitted(pairs: DataFrame, df: Snapshots.Committed, nDocs: Long,
+                       cfg: PairScoring.ScoreConfig): (DataFrame, Long) = {
+      val w = Snapshots.read(spark, df)
+        .select(col("mid"), log1p(lit(nDocs.toDouble) / col("df")).as("w"))
+      val docs = pin(pairs.select(col("doc_id_a").as("doc_id"))
+        .unionByName(pairs.select(col("doc_id_b").as("doc_id"))).distinct())
+      val feats = pin(PairScoring.featuresFromStored(
+        loadStage(StageDocFeatures).join(gated(docs), "doc_id"), w))
+      val scored = pin(PairScoring.scoreFeatures(spark, feats, pairs, cfg).toDF())
+      (scored, scored.count())
+    }
+    /** CC over `nodes` + `edges`, committed as the cluster_assignments delta
+      * replacing the `active` clusters (`rows` resolved); returns iterations.
+      */
+    def commitClusters(nodes: DataFrame, edges: DataFrame, pairsPreDeduped: Boolean,
+                       active: DataFrame, rows: Long, maxIter: Int): Int = {
+      val cc = ConnectedComponents.assignAllTracked(spark, nodes, edges, maxIter, pairsPreDeduped)
+      Snapshots.commitDelta(spark, cc.assignments, Some((active, Seq("cluster_id"))),
+        runDir, "cluster_assignments", runId, Map("cc_iterations" -> cc.iterations.toLong), rows)
+      cc.releaseCheckpoints(spark)
+      cc.iterations
+    }
+    /** An empty-adds delta on every committed lockstep stage a repair verb
+      * does not move, keeping them in LOCKSTEP with the two it really
+      * moves: StreamingIngest certifies batch completeness by "all stages
+      * at equal snapshot ids", and its repair verb trims ahead-running
+      * stages DESTRUCTIVELY — without these, auditing a streamed run would
+      * make the next micro-batch fail loud on a phantom "interrupted
+      * increment" (and repair would undo the audit). Empty adds resolve to
+      * the unchanged base; compaction collapses them like any delta. A
+      * stage missing from a partial history is skipped, so such a history
+      * stays auditable.
+      */
+    private def commitNoOpDeltas(): Unit =
+      LockstepStages.filterNot(Set("scored_pairs", "cluster_assignments"))
         .filter(s => Snapshots.lastCommitted(runDir, s).nonEmpty)
         .foreach { s =>
           Snapshots.commitDelta(spark, loadStage(s).limit(0).repartition(1), None,
@@ -385,8 +426,7 @@ object EntityResolution {
       * duplicates and the rows/counter metadata drifted forever (anti-joins
       * would still be correct, the accounting would not).
       */
-    def appendToLedger(stage: String, rows: DataFrame, n: Long, counter: String,
-                       runId: String): Unit =
+    private def appendToLedger(stage: String, rows: DataFrame, n: Long, counter: String): Unit =
       Snapshots.loadCommitted(spark, runDir, stage) match {
         case None => Snapshots.commit(spark, rows, runDir, stage, runId, Map(counter -> n))
         case Some(standing) =>
@@ -396,7 +436,55 @@ object EntityResolution {
           Snapshots.commitDelta(spark, fresh, None, runDir, stage, runId,
             Map(counter -> total), total)
       }
+    /** The commit both repair verbs end with; no `change` commits nothing.
+      * Crash recovery rests on its order: scored_pairs, the ledger, the
+      * no-op deltas, cluster_assignments LAST (the streaming certificate
+      * keys on it), then `stamp` (a stale watermark only WIDENS the next
+      * scoped pass). The assignments manifest records `counters` too.
+      */
+    def commitRepair(key: String, counters: Map[String, Long], change: Option[RepairChange],
+                     release: => Unit, stamp: => Unit,
+                     oldAssign: DataFrame, oldScored: DataFrame): Result = change match {
+      case None =>
+        release
+        stamp
+        Result(oldAssign, oldScored, loadStage("blocking"), 0,
+          counters + (s"${key}_committed" -> 0L))
+      case Some(c) =>
+        val pairs = pin(c.pairs)
+        val ledgerRows = c.ledgerRows.fold(pairs)(pin)
+        val changed = pin(c.changed)
+        val changedCl = pin(c.changedClusters)
+        release
+        val n = pairs.count()
+        // retract, or REPLACE the pairs' rows (row count unchanged)
+        val (adds, removes, rowChange) =
+          if (c.retract) (oldScored.limit(0).repartition(1), pairs, -n)
+          else (pairs, pairs.select("doc_id_a", "doc_id_b"), 0L)
+        Snapshots.commitDelta(spark, adds, Some((removes, Seq("doc_id_a", "doc_id_b"))),
+          runDir, "scored_pairs", runId,
+          Map("docs_scored_against" -> Snapshots.lastCounters(runDir, "scored_pairs")
+            .getOrElse("docs_scored_against", 0L), c.pairsCounter -> n),
+          Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L) + rowChange)
+        appendToLedger(c.ledger, ledgerRows, n, c.ledgerCounter)
+        commitNoOpDeltas()
+        val done = s"${key}_committed" -> 1L
+        Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
+          runDir, "cluster_assignments", runId, counters + done,
+          Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L))
+        tick("commit")
+        stamp
+        committed(0, counters + done + (c.resultCounter -> n))
+    }
   }
+
+  /** A repair verb's change, unpinned: the scored `pairs` it retracts or
+    * rewrites, the rows it appends to its `ledger` (default the pairs), and
+    * the `changed` rows relabeling every doc of the `changedClusters`.
+    */
+  private final case class RepairChange(pairs: DataFrame, retract: Boolean,
+      pairsCounter: String, resultCounter: String, ledger: String, ledgerCounter: String,
+      changed: DataFrame, changedClusters: DataFrame, ledgerRows: Option[DataFrame] = None)
 
   /** INCREMENTAL ER: extend a committed checkpointed run with `newDocs`
     * WITHOUT re-reading any committed document — the operation a standing
@@ -475,10 +563,9 @@ object EntityResolution {
     * table).
     */
   def addDocuments(spark: SparkSession, newDocs: DataFrame, runDir: String,
-                   cfg: PipelineConfig = PipelineConfig(), runId: String = "incr"): Result = {
-    val ctx = new IncrContext(spark, runDir, "addDocuments/ins")
-    import ctx.{gated, loadStage, persist, pin, tick}
-    verb(spark, Some(ctx)) {
+                   cfg: PipelineConfig = PipelineConfig(), runId: String = "incr"): Result =
+    new IncrContext(spark, runDir, "addDocuments/ins", runId).run { ctx =>
+      import ctx.{gated, loadStage, persist, pin, tick}
       val oldBlocking = loadStage("blocking")
       val oldScored = loadStage("scored_pairs")
       val oldAssign = loadStage("cluster_assignments")
@@ -602,7 +689,6 @@ object EntityResolution {
       val hotAddsN = route.counters("capped_doc_rows") + nInHot + nSmallFlood + nFloodCommittedRows
       Snapshots.commitDelta(spark, hotAdds, None, runDir, StageBlockHot, runId,
         Map("hot_rows" -> (baseHotRows + hotAddsN)), baseHotRows + hotAddsN)
-      val blocking = loadStage("blocking")
       tick("blocking")
 
       // ---- fresh candidate pairs from the delta's touched blocks only
@@ -612,13 +698,8 @@ object EntityResolution {
         .select(col("block_key"), col("doc_id"))
       val cand = Blocking.candidatePairs(
         deltaRows.select(col("block_key"), col("doc_id")).unionByName(oldAtKeys))
-      val fresh0 = cand.join(oldScored.select("doc_id_a", "doc_id_b"),
-        Seq("doc_id_a", "doc_id_b"), "left_anti")
-      // audit tombstones: a pair auditRepair cut must not be re-derived as
-      // "fresh" just because this increment touched its block
-      val fresh = pin(Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-        .fold(fresh0)(ts => fresh0.join(gatedLedger(runDir, StageAuditTombstones, ts),
-          Seq("doc_id_a", "doc_id_b"), "left_anti")))
+      val fresh = pin(ctx.dropTombstoned(cand.join(oldScored.select("doc_id_a", "doc_id_b"),
+        Seq("doc_id_a", "doc_id_b"), "left_anti")))
       tick("pairs")
 
       // ---- features: merged document frequencies give EXACT batch idf
@@ -632,27 +713,18 @@ object EntityResolution {
           (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
       val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
         Map("n_docs" -> nTotal))
-      val w = Snapshots.read(spark, cDf)
-        .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
       val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
         .join(Blocking.docRefine(toked), "doc_id")
         .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
       Snapshots.commitDelta(spark, newStored, None, runDir, StageDocFeatures, runId,
         Map("n_docs" -> nTotal), nTotal)
-      val docsNeeded = pin(fresh.select(col("doc_id_a").as("doc_id"))
-        .unionByName(fresh.select(col("doc_id_b").as("doc_id"))).distinct())
-      val featsNeeded = pin(PairScoring.featuresFromStored(
-        loadStage(StageDocFeatures).join(gated(docsNeeded), "doc_id"), w))
       tick("features")
 
       // ---- scoring: fresh pairs only, appended as a delta
-      val scoredFresh = pin(PairScoring.scoreFeatures(spark, featsNeeded, fresh, cfg.scoring)
-        .toDF())
-      val nFresh = scoredFresh.count()
+      val (scoredFresh, nFresh) = ctx.scoreCommitted(fresh, cDf, nTotal, cfg.scoring)
       val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
       Snapshots.commitDelta(spark, scoredFresh, None, runDir, "scored_pairs", runId,
         Map("docs_scored_against" -> nTotal, "pairs_fresh" -> nFresh), basePairRows + nFresh)
-      val scored = loadStage("scored_pairs")
       tick("scoring")
 
       // ---- clustering: only components ADJACENT to a fresh >= threshold
@@ -666,8 +738,7 @@ object EntityResolution {
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
       // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
       // by the fresh-pair count the scoring phase already took
-      def freshGate(df: DataFrame): DataFrame =
-        if (nFresh <= DriverBound.MaxRows / 2) broadcast(df) else df
+      def freshGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, 2 * nFresh)
       val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
         .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
       val activeCl = pin(oldAssign.join(freshGate(endpoints), "doc_id")
@@ -676,22 +747,15 @@ object EntityResolution {
       val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
       val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
-      val ccNodes = activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id")))
-      val cc = ConnectedComponents.assignAllTracked(spark, ccNodes,
-        freshEdges.unionByName(starActive), cfg.maxCcIter, pairsPreDeduped = false)
-      Snapshots.commitDelta(spark, cc.assignments, Some((activeCl, Seq("cluster_id"))),
-        runDir, "cluster_assignments", runId,
-        Map("cc_iterations" -> cc.iterations.toLong), nTotal)
-      cc.releaseCheckpoints(spark)
-      val assignments = loadStage("cluster_assignments")
+      val ccIters = ctx.commitClusters(
+        activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id"))),
+        freshEdges.unionByName(starActive), pairsPreDeduped = false, activeCl, nTotal,
+        cfg.maxCcIter)
       tick("clustering")
 
-      Result(assignments, scored, blocking, cc.iterations,
-        blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
-          "pairs_fresh" -> nFresh, "cc_iterations" -> cc.iterations.toLong,
-          "insert_mode" -> 1L))
+      ctx.committed(ccIters, blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
+        "pairs_fresh" -> nFresh, "cc_iterations" -> ccIters.toLong, "insert_mode" -> 1L))
     }
-  }
 
   /** RETRACTION: remove committed documents from a checkpointed run WITHOUT
     * re-reading the surviving corpus — the takedown/right-to-be-forgotten
@@ -748,10 +812,9 @@ object EntityResolution {
     */
   def removeDocuments(spark: SparkSession, docIds: DataFrame, runDir: String,
                       cfg: PipelineConfig = PipelineConfig(),
-                      runId: String = "remove"): Result = {
-    val ctx = new IncrContext(spark, runDir, "removeDocuments")
-    import ctx.{gated, loadStage, persist, pin, tick}
-    verb(spark, Some(ctx)) {
+                      runId: String = "remove"): Result =
+    new IncrContext(spark, runDir, "removeDocuments", runId).run { ctx =>
+      import ctx.{gated, loadStage, persist, pin, tick}
       val oldBlocking = loadStage("blocking")
       // scored_pairs is this operation's dominant relation and feeds ~6
       // actions below (retraction, lost-edge derivation, heal anti-join,
@@ -803,7 +866,6 @@ object EntityResolution {
       Snapshots.commitDelta(spark, oldHot.limit(0).repartition(1), Some((removed, Seq("doc_id"))),
         runDir, StageBlockHot, runId,
         Map("hot_rows" -> (baseHotRows - removedHotRows)), baseHotRows - removedHotRows)
-      val blocking = loadStage("blocking")
       tick("blocking")
 
       // ---- features: decrement document frequencies by the removed docs'
@@ -820,7 +882,6 @@ object EntityResolution {
       Snapshots.commitDelta(spark, oldFeatures.limit(0).repartition(1),
         Some((removed, Seq("doc_id"))),
         runDir, StageDocFeatures, runId, Map("n_docs" -> nTotal), nTotal)
-      val newFeatures = loadStage(StageDocFeatures)
       tick("features")
 
       // ---- scored pairs: retract every pair touching a removed doc; then
@@ -878,28 +939,16 @@ object EntityResolution {
         .select(col("kept").as("doc_id_a"), col("next").as("doc_id_b"))
         .dropDuplicates("doc_id_a", "doc_id_b")
         .join(oldScored.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"), "left_anti")
-        // a pair auditRepair tombstoned must not come back as a heal bridge
-        .transform(df => Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-          .fold(df)(ts => df.join(gatedLedger(runDir, StageAuditTombstones, ts),
-            Seq("doc_id_a", "doc_id_b"), "left_anti")))
+        .transform(ctx.dropTombstoned)
         .withColumn("block_key",
           Blocking.famTag(Blocking.Family.Heal, xxhash64(col("doc_id_a"), col("doc_id_b")))))
-      val w = Snapshots.read(spark, cDf)
-        .select(col("mid"), log1p(lit(nTotal.toDouble) / col("df")).as("w"))
-      val healDocs = pin(healCand.select(col("doc_id_a").as("doc_id"))
-        .unionByName(healCand.select(col("doc_id_b").as("doc_id"))).distinct())
-      val featsHeal = pin(PairScoring.featuresFromStored(
-        newFeatures.join(gated(healDocs), "doc_id"), w))
-      val scoredHeal = pin(PairScoring.scoreFeatures(spark, featsHeal, healCand, cfg.scoring)
-        .toDF())
-      val nHeal = scoredHeal.count()
+      val (scoredHeal, nHeal) = ctx.scoreCommitted(healCand, cDf, nTotal, cfg.scoring)
       val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
       Snapshots.commitDelta(spark, scoredHeal, Some((rmPairs, Seq("doc_id_a", "doc_id_b"))),
         runDir, "scored_pairs", runId,
         Map("docs_scored_against" -> nTotal, "pairs_removed" -> nRmPairs,
           "heal_pairs_scored" -> nHeal),
         basePairRows - nRmPairs + nHeal)
-      val scored = loadStage("scored_pairs")
       tick("pairs+heal")
 
       // ---- clustering: recompute ONLY clusters containing a removed doc,
@@ -919,24 +968,17 @@ object EntityResolution {
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       // committed pairs are unique and heal pairs were anti-joined against
       // them, so the union is pair-unique — CC skips its initial dedup
-      val cc = ConnectedComponents.assignAllTracked(spark, survActive.select("doc_id"), edges,
-        cfg.maxCcIter, pairsPreDeduped = true)
-      val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld)
-      Snapshots.commitDelta(spark, cc.assignments, Some((activeCl, Seq("cluster_id"))),
-        runDir, "cluster_assignments", runId,
-        Map("cc_iterations" -> cc.iterations.toLong), baseAssignRows - nRemoved)
-      cc.releaseCheckpoints(spark)
-      val assignments = loadStage("cluster_assignments")
+      val ccIters = ctx.commitClusters(survActive.select("doc_id"), edges,
+        pairsPreDeduped = true, activeCl,
+        Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld) - nRemoved,
+        cfg.maxCcIter)
       val clustersActive = activeCl.count()
       tick("clustering")
 
-      Result(assignments, scored, blocking, cc.iterations,
-        blockCounters ++ Map("docs_removed" -> nRemoved, "docs_total" -> nTotal,
-          "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
-          "clusters_recomputed" -> clustersActive,
-          "cc_iterations" -> cc.iterations.toLong))
+      ctx.committed(ccIters, blockCounters ++ Map("docs_removed" -> nRemoved,
+        "docs_total" -> nTotal, "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
+        "clusters_recomputed" -> clustersActive, "cc_iterations" -> ccIters.toLong))
     }
-  }
 
   /** AUDIT-REPAIR (the fourth incremental verb): post-clustering
     * cluster-quality audit over a committed run — find clusters glued by
@@ -982,10 +1024,9 @@ object EntityResolution {
     */
   def auditRepair(spark: SparkSession, runDir: String,
                   audit: ClusterAudit.AuditConfig = ClusterAudit.AuditConfig(),
-                  runId: String = "audit", incremental: Boolean = false): Result = {
-    val ctx = new IncrContext(spark, runDir, "auditRepair")
-    import ctx.{appendToLedger, commitNoOpDeltas, loadStage, persist, pin, tick}
-    verb(spark, Some(ctx)) {
+                  runId: String = "audit", incremental: Boolean = false): Result =
+    new IncrContext(spark, runDir, "auditRepair", runId).run { ctx =>
+      import ctx.{loadStage, persist, tick}
       val oldScored = loadStage("scored_pairs")
       // resolved once, scanned three times (census join, member cogroup,
       // relabel anti-join) — same delta-chain merge-on-read rule as
@@ -996,55 +1037,15 @@ object EntityResolution {
         else (oldAssign, Map.empty[String, Long])
       val r = ClusterAudit.repair(scopedAssign, oldScored, audit)
       tick("audit")
-      // the watermark is written AFTER all commits (below) — a crash between
-      // commit and watermark leaves a stale watermark, which only WIDENS the
-      // next audit's scope (idempotent re-audit), never narrows it
-      def stampWatermark(): Unit =
+      ctx.commitRepair("audit", r.counters ++ scopeCounters,
+        Option.when(r.counters("audit_clusters_cut") > 0L)(RepairChange(r.cutPairs,
+          retract = true, "audit_cut_pairs", "audit_cut_pairs_removed", StageAuditTombstones,
+          "tombstoned_pairs", r.changedAssignments, r.changedClusters)),
+        r.release(),
         Snapshots.lastCommitted(runDir, "cluster_assignments")
-          .foreach(AuditWatermark.write(runDir, _))
-      if (r.counters("audit_clusters_cut") == 0L) {
-        r.release()
-        stampWatermark()
-        Result(oldAssign, oldScored, loadStage("blocking"), 0,
-          r.counters ++ scopeCounters + ("audit_committed" -> 0L))
-      } else {
-        val cutPairs = pin(r.cutPairs)
-        val changed = pin(r.changedAssignments)
-        val changedCl = pin(r.changedClusters)
-        r.release()
-        val nCut = cutPairs.count()
-        val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-        val scoredCounters = Snapshots.lastCounters(runDir, "scored_pairs")
-        Snapshots.commitDelta(spark, oldScored.limit(0).repartition(1),
-          Some((cutPairs, Seq("doc_id_a", "doc_id_b"))),
-          runDir, "scored_pairs", runId,
-          Map("docs_scored_against" -> scoredCounters.getOrElse("docs_scored_against", 0L),
-            "audit_cut_pairs" -> nCut),
-          basePairRows - nCut)
-        appendToLedger(StageAuditTombstones, cutPairs, nCut, "tombstoned_pairs", runId)
-        // no-op deltas keep the OTHER increment stages in LOCKSTEP with the
-        // two the audit really moves: StreamingIngest certifies batch
-        // completeness by "all stages at equal snapshot ids", and its repair
-        // verb trims ahead-running stages DESTRUCTIVELY — without these,
-        // auditing a streamed run would make the next micro-batch fail loud
-        // on a phantom "interrupted increment" (and repair would undo the
-        // audit). Empty adds resolve to the unchanged base; compaction
-        // collapses them like any delta. cluster_assignments still commits
-        // LAST (the streaming certificate keys on it).
-        commitNoOpDeltas(runId)
-        val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L)
-        Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
-          runDir, "cluster_assignments", runId,
-          r.counters ++ scopeCounters + ("audit_committed" -> 1L), baseAssignRows)
-        tick("commit")
-        stampWatermark()
-        Result(loadStage("cluster_assignments"), loadStage("scored_pairs"),
-          loadStage("blocking"), 0,
-          r.counters ++ scopeCounters ++
-            Map("audit_cut_pairs_removed" -> nCut, "audit_committed" -> 1L))
-      }
+          .foreach(AuditWatermark.write(runDir, _)),
+        oldAssign, oldScored)
     }
-  }
 
   /** RECALL-side audit + repair of a committed run: find FALSE SPLITS —
     * gold entities the pairwise threshold left in separate clusters — via
@@ -1087,12 +1088,11 @@ object EntityResolution {
     */
   def mergeRepair(spark: SparkSession, runDir: String,
                   merge: ClusterMerge.MergeConfig = ClusterMerge.MergeConfig(),
-                  runId: String = "merge", incremental: Boolean = false): Result = {
+                  runId: String = "merge", incremental: Boolean = false): Result =
     // no lockstep refusal: the drift rule converges on a crashed
     // mergeRepair's own state (see above)
-    val ctx = new IncrContext(spark, runDir, "mergeRepair", lockstep = false)
-    import ctx.{appendToLedger, commitNoOpDeltas, loadStage, persist, pin, tick}
-    verb(spark, Some(ctx)) {
+    new IncrContext(spark, runDir, "mergeRepair", runId, lockstep = false).run { ctx =>
+      import ctx.{loadStage, persist, pin, tick}
       // persist the RESOLVED relations once: the census scans assignments
       // ~6× (two endpoint joins, tombstone joins, sizes, relabel,
       // anti-join) and scored_pairs twice, and on a delta-chain history
@@ -1138,121 +1138,71 @@ object EntityResolution {
           .fold(clusters)(ends => clusters
             .unionByName(oldAssign.join(ends, Seq("doc_id"), "left_semi").select("cluster_id"))
             .distinct())
+      // `df` pinned with its row count; None (run full) past DriverBound
+      def pinBounded(df: DataFrame): Option[(DataFrame, Long)] = {
+        val p = pin(df)
+        val n = p.count()
+        Option.when(n <= DriverBound.MaxRows)((p, n))
+      }
+      // one hop: clusters → their docs (counted before the broadcast) → the
+      // evidence touching them. Floor-filtered is sufficient: the merge reads
+      // its input only through crossEvidence (floor ∪ vetoed) and the
+      // promotion-ledger semi-join (band rows ⊂ floor)
+      def hop(clusters: DataFrame): Option[DataFrame] =
+        pinBounded(oldAssign.join(broadcast(clusters), "cluster_id").select("doc_id"))
+          .map { case (docs, _) =>
+            val dA = broadcast(docs.select(col("doc_id").as("doc_id_a")).withColumn("fa", lit(true)))
+            val dB = broadcast(docs.select(col("doc_id").as("doc_id_b")).withColumn("fb", lit(true)))
+            evidence(oldScored).join(dA, Seq("doc_id_a"), "left").join(dB, Seq("doc_id_b"), "left")
+              .where(col("fa").isNotNull || col("fb").isNotNull).drop("fa", "fb")
+          }
+      // the clusters of both endpoints of every row of `ev`
+      def clustersOf(ev: DataFrame): DataFrame =
+        ev.join(oldAssign.select(col("doc_id").as("doc_id_a"), col("cluster_id").as("ca")), "doc_id_a")
+          .join(oldAssign.select(col("doc_id").as("doc_id_b"), col("cluster_id").as("cb")), "doc_id_b")
+          .select(explode(array(col("ca"), col("cb"))).as("cluster_id"))
+      val fullFallback = Map("merge_incremental" -> 1L, "merge_scope_full_fallback" -> 1L)
       // (the scored rows the merge reads, its census scope, scope counters);
       // None = an idle cadence point
       val scope: Option[(DataFrame, Option[DataFrame], Map[String, Long])] =
         if (!incremental) Some((oldScored, None, Map.empty[String, Long]))
         else {
-          val fullFb = Some((oldScored, None,
-            Map("merge_incremental" -> 1L, "merge_scope_full_fallback" -> 1L)))
           val inLockstep = lockstepIds(runDir).map(_._2).distinct.size <= 1
-          if (!inLockstep) fullFb
-          else MergeWatermark.touchedSince(spark, runDir)
+          val touched = (if (inLockstep) MergeWatermark.touchedSince(spark, runDir) else None)
             .flatMap(cl => MergeWatermark.addsSince(spark, runDir, "scored_pairs")
-              .map(touchedByEvidence(cl, _))) match {
-            case None => fullFb
-            case Some(touched0) =>
-              val touched = pin(touched0)
-              val nTouched = touched.count()
-              if (nTouched > DriverBound.MaxRows) fullFb
-              else if (nTouched == 0L) None
-              else {
-                val evFloor = evidence(oldScored)
-                // docs per touched cluster are unbounded: count the pinned
-                // docs before broadcasting them
-                val touchedDocs = pin(oldAssign.join(broadcast(touched), "cluster_id")
-                  .select("doc_id"))
-                if (touchedDocs.count() > DriverBound.MaxRows) fullFb
-                else {
-                  val tdA = broadcast(touchedDocs.select(col("doc_id").as("doc_id_a"))
-                    .withColumn("fa", lit(true)))
-                  val tdB = broadcast(touchedDocs.select(col("doc_id").as("doc_id_b"))
-                    .withColumn("fb", lit(true)))
-                  val ev1 = evFloor.join(tdA, Seq("doc_id_a"), "left")
-                    .join(tdB, Seq("doc_id_b"), "left")
-                    .where(col("fa").isNotNull || col("fb").isNotNull).drop("fa", "fb")
-                  val aSide = oldAssign.select(col("doc_id").as("doc_id_a"),
-                    col("cluster_id").as("ca"))
-                  val bSide = oldAssign.select(col("doc_id").as("doc_id_b"),
-                    col("cluster_id").as("cb"))
-                  val c2 = pin(ev1.join(aSide, "doc_id_a").join(bSide, "doc_id_b")
-                    .select(explode(array(col("ca"), col("cb"))).as("cluster_id"))
-                    .unionByName(touched).distinct())
-                  if (c2.count() > DriverBound.MaxRows) fullFb
-                  else {
-                    val c2docs = pin(oldAssign.join(broadcast(c2), "cluster_id").select("doc_id"))
-                    if (c2docs.count() > DriverBound.MaxRows) fullFb
-                    else {
-                      val cdA = broadcast(c2docs.select(col("doc_id").as("doc_id_a"))
-                        .withColumn("ga", lit(true)))
-                      val cdB = broadcast(c2docs.select(col("doc_id").as("doc_id_b"))
-                        .withColumn("gb", lit(true)))
-                      // floor-filtered is sufficient: the merge reads its input
-                      // only through crossEvidence (floor ∪ vetoed) and the
-                      // promotion-ledger semi-join (band rows ⊂ floor)
-                      val scoped = pin(evFloor.join(cdA, Seq("doc_id_a"), "left")
-                        .join(cdB, Seq("doc_id_b"), "left")
-                        .where(col("ga").isNotNull || col("gb").isNotNull).drop("ga", "gb"))
-                      Some((scoped, Some(touched),
-                        Map("merge_incremental" -> 1L, "merge_scope_clusters" -> nTouched)))
-                    }
-                  }
-                }
-              }
+              .map(touchedByEvidence(cl, _)))
+            .flatMap(pinBounded)
+          touched match {
+            case Some((_, 0L)) => None
+            case _ => Some(touched.flatMap { case (t, nTouched) =>
+              for {
+                ev1 <- hop(t)
+                (c2, _) <- pinBounded(clustersOf(ev1).unionByName(t).distinct())
+                ev2 <- hop(c2)
+              } yield (pin(ev2), Some(t),
+                Map("merge_incremental" -> 1L, "merge_scope_clusters" -> nTouched))
+            }.getOrElse((oldScored, None, fullFallback)))
           }
         }
       scope match {
         case None =>
           // idle cadence point: nothing changed since the last merge audit —
           // commit nothing, stamp, one log scan total
-          stampMergeWatermark()
-          Result(oldAssign, oldScored, loadStage("blocking"), 0,
-            Map("merge_incremental" -> 1L, "merge_scope_clusters" -> 0L,
-              "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L,
-              "merge_committed" -> 0L))
+          ctx.commitRepair("merge", Map("merge_incremental" -> 1L, "merge_scope_clusters" -> 0L,
+            "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L), None, (),
+            stampMergeWatermark(), oldAssign, oldScored)
         case Some((scoredForMerge, scopeOpt, scopeCounters)) =>
           val r = ClusterMerge.merge(oldAssign, scoredForMerge, tombstones, merge,
             scope = scopeOpt)
           tick("merge-audit")
-          if (r.counters("merge_cluster_pairs_qualified") == 0L) {
-            r.release()
-            stampMergeWatermark()
-            Result(oldAssign, oldScored, loadStage("blocking"), 0,
-              r.counters ++ scopeCounters + ("merge_committed" -> 0L))
-          } else {
-            val promoted = pin(r.promotedPairs)
-            val ledger = pin(r.promotionLedger)
-            val changed = pin(r.changedAssignments)
-            val changedCl = pin(r.changedClusters)
-            r.release()
-            val nPromoted = promoted.count()
-            val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-            val scoredCounters = Snapshots.lastCounters(runDir, "scored_pairs")
-            // REPLACE the promoted pairs' rows: removes keyed by the pair, adds =
-            // the promoted twins. Row count is unchanged by construction.
-            Snapshots.commitDelta(spark, promoted,
-              Some((promoted.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"))),
-              runDir, "scored_pairs", runId,
-              Map("docs_scored_against" -> scoredCounters.getOrElse("docs_scored_against", 0L),
-                "merge_promoted_pairs" -> nPromoted),
-              basePairRows)
-            appendToLedger(StageMergePromotions, ledger, nPromoted, "promoted_pairs", runId)
-            // lockstep no-op deltas (see auditRepair for why; assignments LAST)
-            commitNoOpDeltas(runId)
-            val baseAssignRows = Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L)
-            Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
-              runDir, "cluster_assignments", runId,
-              r.counters + ("merge_committed" -> 1L), baseAssignRows)
-            tick("commit")
-            stampMergeWatermark()
-            Result(loadStage("cluster_assignments"), loadStage("scored_pairs"),
-              loadStage("blocking"), 0,
-              r.counters ++ scopeCounters ++
-                Map("merge_committed" -> 1L, "merge_promoted_pairs" -> nPromoted))
-          }
+          ctx.commitRepair("merge", r.counters ++ scopeCounters,
+            Option.when(r.counters("merge_cluster_pairs_qualified") > 0L)(RepairChange(
+              r.promotedPairs, retract = false, "merge_promoted_pairs", "merge_promoted_pairs",
+              StageMergePromotions, "promoted_pairs", r.changedAssignments, r.changedClusters,
+              ledgerRows = Some(r.promotionLedger))),
+            r.release(), stampMergeWatermark(), oldAssign, oldScored)
       }
     }
-  }
 
   /** Scope of an `incremental = true` [[auditRepair]]: the assignments rows
     * of clusters TOUCHED since the last audit's watermark
@@ -1404,11 +1354,9 @@ object EntityResolution {
     // compacting a drift state would bake the drift into the new full
     // snapshots and destroy the trim-based recovery path
     requireStagesLockstep(runDir, "compactRun")
-    (Seq("blocking", "scored_pairs", "cluster_assignments",
-      StageBlockHot, StageDocFeatures, StageMediaDf) ++
-      // tombstones/promotions exist only on audited histories
-      Snapshots.lastCommitted(runDir, StageAuditTombstones).map(_ => StageAuditTombstones) ++
-      Snapshots.lastCommitted(runDir, StageMergePromotions).map(_ => StageMergePromotions))
+    // cluster_assignments LAST, so a crash mid-compaction cannot leave the
+    // streaming certificate marking a batch done while later stages lag
+    (LedgerStages.filter(Snapshots.lastCommitted(runDir, _).nonEmpty) ++ LockstepStages)
       .foreach(stage => Snapshots.compact(spark, runDir, stage, runId))
   }
 
@@ -1421,9 +1369,7 @@ object EntityResolution {
     * design. Returns dropped ids per stage.
     */
   def expireRun(runDir: String, keepLast: Int = 1): Map[String, Seq[Long]] =
-    Seq("blocking", "scored_pairs", "cluster_assignments",
-      StageBlockHot, StageDocFeatures, StageMediaDf, StageAuditTombstones,
-      StageMergePromotions)
+    (LockstepStages ++ LedgerStages)
       .map(stage => stage -> Snapshots.expire(runDir, stage, keepLast)).toMap
 
   /** Derive labeled pairs at shared blocking keys (FIXTURES.md §2):

@@ -45,9 +45,7 @@ object StreamingIngest {
   /** Every stage an increment commits, in commit order — clustering last
     * (the run_id certificate keys on it).
     */
-  val Stages: Seq[String] = Seq(
-    "blocking", EntityResolution.StageBlockHot, EntityResolution.StageMediaDf,
-    EntityResolution.StageDocFeatures, "scored_pairs", "cluster_assignments")
+  val Stages: Seq[String] = EntityResolution.LockstepStages
 
   private def batchRunId(batchId: Long): String = s"stream-$batchId"
 
@@ -73,7 +71,7 @@ object StreamingIngest {
     * The derived default keeps the stock band width and floors promoteScore
     * at the threshold. Validated eagerly by [[start]].
     */
-  private[streaming] def effectiveMerge(cfg: PipelineConfig,
+  private[graft] def effectiveMerge(cfg: PipelineConfig,
       merge: Option[graft.operators.ClusterMerge.MergeConfig]):
       graft.operators.ClusterMerge.MergeConfig = merge match {
     case Some(m) => m.copy(threshold = cfg.scoreThreshold)
@@ -128,8 +126,7 @@ object StreamingIngest {
                   merge: Option[graft.operators.ClusterMerge.MergeConfig] = None):
       BatchOutcome = {
     val runId = batchRunId(batchId)
-    val lastIds = Stages.map(s => s -> Snapshots.lastCommitted(runDir, s)).toMap
-    val clusterLast = lastIds("cluster_assignments").getOrElse(
+    val clusterLast = Snapshots.lastCommitted(runDir, "cluster_assignments").getOrElse(
       sys.error(s"StreamingIngest: no committed base run under $runDir — bootstrap with " +
         "EntityResolution.run(runDir = Some(...)) before attaching a stream"))
     // replay of a fully-committed batch: ack and move on. The certificate
@@ -142,11 +139,7 @@ object StreamingIngest {
     if (Snapshots.runIdOf(runDir, "cluster_assignments", clusterLast)
         .exists(r => r == runId || r.startsWith(runId + "-")))
       return Skipped
-    if (lastIds.values.flatten.toSet.size != 1)
-      sys.error(s"StreamingIngest: stages are at unequal snapshot ids " +
-        s"(${lastIds.map { case (s, id) => s"$s=${id.getOrElse(-1L)}" }.mkString(", ")}) — " +
-        "an increment was interrupted mid-commit; run StreamingIngest.repair(runDir) to trim " +
-        "the stages that ran ahead, then restart the stream (the batch replays cleanly)")
+    EntityResolution.requireStagesLockstep(runDir, "StreamingIngest")
     if (batch.isEmpty) return Skipped
     val res = EntityResolution.addDocuments(spark, batch, runDir, cfg, runId = runId)
     val added = res.counters.getOrElse("docs_added", 0L)
@@ -166,19 +159,20 @@ object StreamingIngest {
           runId = s"$runId-audit", incremental = true)
         a.counters.getOrElse("audit_bridges_cut", 0L)
       } else -1L
-    // merge-audit cadence (opt-in, 0 = never): the recall-side twin.
-    // UNSCOPED by design — near-miss evidence between two OLD clusters can
-    // first qualify when an arrival adds the second witness, so a touched-
-    // cluster scope would miss it; the cost shape is two corpus-side joins
-    // whose band side is filter-tiny (AQE broadcasts it), i.e. corpus
-    // SCANS, not corpus shuffles. Pick a coarser cadence than the cut
-    // audit when scans dominate. Runs AFTER the cut audit so fresh
-    // tombstones veto same-batch re-merges.
+    // merge-audit cadence (opt-in, 0 = never): the recall-side twin, also
+    // INCREMENTAL — scoped to the 2-hop neighborhood of the clusters
+    // touched since the last merge's watermark. Near-miss evidence between
+    // two OLD clusters that first qualifies when an arrival adds the
+    // second witness stays in scope: the touched set includes the
+    // clusters of both endpoints of every scored_pairs delta's evidence
+    // adds, so the arrival's band pairs pull both old clusters in. The
+    // first cadence point (no watermark) runs full. Runs AFTER the cut
+    // audit so fresh tombstones veto same-batch re-merges.
     val mergeClusters =
       if (mergeEvery > 0 && (batchId + 1) % mergeEvery == 0) {
         val mcfg = effectiveMerge(cfg, merge)
         val m = EntityResolution.mergeRepair(spark, runDir, mcfg,
-          runId = s"$runId-merge")
+          runId = s"$runId-merge", incremental = true)
         m.counters.getOrElse("merge_clusters_merged", 0L)
       } else -1L
     val compacted = compactEvery > 0 &&

@@ -190,6 +190,41 @@ class ClusterAuditSpec extends SparkSpec {
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
+  test("auditRepair orders doc ids like Spark: cut pair retracted, each side labeled by its Spark min") {
+    // ids mixing a supplementary character (U+1F600, a UTF-16 surrogate
+    // pair) with U+FF21: Java's String `<` compares UTF-16 code units and
+    // puts the surrogate first; Spark compares UTF-8 bytes (code points)
+    // and puts U+FF21 first — the order candidatePairs orients pairs by
+    val (p, q) = ("\uFF21", "\uD83D\uDE00")
+    val (p1, q1, q2) = (p + "1", q + "1", q + "2") // side A, Spark min p1
+    val (p2, q3, q4) = (p + "2", q + "3", q + "4") // side B, Spark min p2
+    assert(Seq(q1, p2).toDF("id").agg(min("id")).as[String].head() == p2,
+      "fixture: Spark must order U+FF21 before U+1F600")
+    val dir = java.nio.file.Files.createTempDirectory("graft-audit-order").toString
+    Snapshots.commit(spark, Seq(("k1", p1)).toDF("block_key", "doc_id"), dir, "blocking",
+      "base", Map("blocking_rows" -> 1L))
+    // pairs oriented doc_id_a < doc_id_b in Spark's order; the weak
+    // bridge joins q1 (side A) and p2 (side B): (p2, q1)
+    Snapshots.commit(spark, pairs((p1, q1, 0.9), (p1, q2, 0.9), (q1, q2, 0.9),
+      (p2, q3, 0.9), (p2, q4, 0.9), (q3, q4, 0.9), (p2, q1, 0.65)),
+      dir, "scored_pairs", "base", Map("docs_scored_against" -> 6L))
+    Snapshots.commit(spark, assign(Seq(p1, q1, q2, p2, q3, q4).map(_ -> p1): _*),
+      dir, "cluster_assignments", "base", Map("cc_iterations" -> 1L))
+
+    val res = EntityResolution.auditRepair(spark, dir)
+    assert(res.counters("audit_committed") == 1L && res.counters("audit_cut_pairs_removed") == 1L)
+    assert(res.scoredPairs.where(col("doc_id_a") === p2 && col("doc_id_b") === q1).isEmpty,
+      "the cut bridge must be retracted from the resolved scored set")
+    assert(res.scoredPairs.count() == 6L)
+    assert(Snapshots.loadCommitted(spark, dir, EntityResolution.StageAuditTombstones).get
+      .as[(String, String)].collect().toSeq == Seq((p2, q1)), "tombstone must match the pair")
+    val got = res.assignments.as[(String, String)].collect().toMap
+    assert(got == Map(p1 -> p1, q1 -> p1, q2 -> p1, p2 -> p2, q3 -> p2, q4 -> p2),
+      s"each side must be labeled by its min in Spark order: $got")
+    res.release()
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   test("auditRepair verb: commits deltas + tombstones, idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("graft-audit-verb").toString
     val (a, p) = mergedCase

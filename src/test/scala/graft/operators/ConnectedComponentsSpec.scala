@@ -30,9 +30,10 @@ class ConnectedComponentsSpec extends SparkSpec {
   private def runCC(nodes: Seq[String], edges: Seq[(String, String)]): Map[String, String] = {
     val nodesDf = nodes.toDF("doc_id")
     val edgesDf = edges.toDF("src", "dst")
-    val (assign, iters) = ConnectedComponents.assignAll(spark, nodesDf, edgesDf)
-    assert(iters < 50, "CC must converge")
-    assign.as[(String, String)].collect().toMap
+    val cc = ConnectedComponents.assignAllTracked(spark, nodesDf, edgesDf)
+    assert(cc.iterations < 50, "CC must converge")
+    try cc.assignments.as[(String, String)].collect().toMap
+    finally cc.releaseCheckpoints(spark)
   }
 
   test("path, star, two components, self-loop") {

@@ -199,11 +199,11 @@ class PairScoringSpec extends SparkSpec {
     val gen = graft.synth.GenConfig(numEntities = 60, docsPerEntity = 3, seed = 7L)
     val docs = graft.synth.DocGen.docs(spark, gen).toDF()
     val toked = Blocking.tokenized(docs)
-    val (blocking, _) = Blocking.blockTokenized(toked, 12, 4, 64, 0)
+    val blocking = Blocking.blockTokenizedFull(toked, 12, 4, 64, 0).rows
     val cands = Blocking.candidatePairs(blocking)
     val nDocs = docs.count()
     Seq(cfg, cfg.copy(prescreenOverlap = 0.0, gammaText = 0.7, minMediaEvidence = 1)).foreach { c =>
-      val f = PairScoring.featuresTokenized(toked, nDocs, c, persistMedia = false)
+      val f = PairScoring.featuresTokenized(toked, nDocs, c)
       val native = PairScoring.scoreFeatures(spark, f.feats, cands, c).toDF()
       val typed = PairScoring.scoreFeaturesTyped(spark, f.feats, cands, c).toDF()
       // names+types must match; nullability legitimately differs (the
@@ -214,6 +214,7 @@ class PairScoringSpec extends SparkSpec {
       assert(native.exceptAll(typed).isEmpty && typed.exceptAll(native).isEmpty,
         s"native/typed scoring disagree under $c")
       assert(native.count() > 0, "equivalence test scored zero pairs — not a real gate")
+      f.release()
     }
     // engine-plan claims, inspected with AQE off (AdaptiveSparkPlanExec does
     // not expose its inner plan before execution):
@@ -226,17 +227,18 @@ class PairScoringSpec extends SparkSpec {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val cached = PairScoring.featuresTokenized(toked, nDocs, cfg, persistMedia = true)
+      val cached = PairScoring.featuresTokenized(toked, nDocs, cfg)
       val scans = "InMemoryTableScan".r
         .findAllIn(cached.feats.queryExecution.executedPlan.toString).length
       cached.release()
       assert(scans >= 2, s"media-token relation not shared through its cache ($scans scans)")
-      val f = PairScoring.featuresTokenized(toked, nDocs, cfg, persistMedia = false)
+      val f = PairScoring.featuresTokenized(toked, nDocs, cfg)
       val calls = PairScoring.scoreFeatures(spark, f.feats, cands, cfg)
         .queryExecution.executedPlan.collect {
           case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
             "ScorePairExpression\\.score\\(".r.findAllIn(w.doCodeGen()._2.body).length
         }
+      f.release()
       assert(calls.sum == 1 && calls.count(_ > 0) == 1,
         s"score-call counts per codegen span = $calls (duplicated kernel or codegen fallback)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)

@@ -20,13 +20,15 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("blocking recall: >=99.5% of gold pairs share a blocking key") {
-    val (blocking, _) = Blocking.block(docs)
+    val blocking = Blocking.blockTokenizedFull(Blocking.tokenized(docs)).rows
     val labeled = EntityResolution.labeledPairs(blocking, gold).cache()
     val goldPairsInBlocks = labeled.where(col("is_match")).count()
     // total same-entity pairs: E * C(d,2)
     val totalGoldPairs = cfg.numEntities.toLong * cfg.docsPerEntity * (cfg.docsPerEntity - 1) / 2
     val recall = goldPairsInBlocks.toDouble / totalGoldPairs
     info(s"blocking recall = $recall ($goldPairsInBlocks / $totalGoldPairs)")
+    labeled.unpersist()
+    blocking.unpersist()
     assert(recall >= 0.995, s"blocking recall $recall too low")
   }
 

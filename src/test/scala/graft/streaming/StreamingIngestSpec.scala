@@ -314,8 +314,40 @@ class StreamingIngestSpec extends SparkSpec {
     assert(StreamingIngest.ingestBatch(spark, Seq(z("z2", "robin")).toDF(),
       tmp, batchId = 1L, cfg, mergeEvery = 2) == StreamingIngest.Skipped,
       "replay of a merged batch must be skipped by the certificate")
-    assert(StreamingIngest.ingestBatch(spark, Seq(z("z3", "wren")).toDF(),
+    // batch 2 (not a cadence point) also brings a SECOND planted split:
+    // the same corpus under rot13 — the same token-equality structure, so
+    // the same scores and blocking, and no token shared with x/y
+    def rot13(t: String) =
+      t.map(c => if (c >= 'a' && c <= 'z') ((c - 'a' + 13) % 26 + 'a').toChar else c)
+    val rotated = plantedMerge.map(d => d.copy(doc_id = "r" + d.doc_id,
+      spans = d.spans.map(sp => sp.copy(text = rot13(sp.text)))))
+    assert(StreamingIngest.ingestBatch(spark, (z("z3", "wren") +: rotated).toDF(),
       tmp, batchId = 2L, cfg, mergeEvery = 2)
       .isInstanceOf[StreamingIngest.Ingested], "the stream must continue past the merge")
+    def clusters(cond: org.apache.spark.sql.Column): Long =
+      Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get.where(cond)
+        .select("cluster_id").distinct().count()
+    val isR = col("doc_id").startsWith("r")
+    assert(clusters(isR) == 2, "fixture: the rotated entity pair must arrive split")
+    // batch 3 is the next cadence point: the first merge left a watermark,
+    // so this one runs SCOPED — and still heals the rotated split
+    StreamingIngest.ingestBatch(spark, Seq(z("z4", "finch")).toDF(),
+      tmp, batchId = 3L, cfg, mergeEvery = 2) match {
+      case StreamingIngest.Ingested(_, _, _, _, m) =>
+        assert(m == 2L, s"the scoped cadence merge must join the rotated split, merged=$m")
+      case o => fail(s"expected Ingested, got $o")
+    }
+    val mc = Snapshots.lastCounters(tmp, "cluster_assignments")
+    assert(mc.get("merge_committed").contains(1L) && mc.get("merge_incremental").contains(1L) &&
+      !mc.contains("merge_scope_full_fallback"), s"the cadence merge must commit scoped: $mc")
+    val ids2 = StreamingIngest.Stages.map(s => Snapshots.lastCommitted(tmp, s))
+    assert(ids2.distinct.size == 1, s"lockstep after the scoped cadence merge: $ids2")
+    assert(clusters(isR) == 1, "the rotated entity must be whole after the scoped merge")
+    assert(clusters(col("doc_id").startsWith("x") || col("doc_id").startsWith("y")) == 1,
+      "the first entity must stay whole")
+    // the scoped pass left nothing a full pass would still merge
+    val full = EntityResolution.mergeRepair(spark, tmp, StreamingIngest.effectiveMerge(cfg, None))
+    assert(full.counters("merge_committed") == 0L,
+      s"a full merge found what the scoped cadence missed: ${full.counters}")
   }
 }
