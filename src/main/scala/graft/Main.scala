@@ -77,8 +77,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-read; a replayed batch is skipped by its run_id certificate), and
   * delta chains compact every `--compact-every` increments (default 8).
   * Run it per arrival (cron-style) or leave a producer dropping files
-  * and re-invoke — the deployment loop. `--repair` first trims an
-  * increment interrupted mid-commit back to the consistent floor.
+  * and re-invoke — the deployment loop. `--repair` first sweeps the disk
+  * garbage a crashed writer left, which no commit record names
+  * ([[graft.ckpt.Snapshots.repair]]; only while no other writer is live).
   *
   * `--audit` (with --run-dir): CLUSTER-QUALITY CENSUS — read-only cohesion
   * report over the committed clustering (bridge structure of every
@@ -404,11 +405,11 @@ object Main {
       val dir = runDir.getOrElse(
         sys.error("--ingest requires --run-dir (the committed base run to extend)"))
       if (flags.contains("--repair")) {
-        val floor = graft.streaming.StreamingIngest.repair(dir)
-        System.err.println(s"[ingest] repaired to common snapshot floor $floor")
+        val swept = graft.ckpt.Snapshots.repair(dir).size
+        System.err.println(s"[ingest] repair swept $swept unpublished snapshot/staging dirs")
       }
       val t0 = System.nanoTime()
-      val before = graft.ckpt.Snapshots.lastCommitted(dir, "cluster_assignments").getOrElse(-1L)
+      val before = graft.ckpt.Snapshots.record(dir).version
       val schema = org.apache.spark.sql.Encoders.product[graft.model.Doc].schema
       val stream = spark.readStream.schema(schema).parquet(ingestOpt.get)
       val q = graft.streaming.StreamingIngest.start(spark, stream, dir,
@@ -425,7 +426,9 @@ object Main {
       val assign = graft.ckpt.Snapshots.loadCommitted(spark, dir, "cluster_assignments").get
       val docsTotal = graft.ckpt.Snapshots
         .lastCounters(dir, EntityResolution.StageMediaDf).getOrElse("n_docs", -1L)
-      println(s"""{"ingested_snapshots":${after - before},"docs_total":$docsTotal,""" +
+      // the commit records the stream published (increments and cadence verbs)
+      val published = graft.ckpt.Snapshots.record(dir).version - before
+      println(s"""{"ingested_snapshots":$published,"docs_total":$docsTotal,""" +
         s""""clusters":${assign.select("cluster_id").distinct().count()},""" +
         s""""last_snapshot_id":$after,"seconds":${(System.nanoTime() - t0) / 1e9}}""")
       spark.stop()

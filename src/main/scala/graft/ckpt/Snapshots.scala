@@ -20,6 +20,13 @@ import scala.jdk.CollectionConverters._
   *         <runDir>/<stage>/snapshot=<id>/lineage/   (parquet files)
   *         <runDir>/<stage>/snapshot=<id>/_manifest.json
   *         <runDir>/<stage>/snapshot=<id>/_COMMITTED (atomic marker)
+  *         <runDir>/_commits/<v>.json                (run-level commit records)
+  *
+  * Like a Delta Lake log entry or an Iceberg metadata pointer, record v
+  * names every stage's snapshot id; the "latest" readers resolve through
+  * the latest record ([[lastCommitted]]). A verb writes its snapshots in a
+  * [[Txn]] and publishes one record, so a crash before that leaves the run
+  * as before the verb. Time travel ([[loadSnapshot]]) reads any id.
   *
   * Like an Iceberg table's snapshot metadata, the manifest records the
   * read schema of `data/` and `removes/`, so no read of a committed
@@ -55,10 +62,10 @@ object Snapshots {
   final class IncompatibleSnapshotException(msg: String) extends RuntimeException(msg)
 
   /** Thrown when another writer published the same snapshot id while this
-    * commit was staging — two uncoordinated writers share a run dir (e.g. a
-    * streaming ingester plus a manual increment). The losing commit's staged
-    * files are already deleted when this is thrown; nothing it wrote is
-    * visible. Serialize writers per run dir and retry.
+    * commit was staging, or the next commit record first — two
+    * uncoordinated writers share a run dir (e.g. a streaming ingester plus
+    * a manual increment). Nothing the losing commit wrote is visible (its
+    * staged attempt is deleted). Serialize writers per run dir and retry.
     */
   final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
@@ -80,7 +87,7 @@ object Snapshots {
     s"$stageD/_attempt_${java.util.UUID.randomUUID().toString.take(12)}"
   }
 
-  /** The single commit point: atomically rename a fully-written attempt dir
+  /** The stage commit point: atomically rename a fully-written attempt dir
     * (data + lineage + manifest + _COMMITTED already inside) to its
     * `snapshot=<id>` name. rename(2) fails if the target exists, so when two
     * uncoordinated writers race the same next id, exactly one publishes; the
@@ -174,10 +181,8 @@ object Snapshots {
     * what it exists to recover).
     */
   def cleanAttempts(runDir: String, stage: String): Seq[String] = {
-    val d = Paths.get(stageDir(runDir, stage))
-    if (!Files.isDirectory(d)) return Seq.empty
-    val attempts = scala.util.Using.resource(Files.list(d))(_.toArray.toSeq.map(_.toString))
-      .filter(p => Paths.get(p).getFileName.toString.startsWith("_attempt_"))
+    val attempts = names(stageDir(runDir, stage)).filter(_.startsWith("_attempt_"))
+      .map(n => s"${stageDir(runDir, stage)}/$n")
     val (strandedCommitted, garbage) =
       attempts.partition(p => Files.exists(Paths.get(p, "_COMMITTED")))
     strandedCommitted.foreach(p => System.err.println(
@@ -187,48 +192,160 @@ object Snapshots {
     garbage
   }
 
-  /** All COMMITTED snapshot ids of a stage, ascending — the time-ordered
-    * snapshot log (each commit is monotone, so id order = commit order).
+  /** Entry names of directory `d` (none when absent). Files.list holds a dir
+    * fd until closed — close it or a long-lived session leaks one per call.
     */
-  def snapshots(runDir: String, stage: String): Seq[Long] = {
-    val d = Paths.get(stageDir(runDir, stage))
-    if (!Files.isDirectory(d)) return Seq.empty
-    // Files.list holds a directory fd until closed — close it or a
-    // long-lived resume/audit session leaks one fd per call
-    val entries = scala.util.Using.resource(Files.list(d))(_.toArray.toSeq.map(_.toString))
-    entries.flatMap { p =>
-      val name = Paths.get(p).getFileName.toString
-      if (name.startsWith("snapshot=") && Files.exists(Paths.get(p, "_COMMITTED")))
-        Some(name.stripPrefix("snapshot=").toLong)
-      else None
-    }.sorted
-  }
+  private def names(d: String): Seq[String] =
+    if (!Files.isDirectory(Paths.get(d))) Seq.empty
+    else scala.util.Using.resource(Files.list(Paths.get(d)))(
+      _.iterator.asScala.map(_.getFileName.toString).toList)
 
-  /** Latest committed snapshot id for a stage, if any. */
-  def lastCommitted(runDir: String, stage: String): Option[Long] =
-    snapshots(runDir, stage).lastOption
+  private def isCommitted(runDir: String, stage: String, id: Long): Boolean =
+    Files.exists(Paths.get(s"${stageDir(runDir, stage)}/snapshot=$id/_COMMITTED"))
+
+  /** All COMMITTED snapshot ids of a stage, ascending — the time-ordered
+    * snapshot log time travel reads (each commit is monotone, so id order =
+    * commit order), whether a record names the snapshot or not.
+    */
+  def snapshots(runDir: String, stage: String): Seq[Long] =
+    snapshotDirIds(runDir, stage).filter(isCommitted(runDir, stage, _))
+
+  /** The snapshot id of a stage that readers see: the one this thread's
+    * open [[Txn]] on `runDir` wrote, else the one its entry record (outside
+    * a Txn, the latest record) names — if that snapshot is still on disk.
+    */
+  def lastCommitted(runDir: String, stage: String): Option[Long] = {
+    val t = openTxn(runDir)
+    t.flatMap(_.written.get(stage)).orElse(t.fold(record(runDir))(_.base).stages.get(stage))
+      .filter(isCommitted(runDir, stage, _))
+  }
 
   /** ALL snapshot directory ids of a stage, committed or NOT — partial
-    * (crash-interrupted, marker-less) directories included. Input to
-    * repair; readers always use [[snapshots]]/[[lastCommitted]], which see
-    * only committed ids.
+    * (crash-interrupted, marker-less) directories included. A new
+    * snapshot's id goes above all of them.
     */
-  def snapshotDirIds(runDir: String, stage: String): Seq[Long] = {
-    val d = Paths.get(stageDir(runDir, stage))
-    if (!Files.isDirectory(d)) return Seq.empty
-    val entries = scala.util.Using.resource(Files.list(d))(_.toArray.toSeq.map(_.toString))
-    entries.flatMap { p =>
-      val name = Paths.get(p).getFileName.toString
-      if (name.startsWith("snapshot=")) Some(name.stripPrefix("snapshot=").toLong) else None
-    }.sorted
+  def snapshotDirIds(runDir: String, stage: String): Seq[Long] =
+    names(stageDir(runDir, stage)).filter(_.startsWith("snapshot="))
+      .map(_.stripPrefix("snapshot=").toLong).sorted
+
+  private def nextId(runDir: String, stage: String): Long =
+    snapshotDirIds(runDir, stage).lastOption.fold(0L)(_ + 1L)
+
+  /** A published commit, `<runDir>/_commits/<version>.json`: its verb and
+    * run id, every stage's snapshot id, and the stages it wrote.
+    */
+  final case class Record(version: Long, runId: String, verb: String,
+                          stages: Map[String, Long], written: Set[String])
+
+  private def commitsDir(runDir: String) = s"$runDir/_commits"
+
+  private def recordVersions(runDir: String): Seq[Long] =
+    names(commitsDir(runDir)).filter(_.matches("""\d+\.json"""))
+      .map(_.stripSuffix(".json").toLong).sorted
+
+  private def readRecord(runDir: String, version: Long): Record = {
+    val n = Json.readTree(Files.readString(Paths.get(commitsDir(runDir), s"$version.json")))
+    Record(version, n.get("run_id").asText, n.get("verb").asText,
+      n.get("stages").properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap,
+      n.get("written").asScala.map(_.asText).toSet)
   }
+
+  /** Record 0, a run dir with no published record (written before records
+    * existed): each lockstep stage at the highest id all of them reached,
+    * every other stage at its latest id; the last lockstep stage's run id.
+    */
+  private def record0(runDir: String): Record = {
+    val lockstep = graft.pipeline.EntityResolution.LockstepStages
+    val latest = names(runDir).filterNot(_.startsWith("_"))
+      .flatMap(s => snapshots(runDir, s).lastOption.map(s -> _)).toMap
+    val floor = latest.filter(e => lockstep.contains(e._1)).values.minOption.getOrElse(-1L)
+    val stages = latest.flatMap { case (s, id) =>
+      if (!lockstep.contains(s)) Some(s -> id)
+      else snapshots(runDir, s).filter(_ <= floor).lastOption.map(s -> _)
+    }
+    Record(0L, stages.get(lockstep.last).flatMap(manifest(runDir, lockstep.last, _))
+      .flatMap(_.runId).getOrElse(""), "", stages, Set.empty)
+  }
+
+  /** The latest record (or record 0): one listing and one parse. */
+  def record(runDir: String): Record =
+    recordVersions(runDir).lastOption.fold(record0(runDir))(readRecord(runDir, _))
+
+  /** The records after version `w`; None if one is gone or `w` is ahead. */
+  def recordsSince(runDir: String, w: Long): Option[Seq[Record]] = {
+    val versions = recordVersions(runDir)
+    val latest = versions.lastOption.getOrElse(0L)
+    val later = versions.filter(_ > w)
+    Option.when(w <= latest && later == (w + 1L to latest))(later.map(readRecord(runDir, _)))
+  }
+
+  /** Create record `rec.version` exclusively: a temp file link(2)ed into
+    * place is never seen partial, and a taken version fails loud — the CAS
+    * seam the concurrency test drives (package-private).
+    */
+  private[ckpt] def publishAt(runDir: String, rec: Record): Unit = {
+    val tmp = Paths.get(commitsDir(runDir), s"_tmp_${java.util.UUID.randomUUID()}")
+    Files.createDirectories(tmp.getParent)
+    Files.writeString(tmp, Json.writeValueAsString(Map[String, Any]("version" -> rec.version,
+      "run_id" -> rec.runId, "verb" -> rec.verb, "stages" -> rec.stages.asJava,
+      "written" -> rec.written.toSeq.sorted.asJava).asJava))
+    try Files.createLink(tmp.resolveSibling(s"${rec.version}.json"), tmp)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException => throw new ConcurrentCommitException(
+        s"${rec.verb} ${rec.runId} lost commit record ${rec.version} under $runDir to another writer")
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** One verb's open transaction on a run dir: the record it read at entry
+    * and the stage snapshots it wrote since (seen by this thread's reads).
+    */
+  final class Txn private[Snapshots] (val runDir: String, runId: String, verb: String,
+                                      val base: Record) {
+    private[Snapshots] val written = scala.collection.mutable.Map.empty[String, Long]
+    private var published = false
+
+    /** The verb's one commit point: record base + 1, the other stages
+      * carried forward (none written: none published); the current version.
+      */
+    def publish(): Long = {
+      val v = base.version + (if (written.isEmpty) 0L else 1L)
+      if (!published && written.nonEmpty)
+        publishAt(runDir, Record(v, runId, verb, base.stages ++ written, written.keySet.toSet))
+      published = true
+      v
+    }
+
+    /** End the transaction; what it wrote but never published stays
+      * invisible garbage for [[repair]].
+      */
+    def close(): Unit = open.remove()
+  }
+
+  private val open = new ThreadLocal[Txn]
+  private def openTxn(runDir: String): Option[Txn] = Option(open.get).filter(_.runDir == runDir)
+
+  /** Open `verb`'s transaction on `runDir`: one per thread, no nesting. */
+  def begin(runDir: String, runId: String, verb: String): Txn = {
+    require(open.get == null, s"$verb: a transaction is already open on this thread")
+    open.set(new Txn(runDir, runId, verb, record(runDir)))
+    open.get
+  }
+
+  /** Run `body` as one commit, or inside this thread's open one. */
+  def atomically[T](runDir: String, runId: String, verb: String)(body: => T): T =
+    if (openTxn(runDir).isDefined) body
+    else {
+      val t = begin(runDir, runId, verb)
+      try { val r = body; t.publish(); r } finally t.close()
+    }
 
   /** Atomically commit `df` as the next snapshot of `stage`: stage data +
     * per-partition lineage rows + manifest + _COMMITTED marker into a
     * private `_attempt_` directory (invisible to every reader), then
-    * atomically rename it to `snapshot=<id>` — the rename is the single
-    * commit point. A crash at any earlier point leaves only invisible
-    * staging garbage, so resume recomputes the stage; a CONCURRENT writer
+    * atomically rename it to `snapshot=<id>` (above every snapshot dir),
+    * published by this thread's open [[Txn]] or else by a record of its
+    * own. A crash at any earlier point leaves only invisible
+    * garbage, so resume recomputes the stage; a CONCURRENT writer
     * publishing the same id first makes this commit fail loud with
     * [[ConcurrentCommitException]] instead of both writers interleaving
     * files in one shared directory.
@@ -238,11 +355,11 @@ object Snapshots {
     */
   def commit(spark: SparkSession, df: DataFrame, runDir: String, stage: String,
              runId: String, counters: Map[String, Long]): Committed =
-    commitAt(spark, df, runDir, stage, runId, counters,
-      lastCommitted(runDir, stage).getOrElse(-1L) + 1L)
+    atomically(runDir, runId, "commit")(
+      commitAt(spark, df, runDir, stage, runId, counters, nextId(runDir, stage)))
 
-  /** [[commit]] with a caller-chosen snapshot id — the CAS seam the
-    * concurrency test drives deterministically (package-private).
+  /** [[commit]]'s stage write at a caller-chosen snapshot id (no record) —
+    * the CAS seam the concurrency test drives (package-private).
     */
   private[ckpt] def commitAt(spark: SparkSession, df: DataFrame, runDir: String, stage: String,
                              runId: String, counters: Map[String, Long],
@@ -266,16 +383,15 @@ object Snapshots {
   def commitDelta(spark: SparkSession, adds: DataFrame,
                   removes: Option[(DataFrame, Seq[String])],
                   runDir: String, stage: String, runId: String,
-                  counters: Map[String, Long], resolvedRows: Long): Committed = {
-    val baseId = lastCommitted(runDir, stage).getOrElse(
-      sys.error(s"commitDelta: no committed base snapshot for $stage under $runDir"))
-    // the CAS in publish also guards the delta-base arithmetic: a concurrent
-    // writer that committed since our lastCommitted read claimed baseId + 1
-    // first, and publishing OUR delta (computed against the now-stale base)
-    // on top of it would be wrong — failing the race is the correct outcome
-    stageAndPublish(spark, adds, removes, runDir, stage, runId, counters, baseId + 1L,
-      delta = Some((baseId, resolvedRows)))
-  }
+                  counters: Map[String, Long], resolvedRows: Long): Committed =
+    atomically(runDir, runId, "commit") {
+      val baseId = lastCommitted(runDir, stage).getOrElse(
+        sys.error(s"commitDelta: no committed base snapshot for $stage under $runDir"))
+      // the record CAS guards the base: a writer that published since this
+      // transaction read its record makes OUR (stale-base) delta lose loud
+      stageAndPublish(spark, adds, removes, runDir, stage, runId, counters,
+        nextId(runDir, stage), delta = Some((baseId, resolvedRows)))
+    }
 
   /** The one commit path: write `data` (plus a delta's deduplicated keyed
     * `removes`), the lineage rows, the manifest and the `_COMMITTED` marker
@@ -339,6 +455,7 @@ object Snapshots {
     // directory appear fully committed in one atomic step
     Files.writeString(Paths.get(s"$attempt/_COMMITTED"), "ok")
     publish(attempt, snapPath, runDir, stage, snapId)
+    openTxn(runDir).foreach(_.written(stage) = snapId)
     Committed(stage, snapId, s"$snapPath/data", rows, dataSchema)
   }
 
@@ -440,14 +557,6 @@ object Snapshots {
   def lastRows(runDir: String, stage: String): Option[Long] =
     lastCommitted(runDir, stage).flatMap(committedRows(runDir, stage, _))
 
-  /** `run_id` recorded in a committed snapshot's manifest — the commit
-    * provenance tag. Streaming ingestion keys its exactly-once skip on it
-    * (a replayed micro-batch whose increment already fully committed is
-    * recognizable by the LAST stage's run_id).
-    */
-  def runIdOf(runDir: String, stage: String, snapshotId: Long): Option[String] =
-    manifest(runDir, stage, snapshotId).flatMap(_.runId)
-
   /** Number of DELTA hops from the latest committed snapshot down to its
     * full base (0 = latest is a full snapshot; also 0 when the stage has
     * no snapshot). The merge-on-read cost a reader currently pays — the
@@ -462,15 +571,12 @@ object Snapshots {
     lastCommitted(runDir, stage).map(walk(_, 0)).getOrElse(0)
   }
 
-  /** DESTRUCTIVE: remove one snapshot directory (committed or partial).
-    * Only for repair of an interrupted multi-stage increment — trimming
-    * stages that ran ahead of a crash back to the last id every stage
-    * reached ([[graft.streaming.StreamingIngest.repair]]). Refuses to drop
-    * a snapshot that a LATER delta snapshot uses as its base (that would
-    * orphan the chain); repair never trips this since it trims from the
-    * top down.
+  /** DESTRUCTIVE: remove one snapshot directory (committed or partial) —
+    * garbage no record names, or a snapshot [[expire]] retires. Refuses to
+    * drop a snapshot that a LATER delta snapshot uses as its base (that
+    * would orphan the chain).
     */
-  def dropSnapshot(runDir: String, stage: String, snapshotId: Long): Unit = {
+  private def dropSnapshot(runDir: String, stage: String, snapshotId: Long): Unit = {
     val dependents = snapshots(runDir, stage).filter(_ > snapshotId)
       .filter(deltaMeta(runDir, stage, _).exists(_._1 == snapshotId))
     require(dependents.isEmpty,
@@ -484,31 +590,57 @@ object Snapshots {
     deleteRecursively(dir.toString)
   }
 
+  /** The delta bases snapshot `id` resolves through, transitively. */
+  private def baseChain(runDir: String, stage: String, id: Long): Set[Long] =
+    deltaMeta(runDir, stage, id) match {
+      case Some((b, _)) => baseChain(runDir, stage, b) + b
+      case None => Set.empty
+    }
+
   /** DESTRUCTIVE: retire old snapshots of a stage — keep the newest
-    * `keepLast` committed ids (plus, transitively, any base a RETAINED
-    * delta resolves against: expiration never breaks a live chain — compact
-    * first to free a chain's base) and delete the rest. This is the
-    * PHYSICAL-deletion half of retraction: `removeDocuments` retracts rows
-    * from the latest snapshot logically, but pre-removal snapshot ids keep
-    * them readable (and on disk) until expired here. Returns the dropped
-    * ids. Uncommitted partial directories are repair's domain, not
-    * expiration's — untouched.
+    * `keepLast` committed ids and the latest record's (plus, transitively,
+    * any base a RETAINED delta resolves against: expiration never breaks a
+    * live chain — compact first to free a chain's base) and delete the
+    * rest, and the records naming them. This is the
+    * PHYSICAL-deletion half of retraction: `removeDocuments`
+    * retracts rows from the latest snapshot logically, but pre-removal
+    * snapshot ids keep them readable (and on disk) until expired here.
+    * Returns the dropped ids. Uncommitted partial directories are repair's
+    * domain, not expiration's — untouched.
     */
   def expire(runDir: String, stage: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"expire: keepLast must be >= 1 (got $keepLast)")
     val ids = snapshots(runDir, stage)
-    val kept0 = ids.takeRight(keepLast).toSet
-    def baseChain(id: Long): Set[Long] = deltaMeta(runDir, stage, id) match {
-      case Some((b, _)) => baseChain(b) + b
-      case None => Set.empty
-    }
-    val kept = kept0 ++ kept0.flatMap(baseChain)
+    val kept0 = ids.takeRight(keepLast).toSet ++ lastCommitted(runDir, stage)
+    val kept = kept0 ++ kept0.flatMap(baseChain(runDir, stage, _))
     val dropped = ids.filterNot(kept)
+    // records first, so no record is ever left naming a deleted snapshot
+    recordVersions(runDir).map(readRecord(runDir, _))
+      .filter(_.stages.get(stage).exists(dropped.contains))
+      .foreach(r => Files.delete(Paths.get(commitsDir(runDir), s"${r.version}.json")))
     // newest-first: any delta depending on an expired base is itself
     // expired (a kept delta keeps its chain), so descending order always
     // satisfies dropSnapshot's dependent guard
     dropped.sorted.reverse.foreach(dropSnapshot(runDir, stage, _))
     dropped
+  }
+
+  /** DESTRUCTIVE sweep: every stage's staging attempts, then each snapshot
+    * dir above the oldest id any record names that no record names nor a
+    * named delta resolves through. Opt-in, never automatic: a live writer's
+    * unpublished snapshots look like a crashed one's. The deleted paths.
+    */
+  def repair(runDir: String): Seq[String] = {
+    val published = recordVersions(runDir).map(readRecord(runDir, _))
+    val recs = if (published.isEmpty) Seq(record0(runDir)) else published
+    recs.flatMap(_.stages.keys).distinct.flatMap { s =>
+      val attempts = cleanAttempts(runDir, s)
+      val named = recs.flatMap(_.stages.get(s)).toSet
+      val keep = named ++ named.flatMap(baseChain(runDir, s, _))
+      val garbage = snapshotDirIds(runDir, s).filter(id => id > named.min && !keep(id))
+      garbage.reverse.foreach(dropSnapshot(runDir, s, _))
+      attempts ++ garbage.map(id => s"${stageDir(runDir, s)}/snapshot=$id")
+    }
   }
 
   /** Fails loud on a manifest format this build cannot read (an absent
@@ -572,7 +704,7 @@ object Snapshots {
     }
   }
 
-  /** Read the latest committed snapshot of a stage, if present. */
+  /** Read the snapshot of a stage that readers see ([[lastCommitted]]). */
   def loadCommitted(spark: SparkSession, runDir: String, stage: String): Option[DataFrame] =
     lastCommitted(runDir, stage).map { id => loadSnapshot(spark, runDir, stage, id) }
 

@@ -212,18 +212,6 @@ object TextSim {
     if (union == 0.0) 0.0 else inter / union
   }
 
-  /** Normalize a token: lowercase, strip non-alphanumeric. */
-  def normalizeToken(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isLetterOrDigit(c)) sb.append(Character.toLowerCase(c))
-      i += 1
-    }
-    sb.toString
-  }
-
   /** k-shingles (contiguous k-grams) of a token sequence, joined by space.
     * Shorter-than-k sequences yield the whole sequence as one shingle.
     */

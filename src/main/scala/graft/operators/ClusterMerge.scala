@@ -53,14 +53,11 @@ import org.apache.spark.storage.StorageLevel
   * pair (M7, reference AMPI.scala:280,293) is never merged either: the two
   * sides assert disjoint exclusive identities.
   *
-  * DRIFT rule (crash recovery + invariant repair): an ACCEPTED
-  * (`score >= threshold`) pair whose endpoints sit in different clusters
-  * should not exist — CC puts both endpoints of every accepted edge in one
-  * cluster. It appears exactly when a merge repair crashed between its
-  * scored_pairs commit and its cluster_assignments commit. Such cluster
+  * DRIFT rule (invariant repair): an ACCEPTED (`score >= threshold`) pair
+  * whose endpoints sit in different clusters should not exist — CC puts
+  * both endpoints of every accepted edge in one cluster. Such cluster
   * pairs merge unconditionally (the accepted edge IS the clustering
-  * invariant) and promote nothing further — a crashed repair re-run
-  * converges to the same end state it would have committed.
+  * invariant) and promote nothing further.
   *
   * Scale shape: the evidence relation is one filter over scored pairs
   * (`score >= mergeFloor`, plus the rare vetoed rows), joined to the

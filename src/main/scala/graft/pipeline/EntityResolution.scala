@@ -125,25 +125,27 @@ object EntityResolution {
     *    build side cannot be bounded stay sort-merge, so this is a
     *    preference, never a correctness or OOM bet. The caller's setting
     *    is restored on exit, like the CC loop's conf overrides;
-    *  - for an incremental verb (`ctx` given) it runs the lockstep check
-    *    before the body and releases every pin and verb-owned cache after
-    *    it, on EVERY exit path: a refused or failed verb leaves no
-    *    persisted RDD behind.
+    *  - it publishes the verb's commit record (`txn`) when the body returns
+    *    and on EVERY exit path closes it and runs `release`: a refused or
+    *    failed verb publishes nothing and leaves no persisted RDD behind.
     */
-  private def verb[T](spark: SparkSession, ctx: Option[IncrContext] = None)(body: => T): T = {
+  private def verb[T](spark: SparkSession, txn: Option[Snapshots.Txn],
+                      release: => Unit = ())(body: => T): T = {
     val prev = spark.conf.get(PreferSortMergeJoin, "true")
     spark.conf.set(PreferSortMergeJoin, "false")
-    try { ctx.foreach(_.requireLockstep()); body }
-    finally { ctx.foreach(_.release()); spark.conf.set(PreferSortMergeJoin, prev) }
+    try { val r = body; txn.foreach(_.publish()); r }
+    finally { release; txn.foreach(_.close()); spark.conf.set(PreferSortMergeJoin, prev) }
   }
 
   /** Run the full pipeline. When `runDir` is given, each stage is committed
-    * as a snapshot and `resume=true` skips already-committed stages
-    * (byte-identical reuse — the resume gate of FIXTURES.md §6).
+    * as a snapshot, all of them published by one commit record, and
+    * `resume=true` skips already-committed stages (byte-identical reuse —
+    * the resume gate of FIXTURES.md §6).
     */
   def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig = PipelineConfig(),
           runDir: Option[String] = None, runId: String = "run0",
-          resume: Boolean = false): Result = verb(spark) {
+          resume: Boolean = false): Result =
+    verb(spark, runDir.map(Snapshots.begin(_, runId, "run"))) {
     def staged(stage: String, counters: => Map[String, Long])(compute: => DataFrame): (DataFrame, Map[String, Long]) =
       runDir match {
         case Some(dir) =>
@@ -274,38 +276,14 @@ object EntityResolution {
     Result(assignments, scored, blocking, ccIters, c1 ++ c2 ++ c3, tokedRef, featCacheRef, ccCkptIds)
   }
 
-  /** The six core stages move in LOCKSTEP: every completed verb — the batch
-    * run, the increment, removal, upsert halves, and the audits (via their
-    * no-op deltas) — commits each exactly once, so unequal last-committed
-    * ids mean some verb crashed mid-commit-sequence. The
-    * non-self-recovering verbs refuse such a history loudly instead of
-    * silently operating on drift: a crashed mergeRepair, for example,
-    * leaves accepted cross-cluster pairs (scored_pairs ahead of
-    * cluster_assignments) that would otherwise relabel a removal's
-    * survivors into a cluster id whose own doc was never moved.
-    * Recovery: re-run the interrupted audit verb (auditRepair/mergeRepair
-    * converge to their end state via dedup-append + the drift rule) or
-    * [[graft.streaming.StreamingIngest.repair]] to trim an interrupted
-    * increment back to the common floor. In commit order.
+  /** The six core stages, in the commit order of the verbs that write all
+    * of them; a run dir without commit records reads them at the highest
+    * id all six reached ([[Snapshots.record]]).
     */
   val LockstepStages: Seq[String] = Seq("blocking", StageBlockHot, StageMediaDf,
     StageDocFeatures, "scored_pairs", "cluster_assignments")
-  // the standing ledgers: never trimmed, present only on audited histories
+  // the standing ledgers, present only on audited histories
   private val LedgerStages = Seq(StageAuditTombstones, StageMergePromotions)
-
-  private def lockstepIds(runDir: String): Seq[(String, Long)] =
-    LockstepStages.flatMap(s => Snapshots.lastCommitted(runDir, s).map(s -> _))
-
-  private[graft] def requireStagesLockstep(runDir: String, verb: String): Unit = {
-    val ids = lockstepIds(runDir)
-    require(ids.map(_._2).distinct.size <= 1,
-      s"$verb: stages are at unequal snapshot ids " +
-        s"(${ids.map { case (s, id) => s"$s=$id" }.mkString(", ")}) — a verb was " +
-        "interrupted mid-commit-sequence and this history is in a drift state. Run " +
-        "StreamingIngest.repair(runDir) to trim the stages that ran ahead, then re-run the " +
-        "interrupted verb or restart the stream (the batch replays cleanly; a crashed " +
-        "mergeRepair may instead be re-run directly — its drift rule converges without the trim)")
-  }
 
   /** Plan-hygiene shared by the incremental verbs: fail-loud
     * committed-stage loads; explicit broadcast gating where AQE cannot see
@@ -318,25 +296,28 @@ object EntityResolution {
     * materialized rows, ids tracked — same LogicalRDD-id tracking as the
     * CC loop); relations the verb persists for its own use; and coarse
     * per-phase stderr ticks. Every step two verbs run has its one
-    * definition here, committing under the verb's `runId`. [[verb]] runs
-    * the lockstep check (unless `lockstep = false`) and [[release]]s every
-    * pin and persisted relation on every exit path.
+    * definition here, committing under the verb's `runId` into its `txn`.
+    * [[verb]] publishes and closes `txn` and [[release]]s every pin and
+    * persisted relation on every exit path.
     */
   private final class IncrContext(spark: SparkSession, runDir: String, verb: String,
-                                  runId: String, lockstep: Boolean = true) {
-    def requireLockstep(): Unit = if (lockstep) requireStagesLockstep(runDir, verb)
+                                  runId: String) {
+    val txn: Snapshots.Txn = Snapshots.begin(runDir, runId, verb)
     /** Run `body` as this incremental verb, in the [[verb]] frame. */
-    def run[T](body: IncrContext => T): T = EntityResolution.verb(spark, Some(this))(body(this))
+    def run[T](body: IncrContext => T): T =
+      EntityResolution.verb(spark, Some(txn), release())(body(this))
     def loadStage(stage: String): DataFrame =
       Snapshots.loadCommitted(spark, runDir, stage).getOrElse(sys.error(
         s"$verb: no committed '$stage' snapshot under $runDir — the base must be a " +
           "checkpointed batch run of this build (run() with runDir commits the incremental " +
           s"base stages $StageBlockHot/$StageDocFeatures/$StageMediaDf alongside the main three)"))
     def gated(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, df.count())
-    /** The verb's Result over the stages as committed now. */
-    def committed(ccIterations: Int, counters: Map[String, Long]): Result =
+    /** Publish the verb's record; its Result over the stages as published. */
+    def committed(ccIterations: Int, counters: Map[String, Long]): Result = {
+      txn.publish()
       Result(loadStage("cluster_assignments"), loadStage("scored_pairs"), loadStage("blocking"),
         ccIterations, counters)
+    }
     private val pinnedIds = scala.collection.mutable.Set.empty[Int]
     def pin(df: DataFrame): DataFrame = {
       val ck = df.localCheckpoint(true)
@@ -398,31 +379,11 @@ object EntityResolution {
       cc.releaseCheckpoints(spark)
       cc.iterations
     }
-    /** An empty-adds delta on every committed lockstep stage a repair verb
-      * does not move, keeping them in LOCKSTEP with the two it really
-      * moves: StreamingIngest certifies batch completeness by "all stages
-      * at equal snapshot ids", and its repair verb trims ahead-running
-      * stages DESTRUCTIVELY — without these, auditing a streamed run would
-      * make the next micro-batch fail loud on a phantom "interrupted
-      * increment" (and repair would undo the audit). Empty adds resolve to
-      * the unchanged base; compaction collapses them like any delta. A
-      * stage missing from a partial history is skipped, so such a history
-      * stays auditable.
-      */
-    private def commitNoOpDeltas(): Unit =
-      LockstepStages.filterNot(Set("scored_pairs", "cluster_assignments"))
-        .filter(s => Snapshots.lastCommitted(runDir, s).nonEmpty)
-        .foreach { s =>
-          Snapshots.commitDelta(spark, loadStage(s).limit(0).repartition(1), None,
-            runDir, s, runId, Snapshots.lastCounters(runDir, s),
-            Snapshots.lastRows(runDir, s).getOrElse(0L))
-        }
     /** Append `n` pair-keyed `rows` to a standing ledger stage (audit
       * tombstones, merge promotions) whose `counter` holds its row count.
-      * Rows the ledger already holds are dropped first: after a
-      * crash-mid-audit + streaming repair (which trims increment stages but
-      * not the ledgers), the re-run re-derives pairs already recorded —
-      * re-appending them would leave the resolved relation holding
+      * Rows the ledger already holds are dropped first: a remove → re-add
+      * → re-promote sequence re-derives a pair the ledger already records —
+      * re-appending it would leave the resolved relation holding
       * duplicates and the rows/counter metadata drifted forever (anti-joins
       * would still be correct, the accounting would not).
       */
@@ -437,17 +398,16 @@ object EntityResolution {
             Map(counter -> total), total)
       }
     /** The commit both repair verbs end with; no `change` commits nothing.
-      * Crash recovery rests on its order: scored_pairs, the ledger, the
-      * no-op deltas, cluster_assignments LAST (the streaming certificate
-      * keys on it), then `stamp` (a stale watermark only WIDENS the next
-      * scoped pass). The assignments manifest records `counters` too.
+      * It writes scored_pairs, the ledger and cluster_assignments (whose
+      * manifest records `counters` too) as one record, then `stamp`s the
+      * version now current (a stale watermark only WIDENS the next pass).
       */
     def commitRepair(key: String, counters: Map[String, Long], change: Option[RepairChange],
-                     release: => Unit, stamp: => Unit,
+                     release: => Unit, stamp: Long => Unit,
                      oldAssign: DataFrame, oldScored: DataFrame): Result = change match {
       case None =>
         release
-        stamp
+        stamp(txn.publish())
         Result(oldAssign, oldScored, loadStage("blocking"), 0,
           counters + (s"${key}_committed" -> 0L))
       case Some(c) =>
@@ -467,13 +427,12 @@ object EntityResolution {
             .getOrElse("docs_scored_against", 0L), c.pairsCounter -> n),
           Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L) + rowChange)
         appendToLedger(c.ledger, ledgerRows, n, c.ledgerCounter)
-        commitNoOpDeltas()
         val done = s"${key}_committed" -> 1L
         Snapshots.commitDelta(spark, changed, Some((changedCl, Seq("cluster_id"))),
           runDir, "cluster_assignments", runId, counters + done,
           Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(0L))
         tick("commit")
-        stamp
+        stamp(txn.publish())
         committed(0, counters + done + (c.resultCounter -> n))
     }
   }
@@ -1006,21 +965,8 @@ object EntityResolution {
     * and O(changed clusters) after; idempotent — re-running the audit on
     * an audited history finds the cut bridges gone and commits nothing.
     *
-    * Crash recovery: commits land scored_pairs → tombstones → no-op stage
-    * deltas → cluster_assignments (last, so streaming's run_id certificate
-    * stays sound). A crash mid-sequence leaves stages at unequal ids, and
-    * THIS verb — unlike [[mergeRepair]], whose drift rule converges on its
-    * own crashed state — cannot finish from its intermediate state: once
-    * the scored_pairs retraction is committed without the relabel, the cut
-    * cluster's accepted-edge graph is DISCONNECTED and a re-run would hit
-    * the audit's report-never-repair branch and silently commit nothing.
-    * So the verb REFUSES a drift-state history at entry (same guard as the
-    * increments). Recovery: [[graft.streaming.StreamingIngest.repair]]
-    * trims back to the common floor (undoing the partial retraction), then
-    * re-run — the tombstone stage (not an increment stage, never trimmed)
-    * may retain the crashed attempt's cut records, which is safe: the
-    * re-run re-cuts, and the tombstone commit dedups against the standing
-    * records so the stage's rows/counters stay exact.
+    * The three commits publish as one record, so a crash before it leaves
+    * the run at its pre-audit state.
     */
   def auditRepair(spark: SparkSession, runDir: String,
                   audit: ClusterAudit.AuditConfig = ClusterAudit.AuditConfig(),
@@ -1041,18 +987,15 @@ object EntityResolution {
         Option.when(r.counters("audit_clusters_cut") > 0L)(RepairChange(r.cutPairs,
           retract = true, "audit_cut_pairs", "audit_cut_pairs_removed", StageAuditTombstones,
           "tombstoned_pairs", r.changedAssignments, r.changedClusters)),
-        r.release(),
-        Snapshots.lastCommitted(runDir, "cluster_assignments")
-          .foreach(AuditWatermark.write(runDir, _)),
-        oldAssign, oldScored)
+        r.release(), AuditWatermark.write(runDir, _), oldAssign, oldScored)
     }
 
   /** RECALL-side audit + repair of a committed run: find FALSE SPLITS —
     * gold entities the pairwise threshold left in separate clusters — via
     * corroborated near-miss evidence bundles between cluster pairs, and
     * commit the merges ([[graft.operators.ClusterMerge]]; the cut audit
-    * [[auditRepair]] is the precision-side twin). Commits, in crash-safe
-    * order:
+    * [[auditRepair]] is the precision-side twin). Commits, published as
+    * one record:
     *
     *  - scored_pairs: a delta REPLACING the promoted pairs' rows with
     *    their score rewritten to max(score, promoteScore) — row count
@@ -1060,21 +1003,15 @@ object EntityResolution {
     *    accepts them (increments cannot re-derive them either: fresh-pair
     *    derivation anti-joins the committed set, which still holds them);
     *  - [[StageMergePromotions]]: the original rows verbatim (standing
-    *    ledger, dedup-appended on crash re-runs like the tombstone stage);
-    *  - no-op lockstep deltas on the untouched stages (the streaming
-    *    certificate's "all stages at equal ids" invariant, exactly as
-    *    [[auditRepair]]);
-    *  - cluster_assignments LAST: merged clusters re-labeled to the min
+    *    ledger, dedup-appended like the tombstone stage);
+    *  - cluster_assignments: merged clusters re-labeled to the min
     *    cluster_id of their merged component (= min doc_id of the union,
     *    batch semantics over the promoted edge set).
     *
     * Anti-oscillation is structural in both directions: standing cut-audit
     * tombstones veto any merge across their boundary, and promoted bundles
     * enter the cut audit's graph at ≥ strongScore (trusted structure, never
-    * cut). A crash between the scored_pairs commit and the assignments
-    * commit leaves accepted cross-cluster edges — the re-run merges those
-    * unconditionally via the drift rule without double-promoting, so
-    * recovery converges to the same end state.
+    * cut).
     *
     * All compute is O(scored rows at score ≥ mergeFloor) for the two
     * endpoint joins + one cluster-pair aggregation, then O(merged
@@ -1089,9 +1026,7 @@ object EntityResolution {
   def mergeRepair(spark: SparkSession, runDir: String,
                   merge: ClusterMerge.MergeConfig = ClusterMerge.MergeConfig(),
                   runId: String = "merge", incremental: Boolean = false): Result =
-    // no lockstep refusal: the drift rule converges on a crashed
-    // mergeRepair's own state (see above)
-    new IncrContext(spark, runDir, "mergeRepair", runId, lockstep = false).run { ctx =>
+    new IncrContext(spark, runDir, "mergeRepair", runId).run { ctx =>
       import ctx.{loadStage, persist, pin, tick}
       // persist the RESOLVED relations once: the census scans assignments
       // ~6× (two endpoint joins, tombstone joins, sizes, relabel,
@@ -1102,9 +1037,8 @@ object EntityResolution {
       val oldScored = persist(loadStage("scored_pairs"))
       val oldAssign = persist(loadStage("cluster_assignments"))
       val tombstones = Snapshots.loadCommitted(spark, runDir, StageAuditTombstones)
-      // pre-commit watermark stamp target (see MergeWatermark)
-      val entryAssignId = Snapshots.lastCommitted(runDir, "cluster_assignments")
-      def stampMergeWatermark(): Unit = entryAssignId.foreach(MergeWatermark.write(runDir, _))
+      // pre-commit watermark stamp (see MergeWatermark)
+      val stampMerge: Long => Unit = _ => MergeWatermark.write(runDir, ctx.txn.base.version)
       // ---- incremental scoping: restrict the census to cluster pairs with
       // at least one endpoint touched since the last merge watermark. The
       // scan is O(delta adds); the evidence passed to the census is the
@@ -1117,9 +1051,7 @@ object EntityResolution {
       // adjacency. The recurring cadence cost therefore follows the
       // ARRIVAL rate, not the committed scored-pair volume. Falls back
       // LOUDLY to full (merge_scope_full_fallback) on: no watermark, a
-      // non-compaction full snapshot in range, a drift-state history (a
-      // crashed mergeRepair's clusters never reached the commit log — only
-      // the full pass's drift rule sees them), or a scope too large for
+      // non-compaction full snapshot in range, or a scope too large for
       // DriverBound (touched clusters, their docs, the 2-hop clusters or
       // their docs).
       //
@@ -1167,8 +1099,7 @@ object EntityResolution {
       val scope: Option[(DataFrame, Option[DataFrame], Map[String, Long])] =
         if (!incremental) Some((oldScored, None, Map.empty[String, Long]))
         else {
-          val inLockstep = lockstepIds(runDir).map(_._2).distinct.size <= 1
-          val touched = (if (inLockstep) MergeWatermark.touchedSince(spark, runDir) else None)
+          val touched = MergeWatermark.touchedSince(spark, runDir)
             .flatMap(cl => MergeWatermark.addsSince(spark, runDir, "scored_pairs")
               .map(touchedByEvidence(cl, _)))
             .flatMap(pinBounded)
@@ -1190,7 +1121,7 @@ object EntityResolution {
           // commit nothing, stamp, one log scan total
           ctx.commitRepair("merge", Map("merge_incremental" -> 1L, "merge_scope_clusters" -> 0L,
             "merge_cluster_pairs_seen" -> 0L, "merge_cluster_pairs_qualified" -> 0L), None, (),
-            stampMergeWatermark(), oldAssign, oldScored)
+            stampMerge, oldAssign, oldScored)
         case Some((scoredForMerge, scopeOpt, scopeCounters)) =>
           val r = ClusterMerge.merge(oldAssign, scoredForMerge, tombstones, merge,
             scope = scopeOpt)
@@ -1200,7 +1131,7 @@ object EntityResolution {
               r.promotedPairs, retract = false, "merge_promoted_pairs", "merge_promoted_pairs",
               StageMergePromotions, "promoted_pairs", r.changedAssignments, r.changedClusters,
               ledgerRows = Some(r.promotionLedger))),
-            r.release(), stampMergeWatermark(), oldAssign, oldScored)
+            r.release(), stampMerge, oldAssign, oldScored)
       }
     }
 
@@ -1230,11 +1161,11 @@ object EntityResolution {
           Map("audit_incremental" -> 1L, "audit_scope_clusters" -> nTouched))
     }
 
-  /** A scoped audit verb's watermark: the cluster_assignments snapshot id
-    * through which the verb last examined the clustering, kept in `file`
-    * under the run dir as `{"<key>":id}`. Lives OUTSIDE the snapshot log —
-    * losing or clearing it is always safe (the next incremental pass just
-    * falls back to a full one).
+  /** A scoped audit verb's watermark: the commit record version through
+    * which the verb last examined the clustering, kept in `file` under the
+    * run dir as `{"<key>":version}`. Lives OUTSIDE the snapshot log —
+    * losing it (or an older layout's key) is always safe: the next
+    * incremental pass just falls back to a full one.
     */
   private[graft] final class Watermark(file: String, key: String) {
     private def path(runDir: String) = java.nio.file.Paths.get(runDir, file)
@@ -1246,37 +1177,27 @@ object EntityResolution {
         .findFirstMatchIn(java.nio.file.Files.readString(p)).map(_.group(1).toLong)
     }
 
-    def write(runDir: String, id: Long): Unit = {
+    def write(runDir: String, version: Long): Unit = {
       val tmp = java.nio.file.Paths.get(runDir, s"$file.tmp${ProcessHandle.current().pid()}")
-      java.nio.file.Files.writeString(tmp, s"""{"$key":$id}""")
+      java.nio.file.Files.writeString(tmp, s"""{"$key":$version}""")
       java.nio.file.Files.move(tmp, path(runDir),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
 
-    /** Drop the watermark (the next incremental pass runs full).
-      * [[graft.streaming.StreamingIngest.repair]] calls this after trimming
-      * snapshots: a watermark pointing into trimmed history could otherwise
-      * hide a replayed increment's clusters from the scoped pass forever.
+    /** The raw adds of every `stage` delta the records after the watermark
+      * wrote, an O(delta adds) scan. None = run full — no watermark, an
+      * expired record in range, or a FULL snapshot in range that is not a
+      * storage-level compaction (`compacted_from` manifest counter): a batch
+      * re-run re-derives everything, so "touched" is undefined across it.
       */
-    def clear(runDir: String): Unit = java.nio.file.Files.deleteIfExists(path(runDir))
-
-    /** The raw adds of every `stage` delta committed after the watermark,
-      * an O(delta adds) scan of the commit log (snapshot ids above the
-      * watermark: the lockstep stages share ids). None = run full — no
-      * watermark, or a FULL snapshot in range that is not a storage-level
-      * compaction (`compacted_from` manifest counter): a batch re-run
-      * re-derives everything, so "touched" is undefined across it.
-      */
-    def addsSince(spark: SparkSession, runDir: String, stage: String): Option[Seq[DataFrame]] = {
-      val latest = Snapshots.lastCommitted(runDir, stage).getOrElse(-1L)
-      read(runDir).filter(_ <= latest).flatMap { w =>
-        val (deltaIds, fullIds) = Snapshots.snapshots(runDir, stage).filter(_ > w)
+    def addsSince(spark: SparkSession, runDir: String, stage: String): Option[Seq[DataFrame]] =
+      read(runDir).flatMap(Snapshots.recordsSince(runDir, _)).flatMap { recs =>
+        val (deltaIds, fullIds) = recs.filter(_.written(stage)).map(_.stages(stage))
           .partition(Snapshots.isDelta(runDir, stage, _))
         if (fullIds.exists(!Snapshots.counters(runDir, stage, _).contains("compacted_from"))) None
         else Some(deltaIds.map(Snapshots.snapshotAdds(spark, runDir, stage, _)))
       }
-    }
 
     /** The distinct cluster ids touched since the watermark: those of
       * every later cluster_assignments delta's adds ([[addsSince]]).
@@ -1290,19 +1211,19 @@ object EntityResolution {
   }
 
   /** Watermark of the last completed cut audit: stamped by [[auditRepair]]
-    * AFTER its commits (written full or incremental, cuts or not).
+    * AFTER its record (written full or incremental, cuts or not).
     */
-  private[graft] val AuditWatermark = new Watermark("_audit_watermark", "audited_through")
+  private[graft] val AuditWatermark = new Watermark("_audit_watermark", "audited_through_record")
 
-  /** Watermark of the last completed MERGE audit — the cluster_assignments
-    * snapshot id as of that audit's ENTRY (deliberately pre-commit, unlike
+  /** Watermark of the last completed MERGE audit — the record version as
+    * of that audit's ENTRY (deliberately pre-commit, unlike
     * the cut audit's post-commit stamp: a merge changes cluster
     * memberships, and the combined cluster's evidence toward third
     * parties was never judged as a unit — stamping pre-commit keeps the
     * audit's own relabel delta above the watermark so the next scoped
     * cadence point re-judges exactly those clusters).
     */
-  private[graft] val MergeWatermark = new Watermark("_merge_watermark", "merged_through")
+  private[graft] val MergeWatermark = new Watermark("_merge_watermark", "merged_through_record")
 
   /** UPSERT: replace committed documents with new versions (and insert any
     * genuinely new doc_ids in the same call) — the third incremental verb a
@@ -1314,8 +1235,9 @@ object EntityResolution {
     * ALL of `newVersions` enters as one O(delta) [[addDocuments]] insert
     * increment (the new versions re-block, re-pair, and re-cluster under
     * current corpus statistics). Two delta snapshots per stage on one
-    * history; a revision that changes a doc's content MOVES it between
-    * clusters exactly as a batch run over the edited corpus would.
+    * history, one commit record per half; a revision that changes a doc's
+    * content MOVES it between clusters exactly as a batch run over the
+    * edited corpus would.
     * No-op-free: requires a nonempty `newVersions`.
     */
   def replaceDocuments(spark: SparkSession, newVersions: DataFrame, runDir: String,
@@ -1350,15 +1272,11 @@ object EntityResolution {
     * idf weights and hot-key structure from current data (the semantic
     * compaction, see [[addDocuments]]).
     */
-  def compactRun(spark: SparkSession, runDir: String, runId: String = "compact"): Unit = {
-    // compacting a drift state would bake the drift into the new full
-    // snapshots and destroy the trim-based recovery path
-    requireStagesLockstep(runDir, "compactRun")
-    // cluster_assignments LAST, so a crash mid-compaction cannot leave the
-    // streaming certificate marking a batch done while later stages lag
-    (LedgerStages.filter(Snapshots.lastCommitted(runDir, _).nonEmpty) ++ LockstepStages)
-      .foreach(stage => Snapshots.compact(spark, runDir, stage, runId))
-  }
+  def compactRun(spark: SparkSession, runDir: String, runId: String = "compact"): Unit =
+    Snapshots.atomically(runDir, runId, "compactRun") {
+      (LedgerStages.filter(Snapshots.lastCommitted(runDir, _).nonEmpty) ++ LockstepStages)
+        .foreach(stage => Snapshots.compact(spark, runDir, stage, runId))
+    }
 
   /** DESTRUCTIVE: retire old snapshots of every stage, keeping the newest
     * `keepLast` per stage (plus any base a retained delta chain needs — see
@@ -1366,7 +1284,8 @@ object EntityResolution {
     * `removeDocuments` → `compactRun` (the latest snapshot re-materializes
     * without the removed rows) → `expireRun(keepLast = 1)` leaves no copy
     * of the removed docs on disk. Costs time-travel to the expired ids, by
-    * design. Returns dropped ids per stage.
+    * design, and the commit records that name them. Returns dropped ids per
+    * stage.
     */
   def expireRun(runDir: String, keepLast: Int = 1): Map[String, Seq[Long]] =
     (LockstepStages ++ LedgerStages)

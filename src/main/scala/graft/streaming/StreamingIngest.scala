@@ -22,17 +22,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Exactly-once across restarts, from two cooperating layers:
   *  1. Spark's streaming checkpoint (`checkpointLocation`) replays an
   *     unacknowledged micro-batch with the SAME batchId after a crash;
-  *  2. every stage commit of batch k carries run_id `stream-k`, and
-  *     clustering commits LAST — so "latest cluster_assignments run_id ==
-  *     stream-k" certifies the whole increment committed, and the replay
-  *     skips it ([[ingestBatch]] returns Skipped).
-  * A crash INSIDE an increment (some stages committed, clustering not)
-  * is detected on replay as unequal per-stage snapshot ids and fails
-  * loud pointing at [[repair]], which trims the stages that ran ahead
-  * back to the last id every stage reached (snapshot dirs are immutable
-  * once committed, so trimming the top restores exactly the pre-batch
-  * state; the batch then replays cleanly). Repair is not automatic: it
-  * deletes directories, so the operator opts in.
+  *  2. batch k's increment publishes one commit record with run id
+  *     `stream-k` (its cadence verbs `stream-k-*`), so a latest record of
+  *     that run id certifies the batch and the replay skips it.
+  * A crash INSIDE an increment publishes no record: the batch replays on
+  * the state before it, and [[Snapshots.repair]] (`--repair`, opt-in)
+  * sweeps the stage snapshots the crashed increment left.
   *
   * At 100 TB this is the arrival path: the batch run bootstraps the
   * corpus once; per-arrival work is O(batch + touched blocks), the
@@ -42,12 +37,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingIngest {
 
-  /** Every stage an increment commits, in commit order — clustering last
-    * (the run_id certificate keys on it).
-    */
+  /** Every stage an increment commits, in commit order. */
   val Stages: Seq[String] = EntityResolution.LockstepStages
-
-  private def batchRunId(batchId: Long): String = s"stream-$batchId"
 
   /** Effective cut-audit config at a cadence point: caller guards ride
     * through; the edge-acceptance threshold ALWAYS follows the pipeline's
@@ -112,7 +103,7 @@ object StreamingIngest {
     * standing-deployment maintenance cadence, priced by the arrival rate
     * rather than the corpus size. Arrivals accrete
     * near-threshold evidence, so the merge tail GROWS with ingestion; the
-    * audit prunes it where it stands (cuts commit as lockstep deltas +
+    * audit prunes it where it stands (cuts commit as one record with
     * tombstones, so the stream continues uninterrupted and later arrivals
     * cannot re-derive a cut pair). The audit threshold follows
     * `cfg.scoreThreshold`; a replayed batch skips its audit point (the
@@ -125,28 +116,26 @@ object StreamingIngest {
                   mergeEvery: Int = 0,
                   merge: Option[graft.operators.ClusterMerge.MergeConfig] = None):
       BatchOutcome = {
-    val runId = batchRunId(batchId)
-    val clusterLast = Snapshots.lastCommitted(runDir, "cluster_assignments").getOrElse(
+    val runId = s"stream-$batchId"
+    if (Snapshots.lastCommitted(runDir, "cluster_assignments").isEmpty)
       sys.error(s"StreamingIngest: no committed base run under $runDir — bootstrap with " +
-        "EntityResolution.run(runDir = Some(...)) before attaching a stream"))
+        "EntityResolution.run(runDir = Some(...)) before attaching a stream")
     // replay of a fully-committed batch: ack and move on. The certificate
-    // matches this batch's run_id OR any maintenance commit derived from it
+    // matches this batch's run id OR any maintenance commit derived from it
     // ("stream-k-audit" / "stream-k-compact"): a crash AFTER an in-batch
     // audit or compaction committed but BEFORE the streaming checkpoint
     // acked must also read as "batch k done", else the replay re-runs
     // addDocuments and dies on the doc-id disjointness require forever.
     // The "-" separator keeps "stream-1" from matching "stream-10"'s ids.
-    if (Snapshots.runIdOf(runDir, "cluster_assignments", clusterLast)
-        .exists(r => r == runId || r.startsWith(runId + "-")))
-      return Skipped
-    EntityResolution.requireStagesLockstep(runDir, "StreamingIngest")
+    val latest = Snapshots.record(runDir).runId
+    if (latest == runId || latest.startsWith(runId + "-")) return Skipped
     if (batch.isEmpty) return Skipped
     val res = EntityResolution.addDocuments(spark, batch, runDir, cfg, runId = runId)
     val added = res.counters.getOrElse("docs_added", 0L)
     val fresh = res.counters.getOrElse("pairs_fresh", 0L)
     res.release()
-    // audit BEFORE the compaction decision: its lockstep deltas deepen the
-    // chain, and compaction then collapses audit deltas with the batch's
+    // audit BEFORE the compaction decision: its deltas deepen the chain,
+    // and compaction then collapses audit deltas with the batch's
     val auditCuts =
       if (auditEvery > 0 && (batchId + 1) % auditEvery == 0) {
         val acfg = effectiveAudit(cfg, audit)
@@ -230,34 +219,5 @@ object StreamingIngest {
         }
       }
       .start()
-  }
-
-  /** Repair an increment interrupted mid-commit: trim every stage back to
-    * the LAST snapshot id ALL stages reached (committed snapshot dirs are
-    * immutable, so deleting the ids past the common floor restores
-    * exactly the pre-batch state), and sweep marker-less partial
-    * directories. DESTRUCTIVE on the trimmed ids — the caller invokes it
-    * deliberately, it is never automatic. Returns the common id trimmed
-    * to. No-op (beyond the partial sweep) when stages already agree.
-    */
-  def repair(runDir: String): Long = {
-    val floor = Stages.map(s => Snapshots.lastCommitted(runDir, s).getOrElse(
-      sys.error(s"repair: stage $s has no committed snapshot under $runDir — not a " +
-        "bootstrapped run directory"))).min
-    Stages.foreach { s =>
-      // top-down so a delta's base is never dropped before the delta
-      Snapshots.snapshotDirIds(runDir, s).filter(_ > floor).sorted.reverse
-        .foreach(Snapshots.dropSnapshot(runDir, s, _))
-      // staged-commit attempts a crashed writer left behind are invisible
-      // to readers but real disk; repair is the one safe sweep point
-      Snapshots.cleanAttempts(runDir, s)
-    }
-    // a watermark pointing into the trimmed range would hide the replayed
-    // increment's clusters from the scoped cadence audit forever (the
-    // replay re-commits the trimmed ids with different content); dropping
-    // it just makes the next incremental audit run full
-    EntityResolution.AuditWatermark.clear(runDir)
-    EntityResolution.MergeWatermark.clear(runDir)
-    floor
   }
 }

@@ -10,7 +10,8 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
   * committed snapshot plus one loud ConcurrentCommitException — never a
   * shared directory with interleaved files; (b) a writer that crashes
   * before publishing leaves only invisible staging garbage, swept by
-  * repair's cleanAttempts.
+  * repair's cleanAttempts; (c) two writers that both read commit record v
+  * race at record v + 1, and exactly one publishes it.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -158,5 +159,50 @@ class ConcurrencySpec extends SparkSpec {
     assert(!Files.exists(garbage))
     assert(Files.exists(aside.resolve("_COMMITTED")),
       "the stranded committed snapshot must survive the sweep")
+  }
+
+  test("record CAS: two writers from record v, exactly one publishes v + 1") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-record-cas").toString
+    Snapshots.commit(spark, Seq(0L).toDF("v"), tmp, "t", "base", Map.empty)
+    val v = Snapshots.record(tmp)
+    // both writers staged a stage snapshot on top of record v (ids 1, 2)
+    Snapshots.commitAt(spark, Seq(111L).toDF("v"), tmp, "t", "wA", Map.empty, 1L)
+    Snapshots.commitAt(spark, Seq(222L).toDF("v"), tmp, "t", "wB", Map.empty, 2L)
+    def rec(writer: String, id: Long) =
+      Snapshots.Record(v.version + 1, writer, "test", v.stages + ("t" -> id), Set("t"))
+    Snapshots.publishAt(tmp, rec("wA", 1L))
+    val ex = intercept[Snapshots.ConcurrentCommitException](Snapshots.publishAt(tmp, rec("wB", 2L)))
+    assert(ex.getMessage.contains(s"commit record ${v.version + 1}"))
+    // the winner's state resolves; the loser's snapshot stays invisible
+    assert(Snapshots.record(tmp) == rec("wA", 1L))
+    assert(Snapshots.lastCommitted(tmp, "t").contains(1L))
+    assert(vals(Snapshots.loadCommitted(spark, tmp, "t").get) == Set(111L))
+    val leftover = scala.util.Using.resource(Files.list(Paths.get(s"$tmp/_commits")))(
+      _.toArray.toSeq.map(p => Paths.get(p.toString).getFileName.toString))
+    assert(leftover.sorted == Seq("1.json", "2.json"), s"stale temp files: $leftover")
+  }
+
+  test("record CAS: a verb holding a stale record loses loud; its snapshots stay invisible") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-record-stale").toString
+    Snapshots.commit(spark, Seq(0L).toDF("v"), tmp, "t", "base", Map.empty)
+    // writer B opens its transaction at record 1 and stages a delta...
+    val txn = Snapshots.begin(tmp, "wB", "test")
+    Snapshots.commitDelta(spark, Seq(222L).toDF("v"), None, tmp, "t", "wB", Map.empty, 2L)
+    // ...while writer A, on another thread, publishes record 2
+    val pool = Executors.newSingleThreadExecutor()
+    pool.submit(new Runnable {
+      def run(): Unit = Snapshots.commit(spark, Seq(111L).toDF("v"), tmp, "t", "wA", Map.empty)
+    }).get(120, TimeUnit.SECONDS)
+    pool.shutdown()
+    intercept[Snapshots.ConcurrentCommitException](txn.publish())
+    txn.close()
+    assert(Snapshots.record(tmp).runId == "wA")
+    assert(Snapshots.lastCommitted(tmp, "t").contains(2L))
+    assert(vals(Snapshots.loadCommitted(spark, tmp, "t").get) == Set(111L))
+    // the loser's delta (id 1) is garbage no record names: repair sweeps it
+    assert(Snapshots.repair(tmp) == Seq(s"$tmp/t/snapshot=1"))
+    assert(Snapshots.snapshots(tmp, "t") == Seq(0L, 2L))
   }
 }

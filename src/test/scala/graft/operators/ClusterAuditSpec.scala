@@ -248,26 +248,27 @@ class ClusterAuditSpec extends SparkSpec {
     val ts = Snapshots.loadCommitted(spark, dir, EntityResolution.StageAuditTombstones)
     assert(ts.isDefined && ts.get.count() == 1L)
     assert(Snapshots.lastCommitted(dir, "cluster_assignments").contains(1L))
-    // LOCKSTEP: every committed increment stage moved with the audit (a
-    // no-op delta where the audit changed nothing), so streaming's
-    // equal-ids batch certificate survives an audit on the run
-    assert(Snapshots.lastCommitted(dir, "blocking").contains(1L))
-    assert(Snapshots.loadCommitted(spark, dir, "blocking").get
-      .as[(String, String)].collect().toSeq == Seq(("k1", "a1")),
-      "the blocking no-op delta must resolve to the unchanged base")
+    // one record: the audit wrote scored_pairs, the tombstones and the
+    // assignments, and carried blocking forward at its id (no no-op delta)
+    val rec = Snapshots.record(dir)
+    assert(rec.written == Set("scored_pairs", EntityResolution.StageAuditTombstones,
+      "cluster_assignments"), s"audit record: $rec")
+    assert(rec.stages("blocking") == 0L && Snapshots.lastCommitted(dir, "blocking").contains(0L))
 
     // idempotent: the cut bridge is gone; nothing new commits
     val res2 = EntityResolution.auditRepair(spark, dir)
     assert(res2.counters("audit_committed") == 0L)
     assert(Snapshots.lastCommitted(dir, "cluster_assignments").contains(1L))
+    assert(Snapshots.record(dir).version == rec.version, "an audit that cuts nothing publishes nothing")
 
-    // crash-mid-audit recovery: simulate the repair-trimmed state (the
-    // retraction deltas dropped, the standing tombstone retained) — the
-    // re-run re-cuts the same pair and the tombstone commit must DEDUP
-    // against the standing record, keeping rows/counters exact
-    Snapshots.dropSnapshot(dir, "cluster_assignments", 1L)
-    Snapshots.dropSnapshot(dir, "scored_pairs", 1L)
-    Snapshots.dropSnapshot(dir, "blocking", 1L)
+    // a later history that brings the cut pair back into scored_pairs and
+    // the assignments (here: both stages re-committed at their pre-audit
+    // relations) — the re-run re-cuts the same pair and the tombstone
+    // commit must DEDUP against the standing record, keeping rows/counters
+    // exact
+    Seq("scored_pairs", "cluster_assignments").foreach(s =>
+      Snapshots.commit(spark, Snapshots.loadSnapshot(spark, dir, s, 0L), dir, s, "rollback",
+        Snapshots.counters(dir, s, 0L)))
     val res3 = EntityResolution.auditRepair(spark, dir)
     assert(res3.counters("audit_committed") == 1L, "the re-run must re-cut")
     val ts3 = Snapshots.loadCommitted(spark, dir, EntityResolution.StageAuditTombstones).get

@@ -43,7 +43,8 @@ class IncrementalAuditSpec extends SparkSpec {
     val a0 = EntityResolution.auditRepair(spark, tmp, acfg, runId = "a0", incremental = true)
     assert(a0.counters("audit_scope_full_fallback") == 1L, s"first audit must run full: ${a0.counters}")
     assert(a0.counters("audit_committed") == 0L, "clean base must need no cuts")
-    assert(EntityResolution.AuditWatermark.read(tmp).contains(0L),
+    // the base run published record 1; the audit stamps the version it saw
+    assert(EntityResolution.AuditWatermark.read(tmp).contains(1L),
       s"watermark must stamp even without cuts: ${EntityResolution.AuditWatermark.read(tmp)}")
 
     // the false merge ARRIVES via ingest (batch 0); an unrelated batch follows
@@ -90,13 +91,19 @@ class IncrementalAuditSpec extends SparkSpec {
     assert(a4.counters("audit_incremental") == 1L && a4.counters("audit_scope_clusters") == 0L,
       s"compaction must stay out of the audit scope: ${a4.counters}")
 
-    // streaming repair clears the watermark: the next incremental audit
-    // must run full (a watermark into trimmed history would hide replayed
-    // clusters forever)
-    StreamingIngest.repair(tmp)
-    assert(EntityResolution.AuditWatermark.read(tmp).isEmpty, "repair must clear the watermark")
+    // repair only sweeps unpublished garbage: no record changes, so the
+    // watermark stays valid and the next incremental audit stays scoped
+    val mark = EntityResolution.AuditWatermark.read(tmp)
+    Snapshots.repair(tmp)
+    assert(EntityResolution.AuditWatermark.read(tmp) == mark, "repair must keep the watermark")
     val a5 = EntityResolution.auditRepair(spark, tmp, acfg, runId = "a5", incremental = true)
-    assert(a5.counters("audit_scope_full_fallback") == 1L,
-      s"post-repair incremental audit must fall back to full: ${a5.counters}")
+    assert(a5.counters("audit_incremental") == 1L && a5.counters("audit_scope_clusters") == 0L,
+      s"post-repair incremental audit must stay scoped: ${a5.counters}")
+    // a watermark of the pre-record layout (a snapshot id under the old
+    // key) reads as absent: the next incremental audit falls back to full
+    Files.writeString(java.nio.file.Paths.get(tmp, "_audit_watermark"), """{"audited_through":3}""")
+    val a6 = EntityResolution.auditRepair(spark, tmp, acfg, runId = "a6", incremental = true)
+    assert(a6.counters("audit_scope_full_fallback") == 1L,
+      s"an old-layout watermark must fall back to full: ${a6.counters}")
   }
 }

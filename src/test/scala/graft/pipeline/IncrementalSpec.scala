@@ -305,46 +305,44 @@ class IncrementalSpec extends SparkSpec {
     bg.unpersist(); planted.unpersist()
   }
 
-  test("incremental verbs refuse a drift-state history (stages at unequal snapshot ids)") {
+  test("a crashed verb's unpublished snapshot is invisible; every verb runs on the published state") {
     import spark.implicits._
-    // simulate a verb crashed between its scored_pairs commit and the rest
-    // of its commit sequence (the state a crashed mergeRepair/auditRepair/
-    // increment leaves): the non-self-recovering verbs must fail loud
-    // instead of silently operating on the drift
+    // a verb that crashed after its scored_pairs commit, before its record:
+    // the snapshot is on disk, but no record names it, so nothing resolves
+    // to it and no verb refuses (the state the lockstep refusal used to
+    // guard is unreachable)
     val cfgA = GenConfig(numEntities = 40, docsPerEntity = 3, seed = 51L)
     val cfgB = GenConfig(numEntities = 10, docsPerEntity = 3, seed = 5151L)
     val docsA = DocGen.docs(spark, cfgA).toDF()
     val docsB = DocGen.docs(spark, cfgB).map(d => d.copy(doc_id = "n" + d.doc_id)).toDF()
     val tmp = Files.createTempDirectory("graft-drift").toString
     EntityResolution.run(spark, docsA, runDir = Some(tmp), runId = "base").release()
+    val published = Snapshots.record(tmp)
     val scored = Snapshots.loadCommitted(spark, tmp, "scored_pairs").get
-    Snapshots.commitDelta(spark, scored.limit(0).repartition(1), None,
-      tmp, "scored_pairs", "crashed-verb", Map.empty,
-      Snapshots.lastRows(tmp, "scored_pairs").getOrElse(0L))
+    Snapshots.commitDelta(spark, scored.limit(1), None, tmp, "scored_pairs", "crashed-verb",
+      Map.empty, Snapshots.lastRows(tmp, "scored_pairs").getOrElse(0L) + 1L)
+    Files.delete(java.nio.file.Paths.get(tmp, "_commits", s"${published.version + 1}.json"))
+    assert(Snapshots.snapshots(tmp, "scored_pairs") == Seq(0L, 1L), "the crash leaves its snapshot")
+    assert(Snapshots.record(tmp) == published)
+    EntityResolution.LockstepStages.foreach(s =>
+      assert(Snapshots.lastCommitted(tmp, s).contains(0L), s"$s must read its published id"))
 
-    val eAdd = intercept[IllegalArgumentException](
-      EntityResolution.addDocuments(spark, docsB, tmp, runId = "i"))
-    assert(eAdd.getMessage.contains("unequal snapshot ids"))
-    val eRm = intercept[IllegalArgumentException](
-      EntityResolution.removeDocuments(spark, docsA.select("doc_id").limit(1), tmp))
-    assert(eRm.getMessage.contains("unequal snapshot ids"))
-    val eCompact = intercept[IllegalArgumentException](
-      EntityResolution.compactRun(spark, tmp))
-    assert(eCompact.getMessage.contains("unequal snapshot ids"))
-    // the cut audit refuses too: its own crashed state (retraction
-    // committed, relabel not) leaves the cut cluster DISCONNECTED, and a
-    // re-run would hit the report-never-repair branch and silently no-op —
-    // unlike mergeRepair, whose drift rule converges, it must fail loud
-    val eAudit = intercept[IllegalArgumentException](
-      EntityResolution.auditRepair(spark, tmp, runId = "a"))
-    assert(eAudit.getMessage.contains("unequal snapshot ids"))
-
-    // streaming's trim-based repair restores lockstep; the verbs then run
-    graft.streaming.StreamingIngest.repair(tmp)
-    val audited = EntityResolution.auditRepair(spark, tmp, runId = "a2")
+    val audited = EntityResolution.auditRepair(spark, tmp, runId = "a")
     assert(audited.counters("audit_committed") == 0L) // clean clusters: no cuts
-    val inc = EntityResolution.addDocuments(spark, docsB, tmp, runId = "i2")
+    val inc = EntityResolution.addDocuments(spark, docsB, tmp, runId = "i")
     assert(inc.counters("insert_mode") == 1L)
+    // the new scored_pairs delta goes above the crash garbage and rests on
+    // the published base, never on the unpublished snapshot
+    assert(Snapshots.lastCommitted(tmp, "scored_pairs").contains(2L))
+    assert(inc.scoredPairs.count() == Snapshots.lastRows(tmp, "scored_pairs").get)
+    EntityResolution.removeDocuments(spark, docsA.select("doc_id").limit(1), tmp, runId = "r")
+      .release()
+    EntityResolution.compactRun(spark, tmp)
+    assert(Snapshots.chainDepth(tmp, "scored_pairs") == 0)
+    // repair sweeps the garbage, and only it
+    assert(Snapshots.repair(tmp).exists(_.endsWith("scored_pairs/snapshot=1")))
+    assert(!Snapshots.snapshots(tmp, "scored_pairs").contains(1L))
+    assert(Snapshots.snapshots(tmp, "cluster_assignments") == Seq(0L, 1L, 2L, 3L))
   }
 
   test("compactRun: delta chains materialize bit-identically; further increments rebase on the compacted snapshots") {

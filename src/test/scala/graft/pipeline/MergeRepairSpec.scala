@@ -57,6 +57,7 @@ class MergeRepairSpec extends SparkSpec {
     assert(band(false)._2 < tightMerge.mergeFloor, s"cross-entity max score ${band(false)._2}")
     assert(band(true)._1 >= tightMerge.mergeFloor, s"same-entity min score ${band(true)._1}")
 
+    val depths = stages(tmp).map(s => s -> Snapshots.chainDepth(tmp, s)).toMap
     val res = EntityResolution.mergeRepair(spark, tmp, tightMerge)
     assert(res.counters("merge_committed") == 1L)
     assert(res.counters("merge_cluster_pairs_qualified") > 0L)
@@ -74,17 +75,23 @@ class MergeRepairSpec extends SparkSpec {
     assert(ledger.count() == res.counters("merge_pairs_promoted"))
     assert(ledger.where(col("score") >= 0.75).isEmpty)
 
-    // lockstep: every stage advanced to the same snapshot id
-    val ids = stages(tmp).map(s => Snapshots.lastCommitted(tmp, s).get)
-    assert(ids.toSet.size == 1, s"stages at unequal ids: $ids")
+    // one record: the merge wrote scored_pairs, its ledger and the
+    // assignments; the four other stages keep their ids and chain depth
+    val rec = Snapshots.record(tmp)
+    assert(rec.written == Set("scored_pairs", EntityResolution.StageMergePromotions,
+      "cluster_assignments"), s"merge record: $rec")
+    stages(tmp).foreach { s =>
+      assert(Snapshots.lastCommitted(tmp, s).contains(if (rec.written(s)) 1L else 0L) &&
+        Snapshots.chainDepth(tmp, s) == depths(s) + (if (rec.written(s)) 1 else 0), s)
+    }
 
     // idempotent: the second merge audit finds nothing and commits nothing
     val res2 = EntityResolution.mergeRepair(spark, tmp, tightMerge)
     assert(res2.counters("merge_committed") == 0L)
-    assert(Snapshots.lastCommitted(tmp, "cluster_assignments").get == ids.head)
+    assert(Snapshots.record(tmp) == rec)
 
     // time travel still reads the pre-merge clustering
-    val preMerge = Snapshots.loadSnapshot(spark, tmp, "cluster_assignments", ids.head - 1)
+    val preMerge = Snapshots.loadSnapshot(spark, tmp, "cluster_assignments", 0L)
     assert(Eval.pairwiseF1(preMerge, labeled).f1 == before.f1)
     labeled.unpersist()
   }
@@ -121,12 +128,12 @@ class MergeRepairSpec extends SparkSpec {
     assert(drifted.isEmpty, s"increment re-split merged docs: ${drifted.take(5)}")
   }
 
-  test("crash between the scored_pairs commit and the assignments commit recovers via the drift rule") {
+  test("crash between the scored_pairs commit and the record leaves the pre-merge state; the re-run merges") {
     val tmp = Files.createTempDirectory("graft-merge-crash").toString
     val base = EntityResolution.run(spark, docs, tightPipe, runDir = Some(tmp), runId = "base")
     base.release(keepAssignments = true)
     // simulate the crash: promote the evidence in scored_pairs exactly as
-    // mergeRepair's first commit does, then "crash" (no other commits)
+    // mergeRepair's first commit does, then "crash" before its record
     val assign0 = Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get
     val scored0 = Snapshots.loadCommitted(spark, tmp, "scored_pairs").get
     val m = ClusterMerge.merge(assign0, scored0, None, tightMerge)
@@ -139,11 +146,14 @@ class MergeRepairSpec extends SparkSpec {
       Map("merge_promoted_pairs" -> nProm),
       Snapshots.lastRows(tmp, "scored_pairs").getOrElse(0L))
     m.release()
-    // the re-run finds accepted cross-cluster edges, merges them
-    // unconditionally, and promotes nothing further
+    Files.delete(java.nio.file.Paths.get(tmp, "_commits", "2.json"))
+    assert(Snapshots.lastCommitted(tmp, "scored_pairs").contains(0L),
+      "the unpublished promotion must be invisible")
+    // the re-run sees no drift (no accepted cross-cluster edge was ever
+    // published) and promotes the same evidence itself
     val res = EntityResolution.mergeRepair(spark, tmp, tightMerge)
-    assert(res.counters("merge_cluster_pairs_drift") > 0L)
-    assert(res.counters("merge_pairs_promoted") == 0L)
+    assert(res.counters("merge_cluster_pairs_drift") == 0L)
+    assert(res.counters("merge_pairs_promoted") == nProm)
     assert(res.counters("merge_committed") == 1L)
     val labeled = EntityResolution.labeledPairs(
       Snapshots.loadCommitted(spark, tmp, "blocking").get, gold).cache()

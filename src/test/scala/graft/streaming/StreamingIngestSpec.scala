@@ -14,8 +14,8 @@ import org.apache.spark.sql.streaming.Trigger
 /** Streaming ingestion (StreamingIngest): micro-batches land as
   * insert-mode increments with per-stage delta snapshots; replayed
   * batches are skipped by the run_id certificate; compaction cadence
-  * keys on chain depth; an interrupted increment fails loud and repair
-  * restores the consistent floor.
+  * keys on chain depth; an interrupted increment publishes no record, so
+  * its batch replays on the published state.
   */
 class StreamingIngestSpec extends SparkSpec {
 
@@ -113,33 +113,70 @@ class StreamingIngestSpec extends SparkSpec {
     assert(pre.exceptAll(post).isEmpty && post.exceptAll(pre).isEmpty)
   }
 
-  test("interrupted increment: unequal stage ids fail loud; repair trims to the common floor") {
+  test("interrupted increment: the batch replays on the published state; repair sweeps the rest") {
     import spark.implicits._
     val cfgA = GenConfig(numEntities = 40, docsPerEntity = 3, seed = 9L)
     val tmp = Files.createTempDirectory("graft-stream-rep").toString
     EntityResolution.run(spark, DocGen.docs(spark, cfgA).toDF(),
       runDir = Some(tmp), runId = "base").release()
 
-    // simulate a crash mid-increment: blocking committed its delta,
-    // clustering never did
+    // simulate a crash mid-increment of batch 0: blocking committed its
+    // delta, the increment never published its record
     val oneRow = Snapshots.loadCommitted(spark, tmp, "blocking").get.limit(1)
     Snapshots.commitDelta(spark, oneRow, None, tmp, "blocking", "stream-0",
       Map.empty, resolvedRows = 1L)
-    val e = intercept[RuntimeException](StreamingIngest.ingestBatch(
-      spark, DocGen.docs(spark, cfgA).toDF(), tmp, batchId = 0L))
-    assert(e.getMessage.contains("repair"))
-
-    assert(StreamingIngest.repair(tmp) == 0L)
+    Files.delete(java.nio.file.Paths.get(tmp, "_commits", "2.json"))
     StreamingIngest.Stages.foreach(s =>
-      assert(Snapshots.lastCommitted(tmp, s).contains(0L), s"stage $s not trimmed to 0"))
-    // the run is whole again: the batch replays cleanly
+      assert(Snapshots.lastCommitted(tmp, s).contains(0L), s"stage $s must read its published id"))
+
+    // no repair needed: the certificate reads batch 0 as not done, and it
+    // replays cleanly on the published state
     val cfgB = GenConfig(numEntities = 10, docsPerEntity = 3, seed = 99L)
     val out = StreamingIngest.ingestBatch(spark, docsOf(cfgB, "s1").toDF(), tmp, batchId = 0L)
     assert(out.isInstanceOf[StreamingIngest.Ingested])
     val gold = goldOf(cfgA, "").unionByName(goldOf(cfgB, "s1"))
     assert(Eval.clusterEquality(
       Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get, gold))
+    // the replay's blocking delta went above the garbage, which repair sweeps
+    assert(Snapshots.lastCommitted(tmp, "blocking").contains(2L))
+    assert(Snapshots.repair(tmp) == Seq(s"$tmp/blocking/snapshot=1"))
+    assert(Snapshots.snapshots(tmp, "blocking") == Seq(0L, 2L))
+    assert(Eval.clusterEquality(
+      Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get, gold))
   }
+
+  test("a run dir without commit records reads its lockstep stages at their common floor") {
+    import spark.implicits._
+    // the layout before commit records: a crash mid-increment left
+    // blocking one snapshot ahead of the other stages
+    val cfgA = GenConfig(numEntities = 20, docsPerEntity = 3, seed = 19L)
+    val tmp = Files.createTempDirectory("graft-stream-rec0").toString
+    EntityResolution.run(spark, DocGen.docs(spark, cfgA).toDF(),
+      runDir = Some(tmp), runId = "stream-3").release()
+    Snapshots.commitDelta(spark, Snapshots.loadCommitted(spark, tmp, "blocking").get.limit(1),
+      None, tmp, "blocking", "stream-4", Map.empty, resolvedRows = 1L)
+    new scala.reflect.io.Directory(new java.io.File(s"$tmp/_commits")).deleteRecursively()
+    val r0 = Snapshots.record(tmp)
+    assert(r0.version == 0L && r0.runId == "stream-3", s"record 0: $r0")
+    StreamingIngest.Stages.foreach(s =>
+      assert(r0.stages.get(s).contains(0L), s"stage $s must read the common floor: $r0"))
+    // the certificate of the last batch whose clustering committed holds
+    assert(StreamingIngest.ingestBatch(spark, docsOf(cfgA, "x").toDF(), tmp, batchId = 3L) ==
+      StreamingIngest.Skipped)
+    // repair sweeps what ran ahead of the floor, and nothing at or below it
+    assert(Snapshots.repair(tmp) == Seq(s"$tmp/blocking/snapshot=1"))
+    assert(Snapshots.snapshots(tmp, "blocking") == Seq(0L))
+    val cfgB = GenConfig(numEntities = 5, docsPerEntity = 3, seed = 1919L)
+    assert(StreamingIngest.ingestBatch(spark, docsOf(cfgB, "s4").toDF(), tmp, batchId = 4L)
+      .isInstanceOf[StreamingIngest.Ingested])
+    assert(Snapshots.record(tmp).version == 1L)
+    assert(Eval.clusterEquality(Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get,
+      goldOf(cfgA, "").unionByName(goldOf(cfgB, "s4"))))
+  }
+
+  /** The stages whose snapshot id differs between two records' stage maps. */
+  private def moved(before: Map[String, Long], after: Map[String, Long]): Set[String] =
+    after.keySet.filter(s => !before.get(s).contains(after(s)))
 
   /** One all-text doc, token per span (the RemovalSpec bridge recipe). */
   private def textDoc(id: String, text: String) =
@@ -160,7 +197,7 @@ class StreamingIngestSpec extends SparkSpec {
     Seq("teff", "fonio", "emmer").zipWithIndex.map { case (t, i) =>
       textDoc(s"y$i", s"liberty melon nut oat pear quince rye spelt $t") }
 
-  test("auditRepair composes with streaming: lockstep deltas keep the batch certificate valid") {
+  test("auditRepair composes with streaming: one record keeps the batch certificate valid") {
     import spark.implicits._
     import graft.operators.ClusterAudit
     val docsXY = plantedMerge
@@ -192,23 +229,32 @@ class StreamingIngestSpec extends SparkSpec {
     assert(StreamingIngest.ingestBatch(spark, z.toDF(), tmp, batchId = 0L, cfg)
       .isInstanceOf[StreamingIngest.Ingested])
 
-    // the audit cuts the cross bundle and must move EVERY increment stage
-    // in lockstep (no-op deltas where it changed nothing)
+    // the audit cuts the cross bundle and publishes ONE record: it writes
+    // scored_pairs, its tombstones and the assignments, and carries the
+    // other four stages forward at their ids and chain depth (no no-op
+    // deltas)
+    val before = Snapshots.record(tmp).stages
+    val depths = StreamingIngest.Stages.map(s => s -> Snapshots.chainDepth(tmp, s)).toMap
     val aud = EntityResolution.auditRepair(spark, tmp,
       ClusterAudit.AuditConfig(threshold = cfg.scoreThreshold))
     assert(aud.counters("audit_committed") == 1L, s"audit must cut: ${aud.counters}")
     assert(aud.counters("audit_bridges_cut") >= 2L,
       s"the cross glue is a PARALLEL bundle: ${aud.counters}")
-    val ids = StreamingIngest.Stages.map(s => Snapshots.lastCommitted(tmp, s))
-    assert(ids.distinct.size == 1 && ids.head.contains(2L),
-      s"stages must stay in lockstep after the audit, got ${StreamingIngest.Stages.zip(ids)}")
+    val after = Snapshots.record(tmp).stages
+    assert(moved(before, after) ==
+      Set("scored_pairs", EntityResolution.StageAuditTombstones, "cluster_assignments"),
+      s"the audit must write exactly three stages: $before -> $after")
+    (StreamingIngest.Stages.toSet -- moved(before, after)).foreach { s =>
+      assert(Snapshots.lastCommitted(tmp, s).contains(1L) && Snapshots.chainDepth(tmp, s) ==
+        depths(s), s"$s must keep its id and chain depth: $before -> $after")
+    }
+    assert(Snapshots.lastCommitted(tmp, "cluster_assignments").contains(2L))
     val cutAsg = Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get
     assert(cutAsg.where(col("doc_id").startsWith("x")).select("cluster_id").distinct()
       .exceptAll(cutAsg.where(col("doc_id").startsWith("y")).select("cluster_id").distinct())
       .count() > 0, "x and y entities must be in different clusters after the audit")
 
-    // batch 1 MUST ingest cleanly — pre-fix this failed loud on a phantom
-    // "interrupted increment" (and its repair would have undone the audit)
+    // batch 1 MUST ingest cleanly on the audited state
     val z2 = Seq(doc("z2", "zebra yak xenon walrus vole umbra tern snail robin"))
     assert(StreamingIngest.ingestBatch(spark, z2.toDF(), tmp, batchId = 1L, cfg)
       .isInstanceOf[StreamingIngest.Ingested])
@@ -242,7 +288,7 @@ class StreamingIngestSpec extends SparkSpec {
       .select("cluster_id").distinct().count() == 1, "merge must still stand after batch 0")
 
     // batch 1 IS the cadence point: the audit cuts the 3-edge bundle,
-    // commits lockstep, and the stream keeps going
+    // publishes its record, and the stream keeps going
     val out1 = StreamingIngest.ingestBatch(spark, Seq(z("z2", "robin")).toDF(),
       tmp, batchId = 1L, cfg, auditEvery = 2)
     out1 match {
@@ -250,8 +296,7 @@ class StreamingIngestSpec extends SparkSpec {
         assert(a >= 2L, s"cadence audit must cut the parallel bundle, cuts=$a")
       case o => fail(s"expected Ingested, got $o")
     }
-    val ids = StreamingIngest.Stages.map(s => Snapshots.lastCommitted(tmp, s))
-    assert(ids.distinct.size == 1, s"lockstep after cadence audit: $ids")
+    assert(Snapshots.record(tmp).runId == "stream-1-audit", s"${Snapshots.record(tmp)}")
     val after = Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get
     assert(after.where(col("doc_id").startsWith("x") || col("doc_id").startsWith("y"))
       .select("cluster_id").distinct().count() == 2, "entities must be split by the audit")
@@ -296,16 +341,21 @@ class StreamingIngestSpec extends SparkSpec {
       case StreamingIngest.Ingested(_, _, _, _, m) => assert(m == -1L, s"no merge at batch 0: $m")
       case o => fail(s"expected Ingested, got $o")
     }
-    // batch 1 IS the cadence point: the merge heals the split and commits
-    // lockstep
+    // batch 1 IS the cadence point: the merge heals the split in one record
+    // that writes scored_pairs, its ledger and the assignments, carrying
+    // the other stages forward at the ids batch 1's increment wrote
     StreamingIngest.ingestBatch(spark, Seq(z("z2", "robin")).toDF(),
       tmp, batchId = 1L, cfg, mergeEvery = 2) match {
       case StreamingIngest.Ingested(_, _, _, _, m) =>
         assert(m == 2L, s"cadence merge must join the two split clusters, merged=$m")
       case o => fail(s"expected Ingested, got $o")
     }
-    val ids = StreamingIngest.Stages.map(s => Snapshots.lastCommitted(tmp, s))
-    assert(ids.distinct.size == 1, s"lockstep after cadence merge: $ids")
+    val Seq(inc, mrg) = Snapshots.recordsSince(tmp, Snapshots.record(tmp).version - 2).get
+    assert(inc.runId == "stream-1" && mrg.runId == "stream-1-merge" && mrg.written ==
+      Set("scored_pairs", EntityResolution.StageMergePromotions, "cluster_assignments"),
+      s"batch 1's records: $inc, $mrg")
+    (StreamingIngest.Stages.toSet -- mrg.written).foreach(s =>
+      assert(mrg.stages(s) == inc.stages(s), s"$s must carry batch 1's id: $inc -> $mrg"))
     val after = Snapshots.loadCommitted(spark, tmp, "cluster_assignments").get
     assert(after.where(col("doc_id").startsWith("x") || col("doc_id").startsWith("y"))
       .select("cluster_id").distinct().count() == 1, "the entity must be whole after the merge")
@@ -340,8 +390,9 @@ class StreamingIngestSpec extends SparkSpec {
     val mc = Snapshots.lastCounters(tmp, "cluster_assignments")
     assert(mc.get("merge_committed").contains(1L) && mc.get("merge_incremental").contains(1L) &&
       !mc.contains("merge_scope_full_fallback"), s"the cadence merge must commit scoped: $mc")
-    val ids2 = StreamingIngest.Stages.map(s => Snapshots.lastCommitted(tmp, s))
-    assert(ids2.distinct.size == 1, s"lockstep after the scoped cadence merge: $ids2")
+    assert(Snapshots.record(tmp).written ==
+      Set("scored_pairs", EntityResolution.StageMergePromotions, "cluster_assignments"),
+      s"the scoped cadence merge writes three stages: ${Snapshots.record(tmp)}")
     assert(clusters(isR) == 1, "the rotated entity must be whole after the scoped merge")
     assert(clusters(col("doc_id").startsWith("x") || col("doc_id").startsWith("y")) == 1,
       "the first entity must stay whole")
