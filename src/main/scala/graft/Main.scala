@@ -53,9 +53,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * first N entities of the base corpus is replaced by a re-perturbed
   * REVISION (same entity identity, fresh typo/media noise —
   * [[graft.synth.DocGen.docsRevised]]) via
-  * [[EntityResolution.replaceDocuments]] (retract + O(delta) insert on one
-  * history), then evaluated against the UNCHANGED gold: a revision must
-  * not move any doc's entity.
+  * [[EntityResolution.replaceDocuments]] (retract + O(delta) insert under
+  * one commit record), then evaluated against the UNCHANGED gold: a
+  * revision must not move any doc's entity.
   *
   * `--expire-keep K` (with --run-dir): DESTRUCTIVE snapshot retirement —
   * keeps the newest K committed snapshots per stage (never breaking a

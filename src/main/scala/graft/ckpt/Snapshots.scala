@@ -64,8 +64,10 @@ object Snapshots {
   /** Thrown when another writer published the same snapshot id while this
     * commit was staging, or the next commit record first — two
     * uncoordinated writers share a run dir (e.g. a streaming ingester plus
-    * a manual increment). Nothing the losing commit wrote is visible (its
-    * staged attempt is deleted). Serialize writers per run dir and retry.
+    * a manual increment). Nothing the losing commit wrote becomes visible:
+    * a lost stage publish deletes its staged attempt, a lost record leaves
+    * its stage snapshots unnamed garbage for [[repair]]. Serialize writers
+    * per run dir and retry.
     */
   final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
@@ -90,19 +92,12 @@ object Snapshots {
   /** The stage commit point: atomically rename a fully-written attempt dir
     * (data + lineage + manifest + _COMMITTED already inside) to its
     * `snapshot=<id>` name. rename(2) fails if the target exists, so when two
-    * uncoordinated writers race the same next id, exactly one publishes; the
-    * loser's staged files are deleted and it fails loud — never the previous
-    * behavior of both writing into one shared directory with Overwrite.
+    * writers race one id exactly one publishes; the loser's staged files are
+    * deleted and it fails loud. Nothing is recovered here: [[nextId]] puts
+    * every fresh id above every snapshot dir, crash garbage included.
     */
   private def publish(attempt: String, snapPath: String, runDir: String,
-                      stage: String, snapId: Long, attemptsLeft: Int = 3): Unit = {
-    def loseRace(how: String): Nothing = {
-      deleteRecursively(attempt)
-      throw new ConcurrentCommitException(
-        s"$stage/snapshot=$snapId under $runDir was committed by another writer while " +
-          s"this commit was staging (lost the publish race, $how) — " +
-          "two uncoordinated writers share this run dir; serialize commits per run dir")
-    }
+                      stage: String, snapId: Long): Unit =
     try Files.move(Paths.get(attempt), Paths.get(snapPath), StandardCopyOption.ATOMIC_MOVE)
     catch {
       // rename(2) onto an existing non-empty dir surfaces as EEXIST/ENOTEMPTY
@@ -110,86 +105,25 @@ object Snapshots {
       // on the JDK path); the target-exists guard keeps genuine IO errors
       // (EXDEV, EACCES, disk full) propagating untouched
       case e: java.nio.file.FileSystemException if Files.exists(Paths.get(snapPath)) =>
-        if (attemptsLeft <= 0) loseRace("repeated absorb races, " + e.getClass.getSimpleName)
-        else if (!Files.exists(Paths.get(snapPath, "_COMMITTED"))) {
-          // a MARKER-LESS dir at this id is crash garbage (a pre-protocol
-          // partial commit, or a dropSnapshot/repair interrupted mid-delete
-          // after removing the marker), never a live writer — live writers
-          // stage in _attempt_ dirs. Absorb it and publish; without this a
-          // stale partial would permanently block the id with a misleading
-          // concurrent-writer error. The absorb must NOT delete in place: a
-          // RACING same-id writer can absorb the garbage and publish between
-          // this marker check and the delete, and an in-place delete would
-          // then destroy its COMMITTED snapshot with both writers reporting
-          // success. Instead rename(2) moves the dir aside ATOMICALLY —
-          // exactly one mover gains ownership — and the moved dir is
-          // inspected privately: if it turns out to be a snapshot committed
-          // after the marker check, it is moved straight back and this
-          // writer loses normally.
-          val aside = Paths.get(snapPath).getParent.resolve(
-            s"_attempt_absorb_${java.util.UUID.randomUUID().toString.take(12)}")
-          val owned =
-            try { Files.move(Paths.get(snapPath), aside, StandardCopyOption.ATOMIC_MOVE); true }
-            catch { case _: java.nio.file.NoSuchFileException => false } // a racer absorbed first
-          if (owned && Files.exists(aside.resolve("_COMMITTED"))) {
-            try Files.move(aside, Paths.get(snapPath), StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case restoreErr: java.nio.file.FileSystemException =>
-                // a third writer published while we held the aside copy:
-                // two committed snapshots now exist for one id — do NOT
-                // delete either; surface both paths for manual repair
-                deleteRecursively(attempt)
-                throw new IllegalStateException(
-                  s"$stage/snapshot=$snapId under $runDir: a concurrently committed snapshot " +
-                    s"was moved aside during garbage absorption and could not be restored " +
-                    s"(another writer re-published the id) — restore it manually from $aside",
-                  restoreErr)
-            }
-            loseRace("published during garbage absorption")
-          } else {
-            if (owned) deleteRecursively(aside.toString) // privately-owned garbage
-            // retry: if ANOTHER writer claimed the id meanwhile, the retry
-            // loses through the committed-marker branch above
-            publish(attempt, snapPath, runDir, stage, snapId, attemptsLeft - 1)
-          }
-        } else loseRace(e.getClass.getSimpleName)
-      // snapPath ABSENT at guard time: a racing writer's absorb window — it
-      // moved the target aside between our failed rename and this check
-      // (the id was either freed or is about to be republished). Retrying
-      // resolves both to win or lose-loudly instead of surfacing a spurious
-      // raw IO failure (round-5 advice); genuine IO errors (EACCES, EXDEV,
-      // disk full) still propagate once the retry budget is spent.
-      case _: java.nio.file.FileSystemException
-          if !Files.exists(Paths.get(snapPath)) && attemptsLeft > 0 =>
-        publish(attempt, snapPath, runDir, stage, snapId, attemptsLeft - 1)
+        deleteRecursively(attempt)
+        throw new ConcurrentCommitException(
+          s"$stage/snapshot=$snapId under $runDir was committed by another writer while " +
+            s"this commit was staging (lost the publish race, ${e.getClass.getSimpleName}) — " +
+            "two uncoordinated writers share this run dir; serialize commits per run dir")
     }
-  }
 
-  /** DESTRUCTIVE: delete stale staged-commit attempt directories (left by a
-    * writer that crashed BEFORE its publish rename — invisible to readers,
-    * pure disk garbage). Repair's domain: only call when no writer is live
+  /** DESTRUCTIVE: delete every staged-commit attempt dir of a stage. An
+    * attempt is invisible to readers and garbage once its writer is gone —
+    * also one that crashed after writing its `_COMMITTED` marker but before
+    * the publish rename. Repair's domain: only call when no writer is live
     * on the run dir, since a live writer's staging dir is indistinguishable
     * from a stale one. Returns the deleted paths.
-    *
-    * A directory under the `_attempt_` prefix that CONTAINS a `_COMMITTED`
-    * marker is never garbage: it is a committed snapshot stranded mid
-    * garbage-absorption (a crash between [[publish]]'s move-aside and
-    * restore, or the documented restore-it-manually third-writer path) —
-    * possibly the only copy of that committed data. Those are skipped and
-    * reported loudly instead of deleted (round-5 advice: repair, the very
-    * verb other error messages direct operators to run, must not destroy
-    * what it exists to recover).
     */
   def cleanAttempts(runDir: String, stage: String): Seq[String] = {
     val attempts = names(stageDir(runDir, stage)).filter(_.startsWith("_attempt_"))
       .map(n => s"${stageDir(runDir, stage)}/$n")
-    val (strandedCommitted, garbage) =
-      attempts.partition(p => Files.exists(Paths.get(p, "_COMMITTED")))
-    strandedCommitted.foreach(p => System.err.println(
-      s"[cleanAttempts] REFUSING to delete $p: it holds a _COMMITTED snapshot stranded " +
-        "by an interrupted garbage absorption — restore it manually to its snapshot=<id> name"))
-    garbage.foreach(deleteRecursively)
-    garbage
+    attempts.foreach(deleteRecursively)
+    attempts
   }
 
   /** Entry names of directory `d` (none when absent). Files.list holds a dir

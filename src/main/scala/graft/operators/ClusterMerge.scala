@@ -479,8 +479,8 @@ object ClusterMerge {
       .unionByName(changedRows)
 
     // ---- promotions: top-k band edges per BAND-qualifying cluster pair
-    // (drift-qualifying pairs already carry accepted edges — a crashed
-    // repair's re-run relabels without double-promoting). Tombstoned pairs
+    // (drift-qualifying pairs already carry accepted edges, so the DRIFT
+    // rule merges them without a promotion). Tombstoned pairs
     // are excluded defensively even inside a qualifying bundle.
     val bandQual = qual.where(col("n_drift_edges") === 0L)
       .select("cluster_a", "cluster_b")

@@ -370,7 +370,7 @@ object ConnectedComponents {
     }
     edges.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
-      // smaller root absorbs, so every root IS its component's min
+      // the smaller root becomes the parent, so every root IS its component's min
       if (ra != rb) { if (CodePointOrder.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     find

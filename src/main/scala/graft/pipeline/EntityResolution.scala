@@ -139,17 +139,22 @@ object EntityResolution {
 
   /** Run the full pipeline. When `runDir` is given, each stage is committed
     * as a snapshot, all of them published by one commit record, and
-    * `resume=true` skips already-committed stages (byte-identical reuse —
-    * the resume gate of FIXTURES.md §6).
+    * `resume=true` skips already-committed stages, each main stage only
+    * together with its aux stages (byte-identical reuse — the resume gate
+    * of FIXTURES.md §6); without it every stage is recomputed and committed.
     */
   def run(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig = PipelineConfig(),
           runDir: Option[String] = None, runId: String = "run0",
           resume: Boolean = false): Result =
     verb(spark, runDir.map(Snapshots.begin(_, runId, "run"))) {
-    def staged(stage: String, counters: => Map[String, Long])(compute: => DataFrame): (DataFrame, Map[String, Long]) =
+    def staged(stage: String, aux: Seq[String], counters: => Map[String, Long])(
+        compute: => DataFrame): (DataFrame, Map[String, Long]) =
       runDir match {
         case Some(dir) =>
-          val cached = if (resume) Snapshots.loadCommitted(spark, dir, stage) else None
+          val cached =
+            if (resume && aux.forall(Snapshots.lastCommitted(dir, _).isDefined))
+              Snapshots.loadCommitted(spark, dir, stage)
+            else None
           cached match {
             case Some(df) => (df, Map(s"${stage}_resumed" -> 1L))
             case None =>
@@ -178,22 +183,18 @@ object EntityResolution {
     // along for the block_hot aux snapshot)
     var blockCounters = Map.empty[String, Long]
     var hotRowsRef: Option[DataFrame] = None
-    val (blocking, c1) = staged("blocking", blockCounters) {
+    val (blocking, c1) = staged("blocking", Seq(StageBlockHot), blockCounters) {
       val o = Blocking.blockTokenizedFull(toked, cfg.numBands, cfg.rowsPerBand,
         cfg.maxBlockSize, cfg.tokenBands, withHotRows = runDir.isDefined)
       blockCounters = o.counters
       hotRowsRef = o.hotRows
       o.rows
     }
-    // aux: block_hot — committed only when the blocking stage computed
-    // fresh (a resumed blocking stage either already has it, or the base
-    // run predates the incremental stages and addDocuments will fail loud)
+    // aux: block_hot — committed whenever the blocking stage computes
     for (dir <- runDir; h <- hotRowsRef) {
-      if (Snapshots.lastCommitted(dir, StageBlockHot).isEmpty)
-        Snapshots.commit(spark, h.select(col("block_key"), col("doc_id")),
-          dir, StageBlockHot, runId, Map("hot_rows" -> h.count()))
+      Snapshots.commit(spark, h.select(col("block_key"), col("doc_id")),
+        dir, StageBlockHot, runId, Map("hot_rows" -> h.count()))
       h.unpersist()
-      hotRowsRef = None
     }
 
     // stage 2: scoring — idf weights computed distributedly and joined in
@@ -204,7 +205,7 @@ object EntityResolution {
     var featCacheRef: Option[DataFrame] = None
     var featRef: Option[PairScoring.Features] = None
     var nDocsScored = 0L
-    val (scored, c2) = staged("scored_pairs", scoreCounters) {
+    val (scored, c2) = staged("scored_pairs", Seq(StageDocFeatures, StageMediaDf), scoreCounters) {
       val candidates = Blocking.candidatePairs(blocking)
       // corpus size from the persisted tokenized cache — the source table
       // itself is scanned exactly ONCE per run (into `toked`)
@@ -217,20 +218,15 @@ object EntityResolution {
       scoreCounters = Map("docs_scored_against" -> nDocs)
       s
     }
-    // aux: doc_features + media_df (the incremental base) — written while
-    // the tokenized + media-token caches are still alive, only when the
-    // scoring stage computed fresh and the aux stage is absent
-    for (dir <- runDir; f <- featRef; mtok <- f.mediaTokenCache) {
-      if (Snapshots.lastCommitted(dir, StageDocFeatures).isEmpty) {
-        val stored = PairScoring.storedFeatures(toked, mtok, cfg.scoring)
-          .join(Blocking.docRefine(toked), "doc_id")
-          .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
-        Snapshots.commit(spark, stored, dir, StageDocFeatures, runId,
-          Map("n_docs" -> nDocsScored))
-      }
-      if (Snapshots.lastCommitted(dir, StageMediaDf).isEmpty)
-        f.dfRel.foreach(d => Snapshots.commit(spark, d, dir, StageMediaDf, runId,
-          Map("n_docs" -> nDocsScored)))
+    // aux: doc_features + media_df (the incremental base) — committed
+    // whenever the scoring stage computes, while the tokenized +
+    // media-token caches are still alive
+    for (dir <- runDir; f <- featRef; mtok <- f.mediaTokenCache; dfRel <- f.dfRel) {
+      val stored = PairScoring.storedFeatures(toked, mtok, cfg.scoring)
+        .join(Blocking.docRefine(toked), "doc_id")
+        .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
+      Snapshots.commit(spark, stored, dir, StageDocFeatures, runId, Map("n_docs" -> nDocsScored))
+      Snapshots.commit(spark, dfRel, dir, StageMediaDf, runId, Map("n_docs" -> nDocsScored))
     }
     // in runDir mode every consumer of the tokenized + media-token caches
     // is durable now — drop them here rather than at release()
@@ -243,19 +239,16 @@ object EntityResolution {
     var ccIters = 0
     var ccCounters = Map.empty[String, Long]
     var ccCkptIds = Set.empty[Int]
-    val (assignments, c3) = staged("cluster_assignments", ccCounters) {
+    val (assignments, c3) = staged("cluster_assignments", Nil, ccCounters) {
       val edges = scored
         .where(col("score") >= cfg.scoreThreshold)
         .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
       // node universe WITHOUT a second source scan: the live tokenized
-      // cache in uncheckpointed runs; the just-committed doc_features
-      // parquet in runDir runs (the cache is already dropped there — the
-      // aux stage holds exactly one row per doc); the raw docs projection
-      // only as the last resort (resumed pre-incremental-stage histories)
-      val allIds = tokedRef.map(_.select(col("doc_id")))
-        .orElse(runDir.flatMap(dir => Snapshots.loadCommitted(spark, dir, StageDocFeatures))
-          .map(_.select(col("doc_id"))))
-        .getOrElse(docs.select(col("doc_id")))
+      // cache in uncheckpointed runs; in runDir runs the doc_features this
+      // run committed or resumed with scored_pairs (one row per doc — the
+      // cache is already dropped there)
+      val allIds = runDir.fold(toked)(Snapshots.loadCommitted(spark, _, StageDocFeatures).get)
+        .select(col("doc_id"))
       // pairsPreDeduped: candidatePairs groupBys on (doc_id_a, doc_id_b),
       // so each unordered pair reaches scoring exactly once — CC can skip
       // its initial edge-dedup shuffle
@@ -300,8 +293,8 @@ object EntityResolution {
     * [[verb]] publishes and closes `txn` and [[release]]s every pin and
     * persisted relation on every exit path.
     */
-  private final class IncrContext(spark: SparkSession, runDir: String, verb: String,
-                                  runId: String) {
+  private final class IncrContext(val spark: SparkSession, val runDir: String, verb: String,
+                                  val runId: String) {
     val txn: Snapshots.Txn = Snapshots.begin(runDir, runId, verb)
     /** Run `body` as this incremental verb, in the [[verb]] frame. */
     def run[T](body: IncrContext => T): T =
@@ -312,12 +305,12 @@ object EntityResolution {
           "checkpointed batch run of this build (run() with runDir commits the incremental " +
           s"base stages $StageBlockHot/$StageDocFeatures/$StageMediaDf alongside the main three)"))
     def gated(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, df.count())
-    /** Publish the verb's record; its Result over the stages as published. */
-    def committed(ccIterations: Int, counters: Map[String, Long]): Result = {
-      txn.publish()
+    /** The verb's Result over the stages as its transaction reads them
+      * ([[verb]] publishes them).
+      */
+    def committed(ccIterations: Int, counters: Map[String, Long]): Result =
       Result(loadStage("cluster_assignments"), loadStage("scored_pairs"), loadStage("blocking"),
         ccIterations, counters)
-    }
     private val pinnedIds = scala.collection.mutable.Set.empty[Int]
     def pin(df: DataFrame): DataFrame = {
       val ck = df.localCheckpoint(true)
@@ -523,198 +516,201 @@ object EntityResolution {
     */
   def addDocuments(spark: SparkSession, newDocs: DataFrame, runDir: String,
                    cfg: PipelineConfig = PipelineConfig(), runId: String = "incr"): Result =
-    new IncrContext(spark, runDir, "addDocuments/ins", runId).run { ctx =>
-      import ctx.{gated, loadStage, persist, pin, tick}
-      val oldBlocking = loadStage("blocking")
-      val oldScored = loadStage("scored_pairs")
-      val oldAssign = loadStage("cluster_assignments")
-      val oldFeatures = loadStage(StageDocFeatures)
-      val oldHot = loadStage(StageBlockHot)
-      val oldDf = loadStage(StageMediaDf)
-      val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
-        sys.error(s"addDocuments: $StageMediaDf manifest lacks the n_docs counter"))
+    new IncrContext(spark, runDir, "addDocuments/ins", runId).run(insert(_, newDocs, cfg))
 
-      val toked = persist(Blocking.tokenized(newDocs))
-      val nNew = toked.count()
-      val dups = toked.select("doc_id").join(oldFeatures.select("doc_id"), "doc_id").count()
-      require(dups == 0,
-        s"addDocuments: $dups new doc_ids already exist in the committed corpus " +
-          "(increments must be disjoint)")
-      tick("tokenize+dup")
+  /** [[addDocuments]]'s body, committing into `ctx`'s open transaction. */
+  private def insert(ctx: IncrContext, newDocs: DataFrame, cfg: PipelineConfig): Result = {
+    import ctx.{gated, loadStage, persist, pin, runDir, runId, spark, tick}
+    val oldBlocking = loadStage("blocking")
+    val oldScored = loadStage("scored_pairs")
+    val oldAssign = loadStage("cluster_assignments")
+    val oldFeatures = loadStage(StageDocFeatures)
+    val oldHot = loadStage(StageBlockHot)
+    val oldDf = loadStage(StageMediaDf)
+    val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
+      sys.error(s"addDocuments: $StageMediaDf manifest lacks the n_docs counter"))
 
-      // ---- blocking: frozen committed structure, append-only delta.
-      // Broadcast gates in this verb reuse counts the verb already holds
-      // (manifest rows, delta counts) instead of paying one count() job per
-      // gate — the round-6 per-verb job census showed the increment wall is
-      // job-count-bound, not data-bound (OPTIMIZATION_r06.md §5; DriverBound
-      // everywhere).
-      val newKeyed = pin(Blocking.keyedDocs(toked, cfg.numBands, cfg.rowsPerBand, cfg.tokenBands))
-      val hotKeys = pin(oldHot.select("block_key").distinct())
-      // distinct hot keys ≤ committed block_hot rows, known free from the
-      // manifest
-      val hotKeysB = DriverBound.broadcastWithin(hotKeys,
-        Snapshots.lastRows(runDir, StageBlockHot).getOrElse(Long.MaxValue))
-      val inHot = pin(newKeyed.join(hotKeysB, "block_key")
+    val toked = persist(Blocking.tokenized(newDocs))
+    val nNew = toked.count()
+    val dups = toked.select("doc_id").join(oldFeatures.select("doc_id"), "doc_id").count()
+    require(dups == 0,
+      s"addDocuments: $dups new doc_ids already exist in the committed corpus " +
+        "(increments must be disjoint)")
+    tick("tokenize+dup")
+
+    // ---- blocking: frozen committed structure, append-only delta.
+    // Broadcast gates in this verb reuse counts the verb already holds
+    // (manifest rows, delta counts) instead of paying one count() job per
+    // gate — the round-6 per-verb job census showed the increment wall is
+    // job-count-bound, not data-bound (OPTIMIZATION_r06.md §5; DriverBound
+    // everywhere).
+    val newKeyed = pin(Blocking.keyedDocs(toked, cfg.numBands, cfg.rowsPerBand, cfg.tokenBands))
+    val hotKeys = pin(oldHot.select("block_key").distinct())
+    // distinct hot keys ≤ committed block_hot rows, known free from the
+    // manifest
+    val hotKeysB = DriverBound.broadcastWithin(hotKeys,
+      Snapshots.lastRows(runDir, StageBlockHot).getOrElse(Long.MaxValue))
+    val inHot = pin(newKeyed.join(hotKeysB, "block_key")
+      .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
+    val nInHot = inHot.count()
+    val notHot = pin(newKeyed.join(hotKeysB, Seq("block_key"), "left_anti"))
+    // COMMITTED-SMALL keys this one batch floods past the cap (arrival
+    // bursts of one entity): routeKeyed over the new rows alone would cap
+    // them into refinement/chain keys that never meet the committed members
+    // — the committed rows at the key are RAW, not refined, so no candidate
+    // pair between an arrival and a committed member would ever derive, and
+    // the new-docs-only membership written to block_hot would make every
+    // LATER increment splice to a flood-doc representative, permanently
+    // disconnecting the original members. Treat them exactly like
+    // committed-hot keys: splice-chain to the key's committed representative
+    // (min committed doc_id) — the key IS hot now; its members just predate
+    // that. The committed membership probe is one pruned raw-key scan
+    // gated on floodKeys being non-empty, so the common flood-free
+    // increment pays only the tiny per-key count below.
+    val floodKeys = pin(notHot.groupBy("block_key")
+      .agg(count(lit(1)).as("n_new"))
+      .where(col("n_new") > cfg.maxBlockSize).select("block_key"))
+    val nFloodKeysNew = floodKeys.count()
+    val hasFloods = nFloodKeysNew > 0
+    // the common flood-free increment provably has EMPTY flood relations —
+    // derive them as lazy limit(0)s and skip their pins/counts/joins
+    // entirely (bit-identical: no flood key ⇒ no committed member at one ⇒
+    // no splice rows), instead of running ~5 jobs over empty inputs
+    val committedAtFlood =
+      if (!hasFloods) oldBlocking.select(col("block_key"), col("doc_id")).limit(0)
+      else pin(oldBlocking.where(Blocking.isRawKey(col("block_key")))
+        .join(DriverBound.broadcastWithin(floodKeys, nFloodKeysNew), "block_key")
+        .select(col("block_key"), col("doc_id")))
+    val spliceKeysB =
+      if (!hasFloods) committedAtFlood.select("block_key").limit(0)
+      else gated(pin(committedAtFlood.select("block_key").distinct()))
+    val inSmallFlood =
+      if (!hasFloods) notHot.limit(0)
+      else pin(notHot.join(spliceKeysB, "block_key")
         .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
-      val nInHot = inHot.count()
-      val notHot = pin(newKeyed.join(hotKeysB, Seq("block_key"), "left_anti"))
-      // COMMITTED-SMALL keys this one batch floods past the cap (arrival
-      // bursts of one entity): routeKeyed over the new rows alone would cap
-      // them into refinement/chain keys that never meet the committed members
-      // — the committed rows at the key are RAW, not refined, so no candidate
-      // pair between an arrival and a committed member would ever derive, and
-      // the new-docs-only membership written to block_hot would make every
-      // LATER increment splice to a flood-doc representative, permanently
-      // disconnecting the original members. Treat them exactly like
-      // committed-hot keys: splice-chain to the key's committed representative
-      // (min committed doc_id) — the key IS hot now; its members just predate
-      // that. The committed membership probe is one pruned raw-key scan
-      // gated on floodKeys being non-empty, so the common flood-free
-      // increment pays only the tiny per-key count below.
-      val floodKeys = pin(notHot.groupBy("block_key")
-        .agg(count(lit(1)).as("n_new"))
-        .where(col("n_new") > cfg.maxBlockSize).select("block_key"))
-      val nFloodKeysNew = floodKeys.count()
-      val hasFloods = nFloodKeysNew > 0
-      // the common flood-free increment provably has EMPTY flood relations —
-      // derive them as lazy limit(0)s and skip their pins/counts/joins
-      // entirely (bit-identical: no flood key ⇒ no committed member at one ⇒
-      // no splice rows), instead of running ~5 jobs over empty inputs
-      val committedAtFlood =
-        if (!hasFloods) oldBlocking.select(col("block_key"), col("doc_id")).limit(0)
-        else pin(oldBlocking.where(Blocking.isRawKey(col("block_key")))
-          .join(DriverBound.broadcastWithin(floodKeys, nFloodKeysNew), "block_key")
-          .select(col("block_key"), col("doc_id")))
-      val spliceKeysB =
-        if (!hasFloods) committedAtFlood.select("block_key").limit(0)
-        else gated(pin(committedAtFlood.select("block_key").distinct()))
-      val inSmallFlood =
-        if (!hasFloods) notHot.limit(0)
-        else pin(notHot.join(spliceKeysB, "block_key")
-          .select(col("block_key"), col("doc_id"), col("refine0"), col("refine1")))
-      val nSmallFlood = if (!hasFloods) 0L else inSmallFlood.count()
-      val route = Blocking.routeKeyed(
-        if (!hasFloods) notHot
-        else notHot.join(spliceKeysB, Seq("block_key"), "left_anti"),
-        cfg.maxBlockSize, withHotRows = true)
-      val routeRows = pin(route.rows)
-      route.rows.unpersist()
-      val routeHot = pin(route.hotRows.get)
-      route.hotRows.get.unpersist()
-      val touchedHot = pin(inHot.select("block_key").distinct())
-      // distinct touched hot keys ≤ the already-counted inHot rows
-      val touchedHotB = DriverBound.broadcastWithin(touchedHot, nInHot)
-      val reps = oldHot.join(touchedHotB, "block_key")
-        .groupBy("block_key").agg(min(col("doc_id")).as("rep"))
-        .unionByName(committedAtFlood.groupBy("block_key").agg(min(col("doc_id")).as("rep")))
-      // the chain salt must be UNIQUE per increment: n_docs is non-monotonic
-      // once removals exist (a same-sized upsert reuses it, colliding this
-      // increment's chain keys with a committed increment's); the blocking
-      // stage's next snapshot id strictly increases with every commit
-      val chainSalt = Snapshots.lastCommitted(runDir, "blocking").getOrElse(-1L) + 1L
-      val hotRows = pin(Blocking.hotInsertRows(inHot.unionByName(inSmallFlood), reps, chainSalt,
-        cfg.maxBlockSize))
-      val deltaRows = pin(routeRows.unionByName(hotRows))
-      val deltaCount = deltaRows.count()
-      val nFloodKeys =
-        if (!hasFloods) 0L else committedAtFlood.select("block_key").distinct().count()
-      val nFloodCommittedRows = if (!hasFloods) 0L else committedAtFlood.count()
-      val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
-      def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
-      val blockCounters = Map(
-        "blocking_rows" -> (baseC("blocking_rows") + deltaCount),
-        "capped_block_keys" ->
-          (baseC("capped_block_keys") + route.counters("capped_block_keys") + nFloodKeys),
-        "capped_doc_rows" -> (baseC("capped_doc_rows") + route.counters("capped_doc_rows")
-          + nInHot + nSmallFlood + nFloodCommittedRows),
-        "refined_subblocks_kept" ->
-          (baseC("refined_subblocks_kept") + route.counters("refined_subblocks_kept")),
-        "insert_hot_rows" -> (nInHot + nSmallFlood)) ++
-        // history marker: the manifest keeps recording that this run has had
-        // removals, across later inserts
-        baseBlockC.get("removed_docs").map("removed_docs" -> _)
-      val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
-      Snapshots.commitDelta(spark, deltaRows, None, runDir, "blocking", runId,
-        blockCounters, baseBlockRows + deltaCount)
-      // block_hot stays the full raw membership of every hot key: a
-      // newly-flooded committed-small key contributes BOTH its new rows and
-      // its committed raw members, so the next increment's representative
-      // (min doc_id over block_hot) can be a committed doc
-      val hotAdds = routeHot.select(col("block_key"), col("doc_id"))
-        .unionByName(inHot.select(col("block_key"), col("doc_id")))
-        .unionByName(inSmallFlood.select(col("block_key"), col("doc_id")))
-        .unionByName(committedAtFlood.select(col("block_key"), col("doc_id")))
-      val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
-      val hotAddsN = route.counters("capped_doc_rows") + nInHot + nSmallFlood + nFloodCommittedRows
-      Snapshots.commitDelta(spark, hotAdds, None, runDir, StageBlockHot, runId,
-        Map("hot_rows" -> (baseHotRows + hotAddsN)), baseHotRows + hotAddsN)
-      tick("blocking")
+    val nSmallFlood = if (!hasFloods) 0L else inSmallFlood.count()
+    val route = Blocking.routeKeyed(
+      if (!hasFloods) notHot
+      else notHot.join(spliceKeysB, Seq("block_key"), "left_anti"),
+      cfg.maxBlockSize, withHotRows = true)
+    val routeRows = pin(route.rows)
+    route.rows.unpersist()
+    val routeHot = pin(route.hotRows.get)
+    route.hotRows.get.unpersist()
+    val touchedHot = pin(inHot.select("block_key").distinct())
+    // distinct touched hot keys ≤ the already-counted inHot rows
+    val touchedHotB = DriverBound.broadcastWithin(touchedHot, nInHot)
+    val reps = oldHot.join(touchedHotB, "block_key")
+      .groupBy("block_key").agg(min(col("doc_id")).as("rep"))
+      .unionByName(committedAtFlood.groupBy("block_key").agg(min(col("doc_id")).as("rep")))
+    // the chain salt must be UNIQUE per increment: n_docs is non-monotonic
+    // once removals exist (a same-sized upsert reuses it, colliding this
+    // increment's chain keys with a committed increment's); the blocking
+    // stage's next snapshot id strictly increases with every commit
+    val chainSalt = Snapshots.lastCommitted(runDir, "blocking").getOrElse(-1L) + 1L
+    val hotRows = pin(Blocking.hotInsertRows(inHot.unionByName(inSmallFlood), reps, chainSalt,
+      cfg.maxBlockSize))
+    val deltaRows = pin(routeRows.unionByName(hotRows))
+    val deltaCount = deltaRows.count()
+    val nFloodKeys =
+      if (!hasFloods) 0L else committedAtFlood.select("block_key").distinct().count()
+    val nFloodCommittedRows = if (!hasFloods) 0L else committedAtFlood.count()
+    val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
+    def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
+    val blockCounters = Map(
+      "blocking_rows" -> (baseC("blocking_rows") + deltaCount),
+      "capped_block_keys" ->
+        (baseC("capped_block_keys") + route.counters("capped_block_keys") + nFloodKeys),
+      "capped_doc_rows" -> (baseC("capped_doc_rows") + route.counters("capped_doc_rows")
+        + nInHot + nSmallFlood + nFloodCommittedRows),
+      "refined_subblocks_kept" ->
+        (baseC("refined_subblocks_kept") + route.counters("refined_subblocks_kept")),
+      "insert_hot_rows" -> (nInHot + nSmallFlood)) ++
+      // history marker: the manifest keeps recording that this run has had
+      // removals, across later inserts
+      baseBlockC.get("removed_docs").map("removed_docs" -> _)
+    val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
+    Snapshots.commitDelta(spark, deltaRows, None, runDir, "blocking", runId,
+      blockCounters, baseBlockRows + deltaCount)
+    // block_hot stays the full raw membership of every hot key: a
+    // newly-flooded committed-small key contributes BOTH its new rows and
+    // its committed raw members, so the next increment's representative
+    // (min doc_id over block_hot) can be a committed doc
+    val hotAdds = routeHot.select(col("block_key"), col("doc_id"))
+      .unionByName(inHot.select(col("block_key"), col("doc_id")))
+      .unionByName(inSmallFlood.select(col("block_key"), col("doc_id")))
+      .unionByName(committedAtFlood.select(col("block_key"), col("doc_id")))
+    val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
+    val hotAddsN = route.counters("capped_doc_rows") + nInHot + nSmallFlood + nFloodCommittedRows
+    Snapshots.commitDelta(spark, hotAdds, None, runDir, StageBlockHot, runId,
+      Map("hot_rows" -> (baseHotRows + hotAddsN)), baseHotRows + hotAddsN)
+    tick("blocking")
 
-      // ---- fresh candidate pairs from the delta's touched blocks only
-      val deltaKeys = pin(deltaRows.select("block_key").distinct())
-      val oldAtKeys = oldBlocking
-        .join(DriverBound.broadcastWithin(deltaKeys, deltaCount), "block_key")
-        .select(col("block_key"), col("doc_id"))
-      val cand = Blocking.candidatePairs(
-        deltaRows.select(col("block_key"), col("doc_id")).unionByName(oldAtKeys))
-      val fresh = pin(ctx.dropTombstoned(cand.join(oldScored.select("doc_id_a", "doc_id_b"),
-        Seq("doc_id_a", "doc_id_b"), "left_anti")))
-      tick("pairs")
+    // ---- fresh candidate pairs from the delta's touched blocks only
+    val deltaKeys = pin(deltaRows.select("block_key").distinct())
+    val oldAtKeys = oldBlocking
+      .join(DriverBound.broadcastWithin(deltaKeys, deltaCount), "block_key")
+      .select(col("block_key"), col("doc_id"))
+    val cand = Blocking.candidatePairs(
+      deltaRows.select(col("block_key"), col("doc_id")).unionByName(oldAtKeys))
+    val fresh = pin(ctx.dropTombstoned(cand.join(oldScored.select("doc_id_a", "doc_id_b"),
+      Seq("doc_id_a", "doc_id_b"), "left_anti")))
+    tick("pairs")
 
-      // ---- features: merged document frequencies give EXACT batch idf
-      // weights; weight re-attachment runs only over docs in fresh pairs
-      val nTotal = nOld + nNew
-      val mtokNew = persist(PairScoring.mediaTokenRows(toked, cfg.scoring.exclusivePrefix))
-      val dfNew = mtokNew.groupBy("mid").agg(count(lit(1)).as("df"))
-      val dfMerged = oldDf.select(col("mid"), col("df").as("df_old"))
-        .join(dfNew.select(col("mid"), col("df").as("df_new")), Seq("mid"), "full_outer")
-        .select(col("mid"),
-          (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
-      val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
-        Map("n_docs" -> nTotal))
-      val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
-        .join(Blocking.docRefine(toked), "doc_id")
-        .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
-      Snapshots.commitDelta(spark, newStored, None, runDir, StageDocFeatures, runId,
-        Map("n_docs" -> nTotal), nTotal)
-      tick("features")
+    // ---- features: merged document frequencies give EXACT batch idf
+    // weights; weight re-attachment runs only over docs in fresh pairs
+    val nTotal = nOld + nNew
+    val mtokNew = persist(PairScoring.mediaTokenRows(toked, cfg.scoring.exclusivePrefix))
+    val dfNew = mtokNew.groupBy("mid").agg(count(lit(1)).as("df"))
+    val dfMerged = oldDf.select(col("mid"), col("df").as("df_old"))
+      .join(dfNew.select(col("mid"), col("df").as("df_new")), Seq("mid"), "full_outer")
+      .select(col("mid"),
+        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
+    val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
+      Map("n_docs" -> nTotal))
+    val newStored = PairScoring.storedFeatures(toked, mtokNew, cfg.scoring)
+      .join(Blocking.docRefine(toked), "doc_id")
+      .select("doc_id", "refine0", "refine1", "txt", "tok_ids", "m_ids", "x_ids")
+    Snapshots.commitDelta(spark, newStored, None, runDir, StageDocFeatures, runId,
+      Map("n_docs" -> nTotal), nTotal)
+    tick("features")
 
-      // ---- scoring: fresh pairs only, appended as a delta
-      val (scoredFresh, nFresh) = ctx.scoreCommitted(fresh, cDf, nTotal, cfg.scoring)
-      val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-      Snapshots.commitDelta(spark, scoredFresh, None, runDir, "scored_pairs", runId,
-        Map("docs_scored_against" -> nTotal, "pairs_fresh" -> nFresh), basePairRows + nFresh)
-      tick("scoring")
+    // ---- scoring: fresh pairs only, appended as a delta
+    val (scoredFresh, nFresh) = ctx.scoreCommitted(fresh, cDf, nTotal, cfg.scoring)
+    val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
+    Snapshots.commitDelta(spark, scoredFresh, None, runDir, "scored_pairs", runId,
+      Map("docs_scored_against" -> nTotal, "pairs_fresh" -> nFresh), basePairRows + nFresh)
+    tick("scoring")
 
-      // ---- clustering: only components ADJACENT to a fresh >= threshold
-      // edge (plus all new docs) enter the CC loop — their committed merges
-      // ride in as star edges (merge-monotone). Identical to running CC over
-      // (all stars + fresh edges): a component with no fresh edge reproduces
-      // itself (its star IS its fixpoint, cluster_id = min doc_id), so
-      // excluding it changes nothing. The delta removes active cluster ids,
-      // adds their re-labeled assignments plus the new docs
-      val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
-        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
-      // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
-      // by the fresh-pair count the scoring phase already took
-      def freshGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, 2 * nFresh)
-      val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
-        .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
-      val activeCl = pin(oldAssign.join(freshGate(endpoints), "doc_id")
-        .select("cluster_id").distinct())
-      val activeClB = freshGate(activeCl)
-      val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
-      val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
-      val ccIters = ctx.commitClusters(
-        activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id"))),
-        freshEdges.unionByName(starActive), pairsPreDeduped = false, activeCl, nTotal,
-        cfg.maxCcIter)
-      tick("clustering")
+    // ---- clustering: only components ADJACENT to a fresh >= threshold
+    // edge (plus all new docs) enter the CC loop — their committed merges
+    // ride in as star edges (merge-monotone). Identical to running CC over
+    // (all stars + fresh edges): a component with no fresh edge reproduces
+    // itself (its star IS its fixpoint, cluster_id = min doc_id), so
+    // excluding it changes nothing. The delta removes active cluster ids,
+    // adds their re-labeled assignments plus the new docs
+    val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
+      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
+    // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
+    // by the fresh-pair count the scoring phase already took
+    def freshGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, 2 * nFresh)
+    val endpoints = pin(freshEdges.select(col("src").as("doc_id"))
+      .unionByName(freshEdges.select(col("dst").as("doc_id"))).distinct())
+    val activeCl = pin(oldAssign.join(freshGate(endpoints), "doc_id")
+      .select("cluster_id").distinct())
+    val activeClB = freshGate(activeCl)
+    val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
+    val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
+      .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
+    val ccIters = ctx.commitClusters(
+      activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id"))),
+      freshEdges.unionByName(starActive), pairsPreDeduped = false, activeCl, nTotal,
+      cfg.maxCcIter)
+    tick("clustering")
 
-      ctx.committed(ccIters, blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
-        "pairs_fresh" -> nFresh, "cc_iterations" -> ccIters.toLong, "insert_mode" -> 1L))
-    }
+    ctx.committed(ccIters, blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
+      "pairs_fresh" -> nFresh, "cc_iterations" -> ccIters.toLong, "insert_mode" -> 1L))
+  }
 
   /** RETRACTION: remove committed documents from a checkpointed run WITHOUT
     * re-reading the surviving corpus — the takedown/right-to-be-forgotten
@@ -772,172 +768,175 @@ object EntityResolution {
   def removeDocuments(spark: SparkSession, docIds: DataFrame, runDir: String,
                       cfg: PipelineConfig = PipelineConfig(),
                       runId: String = "remove"): Result =
-    new IncrContext(spark, runDir, "removeDocuments", runId).run { ctx =>
-      import ctx.{gated, loadStage, persist, pin, tick}
-      val oldBlocking = loadStage("blocking")
-      // scored_pairs is this operation's dominant relation and feeds ~6
-      // actions below (retraction, lost-edge derivation, heal anti-join,
-      // surviving-edge derivation): persist the RESOLVED relation once so a
-      // deep delta chain's merge-on-read is not re-executed per consumer
-      val oldScored = persist(loadStage("scored_pairs"))
-      val oldAssign = loadStage("cluster_assignments")
-      val oldFeatures = loadStage(StageDocFeatures)
-      val oldHot = loadStage(StageBlockHot)
-      val oldDf = loadStage(StageMediaDf)
-      val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
-        sys.error(s"removeDocuments: $StageMediaDf manifest lacks the n_docs counter"))
+    new IncrContext(spark, runDir, "removeDocuments", runId).run(retract(_, docIds, cfg))
 
-      // count once, gate every derived broadcast on that one number (the
-      // verb was job-count-bound; gated() pays one count job per call)
-      val removed = pin(docIds.select(col("doc_id")).distinct())
-      val nRemoved = removed.count()
-      def rmGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, nRemoved)
-      val removedB = rmGate(removed)
-      require(nRemoved > 0, "removeDocuments: empty doc_id set")
-      val unknown = removed.join(oldFeatures.select("doc_id"), Seq("doc_id"), "left_anti").count()
-      require(unknown == 0,
-        s"removeDocuments: $unknown requested doc_ids are not in the committed corpus")
-      val nTotal = nOld - nRemoved
-      tick("resolve+check")
+  /** [[removeDocuments]]'s body, committing into `ctx`'s open transaction. */
+  private def retract(ctx: IncrContext, docIds: DataFrame, cfg: PipelineConfig): Result = {
+    import ctx.{gated, loadStage, persist, pin, runDir, runId, spark, tick}
+    val oldBlocking = loadStage("blocking")
+    // scored_pairs is this operation's dominant relation and feeds ~6
+    // actions below (retraction, lost-edge derivation, heal anti-join,
+    // surviving-edge derivation): persist the RESOLVED relation once so a
+    // deep delta chain's merge-on-read is not re-executed per consumer
+    val oldScored = persist(loadStage("scored_pairs"))
+    val oldAssign = loadStage("cluster_assignments")
+    val oldFeatures = loadStage(StageDocFeatures)
+    val oldHot = loadStage(StageBlockHot)
+    val oldDf = loadStage(StageMediaDf)
+    val nOld = Snapshots.lastCounters(runDir, StageMediaDf).getOrElse("n_docs",
+      sys.error(s"removeDocuments: $StageMediaDf manifest lacks the n_docs counter"))
 
-      // ---- blocking + block_hot: keyed remove of every row of a removed doc
-      // (raw, refined, and chain rows all belong to their doc)
-      val removedBlockRows = oldBlocking.join(removedB, "doc_id").count()
-      val removedHotRows = oldHot.join(removedB, "doc_id").count()
-      val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
-      def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
-      val blockCounters = Map(
-        "blocking_rows" -> (baseC("blocking_rows") - removedBlockRows),
-        "capped_block_keys" -> baseC("capped_block_keys"),
-        "capped_doc_rows" -> math.max(0L, baseC("capped_doc_rows") - removedHotRows),
-        "refined_subblocks_kept" -> baseC("refined_subblocks_kept"),
-        "removed_docs" -> (baseC("removed_docs") + nRemoved)) ++
-        // and the insert history marker survives removals
-        baseBlockC.get("insert_hot_rows").map("insert_hot_rows" -> _)
-      val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
-      // empty-adds deltas repartition(1) so the data dir always holds ONE
-      // schema-bearing parquet file (a 0-partition write would leave the
-      // delta's adds unreadable)
-      Snapshots.commitDelta(spark, oldBlocking.limit(0).repartition(1),
-        Some((removed, Seq("doc_id"))),
-        runDir, "blocking", runId, blockCounters, baseBlockRows - removedBlockRows)
-      val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
-      Snapshots.commitDelta(spark, oldHot.limit(0).repartition(1), Some((removed, Seq("doc_id"))),
-        runDir, StageBlockHot, runId,
-        Map("hot_rows" -> (baseHotRows - removedHotRows)), baseHotRows - removedHotRows)
-      tick("blocking")
+    // count once, gate every derived broadcast on that one number (the
+    // verb was job-count-bound; gated() pays one count job per call)
+    val removed = pin(docIds.select(col("doc_id")).distinct())
+    val nRemoved = removed.count()
+    def rmGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, nRemoved)
+    val removedB = rmGate(removed)
+    require(nRemoved > 0, "removeDocuments: empty doc_id set")
+    val unknown = removed.join(oldFeatures.select("doc_id"), Seq("doc_id"), "left_anti").count()
+    require(unknown == 0,
+      s"removeDocuments: $unknown requested doc_ids are not in the committed corpus")
+    val nTotal = nOld - nRemoved
+    tick("resolve+check")
 
-      // ---- features: decrement document frequencies by the removed docs'
-      // stored media ids (mediaTokens is distinct per doc, so each m_ids
-      // element is exactly one df count); doc_features keyed-removes the docs
-      val dfRemoved = oldFeatures.join(removedB, "doc_id")
-        .select(explode(col("m_ids")).as("mid"))
-        .groupBy("mid").agg(count(lit(1)).as("df_rm"))
-      val dfMerged = oldDf.join(dfRemoved, Seq("mid"), "left")
-        .select(col("mid"), (col("df") - coalesce(col("df_rm"), lit(0L))).as("df"))
-        .where(col("df") > 0)
-      val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
-        Map("n_docs" -> nTotal))
-      Snapshots.commitDelta(spark, oldFeatures.limit(0).repartition(1),
-        Some((removed, Seq("doc_id"))),
-        runDir, StageDocFeatures, runId, Map("n_docs" -> nTotal), nTotal)
-      tick("features")
+    // ---- blocking + block_hot: keyed remove of every row of a removed doc
+    // (raw, refined, and chain rows all belong to their doc)
+    val removedBlockRows = oldBlocking.join(removedB, "doc_id").count()
+    val removedHotRows = oldHot.join(removedB, "doc_id").count()
+    val baseBlockC = Snapshots.lastCounters(runDir, "blocking")
+    def baseC(k: String): Long = baseBlockC.getOrElse(k, 0L)
+    val blockCounters = Map(
+      "blocking_rows" -> (baseC("blocking_rows") - removedBlockRows),
+      "capped_block_keys" -> baseC("capped_block_keys"),
+      "capped_doc_rows" -> math.max(0L, baseC("capped_doc_rows") - removedHotRows),
+      "refined_subblocks_kept" -> baseC("refined_subblocks_kept"),
+      "removed_docs" -> (baseC("removed_docs") + nRemoved)) ++
+      // and the insert history marker survives removals
+      baseBlockC.get("insert_hot_rows").map("insert_hot_rows" -> _)
+    val baseBlockRows = Snapshots.lastRows(runDir, "blocking").getOrElse(baseC("blocking_rows"))
+    // empty-adds deltas repartition(1) so the data dir always holds ONE
+    // schema-bearing parquet file (a 0-partition write would leave the
+    // delta's adds unreadable)
+    Snapshots.commitDelta(spark, oldBlocking.limit(0).repartition(1),
+      Some((removed, Seq("doc_id"))),
+      runDir, "blocking", runId, blockCounters, baseBlockRows - removedBlockRows)
+    val baseHotRows = Snapshots.lastCounters(runDir, StageBlockHot).getOrElse("hot_rows", 0L)
+    Snapshots.commitDelta(spark, oldHot.limit(0).repartition(1), Some((removed, Seq("doc_id"))),
+      runDir, StageBlockHot, runId,
+      Map("hot_rows" -> (baseHotRows - removedHotRows)), baseHotRows - removedHotRows)
+    tick("blocking")
 
-      // ---- scored pairs: retract every pair touching a removed doc; then
-      // splice-heal — chain each removed doc's surviving strong neighbors
-      // consecutively and re-score those candidates (current corpus weights)
-      val rmA = rmGate(removed.select(col("doc_id").as("doc_id_a")))
-      val rmB2 = rmGate(removed.select(col("doc_id").as("doc_id_b")))
-      val rmPairs = pin(oldScored.join(rmA, "doc_id_a").select("doc_id_a", "doc_id_b")
-        .unionByName(oldScored.join(rmB2, "doc_id_b").select("doc_id_a", "doc_id_b"))
-        .dropDuplicates("doc_id_a", "doc_id_b"))
-      val nRmPairs = rmPairs.count()
-      val strong = oldScored.where(col("score") >= cfg.scoreThreshold)
-        .select("doc_id_a", "doc_id_b")
-      // connectivity may run THROUGH a chain of removed docs (k1–r1–r2–k2
-      // with r1 AND r2 removed): group the removed docs over removed↔removed
-      // strong edges and bridge each GROUP's surviving neighborhood — healing
-      // per removed doc alone would never emit the (k1,k2) candidate and the
-      // cluster would silently split where a batch run keeps it whole. The
-      // grouping CC runs over the removed subgraph only: O(removed pairs)
-      val rmEdges = strong.join(rmA, "doc_id_a").join(rmB2, "doc_id_b")
-        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      // the removed subgraph is DELTA-sized by contract and both its bounds
-      // are already counted (nRemoved; rmEdges ⊆ rmPairs): within
-      // DriverBound the grouping runs as a driver union-find (identical
-      // labels, ~15 fewer fixed jobs); beyond it, the distributed loop
-      val rmGroupsAssign =
-        if (nRemoved <= DriverBound.MaxRows && nRmPairs <= DriverBound.MaxRows)
-          ConnectedComponents.assignAllDriver(spark, removed.select("doc_id"), rmEdges)
-        else {
-          val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"),
-            rmEdges, cfg.maxCcIter, pairsPreDeduped = true)
-          val a = pin(rmCc.assignments)
-          rmCc.releaseCheckpoints(spark)
-          a
-        }
-      val rmGroups = pin(rmGroupsAssign
-        .select(col("doc_id").as("gone"), col("cluster_id").as("grp")))
-      val lost = pin(
-        strong.join(rmA, "doc_id_a").join(rmB2, Seq("doc_id_b"), "left_anti")
-          .select(col("doc_id_a").as("gone"), col("doc_id_b").as("kept"))
-        .unionByName(
-          strong.join(rmB2, "doc_id_b").join(rmA, Seq("doc_id_a"), "left_anti")
-            .select(col("doc_id_b").as("gone"), col("doc_id_a").as("kept")))
-        // the same survivor can neighbor several docs of one group — dedup or
-        // the window would chain a survivor to itself
-        .join(rmGate(rmGroups), "gone")
-        .select("grp", "kept").dropDuplicates("grp", "kept"))
-      // neighbors sorted lexicographically, so consecutive pairs are already
-      // canonical (a < b); |N|-1 pairs per removed GROUP reconnect exactly
-      // what the group connected, subject to re-scoring
-      val wNext = org.apache.spark.sql.expressions.Window.partitionBy("grp").orderBy("kept")
-      val healCand = pin(lost
-        .select(col("kept"), lead(col("kept"), 1).over(wNext).as("next"))
-        .where(col("next").isNotNull)
-        .select(col("kept").as("doc_id_a"), col("next").as("doc_id_b"))
-        .dropDuplicates("doc_id_a", "doc_id_b")
-        .join(oldScored.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"), "left_anti")
-        .transform(ctx.dropTombstoned)
-        .withColumn("block_key",
-          Blocking.famTag(Blocking.Family.Heal, xxhash64(col("doc_id_a"), col("doc_id_b")))))
-      val (scoredHeal, nHeal) = ctx.scoreCommitted(healCand, cDf, nTotal, cfg.scoring)
-      val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
-      Snapshots.commitDelta(spark, scoredHeal, Some((rmPairs, Seq("doc_id_a", "doc_id_b"))),
-        runDir, "scored_pairs", runId,
-        Map("docs_scored_against" -> nTotal, "pairs_removed" -> nRmPairs,
-          "heal_pairs_scored" -> nHeal),
-        basePairRows - nRmPairs + nHeal)
-      tick("pairs+heal")
+    // ---- features: decrement document frequencies by the removed docs'
+    // stored media ids (mediaTokens is distinct per doc, so each m_ids
+    // element is exactly one df count); doc_features keyed-removes the docs
+    val dfRemoved = oldFeatures.join(removedB, "doc_id")
+      .select(explode(col("m_ids")).as("mid"))
+      .groupBy("mid").agg(count(lit(1)).as("df_rm"))
+    val dfMerged = oldDf.join(dfRemoved, Seq("mid"), "left")
+      .select(col("mid"), (col("df") - coalesce(col("df_rm"), lit(0L))).as("df"))
+      .where(col("df") > 0)
+    val cDf = Snapshots.commit(spark, dfMerged, runDir, StageMediaDf, runId,
+      Map("n_docs" -> nTotal))
+    Snapshots.commitDelta(spark, oldFeatures.limit(0).repartition(1),
+      Some((removed, Seq("doc_id"))),
+      runDir, StageDocFeatures, runId, Map("n_docs" -> nTotal), nTotal)
+    tick("features")
 
-      // ---- clustering: recompute ONLY clusters containing a removed doc,
-      // over their SURVIVING strong edges plus the heal edges (no committed
-      // star edges — they would preserve connectivity through removed docs)
-      val activeCl = pin(oldAssign.join(removedB, "doc_id").select("cluster_id").distinct())
-      val survActive = pin(oldAssign.join(rmGate(activeCl), "cluster_id")
-        .join(removedB, Seq("doc_id"), "left_anti"))
-      val sA = gated(survActive.select(col("doc_id").as("doc_id_a")))
-      // a committed pair's endpoints share a cluster, so "a surviving-active,
-      // b not removed" puts both endpoints in the surviving-active set
-      val edgesCommitted = strong.join(sA, "doc_id_a")
-        .join(rmB2, Seq("doc_id_b"), "left_anti")
-      val healEdges = scoredHeal.where(col("score") >= cfg.scoreThreshold)
-        .select("doc_id_a", "doc_id_b")
-      val edges = edgesCommitted.unionByName(healEdges)
-        .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-      // committed pairs are unique and heal pairs were anti-joined against
-      // them, so the union is pair-unique — CC skips its initial dedup
-      val ccIters = ctx.commitClusters(survActive.select("doc_id"), edges,
-        pairsPreDeduped = true, activeCl,
-        Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld) - nRemoved,
-        cfg.maxCcIter)
-      val clustersActive = activeCl.count()
-      tick("clustering")
+    // ---- scored pairs: retract every pair touching a removed doc; then
+    // splice-heal — chain each removed doc's surviving strong neighbors
+    // consecutively and re-score those candidates (current corpus weights)
+    val rmA = rmGate(removed.select(col("doc_id").as("doc_id_a")))
+    val rmB2 = rmGate(removed.select(col("doc_id").as("doc_id_b")))
+    val rmPairs = pin(oldScored.join(rmA, "doc_id_a").select("doc_id_a", "doc_id_b")
+      .unionByName(oldScored.join(rmB2, "doc_id_b").select("doc_id_a", "doc_id_b"))
+      .dropDuplicates("doc_id_a", "doc_id_b"))
+    val nRmPairs = rmPairs.count()
+    val strong = oldScored.where(col("score") >= cfg.scoreThreshold)
+      .select("doc_id_a", "doc_id_b")
+    // connectivity may run THROUGH a chain of removed docs (k1–r1–r2–k2
+    // with r1 AND r2 removed): group the removed docs over removed↔removed
+    // strong edges and bridge each GROUP's surviving neighborhood — healing
+    // per removed doc alone would never emit the (k1,k2) candidate and the
+    // cluster would silently split where a batch run keeps it whole. The
+    // grouping CC runs over the removed subgraph only: O(removed pairs)
+    val rmEdges = strong.join(rmA, "doc_id_a").join(rmB2, "doc_id_b")
+      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+    // the removed subgraph is DELTA-sized by contract and both its bounds
+    // are already counted (nRemoved; rmEdges ⊆ rmPairs): within
+    // DriverBound the grouping runs as a driver union-find (identical
+    // labels, ~15 fewer fixed jobs); beyond it, the distributed loop
+    val rmGroupsAssign =
+      if (nRemoved <= DriverBound.MaxRows && nRmPairs <= DriverBound.MaxRows)
+        ConnectedComponents.assignAllDriver(spark, removed.select("doc_id"), rmEdges)
+      else {
+        val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"),
+          rmEdges, cfg.maxCcIter, pairsPreDeduped = true)
+        val a = pin(rmCc.assignments)
+        rmCc.releaseCheckpoints(spark)
+        a
+      }
+    val rmGroups = pin(rmGroupsAssign
+      .select(col("doc_id").as("gone"), col("cluster_id").as("grp")))
+    val lost = pin(
+      strong.join(rmA, "doc_id_a").join(rmB2, Seq("doc_id_b"), "left_anti")
+        .select(col("doc_id_a").as("gone"), col("doc_id_b").as("kept"))
+      .unionByName(
+        strong.join(rmB2, "doc_id_b").join(rmA, Seq("doc_id_a"), "left_anti")
+          .select(col("doc_id_b").as("gone"), col("doc_id_a").as("kept")))
+      // the same survivor can neighbor several docs of one group — dedup or
+      // the window would chain a survivor to itself
+      .join(rmGate(rmGroups), "gone")
+      .select("grp", "kept").dropDuplicates("grp", "kept"))
+    // neighbors sorted lexicographically, so consecutive pairs are already
+    // canonical (a < b); |N|-1 pairs per removed GROUP reconnect exactly
+    // what the group connected, subject to re-scoring
+    val wNext = org.apache.spark.sql.expressions.Window.partitionBy("grp").orderBy("kept")
+    val healCand = pin(lost
+      .select(col("kept"), lead(col("kept"), 1).over(wNext).as("next"))
+      .where(col("next").isNotNull)
+      .select(col("kept").as("doc_id_a"), col("next").as("doc_id_b"))
+      .dropDuplicates("doc_id_a", "doc_id_b")
+      .join(oldScored.select("doc_id_a", "doc_id_b"), Seq("doc_id_a", "doc_id_b"), "left_anti")
+      .transform(ctx.dropTombstoned)
+      .withColumn("block_key",
+        Blocking.famTag(Blocking.Family.Heal, xxhash64(col("doc_id_a"), col("doc_id_b")))))
+    val (scoredHeal, nHeal) = ctx.scoreCommitted(healCand, cDf, nTotal, cfg.scoring)
+    val basePairRows = Snapshots.lastRows(runDir, "scored_pairs").getOrElse(0L)
+    Snapshots.commitDelta(spark, scoredHeal, Some((rmPairs, Seq("doc_id_a", "doc_id_b"))),
+      runDir, "scored_pairs", runId,
+      Map("docs_scored_against" -> nTotal, "pairs_removed" -> nRmPairs,
+        "heal_pairs_scored" -> nHeal),
+      basePairRows - nRmPairs + nHeal)
+    tick("pairs+heal")
 
-      ctx.committed(ccIters, blockCounters ++ Map("docs_removed" -> nRemoved,
-        "docs_total" -> nTotal, "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
-        "clusters_recomputed" -> clustersActive, "cc_iterations" -> ccIters.toLong))
-    }
+    // ---- clustering: recompute ONLY clusters containing a removed doc,
+    // over their SURVIVING strong edges plus the heal edges (no committed
+    // star edges — they would preserve connectivity through removed docs)
+    val activeCl = pin(oldAssign.join(removedB, "doc_id").select("cluster_id").distinct())
+    val survActive = pin(oldAssign.join(rmGate(activeCl), "cluster_id")
+      .join(removedB, Seq("doc_id"), "left_anti"))
+    val sA = gated(survActive.select(col("doc_id").as("doc_id_a")))
+    // a committed pair's endpoints share a cluster, so "a surviving-active,
+    // b not removed" puts both endpoints in the surviving-active set
+    val edgesCommitted = strong.join(sA, "doc_id_a")
+      .join(rmB2, Seq("doc_id_b"), "left_anti")
+    val healEdges = scoredHeal.where(col("score") >= cfg.scoreThreshold)
+      .select("doc_id_a", "doc_id_b")
+    val edges = edgesCommitted.unionByName(healEdges)
+      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
+    // committed pairs are unique and heal pairs were anti-joined against
+    // them, so the union is pair-unique — CC skips its initial dedup
+    val ccIters = ctx.commitClusters(survActive.select("doc_id"), edges,
+      pairsPreDeduped = true, activeCl,
+      Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld) - nRemoved,
+      cfg.maxCcIter)
+    val clustersActive = activeCl.count()
+    tick("clustering")
+
+    ctx.committed(ccIters, blockCounters ++ Map("docs_removed" -> nRemoved,
+      "docs_total" -> nTotal, "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
+      "clusters_recomputed" -> clustersActive, "cc_iterations" -> ccIters.toLong))
+  }
 
   /** AUDIT-REPAIR (the fourth incremental verb): post-clustering
     * cluster-quality audit over a committed run — find clusters glued by
@@ -1230,38 +1229,39 @@ object EntityResolution {
     * standing deployment needs (daily feeds carry revisions alongside fresh
     * docs). Composed from the two verbs whose semantics are already proven:
     * the doc_ids of `newVersions` that exist in the committed corpus are
-    * retracted via [[removeDocuments]] (testimony of the OLD version leaves
-    * the evidence set; its clusters recompute over surviving edges), then
-    * ALL of `newVersions` enters as one O(delta) [[addDocuments]] insert
-    * increment (the new versions re-block, re-pair, and re-cluster under
-    * current corpus statistics). Two delta snapshots per stage on one
-    * history, one commit record per half; a revision that changes a doc's
-    * content MOVES it between clusters exactly as a batch run over the
-    * edited corpus would.
+    * retracted by [[removeDocuments]]'s body (testimony of the OLD version
+    * leaves the evidence set; its clusters recompute over surviving edges),
+    * then ALL of `newVersions` enters through [[addDocuments]]'s O(delta)
+    * body (the new versions re-block, re-pair, and re-cluster under current
+    * corpus statistics), which reads the retraction's snapshots through the
+    * open transaction. Two delta snapshots per stage, ONE commit record: a
+    * reader never sees the revised docs missing, and a crash publishes
+    * neither half. A revision that changes a doc's content MOVES it between
+    * clusters exactly as a batch run over the edited corpus would.
     * No-op-free: requires a nonempty `newVersions`.
     */
   def replaceDocuments(spark: SparkSession, newVersions: DataFrame, runDir: String,
                        cfg: PipelineConfig = PipelineConfig(),
-                       runId: String = "replace"): Result = {
-    val ids = newVersions.select(col("doc_id")).distinct()
-    val committed = Snapshots.loadCommitted(spark, runDir, StageDocFeatures).getOrElse(
-      sys.error(s"replaceDocuments: no committed '$StageDocFeatures' snapshot under $runDir"))
-      .select("doc_id")
-    val toRemove = ids.join(committed, Seq("doc_id"), "left_semi")
-    val nReplaced = toRemove.count()
-    // the retraction half's call-specific counters ride on the returned
-    // Result under an rm_ prefix — an upsert that retracts millions of
-    // pairs must be distinguishable from a no-op retraction in the metrics
-    val rmCounters: Map[String, Long] =
-      if (nReplaced == 0) Map.empty
-      else {
-        val rm = removeDocuments(spark, toRemove, runDir, cfg, runId = s"$runId-rm")
-        Seq("pairs_removed", "heal_pairs_scored", "clusters_recomputed")
-          .flatMap(k => rm.counters.get(k).map(("rm_" + k) -> _)).toMap
-      }
-    val ins = addDocuments(spark, newVersions, runDir, cfg, runId = s"$runId-ins")
-    ins.copy(counters = ins.counters ++ rmCounters + ("docs_replaced" -> nReplaced))
-  }
+                       runId: String = "replace"): Result =
+    new IncrContext(spark, runDir, "replaceDocuments", runId).run { ctx =>
+      val toRemove = newVersions.select(col("doc_id")).distinct()
+        .join(ctx.loadStage(StageDocFeatures).select("doc_id"), Seq("doc_id"), "left_semi")
+      val nReplaced = toRemove.count()
+      // the retraction half's call-specific counters ride on the returned
+      // Result under an rm_ prefix — an upsert that retracts millions of
+      // pairs must be distinguishable from a no-op retraction in the metrics
+      val rmCounters: Map[String, Long] =
+        if (nReplaced == 0) Map.empty
+        else {
+          val rm = retract(ctx, toRemove, cfg)
+          // free the retraction's pins before the insert pins its own
+          ctx.release()
+          Seq("pairs_removed", "heal_pairs_scored", "clusters_recomputed")
+            .flatMap(k => rm.counters.get(k).map(("rm_" + k) -> _)).toMap
+        }
+      val ins = insert(ctx, newVersions, cfg)
+      ins.copy(counters = ins.counters ++ rmCounters + ("docs_replaced" -> nReplaced))
+    }
 
   /** MAJOR-compact every stage of a committed run: each stage's delta
     * chain is materialized as a full snapshot, so reads stop paying

@@ -10,8 +10,9 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
   * committed snapshot plus one loud ConcurrentCommitException — never a
   * shared directory with interleaved files; (b) a writer that crashes
   * before publishing leaves only invisible staging garbage, swept by
-  * repair's cleanAttempts; (c) two writers that both read commit record v
-  * race at record v + 1, and exactly one publishes it.
+  * repair's cleanAttempts, and crash garbage under a `snapshot=` name is
+  * never published onto (fresh ids go above it); (c) two writers that both
+  * read commit record v race at record v + 1, and exactly one publishes it.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -79,43 +80,22 @@ class ConcurrencySpec extends SparkSpec {
     }
   }
 
-  test("garbage absorb under a same-id race: exactly one winner, the garbage gone, no data loss") {
+  test("a marker-less snapshot dir is never a publish target: commit goes above it, repair sweeps it") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-absorb").toString
+    val tmp = Files.createTempDirectory("graft-garbage").toString
     Snapshots.commit(spark, Seq(0L).toDF("v"), tmp, "t", "base", Map.empty) // id 0
-    // crash garbage squatting on the NEXT id: a marker-less snapshot dir
-    // (e.g. a pre-protocol partial commit) — both racing writers must
-    // absorb it before publishing. An in-place delete here is the data-loss
-    // bug: writer B's delete can land AFTER writer A absorbed and
-    // published, destroying A's committed snapshot with both reporting
-    // success. The atomic move-aside makes one-winner the only outcome.
+    // crash garbage at the next id: a snapshot dir without its marker (a
+    // dropSnapshot interrupted after deleting the marker, say)
     Seq(13L).toDF("v").write.parquet(s"$tmp/t/snapshot=1/data")
     assert(Snapshots.snapshots(tmp, "t") == Seq(0L)) // invisible to readers
-
-    val start = new CountDownLatch(1)
-    val pool = Executors.newFixedThreadPool(2)
-    def writer(tag: Long) = pool.submit(new java.util.concurrent.Callable[String] {
-      def call(): String = {
-        start.await()
-        try {
-          Snapshots.commitAt(spark, Seq(tag).toDF("v"), tmp, "t", s"w$tag", Map.empty, 1L)
-          "ok"
-        } catch { case _: Snapshots.ConcurrentCommitException => "lost" }
-      }
-    })
-    val (fa, fb) = (writer(111L), writer(222L))
-    start.countDown()
-    val outcomes = Seq(fa, fb).map(_.get(120, TimeUnit.SECONDS)).sorted
-    pool.shutdown()
-
-    assert(outcomes == Seq("lost", "ok"), s"outcomes=$outcomes")
-    val v = vals(Snapshots.loadSnapshot(spark, tmp, "t", 1L))
-    assert(v == Set(111L) || v == Set(222L), s"snapshot=1 holds $v — garbage or interleaved")
-    assert(Snapshots.snapshots(tmp, "t") == Seq(0L, 1L))
-    // neither the losing attempt nor any absorb-aside dir survives
-    val leftover = scala.util.Using.resource(Files.list(Paths.get(s"$tmp/t")))(
-      _.toArray.toSeq.map(p => Paths.get(p.toString).getFileName.toString))
-    assert(!leftover.exists(_.startsWith("_attempt_")), s"stale dirs left: $leftover")
+    val c = Snapshots.commit(spark, Seq(111L).toDF("v"), tmp, "t", "w", Map.empty)
+    assert(c.snapshotId == 2L, "a fresh id goes above every snapshot dir, garbage included")
+    assert(Snapshots.snapshots(tmp, "t") == Seq(0L, 2L))
+    assert(Snapshots.lastCommitted(tmp, "t").contains(2L))
+    assert(vals(Snapshots.loadCommitted(spark, tmp, "t").get) == Set(111L))
+    assert(Snapshots.repair(tmp) == Seq(s"$tmp/t/snapshot=1"))
+    assert(Snapshots.snapshotDirIds(tmp, "t") == Seq(0L, 2L))
+    assert(vals(Snapshots.loadSnapshot(spark, tmp, "t", 0L)) == Set(0L))
   }
 
   test("a crashed writer's staging dir is invisible to readers and swept by cleanAttempts") {
@@ -142,23 +122,25 @@ class ConcurrencySpec extends SparkSpec {
     assert(vals(Snapshots.loadCommitted(spark, tmp, "t").get) == Set(7L))
   }
 
-  test("cleanAttempts refuses a stranded COMMITTED snapshot (interrupted absorb)") {
+  test("cleanAttempts sweeps a crashed attempt that already holds its _COMMITTED marker") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-stranded").toString
+    val tmp = Files.createTempDirectory("graft-marked").toString
     Snapshots.commit(spark, Seq(7L).toDF("v"), tmp, "t", "r0", Map("n" -> 1L))
-    // a crash between publish's move-aside and restore leaves the COMMITTED
-    // snapshot under an _attempt_absorb_* name — possibly the only copy
-    val aside = Paths.get(s"$tmp/t/_attempt_absorb_cafe")
-    Seq(9L).toDF("v").write.parquet(s"$aside/data")
-    Files.writeString(aside.resolve("_COMMITTED"), "ok")
-    // and genuine staging garbage next to it
-    val garbage = Paths.get(s"$tmp/t/_attempt_feed")
-    Seq(5L).toDF("v").write.parquet(s"$garbage/data")
+    // a writer that crashed between writing the marker inside its attempt
+    // and the publish rename
+    val marked = Paths.get(s"$tmp/t/_attempt_cafe")
+    Seq(9L).toDF("v").write.parquet(s"$marked/data")
+    Files.writeString(marked.resolve("_COMMITTED"), "ok")
+    // and one that crashed mid-write
+    val partial = Paths.get(s"$tmp/t/_attempt_feed")
+    Seq(5L).toDF("v").write.parquet(s"$partial/data")
     val swept = Snapshots.cleanAttempts(tmp, "t")
-    assert(swept.size == 1 && swept.head.contains("_attempt_feed"))
-    assert(!Files.exists(garbage))
-    assert(Files.exists(aside.resolve("_COMMITTED")),
-      "the stranded committed snapshot must survive the sweep")
+    assert(swept.map(p => Paths.get(p).getFileName.toString).sorted ==
+      Seq("_attempt_cafe", "_attempt_feed"), s"swept $swept")
+    assert(!Files.exists(marked) && !Files.exists(partial))
+    assert(Snapshots.snapshots(tmp, "t") == Seq(0L))
+    assert(vals(Snapshots.loadCommitted(spark, tmp, "t").get) == Set(7L))
+    assert(Snapshots.repair(tmp).isEmpty, "nothing left to sweep")
   }
 
   test("record CAS: two writers from record v, exactly one publishes v + 1") {

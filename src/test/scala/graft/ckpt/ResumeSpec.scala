@@ -63,6 +63,53 @@ class ResumeSpec extends SparkSpec {
       assert(Snapshots.lastCommitted(tmp, s).isDefined, s"aux stage $s not committed"))
   }
 
+  test("run into an existing run dir without resume republishes every stage") {
+    val small = GenConfig(numEntities = 30, docsPerEntity = 3, seed = 7L)
+    val big = small.copy(numEntities = 35)
+    val tmp = Files.createTempDirectory("graft-rerun").toString
+    EntityResolution.run(spark, DocGen.docs(spark, small).toDF(), runDir = Some(tmp),
+      runId = "r1").release()
+    val res = EntityResolution.run(spark, DocGen.docs(spark, big).toDF(), runDir = Some(tmp),
+      runId = "r2")
+    assert(res.assignments.count() == big.numDocs, "CC ran over the first run's doc universe")
+    assert(graft.eval.Eval.clusterEquality(res.assignments, DocGen.gold(spark, big).toDF()))
+    // the aux stages are this run's, not the first run's
+    val rec = Snapshots.record(tmp)
+    assert(rec.runId == "r2" && rec.written == EntityResolution.LockstepStages.toSet, s"$rec")
+    Seq("doc_features", "media_df").foreach(s =>
+      assert(Snapshots.lastCounters(tmp, s)("n_docs") == big.numDocs, s"stale $s"))
+    res.release()
+  }
+
+  test("resume after a crash between the blocking and block_hot commits recomputes blocking") {
+    val spark2 = spark
+    import spark2.implicits._
+    val docs = DocGen.docs(spark, cfg).toDF().cache()
+    val tmp = Files.createTempDirectory("graft-resume-aux").toString
+    val full = EntityResolution.run(spark, docs, runDir = Some(tmp), runId = "r1")
+    val fullAssign = full.assignments.collect().map(r => (r.getString(0), r.getString(1))).sorted
+    full.release()
+    // what a fresh run leaves when it crashes right after its first stage
+    // commit: the blocking snapshot and no commit record
+    (Seq("_commits") ++ EntityResolution.LockstepStages.filter(_ != "blocking"))
+      .foreach(rmStage(tmp, _))
+    assert(Snapshots.lastCommitted(tmp, "blocking").contains(0L))
+    assert(Snapshots.lastCommitted(tmp, "block_hot").isEmpty)
+
+    val resumed = EntityResolution.run(spark, docs, runDir = Some(tmp), runId = "r2", resume = true)
+    assert(!resumed.counters.contains("blocking_resumed"), "blocking resumed without its block_hot")
+    assert(resumed.assignments.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+      == fullAssign.toSeq)
+    assert(Snapshots.record(tmp).stages.keySet == EntityResolution.LockstepStages.toSet)
+    resumed.release()
+    // the published base serves the insert increment
+    val arrivals = DocGen.docs(spark, GenConfig(numEntities = 2, docsPerEntity = 3, seed = 4242L))
+      .map(d => d.copy(doc_id = "arr" + d.doc_id)).toDF()
+    val added = EntityResolution.addDocuments(spark, arrivals, tmp, runId = "incr")
+    assert(added.assignments.count() == cfg.numDocs + 6)
+    docs.unpersist()
+  }
+
   test("snapshotReport: the --snapshot-id surface re-evaluates an older run read-only") {
     val docs = DocGen.docs(spark, cfg).toDF().cache()
     val tmp = Files.createTempDirectory("graft-snapid").toString

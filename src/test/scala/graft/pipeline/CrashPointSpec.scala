@@ -9,7 +9,8 @@ import graft.synth.{DocGen, GenConfig}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Crash points of every multi-stage verb, with no hook in the engine.
+/** Crash points of every multi-stage verb (replace included: its two
+  * halves publish one record), with no hook in the engine.
   * Stage snapshot dirs are immutable once committed, so deleting what a
   * completed verb published — its commit record and every stage snapshot
   * dir it created after the first j, in commit order — leaves a run dir
@@ -81,6 +82,8 @@ class CrashPointSpec extends SparkSpec {
     verb(done)
     val created = (snapshotDirs(done) -- preSnaps).toSeq.sortBy(_._2).map(_._1)
     val records = list(s"$done/_commits").map(_.getFileName.toString).toSet -- preRecords
+    // one commit point per verb: deleting this one record is the crash
+    assert(records.size == 1, s"$name published ${records.size} records, not one: $records")
     val all = stages(done)
     val preState = resolved(pre, all)
     assert(created.nonEmpty && resolved(done, all) != preState, s"$name committed nothing")
@@ -158,6 +161,20 @@ class CrashPointSpec extends SparkSpec {
       val m = EntityResolution.mergeRepair(spark, dir, StreamingIngest.effectiveMerge(cfg, None),
         runId = "stream-4-merge")
       assert(m.counters("merge_committed") == 1L, s"the merge must heal: ${m.counters}")
+    }
+  }
+
+  test("a crash between any two stage commits of replaceDocuments reads as before the verb") {
+    val cfg = EntityResolution.PipelineConfig(scoreThreshold = 0.55)
+    val base = s"$scratch/base-replace"
+    EntityResolution.run(spark, corpus, cfg, runDir = Some(base), runId = "base").release()
+    // revisions of the first three entities: the retraction half and the
+    // insert half each commit all six stages
+    val revised = DocGen.docsRevised(spark, corpusCfg, 9).toDF()
+    crashPoints("replace", base, 6L) { dir =>
+      val r = EntityResolution.replaceDocuments(spark, revised, dir, cfg, runId = "stream-6-replace")
+      assert(r.counters("docs_replaced") == 9L, s"${r.counters}")
+      r.release()
     }
   }
 }
