@@ -106,6 +106,12 @@ object Main {
   private def countersJson(counters: Map[String, Long]): String =
     counters.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
+  /** The CC fields of a verb's JSON: loop iterations and the path taken
+    * (`cc_driver` 1 = driver union-find, 0 = star loop or no CC run).
+    */
+  private def ccJson(res: EntityResolution.Result): String =
+    s""""cc_iterations":${res.ccIterations},"cc_driver":${res.counters.getOrElse("cc_driver", 0L)}"""
+
   /** The before/after fields of a repair verb's JSON: pairwise F1 of the
     * clustering before and after the repair over the committed blocking's
     * labeled pairs, plus cluster equality after, against the gold
@@ -155,7 +161,7 @@ object Main {
     } else ""
     newDocs.unpersist()
     s"""{"docs_added":$nNew,"docs_total":${res.counters("docs_total")},""" +
-      s""""clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
+      s""""clusters":$nClusters,${ccJson(res)},""" +
       s""""seconds":$secs,"added_docs_per_sec":${nNew / secs},""" +
       s""""counters":${countersJson(res.counters)}$evalJson}"""
   }
@@ -188,7 +194,7 @@ object Main {
     } else ""
     gold.unpersist(); removedDocs.unpersist()
     s"""{"docs_removed":$nRm,"docs_total":${res.counters("docs_total")},""" +
-      s""""clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
+      s""""clusters":$nClusters,${ccJson(res)},""" +
       s""""seconds":$secs,"counters":${countersJson(res.counters)}$evalJson}"""
   }
 
@@ -219,7 +225,7 @@ object Main {
     } else ""
     revised.unpersist()
     s"""{"docs_replaced":$nRev,"docs_total":${res.counters("docs_total")},""" +
-      s""""clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
+      s""""clusters":$nClusters,${ccJson(res)},""" +
       s""""seconds":$secs,"counters":${countersJson(res.counters)}$evalJson}"""
   }
 
@@ -536,7 +542,7 @@ object Main {
         s""""gold_pairs_missed":$gpMissed$sweepJson"""
     } else ""
     println(
-      s"""{"docs":$nDocs,"clusters":$nClusters,"cc_iterations":${res.ccIterations},""" +
+      s"""{"docs":$nDocs,"clusters":$nClusters,${ccJson(res)},""" +
       s""""seconds":$secs,"docs_per_sec":${nDocs / secs},""" +
       s""""counters":${countersJson(res.counters)}$evalJson}""")
     spark.stop()

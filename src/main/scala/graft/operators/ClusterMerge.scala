@@ -428,36 +428,20 @@ object ClusterMerge {
     // batch semantics over the promoted edge set.
     //
     // The graph is DIMENSION-sized by construction (each pair needed a
-    // corroborated evidence bundle), so within DriverBound — known for
-    // FREE from the census counters — it is solved by a driver union-find
-    // (ConnectedComponents.unionFindMin, code-point order like the
-    // distributed min): one collect replaces the distributed star loop's
-    // ~15 fixed jobs per invocation, which dominated the verb's wall at
-    // every sandbox scale (OPTIMIZATION_r06.md §3: the merge leg was
-    // job-count-bound, not data-bound). Beyond the bound (a pathological
-    // drift state can qualify arbitrarily many pairs) the exact same
-    // semantics run through the distributed CC loop. Identical labels
-    // either way: min cluster_id per component (ClusterMergeSpec covers
-    // multi-pair transitive components through the union-find path).
-    val nQual = censusCounters("merge_cluster_pairs_qualified")
-    val (mergeMap0, ccCkpts) =
-      if (nQual <= DriverBound.MaxRows) {
-        val pairs = qual.select(col("cluster_a"), col("cluster_b")).collect()
-          .map(r => (r.getString(0), r.getString(1)))
-        val find = ConnectedComponents.unionFindMin(pairs)
-        val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
-        import spark.implicits._
-        (nodes.toSeq.map(n => (n, find(n))).toDF("cluster_id", "cluster_id_new"),
-          Set.empty[Int])
-      } else {
-        val cc = ConnectedComponents.runTracked(spark,
-          qual.select(col("cluster_a").as("src"), col("cluster_b").as("dst")),
-          pairsPreDeduped = true)
-        (cc.assignments
-          .select(col("doc_id").as("cluster_id"), col("cluster_id").as("cluster_id_new")),
-          cc.checkpointIds)
-      }
-    val mergeMap = mergeMap0.persist(StorageLevel.MEMORY_AND_DISK)
+    // corroborated evidence bundle), and its edge count is known for FREE
+    // from the census counters, so the CC entry solves it by a driver
+    // union-find within DriverBound; beyond the bound (a pathological
+    // drift state can qualify arbitrarily many pairs) by the distributed
+    // loop. Identical labels either way (ClusterMergeSpec covers
+    // multi-pair transitive components).
+    val edges = qual.select(col("cluster_a").as("src"), col("cluster_b").as("dst"))
+    val cc = ConnectedComponents.assignAllTracked(spark,
+      edges.select(col("src").as("doc_id")).union(edges.select(col("dst").as("doc_id"))).distinct(),
+      edges, pairsPreDeduped = true,
+      edgeRows = Some(censusCounters("merge_cluster_pairs_qualified")))
+    val mergeMap = cc.assignments
+      .select(col("doc_id").as("cluster_id"), col("cluster_id").as("cluster_id_new"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nMergedClusters = mergeMap.count()
     val nComponents = mergeMap.select("cluster_id_new").distinct().count()
     // merged components are few under any sane config, but a loose one (or
@@ -517,6 +501,6 @@ object ClusterMerge {
       "merge_pairs_promoted" -> nPromoted,
       "merge_band_edges_not_promoted" -> nNotPromoted)
     MergeResult(merged, changedRows, changedClusters, promoted, ledger, counters,
-      Seq(cen, cenAll, ev, mergeMap, changed, ranked, ledger), ccCkpts)
+      Seq(cen, cenAll, ev, mergeMap, changed, ranked, ledger), cc.checkpointIds)
   }
 }

@@ -3,12 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Transitive clustering: iterative DataFrame connected components via
   * alternating large-star / small-star (Kiveris et al., "Connected
   * Components in MapReduce and Beyond", SoCC'14) — the north-rule
   * generalization of the reference's top-1-per-AP assignment
-  * (Model.scala:536-539; top-1 is the degenerate star case).
+  * (Model.scala:536-539; top-1 is the degenerate star case). A graph
+  * within [[DriverBound.MaxRows]] edges skips the loop: [[assignAllTracked]]
+  * solves it by one driver union-find with identical labels.
   *
   * The public contract is STRING node ids with lexicographic order
   * (cluster_id = min doc_id, FIXTURES.md §3). Internally the loop runs
@@ -129,8 +132,13 @@ object ConnectedComponents {
     * they are superseded.
     */
   final case class CcResult(assignments: DataFrame, iterations: Int,
-                            checkpointIds: Set[Int]) {
+                            checkpointIds: Set[Int], driver: Boolean = false) {
     def releaseCheckpoints(spark: SparkSession): Unit = free(spark, checkpointIds)
+    /** The counters a CC commit records: loop iterations, and `cc_driver`
+      * = 1 for the driver union-find, 0 for the star loop.
+      */
+    def counters: Map[String, Long] =
+      Map("cc_iterations" -> iterations.toLong, "cc_driver" -> (if (driver) 1L else 0L))
   }
 
   /** localCheckpoint + the id of the persistent RDD it registered
@@ -154,9 +162,13 @@ object ConnectedComponents {
   private[graft] def free(spark: SparkSession, ids: Iterable[Int]): Unit =
     ids.foreach(id => spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
-  /** Run to convergence; returns (node -> component-min) assignments for
-    * every node appearing in `edges0`, the iteration count, and the live
-    * checkpoint handles.
+  /** The distributed star loop: [[assignAllTracked]]'s path for graphs
+    * past [[DriverBound.MaxRows]] edges, where a driver union-find would
+    * hold the whole edge set on the driver; the loop's memory is spread
+    * over the executors at any size. It stays callable on its own as the
+    * reference the driver path is tested against. Runs to convergence;
+    * returns (node -> component-min) assignments for every node appearing
+    * in `edges0`, the iteration count, and the live checkpoint handles.
     *
     * `pairsPreDeduped = true` promises each unordered {src, dst} pair
     * occurs at most once in `edges0` (true for the pipeline's scored
@@ -169,8 +181,8 @@ object ConnectedComponents {
     * the partition count. A giant component (a hot entity, or a false
     * merge chaining many entities) runs as one straggler task.
     */
-  def runTracked(spark: SparkSession, edges0: DataFrame, maxIter: Int = 50,
-                 pairsPreDeduped: Boolean = false): CcResult = {
+  private[graft] def runTracked(spark: SparkSession, edges0: DataFrame, maxIter: Int = 50,
+                                pairsPreDeduped: Boolean = false): CcResult = {
     // AQE off for the loop only: each iteration is a small fixed-shape
     // two-shuffle plan, and AQE's per-query-stage re-planning adds driver
     // round-trips per iteration that dominate at high parallelism (the
@@ -316,39 +328,66 @@ object ConnectedComponents {
   }
 
   /** Full assignment for all docs: nodes with no surviving edge form
-    * singleton clusters (cluster_id = own doc_id). The result carries the
-    * final-checkpoint handles (see CcResult): callers that materialize the
-    * assignments durably (or are done with them) release them via
-    * releaseCheckpoints.
+    * singleton clusters (cluster_id = own doc_id); edge endpoints outside
+    * `allDocIds` take part in components (and can supply the min) but emit
+    * no row. The engine's ONE CC entry, choosing the path from the graph's
+    * size under the [[DriverBound]] policy:
+    *
+    *  - DRIVER (edge relation within [[DriverBound.MaxRows]] rows): the
+    *    self-loop-free edges are collected once and labelled by
+    *    [[unionFindMin]] (code-point order, Spark's string min). One collect
+    *    replaces the star loop's fixed jobs — its dictionary, census,
+    *    per-iteration signatures and checkpoints — which dominate whenever
+    *    the graph is small, as every incremental verb's graph is: the verbs
+    *    are bound by their job floor, not by data. `iterations` = 0, no
+    *    checkpoint.
+    *  - STAR LOOP ([[runTracked]]) above the bound: the only path whose
+    *    driver memory does not grow with the graph, and the reference
+    *    `ConnectedComponentsSpec` pins the driver path against.
+    *
+    * Either way the node labels are left-joined onto `allDocIds` with
+    * `coalesce(cluster_id, doc_id)`; the two paths give identical rows.
+    *
+    * `edgeRows` bounds the edge relation's row count from a count the
+    * caller already holds (a manifest's rows, an earlier action) — never a
+    * new job over an unmaterialized plan. Without one, the entry persists
+    * the edges and counts them: one count action, which also materializes
+    * the upstream plan once for whichever path follows.
+    *
+    * The result carries the star loop's final-checkpoint handles (see
+    * CcResult): callers that materialize the assignments durably (or are
+    * done with them) release them via releaseCheckpoints.
     */
   def assignAllTracked(spark: SparkSession, allDocIds: DataFrame, edges: DataFrame,
-                       maxIter: Int = 50, pairsPreDeduped: Boolean = false): CcResult = {
-    val r = runTracked(spark, edges, maxIter, pairsPreDeduped)
+                       maxIter: Int = 50, pairsPreDeduped: Boolean = false,
+                       edgeRows: Option[Long] = None): CcResult = {
+    // a projection of its own, so unpersisting it never drops a cache of the caller's
+    val e = edges.select(col("src"), col("dst"))
+    if (edgeRows.isEmpty) e.persist(StorageLevel.MEMORY_AND_DISK)
+    val r = try {
+      if (edgeRows.getOrElse(e.count()) <= DriverBound.MaxRows) driverLabels(spark, e)
+      else runTracked(spark, e, maxIter, pairsPreDeduped)
+    } finally if (edgeRows.isEmpty) e.unpersist()
     val out = allDocIds.select(col("doc_id"))
       .join(r.assignments, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    CcResult(out, r.iterations, r.checkpointIds)
+    r.copy(assignments = out)
   }
 
-  /** [[assignAllTracked]] semantics via a DRIVER union-find, for graphs the
-    * CALLER has already proven dimension-sized (both relations ≤
-    * [[DriverBound.MaxRows]], from counts it holds anyway — never a new
-    * count job): two collects replace the star loop's ~15
-    * fixed driver round-trips, which dominate wall whenever the graph is
-    * small (OPTIMIZATION_r06.md §3: the incremental verbs are
-    * job-count-bound at every sandbox scale). Output is EXACTLY
-    * [[assignAllTracked]]'s: one row per allDocIds doc, cluster_id = min node id
-    * of its component over the full edge universe (edge endpoints outside
-    * allDocIds participate in components and can supply the min, exactly
-    * like the distributed path's left join), singletons self-labeled.
-    * ConnectedComponentsSpec pins driver == distributed on random graphs.
+  /** The driver path's labels: (node, component min) for every edge
+    * endpoint that is not its component's min — the rest label themselves
+    * through the caller's coalesce. The same `src =!= dst` filter as
+    * [[runDispatch]], so both paths read the same edge set.
     */
-  def assignAllDriver(spark: SparkSession, allDocIds: DataFrame, edges: DataFrame): DataFrame = {
-    val nodes = allDocIds.select(col("doc_id")).collect().map(_.getString(0))
-    val find = unionFindMin(edges.select(col("src"), col("dst")).collect()
-      .map(r => (r.getString(0), r.getString(1))))
+  private def driverLabels(spark: SparkSession, edges: DataFrame): CcResult = {
+    val pairs = edges.where(col("src") =!= col("dst")).collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    val find = unionFindMin(pairs)
+    val moved = pairs.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet[String].iterator
+      .map(n => (n, find(n))).filter { case (n, m) => n != m }.toVector
     import spark.implicits._
-    nodes.toSeq.map(n => (n, find(n))).toDF("doc_id", "cluster_id")
+    CcResult(DriverBound.broadcastWithin(moved.toDF("doc_id", "cluster_id"), moved.size),
+      0, Set.empty, driver = true)
   }
 
   /** Driver union-find over string node ids: returns each node's component
@@ -358,7 +397,7 @@ object ConnectedComponents {
     * compares UTF-16 code units instead and disagrees wherever a
     * supplementary character (a surrogate pair) meets U+E000..U+FFFF.
     */
-  private[graft] def unionFindMin(edges: Iterable[(String, String)]): String => String = {
+  private def unionFindMin(edges: Iterable[(String, String)]): String => String = {
     val parent = scala.collection.mutable.Map.empty[String, String]
     def find(x: String): String = {
       var r = parent.getOrElse(x, x)

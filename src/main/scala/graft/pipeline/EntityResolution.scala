@@ -251,12 +251,13 @@ object EntityResolution {
         .select(col("doc_id"))
       // pairsPreDeduped: candidatePairs groupBys on (doc_id_a, doc_id_b),
       // so each unordered pair reaches scoring exactly once — CC can skip
-      // its initial edge-dedup shuffle
+      // its initial edge-dedup shuffle. The committed scored_pairs row count
+      // bounds the edges for free; an uncheckpointed run holds no count
       val cc = ConnectedComponents.assignAllTracked(spark, allIds, edges, cfg.maxCcIter,
-        pairsPreDeduped = true)
+        pairsPreDeduped = true, edgeRows = runDir.flatMap(Snapshots.lastRows(_, "scored_pairs")))
       ccIters = cc.iterations
       ccCkptIds = cc.checkpointIds
-      ccCounters = Map("cc_iterations" -> cc.iterations.toLong)
+      ccCounters = cc.counters
       cc.assignments
     }
     // in runDir mode the assignments are durable parquet now — the CC
@@ -361,16 +362,19 @@ object EntityResolution {
       val scored = pin(PairScoring.scoreFeatures(spark, feats, pairs, cfg).toDF())
       (scored, scored.count())
     }
-    /** CC over `nodes` + `edges`, committed as the cluster_assignments delta
-      * replacing the `active` clusters (`rows` resolved); returns iterations.
+    /** CC over `nodes` + `edges` (at most `edgeRows` rows, a bound the
+      * caller holds), committed as the cluster_assignments delta replacing
+      * the `active` clusters (`rows` resolved); returns the CC counters.
       */
-    def commitClusters(nodes: DataFrame, edges: DataFrame, pairsPreDeduped: Boolean,
-                       active: DataFrame, rows: Long, maxIter: Int): Int = {
-      val cc = ConnectedComponents.assignAllTracked(spark, nodes, edges, maxIter, pairsPreDeduped)
+    def commitClusters(nodes: DataFrame, edges: DataFrame, edgeRows: Long,
+                       pairsPreDeduped: Boolean, active: DataFrame, rows: Long,
+                       maxIter: Int): Map[String, Long] = {
+      val cc = ConnectedComponents.assignAllTracked(spark, nodes, edges, maxIter, pairsPreDeduped,
+        Some(edgeRows))
       Snapshots.commitDelta(spark, cc.assignments, Some((active, Seq("cluster_id"))),
-        runDir, "cluster_assignments", runId, Map("cc_iterations" -> cc.iterations.toLong), rows)
+        runDir, "cluster_assignments", runId, cc.counters, rows)
       cc.releaseCheckpoints(spark)
-      cc.iterations
+      cc.counters
     }
     /** Append `n` pair-keyed `rows` to a standing ledger stage (audit
       * tombstones, merge promotions) whose `counter` holds its row count.
@@ -689,8 +693,8 @@ object EntityResolution {
     // itself (its star IS its fixpoint, cluster_id = min doc_id), so
     // excluding it changes nothing. The delta removes active cluster ids,
     // adds their re-labeled assignments plus the new docs
-    val freshEdges = pin(scoredFresh.where(col("score") >= cfg.scoreThreshold)
-      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst")))
+    val freshEdges = scoredFresh.where(col("score") >= cfg.scoreThreshold)
+      .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     // endpoints ≤ 2·nFresh and active clusters ≤ endpoints — both bounded
     // by the fresh-pair count the scoring phase already took
     def freshGate(df: DataFrame): DataFrame = DriverBound.broadcastWithin(df, 2 * nFresh)
@@ -702,14 +706,15 @@ object EntityResolution {
     val activeOld = pin(oldAssign.join(activeClB, "cluster_id"))
     val starActive = activeOld.where(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("src"), col("cluster_id").as("dst"))
-    val ccIters = ctx.commitClusters(
+    // the edges: at most nFresh fresh ones plus one star edge per active member
+    val ccCounters = ctx.commitClusters(
       activeOld.select(col("doc_id")).unionByName(toked.select(col("doc_id"))),
-      freshEdges.unionByName(starActive), pairsPreDeduped = false, activeCl, nTotal,
-      cfg.maxCcIter)
+      freshEdges.unionByName(starActive), nFresh + activeOld.count(), pairsPreDeduped = false,
+      activeCl, nTotal, cfg.maxCcIter)
     tick("clustering")
 
-    ctx.committed(ccIters, blockCounters ++ Map("docs_added" -> nNew, "docs_total" -> nTotal,
-      "pairs_fresh" -> nFresh, "cc_iterations" -> ccIters.toLong, "insert_mode" -> 1L))
+    ctx.committed(ccCounters("cc_iterations").toInt, blockCounters ++ ccCounters ++ Map(
+      "docs_added" -> nNew, "docs_total" -> nTotal, "pairs_fresh" -> nFresh, "insert_mode" -> 1L))
   }
 
   /** RETRACTION: remove committed documents from a checkpointed run WITHOUT
@@ -861,22 +866,13 @@ object EntityResolution {
     // grouping CC runs over the removed subgraph only: O(removed pairs)
     val rmEdges = strong.join(rmA, "doc_id_a").join(rmB2, "doc_id_b")
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
-    // the removed subgraph is DELTA-sized by contract and both its bounds
-    // are already counted (nRemoved; rmEdges ⊆ rmPairs): within
-    // DriverBound the grouping runs as a driver union-find (identical
-    // labels, ~15 fewer fixed jobs); beyond it, the distributed loop
-    val rmGroupsAssign =
-      if (nRemoved <= DriverBound.MaxRows && nRmPairs <= DriverBound.MaxRows)
-        ConnectedComponents.assignAllDriver(spark, removed.select("doc_id"), rmEdges)
-      else {
-        val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"),
-          rmEdges, cfg.maxCcIter, pairsPreDeduped = true)
-        val a = pin(rmCc.assignments)
-        rmCc.releaseCheckpoints(spark)
-        a
-      }
-    val rmGroups = pin(rmGroupsAssign
+    // the removed subgraph is DELTA-sized by contract, its edge bound
+    // already counted (rmEdges ⊆ rmPairs)
+    val rmCc = ConnectedComponents.assignAllTracked(spark, removed.select("doc_id"), rmEdges,
+      cfg.maxCcIter, pairsPreDeduped = true, edgeRows = Some(nRmPairs))
+    val rmGroups = pin(rmCc.assignments
       .select(col("doc_id").as("gone"), col("cluster_id").as("grp")))
+    rmCc.releaseCheckpoints(spark)
     val lost = pin(
       strong.join(rmA, "doc_id_a").join(rmB2, Seq("doc_id_b"), "left_anti")
         .select(col("doc_id_a").as("gone"), col("doc_id_b").as("kept"))
@@ -925,17 +921,19 @@ object EntityResolution {
     val edges = edgesCommitted.unionByName(healEdges)
       .select(col("doc_id_a").as("src"), col("doc_id_b").as("dst"))
     // committed pairs are unique and heal pairs were anti-joined against
-    // them, so the union is pair-unique — CC skips its initial dedup
-    val ccIters = ctx.commitClusters(survActive.select("doc_id"), edges,
-      pairsPreDeduped = true, activeCl,
+    // them, so the union is pair-unique — CC skips its initial dedup. The
+    // edges are a subset of the resolved scored_pairs, whose row count the
+    // delta above recorded
+    val ccCounters = ctx.commitClusters(survActive.select("doc_id"), edges,
+      basePairRows - nRmPairs + nHeal, pairsPreDeduped = true, activeCl,
       Snapshots.lastRows(runDir, "cluster_assignments").getOrElse(nOld) - nRemoved,
       cfg.maxCcIter)
     val clustersActive = activeCl.count()
     tick("clustering")
 
-    ctx.committed(ccIters, blockCounters ++ Map("docs_removed" -> nRemoved,
-      "docs_total" -> nTotal, "pairs_removed" -> nRmPairs, "heal_pairs_scored" -> nHeal,
-      "clusters_recomputed" -> clustersActive, "cc_iterations" -> ccIters.toLong))
+    ctx.committed(ccCounters("cc_iterations").toInt, blockCounters ++ ccCounters ++ Map(
+      "docs_removed" -> nRemoved, "docs_total" -> nTotal, "pairs_removed" -> nRmPairs,
+      "heal_pairs_scored" -> nHeal, "clusters_recomputed" -> clustersActive))
   }
 
   /** AUDIT-REPAIR (the fourth incremental verb): post-clustering

@@ -476,10 +476,10 @@ object Trajectory {
       numBands = 12, rowsPerBand = 3, tokenBands = 0, scoreThreshold = 0.80,
       scoring = PairScoring.ScoreConfig(gammaText = 1.0))
     val res = EntityResolution.run(spark, docsDf, cfg)
-    // the CC loop has materialized everything downstream of docsDf; release
-    // the run's caches so a long-lived session doesn't accumulate them —
-    // EXCEPT the final CC checkpoint, which backs the lazy relation this
-    // query returns (one row per doc; freed when the session ends)
+    // release the run's caches so a long-lived session doesn't accumulate
+    // them — EXCEPT a star loop's final CC checkpoint, which backs the lazy
+    // relation this query returns (one row per doc; freed when the session
+    // ends); a driver-path CC leaves none
     res.release(keepAssignments = true)
     docsDf.unpersist()
     res.assignments

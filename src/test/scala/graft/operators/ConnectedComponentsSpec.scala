@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, col}
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -27,13 +29,39 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
+  /** The star loop called directly, left-joined onto `all` the way the
+    * entry joins its labels: the reference the driver path must equal.
+    */
+  private def starLoop(all: DataFrame, edges: DataFrame,
+                       pairsPreDeduped: Boolean = false): (Map[String, String], Int) = {
+    val cc = ConnectedComponents.runTracked(spark, edges, pairsPreDeduped = pairsPreDeduped)
+    try {
+      val got = all.join(cc.assignments, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")))
+        .as[(String, String)].collect().toMap
+      (got, cc.iterations)
+    } finally cc.releaseCheckpoints(spark)
+  }
+
+  /** The selecting entry's assignments; asserts it took the driver path. */
+  private def entry(all: DataFrame, edges: DataFrame,
+                    pairsPreDeduped: Boolean = false): Map[String, String] = {
+    val cc = ConnectedComponents.assignAllTracked(spark, all, edges,
+      pairsPreDeduped = pairsPreDeduped)
+    assert(cc.counters == Map("cc_iterations" -> 0L, "cc_driver" -> 1L) &&
+      cc.checkpointIds.isEmpty, s"a small graph must take the driver path: ${cc.counters}")
+    cc.assignments.as[(String, String)].collect().toMap
+  }
+
+  /** Both paths over one graph: they must agree, and the loop converge. */
   private def runCC(nodes: Seq[String], edges: Seq[(String, String)]): Map[String, String] = {
     val nodesDf = nodes.toDF("doc_id")
     val edgesDf = edges.toDF("src", "dst")
-    val cc = ConnectedComponents.assignAllTracked(spark, nodesDf, edgesDf)
-    assert(cc.iterations < 50, "CC must converge")
-    try cc.assignments.as[(String, String)].collect().toMap
-    finally cc.releaseCheckpoints(spark)
+    val (star, iters) = starLoop(nodesDf, edgesDf)
+    assert(iters < 50, "CC must converge")
+    val got = entry(nodesDf, edgesDf)
+    assert(got == star, s"driver path $got != star loop $star")
+    got
   }
 
   test("path, star, two components, self-loop") {
@@ -76,7 +104,6 @@ class ConnectedComponentsSpec extends SparkSpec {
       val nodes = (0 until n).map(i => f"w$i%03d")
       val m = rnd.nextInt(2 * n) + 1
       val edges = (0 until m).map(_ => (nodes(rnd.nextInt(n)), nodes(rnd.nextInt(n))))
-      import org.apache.spark.sql.functions.col
       val edgesDf = edges.toDF("src", "dst")
       val viaHash = ConnectedComponents.runTracked(spark, edgesDf)
       val viaRank = ConnectedComponents.runRank(spark, edgesDf.select(col("src"), col("dst")), 50)
@@ -94,7 +121,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     // round-5 form emitted it once per input row. The output SET must be
     // identical — including on inputs with duplicate rows (largeStar's
     // output, smallStar's actual input, is not deduplicated).
-    import org.apache.spark.sql.functions.{col, greatest, least, min}
+    import org.apache.spark.sql.functions.{greatest, least, min}
     def smallStarPerRow(edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val oriented = edges.select(
         greatest(col("src"), col("dst")).as("u"),
@@ -122,7 +149,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
   }
 
-  test("assignAllDriver (gated union-find) == distributed assignAll") {
+  test("the selecting entry (driver union-find) == the star loop") {
     val rnd = new scala.util.Random(41)
     for (trial <- 0 until 5) {
       val n = 10 + rnd.nextInt(30)
@@ -132,14 +159,14 @@ class ConnectedComponentsSpec extends SparkSpec {
       // foreign endpoints on purpose: docs outside allDocIds participate
       // in components (and can supply the min) but emit no row
       val foreign = Seq(("a000", nodes.head), (nodes.last, "zzz9"))
+      // self-loops and reversed duplicates: both paths drop src == dst
+      // rows, and the loop dedups pairs when not promised pre-deduped
+      val loops = Seq((nodes(1), nodes(1)), ("zzz8", "zzz8"))
+      val reversed = edges.take(3).map(_.swap)
       val all = nodes.take(n - 2).toDF("doc_id") // some nodes excluded too
-      val edgesDf = (edges ++ foreign).toDF("src", "dst")
-      val dist = ConnectedComponents.assignAllTracked(spark, all, edgesDf)
-      val got = ConnectedComponents.assignAllDriver(spark, all, edgesDf)
-        .as[(String, String)].collect().toMap
-      val want = dist.assignments.as[(String, String)].collect().toMap
-      assert(got == want, s"trial $trial: driver and distributed assignAll diverge")
-      dist.releaseCheckpoints(spark)
+      val edgesDf = (edges ++ foreign ++ loops ++ reversed).toDF("src", "dst")
+      val (want, _) = starLoop(all, edgesDf)
+      assert(entry(all, edgesDf) == want, s"trial $trial: driver path and star loop diverge")
     }
     // ids mixing supplementary characters (UTF-16 surrogate pairs) with
     // U+E000..U+FFFF: UTF-16 code-unit order and Spark's UTF-8 byte
@@ -150,14 +177,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     val mixedEdges = Seq((ids(0), ids(1)), (ids(1), ids(2)), (ids(3), ids(4)), (ids(6), ids(5)))
       .toDF("src", "dst")
     val mixedAll = ids.toDF("doc_id")
-    val dist = ConnectedComponents.assignAllTracked(spark, mixedAll, mixedEdges)
-    val want = dist.assignments.as[(String, String)].collect().toMap
+    val (want, _) = starLoop(mixedAll, mixedEdges, pairsPreDeduped = true)
     assert(want(ids(0)) == "\uE000b" && want(ids(3)) == "x\uE000" && want(ids(6)) == "y\uFFFF",
-      s"distributed labels are not code-point mins: $want")
-    val got = ConnectedComponents.assignAllDriver(spark, mixedAll, mixedEdges)
-      .as[(String, String)].collect().toMap
-    assert(got == want, s"code-point ids: driver $got != distributed $want")
-    dist.releaseCheckpoints(spark)
+      s"star-loop labels are not code-point mins: $want")
+    val got = entry(mixedAll, mixedEdges, pairsPreDeduped = true)
+    assert(got == want, s"code-point ids: driver $got != star loop $want")
   }
 
   test("pairsPreDeduped path produces identical assignments") {
